@@ -1162,10 +1162,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # ---- r3 wave 2: previously pytest-only paths under the gate ----------
     def q_salted(spark, sf_dir):
-        # exact per-cell distinct via explicit (cell, salt) two-stage —
-        # the Ljubljana-hot-cell treatment, now oracle-checked (salt
-        # partitions a hash of the key, so per-salt distinct sets are
-        # disjoint and their sum is exact)
+        # exact per-cell distinct — the Ljubljana-hot-cell treatment:
+        # Spark plans it as a shuffle on (cell, okey) then a merge on
+        # cell, so a hot cell spreads over reducers (2 Exchanges)
         from geocoordinateconverter_spark.operators import tiles as tiles_op
         _register(spark, sf_dir)
         w = sg.wgs_points_sql("k")
@@ -1173,7 +1172,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             f"SELECT k, cast(floor(k / 8.0e0) as bigint) AS okey, "
             f"{w['fi']} AS fi, {w['la']} AS la "
             f"FROM (SELECT {LKEY} AS k FROM lineitem) q_k")
-        return tiles_op.salted_tile_agg(pts, key="okey", res=7, n_salt=8)
+        return tiles_op.salted_tile_agg(pts, key="okey", res=7)
     q["salted_tile_agg_exact"] = q_salted
 
     def q_zorder(spark, sf_dir):

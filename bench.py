@@ -75,8 +75,8 @@ def flagship(spark, sf_dir, mult: int = 1):
     # Tile rollup with map-side-partial aggregates only (count + HLL
     # distinct): the shuffle carries one partial row per (task, cell),
     # not one row per point — the scale-correct form at 10¹² rows.
-    # Exact distinct with explicit salting stays available as
-    # tiles.salted_tile_agg (benched + tested separately).
+    # Exact distinct per cell is tiles.salted_tile_agg (shuffle on
+    # (cell, key), then merge on cell; benched + tested separately).
     return (hits
             .withColumn("cell", kernels.cell_col(F.col("fi"), F.col("la"), 7))
             .groupBy("cell")

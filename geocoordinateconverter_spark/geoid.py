@@ -101,13 +101,3 @@ def geoid_height(fi, la, model: str = "slo") -> np.ndarray:
            + n10 * tr * (1.0 - tc)
            + n11 * tr * tc)
     return np.where(inside, val, 0.0)
-
-
-def h_to_big_h(fi, la, h, model: str = "slo") -> np.ndarray:
-    """ellipsoidal h → physical H = h − N (height_mode='hg')."""
-    return np.asarray(h, np.float64) - geoid_height(fi, la, model)
-
-
-def big_h_to_h(fi, la, big_h, model: str = "slo") -> np.ndarray:
-    """physical H → ellipsoidal h = H + N."""
-    return np.asarray(big_h, np.float64) + geoid_height(fi, la, model)

@@ -25,9 +25,7 @@ per point, deterministic ties by ``station_id`` asc — FIXTURES.md §5):
 
 Distance: flat-earth squared degrees ``(Δφ)² + (0.7·Δλ)²`` — pure
 arithmetic (0.7 ≈ cos 46° meridian-convergence factor, adequate for a
-1.75°-tall working area and bit-identical across engines).  A
-haversine kernel is provided for real use; pytest cross-checks ranking
-agreement, while the oracle uses the arithmetic form.
+1.75°-tall working area and bit-identical across engines).
 """
 
 from __future__ import annotations
@@ -320,15 +318,3 @@ def radius_oracle_sql(points_src: str, key: str,
  FROM {points_src} p CROSS JOIN {stations_values_sql(n_st)} s
  WHERE {d2} <= {_f(radius * radius)})
 """
-
-
-def haversine_m(fi1, la1, fi2, la2):
-    """Great-circle distance [m] (engine-side option; not the oracle
-    metric — see module docstring)."""
-    r = 6371008.8
-    p1 = np.deg2rad(np.asarray(fi1, np.float64))
-    p2 = np.deg2rad(np.asarray(fi2, np.float64))
-    dl = np.deg2rad(np.asarray(la2, np.float64) - np.asarray(la1, np.float64))
-    dp = p2 - p1
-    a = np.sin(dp / 2.0) ** 2 + np.cos(p1) * np.cos(p2) * np.sin(dl / 2.0) ** 2
-    return 2.0 * r * np.arcsin(np.sqrt(a))

@@ -74,13 +74,6 @@ def plane_coef(p: int, d: int) -> float:
     return (((p * DIM + d + 1) * 2654435761) % 1000000) / 1000000.0 - 0.5
 
 
-def plane_proj_col(a: str, p: int, dim: int = DIM) -> Column:
-    expr = F.lit(plane_coef(p, 0)) * _elem(a, 1)
-    for d in range(1, dim):
-        expr = expr + F.lit(plane_coef(p, d)) * _elem(a, d + 1)
-    return expr
-
-
 def plane_proj_sql(a: str, p: int, dim: int = DIM) -> str:
     """Hyperplane projection with the coefficient CLOSED FORM evaluated
     inside the fold lambda (same integer mixing as :func:`plane_coef`;
@@ -91,37 +84,6 @@ def plane_proj_sql(a: str, p: int, dim: int = DIM) -> str:
     return (f"list_reduce(list_transform(generate_series(1, {dim}), "
             f"__d -> {coef} * cast(({a})[__d] as double)), "
             f"(__x, __y) -> __x + __y)")
-
-
-def lsh_bucket_col(a: str) -> Column:
-    expr = F.lit(0).cast("bigint")
-    for p in range(N_PLANES):
-        expr = expr + F.when(plane_proj_col(a, p) > 0,
-                             F.lit(1 << p).cast("bigint")).otherwise(0)
-    return expr
-
-
-def lsh_bucket_fold_col(a: str) -> Column:
-    """Same bucket id as :func:`lsh_bucket_col`, built as nested
-    HOF folds instead of 512 unrolled terms.  Used on the join paths
-    (lsh_topk and the recall reports' LSH arm): fused with the join +
-    rerank stage, the unrolled form pushes the generated doConsume
-    past the JVM's 64 KB method limit and the WHOLE stage falls back
-    to interpreted eval (observed in the r5 sweep); the fold form is a
-    small interpreted island inside an otherwise codegen stage.
-    Bit-equivalent: the projection fold is the same d-ascending
-    left-associated sum with the same closed-form coefficients
-    (plane_coef), and the sign test is unaffected by the fold's
-    0.0+x seed."""
-    coef = (f"(cast(((p * {DIM} + d) * 2654435761) % 1000000 as double) "
-            f"/ 1000000.0e0 - 0.5e0)")
-    proj = (f"aggregate(sequence(1, {DIM}), cast(0.0 as double), "
-            f"(acc2, d) -> acc2 + {coef} "
-            f"* cast(element_at({a}, d) as double))")
-    return F.expr(
-        f"aggregate(sequence(0, {N_PLANES - 1}), 0, "
-        f"(acc, p) -> acc + CASE WHEN {proj} > 0.0e0 "
-        f"THEN shiftleft(1, p) ELSE 0 END)")
 
 
 def lsh_bucket_sql(a: str) -> str:
@@ -171,8 +133,7 @@ def lsh_buckets(emb: DataFrame) -> DataFrame:
     as the unrolled expression form by the d-ascending fold order).
     The 8×64-term unrolled Catalyst expression it replaces spent more
     time in janino compilation than execution (measured 3.4 s → 0.6 s
-    for 20k vectors); :func:`lsh_bucket_col` remains the expression
-    twin for the oracle and pytest."""
+    for 20k vectors); :func:`lsh_bucket_sql` is the oracle twin."""
 
     @pandas_udf("bigint")
     def _udf(e: pd.Series) -> pd.Series:
@@ -1315,7 +1276,7 @@ def _ivf_scores_np(X: np.ndarray) -> np.ndarray:
 
 def _lsh_buckets_np(X: np.ndarray) -> np.ndarray:
     """(n,) int64 bucket ids — the exact projection fold of
-    :func:`plane_proj_col` (d-ascending; sign test unaffected by the
+    :func:`plane_proj_sql` (d-ascending; sign test unaffected by the
     fold variants' ±0.0 seeds)."""
     out = np.zeros(X.shape[0], dtype=np.int64)
     for p in range(N_PLANES):

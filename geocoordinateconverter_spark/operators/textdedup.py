@@ -1099,51 +1099,13 @@ def near_dup_drop_list(docs: DataFrame, est_threshold: float = 0.7,
             .agg(F.count("*").alias("n_better")))
 
 
-def _cc_label_prop(e: DataFrame, max_iter: int) -> DataFrame:
-    """Min-label propagation to fixpoint over the undirected edge list
-    ``e(src, dst)``.  Rounds ≈ component diameter; kept as the simple,
-    obviously-correct twin of :func:`_cc_star` (pytest asserts they
-    agree on a long-chain fixture).  Returns (doc_id, label)."""
-    edges = (e.unionByName(e.select(F.col("dst").alias("src"),
-                                    F.col("src").alias("dst")))
-             .distinct().localCheckpoint(eager=False))
-    labels = (edges.select("src").distinct()
-              .select(F.col("src").alias("doc_id"),
-                      F.col("src").alias("label")))
-    changed = -1
-    for _ in range(max_iter):
-        nbr_min = (edges.join(labels, edges.dst == labels.doc_id)
-                   .groupBy("src").agg(F.min("label").alias("nbr_label")))
-        new_labels = (labels.join(nbr_min, labels.doc_id == nbr_min.src,
-                                  "left")
-                      .select(F.col("doc_id"),
-                              F.least(F.col("label"),
-                                      F.coalesce(F.col("nbr_label"),
-                                                 F.col("label")))
-                              .alias("label"))
-                      .localCheckpoint(eager=False))
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), "doc_id")
-                   .filter(F.col("n.label") != F.col("o.label")).count())
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"connected components (label prop): not converged after "
-            f"{max_iter} rounds ({changed} labels still changing); "
-            f"component diameter exceeds max_iter — raise max_iter or "
-            f"use the default large-star/small-star algorithm")
-    return labels
-
-
 def _cc_star(e: DataFrame, max_iter: int) -> DataFrame:
     """Large-star / small-star connected components (the O(log n)-round
-    alternating algorithm from the MapReduce CC literature) — the r4
-    DEFAULT.  Label propagation's round count grows with component
-    diameter (an adversarial 10¹²-doc chain means thousands of
-    shuffles); the star alternation contracts every component onto its
-    minimum id in logarithmically many rounds regardless of diameter:
+    alternating algorithm from the MapReduce CC literature).  Label
+    propagation's round count grows with component diameter (an
+    adversarial 10¹²-doc chain means thousands of shuffles); the star
+    alternation contracts every component onto its minimum id in
+    logarithmically many rounds regardless of diameter:
 
     * large-star: each node u links every LARGER neighbor to
       m = min(Γ(u) ∪ {u});
@@ -1153,17 +1115,15 @@ def _cc_star(e: DataFrame, max_iter: int) -> DataFrame:
     Both steps are one groupBy(min) + one equi-join per round — the
     same shuffle shape as a label-prop round, just fewer rounds.
     Fixpoint = a star forest rooted at each component's min id.
-    Returns (doc_id, label); output contract (and the WITH RECURSIVE
-    oracle) identical to :func:`_cc_label_prop`.
+    Returns (doc_id, label) with label = the component's min id, the
+    same contract as the WITH RECURSIVE oracle.
 
     Measured tradeoff (sf0.1, local[16]): on the real near-dup graph
-    (shallow, diameter ~3) star runs ~2× label-prop's wall (more jobs
-    per round: two star steps + dedups) — the constant-factor price of
-    the O(log n)-rounds guarantee that label propagation lacks on
-    long-diameter graphs, where its round count (and wall) is
-    unbounded.  Default = star because worst-case robustness is what
-    matters at 10¹² docs; callers with known-shallow graphs can pass
-    ``algorithm='labelprop'``."""
+    (shallow, diameter ~3) star ran ~2× label propagation's wall (more
+    jobs per round: two star steps + dedups) — the constant-factor
+    price of the O(log n)-rounds guarantee that label propagation lacks
+    on long-diameter graphs, where its round count (and wall) is
+    unbounded."""
     # canonical storage: (u, v) with u < v, deduped
     edges = (e.filter(F.col("src") != F.col("dst"))
              .select(F.least("src", "dst").alias("u"),
@@ -1216,32 +1176,24 @@ def _cc_star(e: DataFrame, max_iter: int) -> DataFrame:
 
 def near_dup_components(docs: DataFrame, est_threshold: float = 0.7,
                         pairs: DataFrame | None = None,
-                        max_iter: int = 25,
-                        algorithm: str = "star") -> DataFrame:
+                        max_iter: int = 25) -> DataFrame:
     """Connected components over the MinHash-LSH near-dup graph —
     the clustering step real dedup pipelines run between candidate
     pairs and the keep-one-per-cluster decision (each component gets
     the MIN doc_id in it as its label).
 
-    ``algorithm='star'`` (default, r4): large-star/small-star
-    alternation — O(log n) rounds on any graph shape, the 10¹²-row
-    answer.  ``algorithm='labelprop'``: min-label propagation to
-    fixpoint (rounds ≈ diameter) — kept as the simple equivalence twin.
+    Components come from :func:`_cc_star` (large-star/small-star
+    alternation — O(log n) rounds on any graph shape).
 
     Iterative → registered as an oracle via DuckDB WITH RECURSIVE
     reachability (min reachable id ≡ component min on symmetric
     edges).  Output: one row per doc that belongs to a component of
     size ≥ 2 — (doc_id, component, is_kept)."""
-    if algorithm not in ("star", "labelprop"):
-        raise ValueError(
-            f"near_dup_components: unknown algorithm {algorithm!r} "
-            f"(use 'star' or 'labelprop')")
     if pairs is None:
         pairs = minhash_pairs(docs)
     e = (pairs.filter(F.col("est_jaccard") >= est_threshold)
          .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")))
-    cc = _cc_star if algorithm == "star" else _cc_label_prop
-    labels = cc(e, max_iter)
+    labels = _cc_star(e, max_iter)
     return labels.select(
         "doc_id", F.col("label").alias("component"),
         (F.col("doc_id") == F.col("label")).alias("is_kept"))

@@ -1,27 +1,23 @@
-"""Raster↔vector tile aggregation with explicit skew handling —
+"""Raster↔vector tile aggregation with skew handled by the plan —
 [NORTH-RULE] (SURVEY.md §3.6 rows "raster↔vector tile aggregation" and
 "skew handling (Ljubljana hot cells)", §5.2 item 4).
 
 The corpus is Ljubljana-heavy by construction (60 % of coordinates in a
 ~12 km cluster — FIXTURES.md §1 skew rule), so a handful of cells carry
-most rows.  Spark's hash aggregation already does map-side partial
-aggregation, which absorbs *aggregation* skew for algebraic aggs; the
-operators here add the two patterns partial-agg cannot cover:
+most rows.  Spark's hash aggregation does map-side partial aggregation,
+which absorbs skew for algebraic aggs (counts, sums).  For a distinct
+count per cell (:func:`salted_tile_agg`) Spark plans two Exchanges:
+the lower one hashes on (cell, key), so a hot cell's rows spread over
+every reducer by key; the upper one on cell only carries the small
+per-(cell, key) partials to the per-cell merge.  No single reducer
+ever holds a hot cell's full key set, with no salt and no knob
+(executed plan: 2 Exchanges, 4 HashAggregates — pytest asserts the
+shape and the per-partition balance on a 60 %-hot-cell fixture).
 
-* :func:`salted_tile_agg` — two-stage (cell, salt) → cell aggregation
-  for high-cardinality per-cell state (e.g. ``collect_set``/distinct
-  counts), where a single hot cell would otherwise pin one reducer.
-  Salt count is chosen FROM THE DATA by :func:`hot_cells` (top-k cell
-  histogram — SURVEY.md §5.2 "top-k cell histogram → salt factor").
-* :func:`salted_repartition` — writing output partitioned by cell
-  sends every hot-cell row to one task; salting the repartition key
-  spreads a hot cell over N file-writers while keeping cell-prefix
-  locality for readers.
-
-AQE's skew-join splitting (enabled in plans/session.py) remains the
-runtime backstop; these operators are the explicit, plan-level
-treatment the north rule requires.  Determinism: salting changes only
-physical placement — pytest asserts salted ≡ unsalted results.
+A later explicit salt (e.g. for a non-decomposable per-cell state)
+should take its factor from a sampled per-cell estimate, never a
+constant.  AQE's skew-join splitting (enabled in plans/session.py)
+remains the runtime backstop for joins.
 """
 
 from __future__ import annotations
@@ -42,100 +38,30 @@ def tile_agg(points: DataFrame, fi: str = "fi", la: str = "la",
             .groupBy("cell").agg(*aggs))
 
 
-def hot_cells(points: DataFrame, fi: str = "fi", la: str = "la",
-              res: int = 7, top_k: int = 20) -> list[tuple[int, int]]:
-    """Top-k (cell, count) histogram — the salt-factor input."""
-    rows = (points.withColumn("cell", cell_col(F.col(fi), F.col(la), res))
-            .groupBy("cell").count()
-            .orderBy(F.col("count").desc(), F.col("cell").asc())
-            .limit(top_k).collect())
-    return [(r["cell"], r["count"]) for r in rows]
-
-
-def salt_factor(points: DataFrame, fi: str = "fi", la: str = "la",
-                res: int = 7, target_rows_per_task: int = 250_000) -> int:
-    """Salt count from the hottest cell's row count (≥1)."""
-    top = hot_cells(points, fi, la, res, top_k=1)
-    if not top:
-        return 1
-    return max(1, -(-top[0][1] // target_rows_per_task))
-
-
 def salted_tile_agg(points: DataFrame, key: str, fi: str = "fi",
-                    la: str = "la", res: int = 7,
-                    n_salt: int = 8) -> DataFrame:
-    """Two-stage distinct-count per cell with explicit salting.
-
-    Stage 1 shuffles on (cell, salt) — hot cell split n_salt ways —
-    computing per-salt partial distinct sets; stage 2 merges the (small)
-    partials on cell.  Equivalent to countDistinct(key) per cell, but no
-    single reducer ever holds a hot cell's full key set.
-    """
-    salted = (points
-              .withColumn("cell", cell_col(F.col(fi), F.col(la), res))
-              .withColumn("salt", F.pmod(F.xxhash64(F.col(key)), F.lit(n_salt))))
-    # exact distinct only: salt partitions a HASH of key, so per-salt
-    # distinct sets are disjoint and their sum is the exact cell
-    # distinct.  (An earlier draft also computed a per-salt HLL sketch
-    # here, but it was never merged or returned — Catalyst pruned it —
-    # so it was removed rather than left as a misleading "fast path";
-    # the approximate variant at scale is approx_count_distinct WITHOUT
-    # salting, since HLL merge is already skew-immune.)
-    partial = (salted.groupBy("cell", "salt")
-               .agg(F.count("*").alias("n_part"),
-                    F.countDistinct(key).alias("ndx_part")))
-    return (partial.groupBy("cell")
-            .agg(F.sum("n_part").alias("n_pts"),
-                 F.sum("ndx_part").alias("n_distinct")))
+                    la: str = "la", res: int = 7) -> DataFrame:
+    """(cell, n_pts, n_distinct): row and distinct-``key`` count per
+    cell.  Spark's distinct-aggregate rewrite shuffles on (cell, key)
+    before merging on cell, which spreads a hot cell over reducers —
+    see the module docstring."""
+    return tile_agg(points, fi, la, res,
+                    [F.countDistinct(key).alias("n_distinct")])
 
 
 def tile_topk_points(points: DataFrame, key: str, fi: str = "fi",
                      la: str = "la", value: str = "h", res: int = 5,
-                     k: int = 3, grouped_map: bool = False) -> DataFrame:
+                     k: int = 3) -> DataFrame:
     """Per-tile top-k points by ``value`` (ties by key asc, so the
-    SQL-window oracle matches exactly).
-
-    r6 default: a codegen window top-k — ONE exchange on cell, no
-    Python.  The r5 grouped-map ``applyInPandas`` form (SURVEY.md §3.6
-    "grouped-map applyInPandas for per-tile ops") invoked Python once
-    PER TILE: ~3 ms of pandas overhead × |cells| dominated the query
-    (measured 30 s vs ~1 s at sf0.1 — exactly the guide §2.3 warning
-    that grouped-map ships and handles every row through Python).  It
-    stays available as ``grouped_map=True`` — the per-tile custom-
-    operator slot for logic a window genuinely can't express (model
-    fits, hull builds, resampling) — and the pytest asserts the two
-    forms emit identical rows."""
-    from ..kernels import cell_col
-
+    SQL-window oracle matches exactly): a codegen window top-k — ONE
+    exchange on cell, no Python.  A grouped-map ``applyInPandas`` form
+    calls Python once PER TILE, and ~3 ms of pandas overhead × |cells|
+    dominates (measured 30 s vs ~1 s at sf0.1)."""
     pts = points.withColumn("cell", cell_col(F.col(fi), F.col(la), res))
-    if grouped_map:
-        import pandas as pd
-
-        def _topk(pdf: pd.DataFrame) -> pd.DataFrame:
-            out = pdf.sort_values([value, key],
-                                  ascending=[False, True]).head(k)
-            out = out.copy()
-            out["rk"] = range(1, len(out) + 1)
-            return out[["cell", key, value, "rk"]]
-
-        schema = f"cell bigint, {key} bigint, {value} double, rk int"
-        return pts.groupBy("cell").applyInPandas(_topk, schema)
     w = Window.partitionBy("cell").orderBy(F.col(value).desc(),
                                            F.col(key).asc())
     return (pts.withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") <= k)
             .select("cell", key, value, F.col("rk").cast("int").alias("rk")))
-
-
-def salted_repartition(points: DataFrame, fi: str = "fi", la: str = "la",
-                       res: int = 5, n_salt: int = 4) -> DataFrame:
-    """Repartition by (coarse cell, salt) for skew-proof partitioned
-    writes: hot cells fan out over n_salt writers."""
-    return (points
-            .withColumn("cell_p", cell_col(F.col(fi), F.col(la), res))
-            .withColumn("salt", F.pmod(F.monotonically_increasing_id(),
-                                       F.lit(n_salt)))
-            .repartition(F.col("cell_p"), F.col("salt")))
 
 
 # ---------------------------------------------------------------------------

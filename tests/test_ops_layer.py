@@ -1,14 +1,16 @@
 """Operator-layer tests: checkpoint resumability, streaming/batch
-equivalence, salting equivalence, dedup kernels, entry() smoke."""
+equivalence, hot-cell tile aggregation, dedup kernels, entry() smoke."""
 
 from __future__ import annotations
+
+import re
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from geocoordinateconverter_spark import kernels
+from geocoordinateconverter_spark import cells, kernels
 from geocoordinateconverter_spark.operators import checkpoint as cp
 from geocoordinateconverter_spark.operators import multimodal as mm
 from geocoordinateconverter_spark.operators import similarity as sim
@@ -134,25 +136,41 @@ def skewed_pts(spark):
         {"k": np.arange(n), "fi": fi, "la": la}))
 
 
-def test_salted_agg_equals_unsalted(spark, skewed_pts):
-    plain = (skewed_pts
-             .withColumn("cell",
-                         kernels.cell_col(F.col("fi"), F.col("la"), 7))
-             .groupBy("cell")
-             .agg(F.count("*").alias("n_pts"),
-                  F.countDistinct("k").alias("n_distinct"))
-             .toPandas().sort_values("cell").reset_index(drop=True))
-    salted = (tiles.salted_tile_agg(skewed_pts, key="k", n_salt=8)
-              .toPandas().sort_values("cell").reset_index(drop=True))
-    pd.testing.assert_frame_equal(salted[plain.columns.tolist()], plain)
+def test_tile_distinct_agg_spreads_hot_cell(spark, skewed_pts):
+    """60 % of the rows sit in one or two res-7 cells.  The distinct
+    count per cell must (1) equal a pandas groupby on the NumPy cell
+    encoder, (2) plan as two shuffles with the lower one hashed on
+    (cell, k), and (3) so leave no partition after that shuffle above
+    its fair share — where hashing on cell alone would pin the hot
+    cell to one reducer."""
+    df = tiles.salted_tile_agg(skewed_pts, key="k")
+    plan = df._jdf.queryExecution().executedPlan().toString()
 
+    src = skewed_pts.toPandas()
+    src["cell"] = cells.encode(src["fi"].to_numpy(), src["la"].to_numpy(), 7)
+    want = (src.groupby("cell")["k"].agg(["size", "nunique"])
+            .rename(columns={"size": "n_pts", "nunique": "n_distinct"})
+            .reset_index())
+    got = df.toPandas().sort_values("cell").reset_index(drop=True)
+    pd.testing.assert_frame_equal(got[want.columns.tolist()], want,
+                                  check_dtype=False)
 
-def test_salt_factor_detects_hot_cell(spark, skewed_pts):
-    top = tiles.hot_cells(skewed_pts, top_k=3)
-    # 60 % of 40k rows in a ~2-cell cluster → the hot cell is orders of
-    # magnitude above the ~1.4-row uniform expectation per res-7 cell
-    assert top[0][1] > 3000
-    assert tiles.salt_factor(skewed_pts, target_rows_per_task=1000) > 1
+    shuffles = re.findall(r"(?<!Broadcast)Exchange (\w+)\(([^)]*)\)", plan)
+    assert [kind for kind, _ in shuffles] == ["hashpartitioning"] * 2, plan
+    lower = [c.split("#")[0].strip() for c in shuffles[-1][1].split(",")]
+    assert lower[:2] == ["cell", "k"], plan
+    n_part = int(lower[2])
+
+    def max_share(*keys):
+        part = F.pmod(F.hash(*keys), F.lit(n_part))
+        counts = [r[1] for r in (skewed_pts
+                  .withColumn("cell", kernels.cell_col(F.col("fi"),
+                                                       F.col("la"), 7))
+                  .groupBy(part).count().collect())]
+        return max(counts) / (len(src) / n_part)
+
+    assert max_share("cell", "k") < 1.1
+    assert max_share("cell") > 2.0  # the skew the (cell, k) key removes
 
 
 def test_dot_udf_matches_unrolled(spark):

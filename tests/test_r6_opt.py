@@ -13,6 +13,8 @@ Two layers of evidence:
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import Window
@@ -116,8 +118,11 @@ def test_cms_shortlist_arm_equals_full(spark):
     short = sk.cms_heavy_hitters(docs, shortlist_only=True)
     assert _rows(short) == full and len(full) > 0
     plan = short._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.index("least(") > plan.index("count(1)") or \
-        "Filter" in plan  # filter precedes the exact aggregate
+    # the tree prints parents first: the threshold test on the estimate
+    # must sit below (run before) the one exact count(1) aggregate
+    pred = re.search(rf"least\([^)]*\) >= {sk.CMS_THRESHOLD}\b", plan)
+    assert pred is not None and plan.count("count(1)") == 1, plan
+    assert pred.start() > plan.index("count(1)"), plan
 
 
 def test_pagerank_join_strategies_identical(spark):
@@ -163,16 +168,33 @@ def test_minhash_sig_kernel_arrow_node(spark):
 
 
 def test_tile_topk_window_equals_grouped_map(spark):
+    # the window top-k against its DuckDB twin (the oracle of the query
+    # registered as tile_topk_applyinpandas).  The fixture packs 1500
+    # orders into 28 res-5 cells with ~4 rows per cell tied on the top
+    # h, so the key tie-break decides the output; fi/la are double
+    # expressions so both engines round them identically
+    import duckdb
+
+    import __spark_entry__ as em
     from geocoordinateconverter_spark.operators import tiles as tl
-    pts = (spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
-           .selectExpr("o_orderkey as k",
-                       "45.5 + (o_orderkey % 97) / 100.0 as fi",
-                       "14.2 + (o_orderkey % 83) / 100.0 as la",
-                       "cast(o_orderkey % 1000 as double) as h"))
+    cols = ["o_orderkey AS k",
+            "45.5e0 + cast(o_orderkey % 7 as double) / 100.0e0 AS fi",
+            "14.2e0 + cast(o_orderkey % 5 as double) / 100.0e0 AS la",
+            "cast(o_orderkey % 13 as double) AS h"]
+    pts = spark.read.parquet(f"{SF_SMOKE}/orders.parquet").selectExpr(*cols)
     a = _rows(tl.tile_topk_points(pts, key="k", res=5, k=3))
-    b = _rows(tl.tile_topk_points(pts, key="k", res=5, k=3,
-                                  grouped_map=True))
-    assert a == b and len(a) > 0
+    src = f"SELECT {', '.join(cols)} FROM orders"
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW orders AS SELECT * FROM "
+                    f"read_parquet('{SF_SMOKE}/orders.parquet')")
+        sql = em.oracle_sql()["tile_topk_applyinpandas"]
+        assert em.SRC_WGS_ORDERS in sql
+        b = sorted(con.execute(
+            sql.replace(em.SRC_WGS_ORDERS, f"({src}) q_src")).fetchall())
+    finally:
+        con.close()
+    assert a == b and len(a) == 28 * 3
 
 
 def test_ngram_jaccard_block_join_equals_residual_form(spark):

@@ -4,12 +4,15 @@ operators to PLANS.md and assert the invariants we design for:
 
 * ArrowEvalPython only — never BatchEvalPython (no per-row Python)
 * PIP prefilter is a BroadcastHashJoin (never BroadcastNestedLoopJoin)
+* the distinct count per tile shuffles on (cell, key) before cell, so a
+  hot cell spreads over reducers
 * scans show pushed filters / pruned schemas where applicable
 """
 
 from __future__ import annotations
 
 import io
+import re
 import sys
 from contextlib import redirect_stdout
 from pathlib import Path
@@ -47,7 +50,7 @@ def main() -> None:
             .select("k", F.col("o.fi").alias("fi"), F.col("o.la").alias("la"),
                     F.col("o.h").alias("h")))
     flagship = tiles.salted_tile_agg(pip_op.pip_join(conv, spark), key="k")
-    plans["flagship: derive → t3 → PIP → salted tile agg"] = formatted(flagship)
+    plans["flagship: derive → t3 → PIP → distinct tile agg"] = formatted(flagship)
 
     tile = (conv.withColumn("cell", kernels.cell_col(F.col("fi"), F.col("la"), 7))
             .groupBy("cell").count())
@@ -65,13 +68,14 @@ def main() -> None:
     plans["scan pushdown/pruning (lineitem 2-col filter)"] = formatted(pruned)
 
     from geocoordinateconverter_spark.operators import textdedup as td
-    plans["salted_tile_agg (two-stage skew split)"] = formatted(
-        tiles.salted_tile_agg(pts, key="k"))
+    tiled = tiles.salted_tile_agg(pts, key="k")
+    plans["salted_tile_agg (distinct per cell, hot-cell spread)"] = \
+        formatted(tiled)
     plans["minhash signatures (tokenize codegen → Arrow hash kernel)"] = \
         formatted(td.minhash_signatures(spark.table("documents")))
 
     checks = []
-    flag_plan = plans["flagship: derive → t3 → PIP → salted tile agg"]
+    flag_plan = plans["flagship: derive → t3 → PIP → distinct tile agg"]
     checks.append(("ArrowEvalPython present", "ArrowEvalPython" in flag_plan))
     checks.append(("no BatchEvalPython anywhere",
                    all("BatchEvalPython" not in p for p in plans.values())))
@@ -87,9 +91,13 @@ def main() -> None:
     checks.append(("knn kernel path has NO Exchange (pure map)",
                    "Exchange" not in knn_plan
                    and "ArrowEvalPython" in knn_plan))
-    salted = plans["salted_tile_agg (two-stage skew split)"]
-    checks.append(("salted agg has partial aggregation before shuffle",
-                   salted.count("HashAggregate") >= 4))
+    shuffles = re.findall(r"(?<!Broadcast)Exchange (\w+)\(([^)]*)\)",
+                          tiled._jdf.queryExecution().executedPlan().toString())
+    checks.append(("tile distinct agg: 2 hash Exchanges, the lower on "
+                   "(cell, k)",
+                   [kind for kind, _ in shuffles] == ["hashpartitioning"] * 2
+                   and re.match(r"cell#\d+L, k#\d+L,", shuffles[-1][1])
+                   is not None))
     mh = plans["minhash signatures (tokenize codegen → Arrow hash kernel)"]
     # r6: signatures hash via ONE vectorized Arrow kernel (md5 once per
     # batch-distinct token) — the assertable invariants are that the
@@ -103,22 +111,6 @@ def main() -> None:
                    and "ArrowEvalPython" in mh))
 
     # ---- global sweep: no BNLJ/Cartesian in ANY registered query ------
-    # Exceptions (intentional, documented):
-    #   ann_cosine_topk — the declared brute-force ANN baseline: tiny
-    #   broadcast query set vs streamed corpus; the scale path is
-    #   ann_lsh_topk (bucket equi-join), which IS swept.
-    #   ann_recall_report — its EXACT reference arm is that same
-    #   declared baseline (recall@k is defined against exact top-k);
-    #   the three approximate arms it grades are equi-join-only and
-    #   remain individually swept via their own queries.
-    #   ann_pq_adc_topk — the declared compressed-domain full scan
-    #   (the PQ point is making the scan 8 adds over 8-byte codes);
-    #   the equi-join scale paths are ann_ivfpq_topk / _rerank_topk,
-    #   which ARE swept.  ann_pq_recall_report grades the PQ arms
-    #   against the exact baseline, so it inherits both exceptions.
-    BNLJ_OK = {"ann_cosine_topk", "ann_recall_report",
-               "ann_recall_report_clustered", "ann_pq_adc_topk",
-               "ann_pq_recall_report"}
     # Building these queries EXECUTES them (streaming runs to
     # completion, checkpoint writes + crash-injects): the DataFrame
     # they return is a trivial sink/manifest scan, so sweeping them
@@ -126,12 +118,12 @@ def main() -> None:
     # plan is covered elsewhere: the streaming flagship shares the
     # batch flagship lineage (audited above), the stateful dedup's
     # state op is pytest-asserted, checkpoint's write plan is the
-    # salted-agg/flagship shape.
+    # tile-agg/flagship shape.
     EAGER_SKIP = {"streaming_flagship_tiles", "streaming_stateful_dedup",
                   "checkpoint_resume_roundtrip"}
     offenders = []
     for qname, fn in em.queries().items():
-        if qname in BNLJ_OK or qname in EAGER_SKIP:
+        if qname in EAGER_SKIP:
             continue
         try:
             qdf = fn(spark, SF)
@@ -142,9 +134,8 @@ def main() -> None:
         if "BroadcastNestedLoopJoin" in p or "CartesianProduct" in p:
             offenders.append(qname)
     checks.append((f"no BNLJ/Cartesian in any of {len(em.queries())} queries "
-                   f"(except declared baseline {sorted(BNLJ_OK)}; eager "
-                   f"side-effect queries {sorted(EAGER_SKIP)} audited via "
-                   f"their batch twins); offenders={offenders}",
+                   f"(eager side-effect queries {sorted(EAGER_SKIP)} "
+                   f"audited via their batch twins); offenders={offenders}",
                    not offenders))
 
     out = ["# PLANS — physical-plan audit (generated by tools/plan_audit.py)",
