@@ -21,6 +21,7 @@ from __future__ import annotations
 import atexit
 import shutil
 import tempfile
+import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -62,19 +63,21 @@ def _tmpdir(prefix: str) -> str:
     return d
 
 
-# registration memo (r6): _register is idempotent and is called at the
+# registration memo: _register is idempotent and is called at the
 # head of EVERY query composition — re-running it re-infers all ten
 # parquet schemas (measured 0.8 s per call, ~95 s of pure overhead
 # across a 119-query driver sweep).  Pure metadata (temp views), never
-# data or results, so memoizing it cannot cache computation; keyed on
-# (applicationId, sf_dir) so a different data dir or a fresh session
+# data or results, so memoizing it cannot cache computation.  Temp
+# views belong to a SparkSession, not to the application, so the memo
+# is keyed on the session object (weakly — a dropped session leaves
+# no entry): a sibling ``spark.newSession()`` or a different data dir
 # always re-registers.
-_REGISTERED: dict[str, str] = {}  # applicationId -> currently registered dir
+_REGISTERED: weakref.WeakKeyDictionary[SparkSession, str] = (
+    weakref.WeakKeyDictionary())  # session -> currently registered dir
 
 
 def _register(spark: SparkSession, sf_dir: str) -> None:
-    app = spark.sparkContext.applicationId
-    if _REGISTERED.get(app) == sf_dir:
+    if _REGISTERED.get(spark) == sf_dir:
         return
     par = spark.sparkContext.defaultParallelism
     for t in TABLES:
@@ -83,7 +86,7 @@ def _register(spark: SparkSession, sf_dir: str) -> None:
                 and df.rdd.getNumPartitions() < par):
             df = df.repartition(par)
         df.createOrReplaceTempView(t)
-    _REGISTERED[app] = sf_dir
+    _REGISTERED[spark] = sf_dir
 
 
 # Integer key column spanning the largest table: lineitem rows keyed by

@@ -15,8 +15,8 @@ coordinates for every lineitem row (codegen) → t=3 datum conversion
 join vs municipality polygons → salted tile aggregation.  docs/sec is
 input rows / wall-clock of the full pipeline.
 
-Scaling evidence (local[8] vs local[32]) is produced by
-``tools/scaling_bench.py`` which shells out to this file.
+Scaling evidence (local[N] vs local[4N]) is produced by
+``tools/scaling_interleaved.py``, which imports this file.
 """
 
 from __future__ import annotations

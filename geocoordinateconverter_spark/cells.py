@@ -76,21 +76,6 @@ def parent(cell: np.ndarray) -> np.ndarray:
     return ((res - 1) << RES_SHIFT) + ((ix >> 1) << IX_SHIFT) + (iy >> 1)
 
 
-def k_ring(cell: int, k: int = 1) -> np.ndarray:
-    """All cells within Chebyshev distance k (clipped to the grid) —
-    the H3 k-ring analogue used for kNN candidate expansion."""
-    res, ix, iy = decode(np.asarray([cell], np.int64))
-    res, ix, iy = int(res[0]), int(ix[0]), int(iy[0])
-    n = n_cells(res)
-    out = []
-    for dx in range(-k, k + 1):
-        for dy in range(-k, k + 1):
-            jx, jy = ix + dx, iy + dy
-            if 0 <= jx < n and 0 <= jy < n:
-                out.append((res << RES_SHIFT) + (jx << IX_SHIFT) + jy)
-    return np.asarray(sorted(out), np.int64)
-
-
 def cover_bbox(la_min: float, fi_min: float, la_max: float, fi_max: float,
                res: int = DEFAULT_RES) -> np.ndarray:
     """All res-``res`` cells intersecting a lon/lat bbox — used to build

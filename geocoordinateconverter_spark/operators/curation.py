@@ -30,8 +30,6 @@ that family):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -370,11 +368,9 @@ def _grams_duck(n: int, toks: str = "toks") -> str:
 # a training document is contaminated when it shares any word n-gram
 # with a held-out benchmark example.  The benchmark side is always
 # tiny relative to the corpus (eval sets are ~1e5 examples vs 1e10
-# docs), so the plan broadcasts the distinct benchmark-gram table and
-# the 100 TB side stays map-only: per-row gram build (the shared
-# sliding-window expression), broadcast hash join, then a per-doc agg
-# whose map-side partial combine collapses each doc's hits before the
-# single small shuffle.  No external data: the benchmark is carved
+# docs), so the benchmark gram table is broadcast and the 100 TB side
+# stays map-only: one Arrow pass grams each doc and counts its hits
+# in place, with no Exchange.  No external data: the benchmark is carved
 # deterministically out of the corpus itself (a hash60-selected ~6% of
 # docs contribute a 10-token snippet), which also guarantees the
 # positive path is exercised — every benchmark source doc contains its
@@ -392,84 +388,67 @@ def _bench_sel_col():
         % BENCH_MOD
 
 
-def decontaminate(docs: DataFrame, n: int = DECON_N,
-                  kernel: bool = True) -> DataFrame:
+def decontaminate(docs: DataFrame, n: int = DECON_N) -> DataFrame:
     """(doc_id, n_gram_hits, n_bench_docs): corpus docs sharing at
     least one word n-gram with the synthetic benchmark, with how many
     distinct benchmark grams and benchmark examples they hit.  Grams
     are per-doc DISTINCT on both sides (the rule is membership, not
     multiplicity).
 
-    ``kernel=True`` (r6): the benchmark gram table (tiny by premise —
-    eval sets vs a 100 TB corpus) is collected once and broadcast as a
-    gram → bench-id dict; ONE map-only Arrow pass builds each doc's
-    grams and counts its distinct hits in place.  Same broadcast-side
-    shape as the r5 plan, but the corpus no longer explodes a gram row
-    per position through a broadcast-hash-join + two-countDistinct
-    aggregation — the explode, join and groupBy Exchange all collapse
-    into the kernel (measured 6.4 s → ~2 s at sf1.0).  ``kernel=False``
-    keeps the r5 join/agg formulation as the equivalence twin."""
+    The benchmark gram table (tiny by premise — eval sets vs a 100 TB
+    corpus) is collected once and broadcast as a gram → bench-id dict;
+    ONE map-only Arrow pass builds each doc's grams and counts its
+    distinct hits in place, so the corpus never explodes a gram row per
+    position (measured 6.4 s → ~2 s at sf1.0 against an explode +
+    broadcast-join + countDistinct plan).  :func:`decontaminate_sql`
+    is that join/agg form in DuckDB."""
     bench = (docs
              .filter(_bench_sel_col() < BENCH_RATE)
              .select(F.col("doc_id").alias("bench_id"),
                      F.expr(f"slice({TOKS_EXPR}, {SNIP_START}, {SNIP_LEN})")
                      .alias("toks")))
-    if kernel:
-        spark = docs.sparkSession
-        bpdf = bench.toPandas()
-        bm: dict = {}
-        for bid, tl in zip(bpdf["bench_id"], bpdf["toks"]):
-            tl = list(tl)
-            for i in range(len(tl) - n + 1):
-                bm.setdefault(" ".join(tl[i:i + n]), set()).add(int(bid))
-        bq = spark.sparkContext.broadcast(bm)
+    spark = docs.sparkSession
+    bpdf = bench.toPandas()
+    bm: dict = {}
+    for bid, tl in zip(bpdf["bench_id"], bpdf["toks"]):
+        tl = list(tl)
+        for i in range(len(tl) - n + 1):
+            bm.setdefault(" ".join(tl[i:i + n]), set()).add(int(bid))
+    bq = spark.sparkContext.broadcast(bm)
 
-        def kern(batches):
-            import pyarrow as pa
-            table = bq.value
-            for b in batches:
-                ids = b.column("doc_id").to_pylist()
-                toks = b.column("toks").to_pylist()
-                o_id, o_g, o_b = [], [], []
-                for did, tl in zip(ids, toks):
-                    if tl is None or len(tl) < n:
-                        continue
-                    grams = {" ".join(tl[i:i + n])
-                             for i in range(len(tl) - n + 1)}
-                    bids: set = set()
-                    nhit = 0
-                    for g in grams:
-                        e = table.get(g)
-                        if e is not None:
-                            nhit += 1
-                            bids.update(e)
-                    if nhit:
-                        o_id.append(did)
-                        o_g.append(nhit)
-                        o_b.append(len(bids))
-                if o_id:
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(o_id, pa.int64()),
-                         pa.array(o_g, pa.int64()),
-                         pa.array(o_b, pa.int64())],
-                        names=["doc_id", "n_gram_hits", "n_bench_docs"])
+    def kern(batches):
+        import pyarrow as pa
+        table = bq.value
+        for b in batches:
+            ids = b.column("doc_id").to_pylist()
+            toks = b.column("toks").to_pylist()
+            o_id, o_g, o_b = [], [], []
+            for did, tl in zip(ids, toks):
+                if tl is None or len(tl) < n:
+                    continue
+                grams = {" ".join(tl[i:i + n])
+                         for i in range(len(tl) - n + 1)}
+                bids: set = set()
+                nhit = 0
+                for g in grams:
+                    e = table.get(g)
+                    if e is not None:
+                        nhit += 1
+                        bids.update(e)
+                if nhit:
+                    o_id.append(did)
+                    o_g.append(nhit)
+                    o_b.append(len(bids))
+            if o_id:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(o_id, pa.int64()),
+                     pa.array(o_g, pa.int64()),
+                     pa.array(o_b, pa.int64())],
+                    names=["doc_id", "n_gram_hits", "n_bench_docs"])
 
-        src = docs.select("doc_id", F.expr(TOKS_EXPR).alias("toks"))
-        return src.mapInArrow(
-            kern, "doc_id long, n_gram_hits long, n_bench_docs long")
-    bench_grams = bench.select(
-        "bench_id",
-        F.explode(F.expr(f"array_distinct({gram_window_expr(n)})"))
-        .alias("gram"))
-    doc_grams = (docs.select("doc_id", F.expr(TOKS_EXPR).alias("toks"))
-                 .select("doc_id",
-                         F.explode(
-                             F.expr(f"array_distinct({gram_window_expr(n)})"))
-                         .alias("gram")))
-    return (doc_grams.join(F.broadcast(bench_grams), "gram")
-            .groupBy("doc_id")
-            .agg(F.countDistinct("gram").alias("n_gram_hits"),
-                 F.countDistinct("bench_id").alias("n_bench_docs")))
+    src = docs.select("doc_id", F.expr(TOKS_EXPR).alias("toks"))
+    return src.mapInArrow(
+        kern, "doc_id long, n_gram_hits long, n_bench_docs long")
 
 
 def decontaminate_sql(n: int = DECON_N) -> str:
@@ -584,6 +563,8 @@ FROM copies WHERE n_copies >= 1
 # int64 (budget = pct% of corpus tokens, integer division).
 
 BUDGET_PCT = 30
+# doc_id range per running-sum sub-bucket (see token_budget_select)
+BUDGET_SUB_WIDTH = 1 << 16
 # quality score: mean token length in tenths of a character — integer,
 # bounded cardinality, and a real (if crude) fluency proxy
 _SUM_LEN = "aggregate(toks, 0L, (a, t) -> a + length(t))"
@@ -628,11 +609,8 @@ def token_budget_select(docs: DataFrame, pct: int = BUDGET_PCT) -> DataFrame:
     # broadcast-small (ranges, not rows), every sub-bucket ranks in
     # parallel, and the output is bit-identical (exact int64 sums over
     # the same doc_id order).  At fixture scale each score has one
-    # sub-bucket (degenerate, same plan cost); the width is a knob for
-    # the id density of a real corpus.
-    sub_width = int(os.environ.get("SPARK_GRAFT_BUDGET_SUB_WIDTH",
-                                   str(1 << 16)))
-    dsub = d.withColumn("sub", F.expr(f"doc_id DIV {sub_width}"))
+    # sub-bucket (degenerate, same plan cost).
+    dsub = d.withColumn("sub", F.expr(f"doc_id DIV {BUDGET_SUB_WIDTH}"))
     subtot = dsub.groupBy("score", "sub").agg(F.sum("n_tok").alias("sub_tok"))
     w_soff = (Window.partitionBy("score").orderBy("sub")
               .rowsBetween(Window.unboundedPreceding, -1))

@@ -1,27 +1,17 @@
 """kNN join to reference stations — [NORTH-RULE] (SURVEY.md §3.6).
 
-Three physical strategies over the same semantics (k nearest stations
-per point, deterministic ties by ``station_id`` asc — FIXTURES.md §5):
+Semantics: the k nearest stations per point, deterministic ties by
+``station_id`` asc (FIXTURES.md §5).  The station table is tiny, so it
+lives in the pandas-UDF closure; the kernel computes the full
+(batch × n_st) distance matrix in NumPy, stable-argsorts, and emits the
+top-k as a flat struct which codegen explodes into rows.  The plan is
+Scan → ArrowEvalPython → Generate — no Exchange at all, a pure map at
+any point count.  Its independent check is :func:`knn_oracle_sql`, a
+DuckDB cross join + window with the same IEEE ops (stable sort ≡
+(dist2, station_id) tie-break), so dist2 agrees bit for bit.
 
-* ``method='kernel'`` (default) — ZERO-SHUFFLE: the station table is
-  tiny, so it lives in the pandas-UDF closure; the kernel computes the
-  full (batch × n_st) distance matrix in NumPy, stable-argsorts, and
-  emits the top-k as a flat struct which codegen explodes into rows.
-  The plan is Scan → ArrowEvalPython → Generate — no Exchange at all
-  (the broadcast+window form shuffled the 25×-inflated candidate set
-  through ``Window.partitionBy(key)`` just to rank; VERDICT r1 #3).
-  At 10¹² points this is a pure map — scaling is embarrassingly
-  parallel.  Bit-identical to the window form (same IEEE ops, stable
-  sort ≡ (dist2, station_id) tie-break) — asserted in pytest.
-* ``method='broadcast'`` — stations are a tiny dim: broadcast to every
-  task, cross-candidate via broadcast join, rank with a window.  Kept
-  as the SQL-mirrorable oracle twin of the kernel path.
-* ``method='cellring'`` — the scale path for LARGE station sets
-  (SURVEY.md §3.6 "kNN join" row): stations bucketed by grid cell;
-  each point expands its cell's k-ring (Chebyshev radius chosen so the
-  ring is a superset of the true k nearest), equi-joins on cell, then
-  ranks.  Equi-join keeps Catalyst in BroadcastHashJoin/SMJ land.
-  pytest asserts cellring ≡ broadcast row-for-row on the fixture.
+:func:`radius_join` prunes by grid cell instead: stations register in
+every cell of a ring around them, points equi-join on their cell.
 
 Distance: flat-earth squared degrees ``(Δφ)² + (0.7·Δλ)²`` — pure
 arithmetic (0.7 ≈ cos 46° meridian-convergence factor, adequate for a
@@ -32,7 +22,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -41,7 +31,7 @@ from ..constants import BBOX_FI_MAX, BBOX_FI_MIN, BBOX_LA_MAX, BBOX_LA_MIN
 from ..functions.sqlgen import f as _f
 
 LA_FACTOR = 0.7
-KNN_CELL_RES = 3  # coarse cells for the cellring variant
+KNN_CELL_RES = 3  # coarse cells for radius_join's ring pruning
 
 
 def station_positions(n_st: int = 25) -> np.ndarray:
@@ -60,25 +50,9 @@ def stations_values_sql(n_st: int = 25) -> str:
 
 def stations_df(spark: SparkSession, n_st: int = 25) -> DataFrame:
     pos = station_positions(n_st)
-    rows = [(i, float(pos[i, 0]), float(pos[i, 1]),
-             int(cells.encode(pos[i, 0:1], pos[i, 1:2], KNN_CELL_RES)[0]))
-            for i in range(n_st)]
+    rows = [(i, float(pos[i, 0]), float(pos[i, 1])) for i in range(n_st)]
     return spark.createDataFrame(
-        rows, "station_id int, s_fi double, s_la double, s_cell bigint")
-
-
-def _max_kth_nn_dist(pos: np.ndarray, k: int) -> float:
-    """Upper bound on the k-th-NN distance (metric units of _dist2's
-    sqrt: degrees with λ scaled by LA_FACTOR) over the bbox, via a
-    dense probe grid + half-diagonal slack."""
-    gf = np.linspace(BBOX_FI_MIN, BBOX_FI_MAX, 60)
-    gl = np.linspace(BBOX_LA_MIN, BBOX_LA_MAX, 60)
-    pf, pl = np.meshgrid(gf, gl, indexing="ij")
-    d2 = ((pf.ravel()[:, None] - pos[None, :, 0]) ** 2
-          + (LA_FACTOR * (pl.ravel()[:, None] - pos[None, :, 1])) ** 2)
-    kth = np.sqrt(np.sort(d2, axis=1)[:, k - 1]).max()
-    step = np.hypot(gf[1] - gf[0], LA_FACTOR * (gl[1] - gl[0]))
-    return float(kth + step)
+        rows, "station_id int, s_fi double, s_la double")
 
 
 def _station_rings(spark: SparkSession, pos: np.ndarray,
@@ -120,7 +94,7 @@ def knn_kernel_udf(n_st: int, k: int):
     station_id because columns are in id order).  The arithmetic is the
     exact IEEE op sequence of :func:`_dist2` / the SQL oracle —
     subtract, multiply, multiply-add in the same order — so dist2 is
-    bit-identical to the window form."""
+    bit-identical to :func:`knn_oracle_sql`'s."""
     pos = station_positions(n_st)
     sfi = pos[:, 0].copy()
     sla = pos[:, 1].copy()
@@ -146,87 +120,25 @@ def knn_kernel_udf(n_st: int, k: int):
 
 def knn_join(points: DataFrame, spark: SparkSession, key: str,
              fi_col: str = "fi", la_col: str = "la", k: int = 3,
-             n_st: int = 25, method: str = "kernel") -> DataFrame:
-    # all methods emit at most n_st rows per point — clamp ONCE so the
-    # three strategies behave identically for k > n_st (the cellring
-    # bound would otherwise index past the station matrix; r4 review)
+             n_st: int = 25) -> DataFrame:
+    # at most n_st neighbours exist per point
     k = min(k, n_st)
     # NULL fi/la: kNN of an unknown coordinate is undefined — such rows
-    # are EXCLUDED from the output of EVERY method.  Filtered here, once,
-    # so the three strategies agree (r5 review: a cellring-only filter
-    # left kernel/broadcast emitting NaN/NULL-dist2 rows instead).
+    # are EXCLUDED from the output (the UDF would emit NaN dist2 rows)
     points = points.filter(F.col(fi_col).isNotNull()
                            & F.col(la_col).isNotNull())
-    if method == "kernel":
-        udf = knn_kernel_udf(n_st, k)
-        nn = points.withColumn("_nn", udf(F.col(fi_col), F.col(la_col)))
-        structs = F.array(*[
-            F.struct(F.col(f"_nn.s{j}").alias("station_id"),
-                     F.col(f"_nn.d{j}").alias("dist2"),
-                     F.lit(j + 1).alias("rk"))
-            for j in range(k)])
-        keep = points.columns
-        return (nn.select(*keep, F.explode(structs).alias("_e"))
-                .select(*keep, F.col("_e.station_id").alias("station_id"),
-                        F.col("_e.dist2").alias("dist2"),
-                        F.col("_e.rk").alias("rk")))
-    st = stations_df(spark, n_st)
-    if method == "broadcast":
-        cand = points.join(F.broadcast(st))
-    elif method == "cellring":
-        # Each station is registered in every cell whose points could
-        # have it among their k nearest: ring radius derived from the
-        # max k-th-NN distance over a dense probe grid (computed once,
-        # deterministic), plus one cell of slack.  This makes the
-        # equi-join candidate set a PROVEN superset of the true kNN —
-        # asserted row-for-row against the broadcast path in tests.
-        pos = station_positions(n_st)
-        d_max = _max_kth_nn_dist(pos, k)
-        rings = _station_rings(spark, pos, d_max)
-        from ..kernels import cell_col
-        # The ring-radius bound is proven over the WORKING BBOX only:
-        # cells.encode clips an out-of-bbox point into an edge cell,
-        # whose ring need not contain that point's true k-th NN.  Such
-        # points take the broadcast (exact) candidate set instead —
-        # correct for any input, and a no-op for in-bbox corpora
-        # (r4 review finding).
-        in_bbox = (F.col(fi_col).between(BBOX_FI_MIN, BBOX_FI_MAX)
-                   & F.col(la_col).between(BBOX_LA_MIN, BBOX_LA_MAX))
-        pts = (points.filter(in_bbox)
-               .withColumn("cell", cell_col(F.col(fi_col), F.col(la_col),
-                                            KNN_CELL_RES)))
-        cand_in = (pts.join(F.broadcast(rings), "cell")
-                   .join(F.broadcast(st), "station_id")
-                   .drop("cell"))
-        # Gate the cartesian fallback on an out-of-bbox existence probe:
-        # unconditioned, every cellring plan carried a
-        # BroadcastNestedLoopJoin branch even for all-in-bbox data
-        # (ADVICE r4 — would trip the repo's own no-BNLJ plan audit).
-        # limit(1).count() short-circuits the scan: the pushed-down
-        # bbox filter + LocalLimit stop at the first qualifying row.
-        # NOTE: this makes cellring composition EAGER (one small Spark
-        # job at call time) and re-evaluates the upstream lineage for
-        # the probe — deliberate: cellring is the batch-scale path over
-        # materialized sources, and the probe is O(first match); don't
-        # compose it over streaming DataFrames (count() would throw) OR
-        # over nondeterministic batch sources (ADVICE r5: the gate
-        # decision is a snapshot — if upstream rows change between the
-        # probe and execution, an omitted fallback branch would drop
-        # out-of-bbox pairs silently; materialize such sources first).
-        if points.filter(~in_bbox).limit(1).count():
-            cand = cand_in.unionByName(
-                points.filter(~in_bbox).join(F.broadcast(st)))
-        else:
-            cand = cand_in
-    else:
-        raise ValueError(method)
-    w = Window.partitionBy(key).orderBy(
-        _dist2(fi_col, la_col).asc(), F.col("station_id").asc())
-    return (cand
-            .withColumn("dist2", _dist2(fi_col, la_col))
-            .withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
-            .drop("s_cell"))
+    udf = knn_kernel_udf(n_st, k)
+    nn = points.withColumn("_nn", udf(F.col(fi_col), F.col(la_col)))
+    structs = F.array(*[
+        F.struct(F.col(f"_nn.s{j}").alias("station_id"),
+                 F.col(f"_nn.d{j}").alias("dist2"),
+                 F.lit(j + 1).alias("rk"))
+        for j in range(k)])
+    keep = points.columns
+    return (nn.select(*keep, F.explode(structs).alias("_e"))
+            .select(*keep, F.col("_e.station_id").alias("station_id"),
+                    F.col("_e.dist2").alias("dist2"),
+                    F.col("_e.rk").alias("rk")))
 
 
 def knn_oracle_sql(points_src: str, key: str, k: int = 3,
@@ -253,57 +165,53 @@ RADIUS_DEFAULT = 0.1  # metric units of _dist2's sqrt (≈11 km N-S)
 
 def radius_join(points: DataFrame, spark: SparkSession,
                 fi_col: str = "fi", la_col: str = "la",
-                radius: float = RADIUS_DEFAULT, n_st: int = 25,
-                method: str = "cellprune") -> DataFrame:
+                radius: float = RADIUS_DEFAULT,
+                n_st: int = 25) -> DataFrame:
     """ε-distance join — [NORTH-RULE] (SURVEY.md §3.6 spatial joins):
     every (point, station) pair with ``dist2 <= radius²``.  Unlike
     :func:`knn_join` (top-k per point) this is a within-distance join
     (reference analogue: gk-slo's nearest-tie-point search is bounded
     by a fixed grid radius — conv.c's triangle candidate pruning).
 
-    Physical strategies:
+    Stations register in every cell within the radius ring
+    (:func:`_station_rings`), points equi-join on their codegen cell
+    id, then the exact predicate filters.  Candidate fan-out per point
+    is O(stations nearby), not O(n_st); the plan is Scan →
+    BroadcastHashJoin ×2 → Filter, no shuffle of the point side.
 
-    * ``cellprune`` (default, the 10¹²-row path) — stations register in
-      every cell within the radius ring (:func:`_station_rings`), points
-      equi-join on their codegen cell id, then the exact predicate
-      filters.  Candidate fan-out per point is O(stations nearby), not
-      O(n_st); the plan is Scan → BroadcastHashJoin ×2 → Filter, no
-      BroadcastNestedLoopJoin, no shuffle of the point side.
-    * ``broadcast`` — unpruned broadcast candidate set + filter; the
-      SQL-mirrorable twin, and the exact fallback for out-of-bbox
-      points (cells.encode clips those into edge cells, voiding the
-      ring superset proof — same gate as cellring kNN).
+    The ring superset proof holds over the WORKING BBOX only:
+    cells.encode clips an out-of-bbox point into an edge cell.  Such
+    points take an unpruned broadcast candidate set instead.  That
+    fallback branch is added only when an eager ``limit(1).count()``
+    probe finds an out-of-bbox row, so all-in-bbox plans carry no
+    BroadcastNestedLoopJoin.  The probe is one small Spark job at call
+    time over the upstream lineage: do not compose this over streaming
+    DataFrames (count() would throw) or nondeterministic sources (the
+    gate decision is a snapshot; materialize such sources first).
 
     The predicate is pure ``*``/``-``/``+`` on float64 (no libm), so
-    Spark and the DuckDB oracle agree bit-for-bit with no tolerance.
+    Spark and the DuckDB oracle (:func:`radius_oracle_sql`) agree
+    bit-for-bit with no tolerance.
     """
+    from ..kernels import cell_col
     points = points.filter(F.col(fi_col).isNotNull()
                            & F.col(la_col).isNotNull())
     st = stations_df(spark, n_st)
-    r2 = radius * radius
-    if method == "broadcast":
-        cand = points.join(F.broadcast(st))
-    elif method == "cellprune":
-        pos = station_positions(n_st)
-        rings = _station_rings(spark, pos, radius)
-        from ..kernels import cell_col
-        in_bbox = (F.col(fi_col).between(BBOX_FI_MIN, BBOX_FI_MAX)
-                   & F.col(la_col).between(BBOX_LA_MIN, BBOX_LA_MAX))
-        pts = (points.filter(in_bbox)
-               .withColumn("cell", cell_col(F.col(fi_col), F.col(la_col),
-                                            KNN_CELL_RES)))
-        cand = (pts.join(F.broadcast(rings), "cell")
-                .join(F.broadcast(st), "station_id")
-                .drop("cell"))
-        # eager out-of-bbox probe, same contract as cellring kNN above
-        if points.filter(~in_bbox).limit(1).count():
-            cand = cand.unionByName(
-                points.filter(~in_bbox).join(F.broadcast(st)))
-    else:
-        raise ValueError(method)
+    rings = _station_rings(spark, station_positions(n_st), radius)
+    in_bbox = (F.col(fi_col).between(BBOX_FI_MIN, BBOX_FI_MAX)
+               & F.col(la_col).between(BBOX_LA_MIN, BBOX_LA_MAX))
+    pts = (points.filter(in_bbox)
+           .withColumn("cell", cell_col(F.col(fi_col), F.col(la_col),
+                                        KNN_CELL_RES)))
+    cand = (pts.join(F.broadcast(rings), "cell")
+            .join(F.broadcast(st), "station_id")
+            .drop("cell"))
+    if points.filter(~in_bbox).limit(1).count():
+        cand = cand.unionByName(
+            points.filter(~in_bbox).join(F.broadcast(st)))
     return (cand.withColumn("dist2", _dist2(fi_col, la_col))
-            .filter(F.col("dist2") <= F.lit(r2))
-            .drop("s_fi", "s_la", "s_cell"))
+            .filter(F.col("dist2") <= F.lit(radius * radius))
+            .drop("s_fi", "s_la"))
 
 
 def radius_oracle_sql(points_src: str, key: str,

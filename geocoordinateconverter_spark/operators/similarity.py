@@ -16,10 +16,6 @@ Engine paths:
   brute-force path stays as the small-side/rerank baseline.
 * ``cosine_near_dup`` — pairs over a doc_id window with cosine above a
   threshold (embedding near-dup dedup entry).
-
-A Pandas-UDF dot-product kernel is provided for wide vectors (where an
-unrolled expression would bloat codegen); pytest asserts it matches the
-unrolled path bitwise.
 """
 
 from __future__ import annotations
@@ -418,77 +414,11 @@ WHERE rk <= {k}
 """
 
 
-def _assign_udf_from(C: np.ndarray):
-    """Nearest-centroid assignment for an arbitrary centroid matrix
-    (same argmax x·c − ‖c‖²/2 form and fold order as ivf_cluster_udf,
-    which is the fixed-grid special case)."""
-    H = 0.5 * (C * C).sum(axis=1)
-    n_c, dim = C.shape
-
-    @pandas_udf("int")
-    def _udf(emb: pd.Series) -> pd.Series:
-        X = np.stack(emb.to_numpy()).astype(np.float64)
-        scores = np.empty((X.shape[0], n_c))
-        for c in range(n_c):
-            acc = C[c, 0] * X[:, 0]
-            for d in range(1, dim):
-                acc = acc + C[c, d] * X[:, d]
-            scores[:, c] = acc - H[c]
-        return pd.Series(scores.argmax(axis=1).astype(np.int32))
-
-    return _udf
-
-
-def ivf_train_kmeans(emb: DataFrame, n_iter: int = 3):
-    """Learned coarse quantizer: Lloyd's k-means over the corpus with
-    DETERMINISTIC init (the fixed-grid centroids) and a FIXED iteration
-    count — the standard upgrade from the static IVF grid when the
-    embedding distribution is known.
-
-    Per iteration: one Arrow assignment pass (centroids live in the UDF
-    closure — 16×DIM floats, no broadcast table needed) and one
-    posexplode → groupBy(cluster, dim) mean for the update; the driver
-    collects only the 16×DIM centroid matrix between iterations (the
-    irreducible synchronization point of Lloyd's algorithm — same shape
-    at 10¹² rows).  Empty clusters keep their previous centroid.
-
-    Iterative + float-sum-order-dependent (distributed mean) → this is
-    the documented rows-only driver-check class (no SQL oracle); the
-    pytest asserts the full replay against NumPy.  Returns
-    (cluster, n_vecs, centroid) with centroids rounded to 9 dp."""
-    C = np.array([[centroid_coef(c, d) for d in range(DIM)]
-                  for c in range(N_CLUSTERS)])
-    assigned = None
-    for _ in range(n_iter):
-        assigned = emb.withColumn(
-            "cluster", _assign_udf_from(C)(F.col("embedding")))
-        stats = (assigned
-                 .select("cluster", F.posexplode("embedding").alias("d", "v"))
-                 .groupBy("cluster", "d")
-                 .agg(F.avg("v").alias("m"))
-                 .collect())  # ≤ N_CLUSTERS·DIM tiny rows
-        C = C.copy()
-        for r in stats:
-            C[r.cluster, r.d] = r.m
-    cent_lit = {c: F.array(*[F.lit(round(float(C[c, d]), 9))
-                             for d in range(DIM)])
-                for c in range(N_CLUSTERS)}
-    cent_col = F.lit(None).cast("array<double>")
-    for c in range(N_CLUSTERS - 1, -1, -1):
-        cent_col = F.when(F.col("cluster") == c, cent_lit[c]) \
-            .otherwise(cent_col)
-    return (assigned.groupBy("cluster")
-            .agg(F.count("*").alias("n_vecs"))
-            .withColumn("centroid", cent_col)
-            .select("cluster", "n_vecs", "centroid"))
-
-
 # ---------------------------------------------------------------------------
-# Fixed-point Lloyd (r4): the driver-gateable k-means.  The float
-# trainer above is correct but its distributed mean is summation-order
-# dependent, so its output cannot carry a value-hash oracle (and a
-# rows-only gate cannot even canonicalize an array column —
-# CORRECTNESS_r03's one red row).  The fix is not cosmetic reshaping
+# Fixed-point Lloyd: the driver-gateable k-means.  A float Lloyd's
+# distributed mean is summation-order dependent, so its output cannot
+# carry a value-hash oracle (and a rows-only gate cannot even
+# canonicalize an array column).  The fix is not cosmetic reshaping
 # but an algorithmic one that is *better at scale*: quantize vectors
 # AND centroids to a 2^24 integer grid so every dot product, partial
 # sum, and mean-update is exact int64 arithmetic.  Exact integer sums
@@ -731,23 +661,6 @@ def over_clustered_sql(arm_sql: str) -> str:
     the table name."""
     import re
     return re.sub(r"\bembeddings\b", "emb_clustered", arm_sql)
-
-
-def dot_pandas_udf(dim: int = DIM):
-    """Arrow-batched dot product for wide vectors (the unrolled-expr
-    alternative when dim is large); bitwise-equal to dot_col by
-    sequential accumulation order."""
-
-    @pandas_udf("double")
-    def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        am = np.stack(a.to_numpy()).astype(np.float64)
-        bm = np.stack(b.to_numpy()).astype(np.float64)
-        acc = am[:, 0] * bm[:, 0]
-        for i in range(1, am.shape[1]):  # fixed order == unrolled expr
-            acc = acc + am[:, i] * bm[:, i]
-        return pd.Series(acc)
-
-    return _udf
 
 
 # ---------------------------------------------------------------------------

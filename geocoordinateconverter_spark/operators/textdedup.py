@@ -13,13 +13,12 @@ geodesy pipeline runs.  Design rules:
   token array, plus one Arrow crossing for the SimHash bit fold; the
   only remaining shuffles are the joins/aggregations that are
   inherently cross-row (band self-join, exact-dedup groupBy, pair
-  intersection).  Every kernel keeps its explode-shaped twin
-  (``kernel=False``) — the DuckDB oracle's form — pytest-asserted
-  identical.
+  intersection).  Each operator has this one Spark form; its
+  independent check is the explode-shaped DuckDB SQL twin next to it.
 * Token adjacency is FILTERED adjacency everywhere: positions are
   assigned after dropping empty tokens, so words separated by runs of
-  spaces are neighbors (kernels, twins, and oracles all agree — see
-  the r4 multispace regression test).
+  spaces are neighbors (kernels and oracles agree — see the
+  multispace regression test).
 * Hashes are md5-based so the DuckDB oracle reproduces them exactly
   (both engines implement ``md5`` identically; 60-bit ints are carved
   out of the hex with conv/hex-cast — kept < 2^61 so no overflow
@@ -136,8 +135,7 @@ def _hash60_batch(flat: np.ndarray, prefixes: list[str] | None):
 def _minhash_sig_kernel():
     """array<bigint>[K_MINHASH] per token list: per-batch-unique md5,
     per-doc column-wise min (min over the multiset == min over the
-    distinct set, so the array_distinct of the expression twin is
-    semantically redundant here)."""
+    distinct set, so no array_distinct is needed)."""
     prefixes = [f"{p}:" for p in range(K_MINHASH)]
 
     @pandas_udf("array<bigint>")
@@ -152,50 +150,26 @@ def _minhash_sig_kernel():
     return _udf
 
 
-def minhash_sig_array(docs: DataFrame, kernel: bool = True) -> DataFrame:
-    """(doc_id, sigs array<bigint>[K_MINHASH]) — MAP-ONLY (r4).
-
-    ``kernel=True`` (r6): one Arrow crossing; the md5 work runs once
-    per batch-distinct token (:func:`_hash60_batch`) instead of once
-    per (token, permutation) — measured 16.7 s → ~2 s at sf1.0, zero
-    plan change (still no Exchange).  ``kernel=False`` is the r4
-    codegen twin (one ``array_min ∘ transform`` per permutation),
-    kept as the equivalence reference; both match the exploded r3
-    form exactly (min over the same multiset of identical md5-carved
-    hashes), pytest-asserted."""
+def minhash_sig_array(docs: DataFrame) -> DataFrame:
+    """(doc_id, sigs array<bigint>[K_MINHASH]) — MAP-ONLY, one Arrow
+    crossing; the md5 work runs once per batch-distinct token
+    (:func:`_hash60_batch`) instead of once per (token, permutation).
+    sigs[p] is the min over the document's tokens of
+    hash60(p || ':' || token), exactly :data:`MINHASH_SIG_SQL`'s value
+    (min over the multiset == min over the distinct set)."""
     toks_nd = "filter(split(text, ' '), t -> t <> '')"
-    if kernel:
-        return (docs.select("doc_id", F.expr(toks_nd).alias("toks"))
-                .filter(F.size("toks") > 0)
-                .select("doc_id",
-                        _minhash_sig_kernel()(F.col("toks")).alias("sigs")))
-    toks = f"array_distinct({toks_nd})"
-    sig_exprs = [
-        F.expr(f"array_min(transform(toks, t -> cast(conv(substr("
-               f"md5(concat('{p}:', t)), 1, 15), 16, 10) as bigint)))")
-        .alias(f"s{p}")
-        for p in range(K_MINHASH)]
-    return (docs.select("doc_id", F.expr(toks).alias("toks"))
+    return (docs.select("doc_id", F.expr(toks_nd).alias("toks"))
             .filter(F.size("toks") > 0)
-            .select("doc_id", F.array(*sig_exprs).alias("sigs")))
+            .select("doc_id",
+                    _minhash_sig_kernel()(F.col("toks")).alias("sigs")))
 
 
-def minhash_signatures(docs: DataFrame, kernel: bool = True) -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, perm, sig): sig = min over DISTINCT tokens of
-    hash60(perm || ':' || token).  ``kernel=True`` derives the rows by
-    posexploding the map-only signature array (explode at OUTPUT only,
-    no shuffle); ``kernel=False`` is the r3 explode×K → groupBy twin
-    (the SQL oracle's shape), pytest-asserted identical."""
-    if kernel:
-        return minhash_sig_array(docs).select(
-            "doc_id", F.posexplode("sigs").alias("perm", "sig"))
-    t = tokens(docs).distinct()
-    perms = F.explode(F.sequence(F.lit(0), F.lit(K_MINHASH - 1))).alias("perm")
-    return (t.select("doc_id", "tok", perms)
-            .withColumn("h", hash60_col(
-                F.concat(F.col("perm").cast("string"), F.lit(":"), F.col("tok"))))
-            .groupBy("doc_id", "perm")
-            .agg(F.min("h").alias("sig")))
+    hash60(perm || ':' || token), derived by posexploding the map-only
+    signature array (explode at OUTPUT only, no shuffle)."""
+    return minhash_sig_array(docs).select(
+        "doc_id", F.posexplode("sigs").alias("perm", "sig"))
 
 
 MINHASH_SIG_SQL = f"""
@@ -336,13 +310,6 @@ MINHASH_PAIRS_SQL = f"""
 SIMHASH_BITS = 60
 
 
-# per-row token-hash array: tokenization AND md5→60-bit carving stay
-# inside one codegen lambda — the token stream never leaves its row
-_TOK_HASH_EXPR = (
-    "transform(filter(split(text, ' '), t -> t <> ''), "
-    "t -> cast(conv(substr(md5(t), 1, 15), 16, 10) as bigint))")
-
-
 def _simhash_kernel():
     """One Arrow crossing: per doc, hash the tokens (md5 once per
     batch-distinct token — r6, :func:`_hash60_batch`; previously the
@@ -373,35 +340,17 @@ def _simhash_kernel():
     return _udf
 
 
-def simhash(docs: DataFrame, kernel: bool = True) -> DataFrame:
-    """60-bit SimHash per doc.
-
-    ``kernel=True`` (r4 default): MAP-ONLY — the codegen lambda builds
-    the token-hash array per row and one Arrow kernel folds it to the
-    fingerprint; zero Exchange in the plan.  The previous formulation
-    (``kernel=False``) exploded tokens×60 bit rows through two hash
-    aggregations — a 60× pre-agg row inflation that is pure CPU/alloc
-    overhead on a 100 TB token stream; it remains as the
-    SQL-shaped equivalence twin (the DuckDB oracle keeps that form),
-    pytest-asserted identical."""
-    if kernel:
-        tk = docs.select("doc_id", F.expr(
-            "filter(split(text, ' '), t -> t <> '')").alias("tk"))
-        return (tk.filter(F.size("tk") > 0)
-                .select("doc_id",
-                        _simhash_kernel()(F.col("tk")).alias("simhash")))
-    t = tokens(docs).withColumn("h", hash60_col(F.col("tok")))
-    bits = F.explode(F.sequence(F.lit(0), F.lit(SIMHASH_BITS - 1))).alias("b")
-    per_bit = (t.select("doc_id", "h", bits)
-               .withColumn("w", F.when(
-                   F.expr("shiftright(h, b) % 2") == 1, 1).otherwise(-1))
-               .groupBy("doc_id", "b")
-               .agg(F.sum("w").alias("s")))
-    return (per_bit
-            .groupBy("doc_id")
-            .agg(F.sum(F.when(F.col("s") > 0,
-                              F.expr("shiftleft(cast(1 as bigint), b)"))
-                       .otherwise(0)).alias("simhash")))
+def simhash(docs: DataFrame) -> DataFrame:
+    """60-bit SimHash per doc.  MAP-ONLY: the codegen lambda builds the
+    token array per row and one Arrow kernel folds it to the
+    fingerprint; zero Exchange in the plan.  :data:`SIMHASH_SQL` computes
+    the same value by exploding tokens × bits through two hash
+    aggregations."""
+    tk = docs.select("doc_id", F.expr(
+        "filter(split(text, ' '), t -> t <> '')").alias("tk"))
+    return (tk.filter(F.size("tk") > 0)
+            .select("doc_id",
+                    _simhash_kernel()(F.col("tk")).alias("simhash")))
 
 
 SIMHASH_SQL = f"""
@@ -626,11 +575,10 @@ BPE_RE = "[A-Za-z]+|[0-9]|[^A-Za-z0-9 ]+"
 
 # polynomial rolling hash over whitespace tokens:
 #   fp = Σ_i (hash60(tok_i) % P) · B^(n-1-i)  mod P
-# order-sensitive (unlike a token-set hash).  B^k mod P is computed by
-# SQUARE-AND-MULTIPLY folded into a codegen expression (31 multiply-mod
-# steps over the bits of k) — no power lookup table, hence NO document
-# length cap (r1 had a silent 512-token truncation via an inner join on
-# a 512-row table; VERDICT r1 #4).  Every intermediate product is
+# order-sensitive (unlike a token-set hash).  The engine evaluates it as
+# a Horner fold; the oracle computes B^k mod P by SQUARE-AND-MULTIPLY
+# (31 multiply-mod steps over the bits of k) — no power lookup table,
+# hence NO document length cap.  Every intermediate product is
 # < P² ≈ 10¹⁸ < 2⁶³, so int64 is exact in both engines.
 ROLL_P = 1_000_000_007
 ROLL_B = 1_000_003
@@ -643,19 +591,9 @@ for _ in range(_ROLL_BITS):
     _b = (_b * _b) % ROLL_P
 
 
-def powmod_col(k):
-    """B^k mod P as a Catalyst expression (square-and-multiply)."""
-    acc = F.lit(1).cast("bigint")
-    for j, c in enumerate(_B2J):
-        factor = (F.when(F.shiftright(k.cast("bigint"), j)
-                         .bitwiseAND(F.lit(1)) == 1, F.lit(c).cast("bigint"))
-                  .otherwise(F.lit(1).cast("bigint")))
-        acc = F.pmod(acc * factor, F.lit(ROLL_P))
-    return acc
-
-
 def powmod_sql(k_expr: str) -> str:
-    """DuckDB twin of :func:`powmod_col` (same fold order)."""
+    """B^k mod P as a DuckDB expression (square-and-multiply over the
+    bits of k) — the oracle's per-term power."""
     acc = "cast(1 as bigint)"
     for j, c in enumerate(_B2J):
         factor = f"(case when ((({k_expr}) >> {j}) & 1) = 1 then {c} else 1 end)"
@@ -685,40 +623,22 @@ FROM (
 """
 
 
-def rolling_fingerprint(docs: DataFrame, kernel: bool = True) -> DataFrame:
+def rolling_fingerprint(docs: DataFrame) -> DataFrame:
     """Order-sensitive polynomial rolling-hash fingerprint per doc.
 
-    ``kernel=True`` (r4): Σ th_i·B^(n−1−i) mod P is exactly a Horner
-    fold, so the whole fingerprint is ONE codegen ``aggregate()`` over
-    the per-row token array — acc·B < 2^51, no overflow — and the plan
-    is MAP-ONLY (the r3 form exploded tokens, joined the per-doc count
-    back, and aggregated: three shuffles of the full token stream).
-
-    ``kernel=False`` keeps that exploded square-and-multiply form (the
-    SQL oracle's shape; still uncapped) as the equivalence twin."""
-    if kernel:
-        toks = "filter(split(text, ' '), t -> t <> '')"
-        fp = (f"aggregate({toks}, cast(0 as bigint), (acc, t) -> "
-              f"pmod(acc * {ROLL_B} + pmod(cast(conv(substr(md5(t), 1, 15),"
-              f" 16, 10) as bigint), {ROLL_P}), {ROLL_P}))")
-        return (docs.select("doc_id", F.expr(fp).alias("rolling_fp"),
-                            F.expr(f"cast(size({toks}) as bigint)")
-                            .alias("n_tok"))
-                .filter(F.col("n_tok") > 0))
-    w = (docs.select("doc_id",
-                     F.posexplode(F.split("text", " "))
-                     .alias("raw_pos", "tok"))
-         .filter(F.col("tok") != "")
-         .withColumn("pos", F.row_number().over(
-             Window.partitionBy("doc_id").orderBy("raw_pos")) - 1))
-    n = w.groupBy("doc_id").agg(F.count("*").alias("n_tok"))
-    term = (w.join(n, "doc_id")
-            .withColumn("th", F.pmod(hash60_col(F.col("tok")), F.lit(ROLL_P)))
-            .withColumn("pw", powmod_col(F.col("n_tok") - 1 - F.col("pos")))
-            .withColumn("term", F.pmod(F.col("th") * F.col("pw"), F.lit(ROLL_P))))
-    return (term.groupBy("doc_id")
-            .agg(F.pmod(F.sum("term"), F.lit(ROLL_P)).alias("rolling_fp"),
-                 F.max("n_tok").alias("n_tok")))
+    Σ th_i·B^(n−1−i) mod P is exactly a Horner fold, so the whole
+    fingerprint is ONE codegen ``aggregate()`` over the per-row token
+    array — acc·B < 2^51, no overflow — and the plan is MAP-ONLY.
+    :func:`rolling_fingerprint_sql` computes the same sum term by term
+    over exploded tokens with square-and-multiply powers."""
+    toks = "filter(split(text, ' '), t -> t <> '')"
+    fp = (f"aggregate({toks}, cast(0 as bigint), (acc, t) -> "
+          f"pmod(acc * {ROLL_B} + pmod(cast(conv(substr(md5(t), 1, 15),"
+          f" 16, 10) as bigint), {ROLL_P}), {ROLL_P}))")
+    return (docs.select("doc_id", F.expr(fp).alias("rolling_fp"),
+                        F.expr(f"cast(size({toks}) as bigint)")
+                        .alias("n_tok"))
+            .filter(F.col("n_tok") > 0))
 
 
 def rolling_fingerprint_sql() -> str:
@@ -987,56 +907,34 @@ FROM (
 """
 
 
-def repetition_ratio(docs: DataFrame, n: int = 3,
-                     kernel: bool = True) -> DataFrame:
+def repetition_ratio(docs: DataFrame, n: int = 3) -> DataFrame:
     """Fraction of a doc's word-trigram occurrences taken by its single
     most frequent trigram — the standard boilerplate/spam repetition
     signal.
 
-    ``kernel=True`` (r4): MAP-ONLY — the gram multiset is a codegen
-    sliding window over the token array and the mode count is a
-    run-length fold over the SORTED gram array (``aggregate`` with a
-    (prev, run, best) struct accumulator); zero Exchange.  The r3 form
-    (``kernel=False``) exploded tokens, positional-self-joined twice,
-    and ran two hash aggregations; it remains the equivalence twin and
-    the oracle's shape."""
-    if kernel:
-        grams = gram_window_expr(n)
-        best = (
-            "aggregate(array_sort(grams), "
-            "named_struct('prev', '', 'run', 0L, 'best', 0L), "
-            "(acc, x) -> named_struct("
-            "'prev', x, "
-            "'run', IF(x = acc.prev, acc.run + 1L, 1L), "
-            "'best', greatest(acc.best, IF(x = acc.prev, acc.run + 1L, 1L))"
-            "), acc -> acc.best)")
-        return (docs.select("doc_id", F.expr(TOKS_EXPR).alias("toks"))
-                .select("doc_id", F.expr(grams).alias("grams"))
-                .filter(F.size("grams") > 0)
-                .select("doc_id",
-                        F.expr(best).alias("top_gram_count"),
-                        F.size("grams").cast("bigint").alias("n_grams"))
-                .withColumn("repetition_ratio",
-                            F.col("top_gram_count")
-                            / F.col("n_grams").cast("double")))
-    w = (docs.select("doc_id", F.posexplode(F.split("text", " "))
-                     .alias("raw_pos", "tok"))
-         .filter(F.col("tok") != "")
-         .withColumn("pos", F.row_number().over(
-             Window.partitionBy("doc_id").orderBy("raw_pos")) - 1))
-    g = (w.alias("w1")
-         .join(w.alias("w2"), (F.col("w1.doc_id") == F.col("w2.doc_id"))
-               & (F.col("w2.pos") == F.col("w1.pos") + 1))
-         .join(w.alias("w3"), (F.col("w1.doc_id") == F.col("w3.doc_id"))
-               & (F.col("w3.pos") == F.col("w1.pos") + 2))
-         .select(F.col("w1.doc_id").alias("doc_id"),
-                 F.concat_ws(" ", "w1.tok", "w2.tok", "w3.tok").alias("gram")))
-    per_gram = g.groupBy("doc_id", "gram").agg(F.count("*").alias("c"))
-    return (per_gram.groupBy("doc_id")
-            .agg(F.max("c").alias("top_gram_count"),
-                 F.sum("c").alias("n_grams"),
-                 (F.max("c") / F.sum("c").cast("double"))
-                 .alias("repetition_ratio")))
+    MAP-ONLY: the gram multiset is a codegen sliding window over the
+    token array and the mode count is a run-length fold over the SORTED
+    gram array (``aggregate`` with a (prev, run, best) struct
+    accumulator); zero Exchange.  :func:`repetition_ratio_sql` computes
+    the same counts from exploded, positionally self-joined tokens."""
+    grams = gram_window_expr(n)
+    best = (
+        "aggregate(array_sort(grams), "
+        "named_struct('prev', '', 'run', 0L, 'best', 0L), "
+        "(acc, x) -> named_struct("
+        "'prev', x, "
+        "'run', IF(x = acc.prev, acc.run + 1L, 1L), "
+        "'best', greatest(acc.best, IF(x = acc.prev, acc.run + 1L, 1L))"
+        "), acc -> acc.best)")
+    return (docs.select("doc_id", F.expr(TOKS_EXPR).alias("toks"))
+            .select("doc_id", F.expr(grams).alias("grams"))
+            .filter(F.size("grams") > 0)
+            .select("doc_id",
+                    F.expr(best).alias("top_gram_count"),
+                    F.size("grams").cast("bigint").alias("n_grams"))
+            .withColumn("repetition_ratio",
+                        F.col("top_gram_count")
+                        / F.col("n_grams").cast("double")))
 
 
 def repetition_ratio_sql() -> str:

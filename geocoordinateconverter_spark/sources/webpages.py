@@ -3,12 +3,12 @@
 The engine's production input is an Iceberg table of Common-Crawl-style
 pages ``(url, warc_ts, html, text, lang)`` at 10¹²-document scale
 (BASELINE.json input_hint).  No Iceberg catalog exists in this sandbox,
-so :func:`webpages_df` materializes the FIXTURES.md §1 synthetic
+so :func:`webpages_sql` derives the FIXTURES.md §1 synthetic
 analogue **deterministically from the driver's read-only
 ``documents.parquet``** — every derived value is pure integer/float
-arithmetic + ``printf``-style formatting on ``doc_id``/``text``, so the
-DuckDB oracle reproduces the table bit-for-bit with the SQL twin
-:func:`webpages_sql`.
+arithmetic + ``printf``-style formatting on ``doc_id``/``text``, and the
+SQL text is dialect-neutral, so Spark and the DuckDB oracle build the
+table bit-for-bit from the same string.
 
 Coordinate mentions embedded in ``text`` follow the reference's
 free-format parser surface (gk-slo.c + util.c — SURVEY.md §3.1 S2):
@@ -24,7 +24,6 @@ whole-stage codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import sqlgen as sg
@@ -89,12 +88,6 @@ def webpages_sql(documents: str = "documents") -> str:
         lang
  FROM {documents})
 """
-
-
-def webpages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    docs.createOrReplaceTempView("documents")
-    return spark.sql(f"SELECT * FROM {webpages_sql('documents')} w")
 
 
 # ---------------------------------------------------------------------------

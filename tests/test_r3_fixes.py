@@ -226,36 +226,6 @@ def test_simhash_near_dup_pairs_pigeonhole(spark):
     assert len(expected) > 0
 
 
-def test_ivf_train_kmeans_matches_numpy_replay(spark):
-    """Lloyd with deterministic init + fixed iterations: the Spark run
-    must match a NumPy replay (same init, same argmax tie rule) —
-    centroids to ~1e-8 (distributed mean reorders float sums) and
-    cluster sizes exactly (no fixture vector sits near a boundary)."""
-    import numpy as np
-
-    from geocoordinateconverter_spark.operators import similarity as sim
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    got = {r.cluster: (r.n_vecs, np.array(r.centroid))
-           for r in sim.ivf_train_kmeans(emb, n_iter=3).collect()}
-    pdf = emb.toPandas()
-    X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-    C = np.array([[sim.centroid_coef(c, d) for d in range(sim.DIM)]
-                  for c in range(sim.N_CLUSTERS)])
-    for _ in range(3):
-        scores = X @ C.T - 0.5 * (C * C).sum(axis=1)
-        a = scores.argmax(axis=1)
-        C = C.copy()
-        for c in range(sim.N_CLUSTERS):
-            m = a == c
-            if m.any():
-                C[c] = X[m].mean(axis=0)
-    sizes = {c: int((a == c).sum()) for c in range(sim.N_CLUSTERS)
-             if (a == c).any()}
-    assert {c: n for c, (n, _) in got.items()} == sizes
-    for c, (_, cent) in got.items():
-        np.testing.assert_allclose(cent, C[c], atol=1e-7)
-
-
 def test_host_cap_keep_first(spark):
     rows = [(i, f"https://h{i % 3}.example.si/p/{i}") for i in range(20)]
     pages = spark.createDataFrame(rows, "doc_id long, url string")

@@ -6,6 +6,17 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+DOCS_SMOKE = "/root/testdata/sf0.001/documents.parquet"
+
+
+def _duck_rows(sql: str) -> list[tuple]:
+    """Rows of a DuckDB oracle query over the smoke ``documents``."""
+    import duckdb
+    with duckdb.connect() as con:
+        con.execute("CREATE VIEW documents AS SELECT doc_id, text "
+                    f"FROM read_parquet('{DOCS_SMOKE}')")
+        return con.execute(sql).fetchall()
+
 
 def test_ivf_train_kmeans_exact_matches_numpy_bitwise(spark):
     """The fixed-point trainer is EXACT: Spark output must equal the
@@ -44,15 +55,14 @@ def test_cc_star_long_chain_and_equivalence(spark):
 
 
 def test_minhash_sig_kernel_matches_explode_form(spark):
-    """Map-only signature array vs the explode×K → groupBy twin:
-    identical (doc_id, perm, sig) rows."""
+    """Map-only signature array vs the DuckDB explode×K → groupBy
+    oracle: identical (doc_id, perm, sig) rows."""
     from geocoordinateconverter_spark.operators import textdedup as td
-    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .select("doc_id", "text"))
+    docs = spark.read.parquet(DOCS_SMOKE).select("doc_id", "text")
     a = {(r.doc_id, r.perm): r.sig
-         for r in td.minhash_signatures(docs, kernel=True).collect()}
-    b = {(r.doc_id, r.perm): r.sig
-         for r in td.minhash_signatures(docs, kernel=False).collect()}
+         for r in td.minhash_signatures(docs).collect()}
+    b = {(d, p): sig for d, p, sig in _duck_rows(
+        f"SELECT doc_id, perm, sig FROM {td.MINHASH_SIG_SQL} q")}
     assert a == b and len(a) > 0
 
 
@@ -66,15 +76,14 @@ def test_minhash_sig_array_plan_is_map_only(spark):
 
 
 def test_repetition_ratio_kernel_matches_explode_form(spark):
-    """Run-length-fold mode count == the exploded two-agg form, and
-    the kernel plan has no Exchange."""
+    """Run-length-fold mode count == the DuckDB exploded two-agg
+    oracle, and the kernel plan has no Exchange."""
     from geocoordinateconverter_spark.operators import textdedup as td
-    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .select("doc_id", "text"))
+    docs = spark.read.parquet(DOCS_SMOKE).select("doc_id", "text")
     a = {r.doc_id: (r.top_gram_count, r.n_grams, r.repetition_ratio)
-         for r in td.repetition_ratio(docs, kernel=True).collect()}
-    b = {r.doc_id: (r.top_gram_count, r.n_grams, r.repetition_ratio)
-         for r in td.repetition_ratio(docs, kernel=False).collect()}
+         for r in td.repetition_ratio(docs).collect()}
+    b = {r[0]: tuple(r[1:])
+         for r in _duck_rows(td.repetition_ratio_sql())}
     assert a == b and len(a) > 0
     plan = (td.repetition_ratio(docs)
             ._jdf.queryExecution().executedPlan().toString())
@@ -82,15 +91,15 @@ def test_repetition_ratio_kernel_matches_explode_form(spark):
 
 
 def test_rolling_fp_horner_matches_explode_form(spark):
-    """Horner-fold fingerprint == the exploded square-and-multiply
-    form, doc for doc (same mod field, so equality is exact)."""
+    """Horner-fold fingerprint == the DuckDB exploded
+    square-and-multiply oracle, doc for doc (same mod field, so
+    equality is exact)."""
     from geocoordinateconverter_spark.operators import textdedup as td
-    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .select("doc_id", "text"))
+    docs = spark.read.parquet(DOCS_SMOKE).select("doc_id", "text")
     a = {r.doc_id: (r.rolling_fp, r.n_tok)
-         for r in td.rolling_fingerprint(docs, kernel=True).collect()}
-    b = {r.doc_id: (r.rolling_fp, r.n_tok)
-         for r in td.rolling_fingerprint(docs, kernel=False).collect()}
+         for r in td.rolling_fingerprint(docs).collect()}
+    b = {r[0]: tuple(r[1:])
+         for r in _duck_rows(td.rolling_fingerprint_sql())}
     assert a == b and len(a) > 0
     plan = (td.rolling_fingerprint(docs)
             ._jdf.queryExecution().executedPlan().toString())
@@ -98,16 +107,14 @@ def test_rolling_fp_horner_matches_explode_form(spark):
 
 
 def test_simhash_kernel_matches_explode_form(spark):
-    """The map-only Arrow kernel and the explode×60 SQL-shaped form
-    must emit identical fingerprints for every doc (exact integer
+    """The map-only Arrow kernel and the DuckDB explode×60 oracle must
+    emit identical fingerprints for every doc (exact integer
     semantics, so equality is bitwise, not approximate)."""
     from geocoordinateconverter_spark.operators import textdedup as td
-    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .select("doc_id", "text"))
-    a = {r.doc_id: r.simhash
-         for r in td.simhash(docs, kernel=True).collect()}
-    b = {r.doc_id: r.simhash
-         for r in td.simhash(docs, kernel=False).collect()}
+    docs = spark.read.parquet(DOCS_SMOKE).select("doc_id", "text")
+    a = {r.doc_id: r.simhash for r in td.simhash(docs).collect()}
+    b = dict(_duck_rows(
+        f"SELECT doc_id, simhash FROM {td.SIMHASH_SQL} q"))
     assert a == b and len(a) > 0
 
 
@@ -146,19 +153,25 @@ def test_dms_negative_coordinates(spark):
 
 
 def test_knn_cellring_out_of_bbox_points(spark):
-    """Out-of-bbox points take the exact broadcast candidate set (the
-    ring-radius bound is proven over the bbox only): cellring must
-    equal the brute-force path row-for-row on a mixed in/out input."""
+    """The kNN kernel has no bbox assumption: on a mixed in/out-of-bbox
+    input it must equal the DuckDB brute-force oracle row-for-row,
+    dist2 included."""
+    import duckdb
+    import pandas as pd
+
     from geocoordinateconverter_spark.operators import knn as knn_op
     rows = [(0, 46.1, 14.5), (1, 46.8, 15.9),     # in bbox
             (2, 49.0, 14.5), (3, 46.1, 19.5),     # out (north / east)
             (4, 43.9, 12.9), (5, 47.9, 17.1)]     # out (south-west / ne)
     pts = spark.createDataFrame(rows, "k long, fi double, la double")
-    ring = {(r.k, r.rk): r.station_id for r in knn_op.knn_join(
-        pts, spark, key="k", k=3, method="cellring").collect()}
-    brute = {(r.k, r.rk): r.station_id for r in knn_op.knn_join(
-        pts, spark, key="k", k=3, method="broadcast").collect()}
-    assert ring == brute and len(ring) == 6 * 3
+    got = {(r.k, r.rk): (r.station_id, r.dist2) for r in knn_op.knn_join(
+        pts, spark, key="k", k=3).collect()}
+    with duckdb.connect() as con:
+        con.register("pts", pd.DataFrame(rows, columns=["k", "fi", "la"]))
+        exp = {(k, rk): (sid, d2) for k, sid, d2, rk in con.execute(
+            f"SELECT * FROM {knn_op.knn_oracle_sql('pts', 'k', k=3)} q"
+        ).fetchall()}
+    assert got == exp and len(got) == 6 * 3
 
 
 def test_checkpoint_torn_manifest_recommits(spark, tmp_path_factory):

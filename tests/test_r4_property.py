@@ -1,5 +1,5 @@
-"""Round-4 property tests: the map-only kernels verified against
-INDEPENDENT pure-Python references (not just their Spark twins) on
+"""Property tests: the map-only kernels verified against
+INDEPENDENT pure-Python references and the DuckDB oracles on
 seeded random inputs, and star connected components against a
 union-find."""
 from __future__ import annotations
@@ -101,11 +101,10 @@ def test_gram_arrays_match_python_reference(spark):
 
 
 def test_multispace_adjacency_kernel_twin_oracle_agree(spark):
-    """Regression for the r4 review finding: on texts with runs of
-    spaces, the positional twins/oracles used RAW split positions
-    (breaking adjacency and even producing negative rolling-hash
-    exponents) while the kernels use filtered adjacency.  All three
-    paths — kernel, twin, DuckDB oracle — must now agree on the
+    """Regression: on texts with runs of spaces, positional oracles
+    that used RAW split positions broke adjacency (and even produced
+    negative rolling-hash exponents) while the kernels use filtered
+    adjacency.  The kernel and the DuckDB oracle must agree on the
     filtered-adjacency semantics."""
     import duckdb
     import pandas as pd
@@ -116,24 +115,20 @@ def test_multispace_adjacency_kernel_twin_oracle_agree(spark):
     con = duckdb.connect()
     con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
 
-    # rolling fingerprint: kernel == twin == oracle
+    # rolling fingerprint: kernel == oracle
     k = {r.doc_id: (r.rolling_fp, r.n_tok)
-         for r in td.rolling_fingerprint(docs, kernel=True).collect()}
-    t = {r.doc_id: (r.rolling_fp, r.n_tok)
-         for r in td.rolling_fingerprint(docs, kernel=False).collect()}
+         for r in td.rolling_fingerprint(docs).collect()}
     o = {int(r[0]): (int(r[1]), int(r[2]))
          for r in con.execute(td.rolling_fingerprint_sql()).fetchall()}
-    assert k == t == o and len(k) == 5
+    assert k == o and len(k) == 5
 
-    # repetition ratio: kernel == twin == oracle
+    # repetition ratio: kernel == oracle
     k = {r.doc_id: (r.top_gram_count, r.n_grams)
-         for r in td.repetition_ratio(docs, kernel=True).collect()}
-    t = {r.doc_id: (r.top_gram_count, r.n_grams)
-         for r in td.repetition_ratio(docs, kernel=False).collect()}
+         for r in td.repetition_ratio(docs).collect()}
     o = {int(r[0]): (int(r[1]), int(r[2]))
          for r in con.execute(td.repetition_ratio_sql()).fetchall()}
     # docs 0,1,2,5 have ≥3 tokens after filtering
-    assert k == t == o and set(k) == {0, 1, 2, 5}
+    assert k == o and set(k) == {0, 1, 2, 5}
     assert k[0] == (1, 1)       # 'a b c' — one trigram
     assert k[5] == (2, 2)       # 't t t' twice
 

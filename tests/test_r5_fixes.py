@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from geocoordinateconverter_spark.operators import knn as knn_op
 from geocoordinateconverter_spark.operators import multimodal as mm
@@ -12,44 +11,37 @@ from geocoordinateconverter_spark.operators import textdedup as td
 from geocoordinateconverter_spark.sources import shapefile as shp
 
 
-# ---- knn cellring: gated cartesian fallback + explicit NULL rule ---------
+# ---- radius join: gated cartesian fallback + explicit NULL rule ---------
 
 def _mk_pts(spark, rows):
     return spark.createDataFrame(rows, "k bigint, fi double, la double")
 
 
 def test_cellring_all_in_bbox_plan_has_no_bnlj(spark):
-    """ADVICE r4: with every point in the working bbox the cartesian
-    fallback must be gated OUT — no BroadcastNestedLoopJoin branch."""
+    """ADVICE r4: with every point in the working bbox radius_join's
+    out-of-bbox cartesian fallback must be gated OUT — no
+    BroadcastNestedLoopJoin branch — and the pruned pairs are exact."""
     rows = [(i, 45.6 + 0.001 * i, 14.2 + 0.001 * i) for i in range(50)]
-    out = knn_op.knn_join(_mk_pts(spark, rows), spark, key="k", k=3,
-                          method="cellring")
+    out = knn_op.radius_join(_mk_pts(spark, rows), spark, radius=0.5)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
-    assert out.count() == 50 * 3
-
-
-def test_cellring_out_of_bbox_rows_still_exact(spark):
-    rows = [(1, 45.6, 14.2), (2, 10.0, 100.0)]  # one far outside
-    out = (knn_op.knn_join(_mk_pts(spark, rows), spark, key="k", k=3,
-                           method="cellring")
-           .select("k", "station_id", "rk").toPandas()
-           .sort_values(["k", "rk"]))
-    ref = (knn_op.knn_join(_mk_pts(spark, rows), spark, key="k", k=3,
-                           method="broadcast")
-           .select("k", "station_id", "rk").toPandas()
-           .sort_values(["k", "rk"]))
-    np.testing.assert_array_equal(out.to_numpy(), ref.to_numpy())
+    pos = knn_op.station_positions(25)
+    fi = np.array([r[1] for r in rows])
+    la = np.array([r[2] for r in rows])
+    d2 = ((fi[:, None] - pos[None, :, 0]) ** 2
+          + (knn_op.LA_FACTOR * (la[:, None] - pos[None, :, 1])) ** 2)
+    exp = int((d2 <= 0.5 ** 2).sum())
+    assert exp > 0 and out.count() == exp
 
 
 def test_null_coords_excluded_by_every_method(spark):
-    """r5 review: the NULL rule must hold for ALL three strategies
-    (kernel/broadcast previously emitted NaN/NULL-dist2 rows)."""
+    """r5 review: NULL coordinates are excluded by knn_join and
+    radius_join alike (no NaN/NULL-dist2 rows)."""
     rows = [(1, 45.6, 14.2), (2, None, 14.2), (3, 45.6, None)]
-    for method in ("kernel", "broadcast", "cellring"):
-        out = knn_op.knn_join(_mk_pts(spark, rows), spark, key="k", k=3,
-                              method=method)
-        assert sorted(set(r.k for r in out.collect())) == [1], method
+    pts = _mk_pts(spark, rows)
+    for out in (knn_op.knn_join(pts, spark, key="k", k=3),
+                knn_op.radius_join(pts, spark, radius=0.5)):
+        assert sorted(set(r.k for r in out.collect())) == [1]
 
 
 # ---- simhash banded-frame persist contract -------------------------------

@@ -133,26 +133,31 @@ def test_pagerank_join_strategies_identical(spark):
     assert a == b and len(a) == gr.N_HOSTS
 
 
-def test_token_budget_subbucket_decomposition(spark):
+def test_token_budget_subbucket_decomposition(spark, monkeypatch):
     # the de-skewed two-level running sum must equal the single-window
     # form at a sub-bucket width small enough to split every score
-    import os
     from geocoordinateconverter_spark.operators import curation as cu
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     base = _rows(cu.token_budget_select(docs))
-    os.environ["SPARK_GRAFT_BUDGET_SUB_WIDTH"] = "64"
-    try:
-        split = _rows(cu.token_budget_select(docs))
-    finally:
-        del os.environ["SPARK_GRAFT_BUDGET_SUB_WIDTH"]
+    monkeypatch.setattr(cu, "BUDGET_SUB_WIDTH", 64)
+    split = _rows(cu.token_budget_select(docs))
     assert split == base and len(base) > 0
 
 
 def test_decontaminate_kernel_equals_join_form(spark):
+    # the mapInArrow kernel against its DuckDB join/agg twin
+    import duckdb
+
     from geocoordinateconverter_spark.operators import curation as cu
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    a = _rows(cu.decontaminate(docs, kernel=True))
-    b = _rows(cu.decontaminate(docs, kernel=False))
+    a = _rows(cu.decontaminate(docs))
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM "
+                    f"read_parquet('{SF_SMOKE}/documents.parquet')")
+        b = sorted(con.execute(cu.decontaminate_sql()).fetchall())
+    finally:
+        con.close()
     assert a == b and len(a) > 0
 
 

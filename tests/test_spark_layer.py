@@ -107,40 +107,55 @@ def test_raycast_concave_polygon(spark):
     assert got == [True, False, True, False]
 
 
+def _duck_pts(extra_rows: str = ""):
+    """A DuckDB connection with the fixture points as table ``pts``
+    (plus ``extra_rows``, a SQL VALUES list of (k, fi, la, h))."""
+    import duckdb
+    con = duckdb.connect()
+    con.register("pdf", pd.DataFrame({"k": np.arange(N), "fi": FI,
+                                      "la": LA, "h": H}))
+    sql = "SELECT k, fi, la, h FROM pdf"
+    if extra_rows:
+        sql += f" UNION ALL SELECT * FROM (VALUES {extra_rows})"
+    con.execute(f"CREATE TABLE pts AS {sql}")
+    return con
+
+
 def test_knn_methods_agree(spark, pts_df):
-    """kernel (zero-shuffle) ≡ cellring ≡ broadcast row-for-row, with
-    bit-identical dist2 (same IEEE op sequence in all three)."""
+    """kernel (zero-shuffle) ≡ the DuckDB brute-force oracle
+    row-for-row, with bit-identical dist2 (same IEEE op sequence)."""
     cols = ["k", "station_id", "dist2", "rk"]
-    a = (knn_op.knn_join(pts_df, spark, key="k", k=3, method="broadcast")
-         .select(*cols).toPandas()
-         .sort_values(["k", "rk"]).reset_index(drop=True))
-    b = (knn_op.knn_join(pts_df, spark, key="k", k=3, method="cellring")
-         .select(*cols).toPandas()
-         .sort_values(["k", "rk"]).reset_index(drop=True))
-    c = (knn_op.knn_join(pts_df, spark, key="k", k=3, method="kernel")
-         .select(*cols).toPandas()
-         .sort_values(["k", "rk"]).reset_index(drop=True))
-    pd.testing.assert_frame_equal(a, b)
-    pd.testing.assert_frame_equal(a, c)  # exact, incl. float64 dist2
+    got = (knn_op.knn_join(pts_df, spark, key="k", k=3)
+           .select(*cols).toPandas()
+           .sort_values(["k", "rk"]).reset_index(drop=True))
+    with _duck_pts() as con:
+        exp = (con.execute(f"SELECT {', '.join(cols)} FROM "
+                           f"{knn_op.knn_oracle_sql('pts', 'k', k=3)} q")
+               .df().sort_values(["k", "rk"]).reset_index(drop=True))
+    assert len(got) == N * 3
+    pd.testing.assert_frame_equal(got, exp, check_dtype=False,
+                                  check_exact=True)
 
 
 def test_radius_join_methods_agree(spark, pts_df):
-    """cellprune (equi-join pruned) ≡ broadcast (unpruned) row-for-row
-    with bit-identical dist2; out-of-bbox rows take the exact fallback;
-    NULL-coordinate rows are excluded by every method."""
+    """cellprune (equi-join pruned) ≡ the DuckDB brute-force oracle
+    row-for-row with bit-identical dist2; out-of-bbox rows take the
+    exact fallback; NULL-coordinate rows are excluded."""
     extra = spark.createDataFrame(
         [(90001, 48.5, 15.0, 100.0),       # out of bbox (north)
          (90002, None, 14.5, 100.0)],      # NULL fi → excluded
         "k long, fi double, la double, h double")
     pts = pts_df.unionByName(extra)
     cols = ["k", "station_id", "dist2"]
-    a = (knn_op.radius_join(pts, spark, method="broadcast")
+    a = (knn_op.radius_join(pts, spark)
          .select(*cols).toPandas()
          .sort_values(["k", "station_id"]).reset_index(drop=True))
-    b = (knn_op.radius_join(pts, spark, method="cellprune")
-         .select(*cols).toPandas()
-         .sort_values(["k", "station_id"]).reset_index(drop=True))
-    pd.testing.assert_frame_equal(a, b)  # exact, incl. float64 dist2
+    with _duck_pts("(90001, 48.5e0, 15.0e0, 100.0e0), "
+                   "(90002, NULL, 14.5e0, 100.0e0)") as con:
+        b = (con.execute(f"SELECT {', '.join(cols)} FROM "
+                         f"{knn_op.radius_oracle_sql('pts', 'k')} q")
+             .df().sort_values(["k", "station_id"]).reset_index(drop=True))
+    pd.testing.assert_frame_equal(a, b, check_dtype=False, check_exact=True)
     assert 90002 not in set(a["k"])
     # every emitted pair satisfies the predicate; brute-force recount
     pos = knn_op.station_positions(25)
@@ -209,7 +224,7 @@ def test_height_mode_wrapper(spark, pts_df):
 
 def test_knn_kernel_plan_has_no_exchange(spark, pts_df):
     """the kernel path must be a pure map: no Exchange in the plan."""
-    df = knn_op.knn_join(pts_df, spark, key="k", k=3, method="kernel")
+    df = knn_op.knn_join(pts_df, spark, key="k", k=3)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "ArrowEvalPython" in plan

@@ -58,9 +58,7 @@ def main() -> None:
 
     pts = spark.sql(f"SELECT * FROM {em.SRC_WGS_ORDERS}")
     plans["knn_join (kernel, zero-shuffle)"] = formatted(
-        knn_op.knn_join(pts, spark, key="k", k=3, method="kernel"))
-    plans["knn_join (broadcast oracle twin)"] = formatted(
-        knn_op.knn_join(pts, spark, key="k", k=3, method="broadcast"))
+        knn_op.knn_join(pts, spark, key="k", k=3))
 
     pruned = (spark.table("lineitem")
               .filter(F.col("l_shipdate") <= F.lit("1995-01-01"))

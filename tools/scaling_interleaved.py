@@ -1,9 +1,9 @@
 """Interleaved N vs 4N scaling measurement — robust to host drift.
 
-The sequential protocol (scaling_bench.py) measures each level in its
-own ~8-minute window; on this oversubscribed host the available
-capacity drifts between windows, which moved raw efficiency between
-0.63 and 0.91 across repetitions.  This variant alternates the levels
+A sequential protocol that measures each level in its own ~8-minute
+window is exposed to host drift: on an oversubscribed host the
+available capacity drifts between windows, which moved raw efficiency
+between 0.63 and 0.91 across repetitions.  This tool alternates the levels
 in ADJACENT windows: each round runs one fresh local[N] JVM (warm-up +
 measured run) immediately followed by one fresh local[4N] JVM, and the
 efficiency is computed per round from the paired times.  The median of
