@@ -499,7 +499,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             f"SELECT url, fi, la, kind FROM {wp.geoparse_swapped_sql(v)} g")
     q["geoparse_swapped_pair"] = q_geoparse_swapped
 
-    # ---- PIP join (broadcast cover-cell + ray-cast refine) ---------------
+    # ---- PIP join (broadcast cover cell + Catalyst ray-cast refine) -----
     def q_pip(spark, sf_dir):
         _register(spark, sf_dir)
         pts = spark.sql(f"SELECT * FROM {_src_wgs('o_orderkey', 'orders')}")

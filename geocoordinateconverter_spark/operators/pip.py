@@ -2,17 +2,18 @@
 
 Two-phase plan, designed for the 100 TB point side:
 
-1. **Prefilter** — points get a grid-cell id (pure Catalyst arithmetic,
-   kernels.cell_col) and equi-join against a tiny broadcast table of
+1. **Prefilter** — points get a grid-cell id (Catalyst arithmetic,
+   cells.encode_sql) and equi-join against a tiny broadcast table of
    polygon *cover cells* (every cell intersecting a polygon's bbox).
    Expressing PIP as a broadcast **equi**-join lets Catalyst pick
    BroadcastHashJoin — no shuffle of the big side, no
    BroadcastNestedLoopJoin.
-2. **Exact refine** — vectorized even-odd ray-cast pandas UDF over the
-   candidate pairs; the polygon vertex table rides inside the UDF
-   closure as a NumPy array (≈ the reference shipping its AFT tables in
-   headers — SURVEY.md §2.2).  Handles concave polygons; boundary rule
-   is the classic half-open crossing test.
+2. **Exact refine** — a second tiny broadcast join on ``mun_id`` brings
+   each candidate its polygon's vertex columns; an even-odd ray cast in
+   SQL keeps the points inside, in the NumPy operation order, so it is
+   bit-identical to a NumPy cast.  Both joins and the refine run in one
+   whole-stage codegen stage, with no Python worker.  Handles concave
+   polygons; boundary rule is the classic half-open crossing test.
 
 The municipality fixture (FIXTURES.md §4) is a deterministic set of
 convex octagons around mixed centroids (212 at bench scale to match the
@@ -29,9 +30,8 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from .. import cells
 from ..constants import BBOX_FI_MAX, BBOX_FI_MIN, BBOX_LA_MAX, BBOX_LA_MIN
@@ -39,6 +39,7 @@ from ..functions.sqlgen import f as _f
 
 N_VERTS = 8
 PIP_CELL_RES = 6  # prefilter resolution (~0.0068° ≈ 500–750 m cells)
+VERT_COLS = [f"v{v}{a}" for v in range(N_VERTS) for a in "xy"]
 
 
 # ---------------------------------------------------------------------------
@@ -71,11 +72,8 @@ def municipalities_values_sql(n_mun: int = 20) -> str:
     polys = municipality_polygons(n_mun)
     rows = []
     for i in range(n_mun):
-        vals = ", ".join(
-            f"{_f(polys[i, v, 0])}, {_f(polys[i, v, 1])}" for v in range(N_VERTS)
-        )
-        rows.append(f"({i}, {vals})")
-    cols = ", ".join(f"v{v}x, v{v}y" for v in range(N_VERTS))
+        rows.append(f"({i}, {', '.join(_f(c) for c in polys[i].ravel())})")
+    cols = ", ".join(VERT_COLS)
     return (f"(SELECT * FROM (VALUES {', '.join(rows)}) "
             f"AS m(mun_id, {cols}))")
 
@@ -99,46 +97,50 @@ def pip_oracle_condition(px: str = "p.la", py: str = "p.fi") -> str:
 # ---------------------------------------------------------------------------
 
 def municipalities_df(spark: SparkSession, n_mun: int = 20) -> DataFrame:
-    """Dimension table: mun_id, name, vertex struct array, cover cells."""
-    polys = municipality_polygons(n_mun)
-    rows = []
-    for i in range(n_mun):
-        cover = cells.cover_bbox(
-            polys[i, :, 0].min(), polys[i, :, 1].min(),
-            polys[i, :, 0].max(), polys[i, :, 1].max(), PIP_CELL_RES)
-        rows.append((i, f"MUN_{i}", [int(c) for c in cover]))
-    return spark.createDataFrame(rows, "mun_id int, name string, h3_cover array<bigint>")
+    """Dimension table: mun_id and the vertex columns v0x, v0y, …, v7x,
+    v7y (exact float64).  Built from Arrow, so it plans as a local scan
+    and broadcasting it starts no Python worker."""
+    pdf = pd.DataFrame(municipality_polygons(n_mun).reshape(n_mun, -1),
+                       columns=VERT_COLS)
+    pdf.insert(0, "mun_id", np.arange(n_mun, dtype=np.int32))
+    return spark.createDataFrame(pdf)
 
 
-def point_in_polygon_udf(polys: np.ndarray):
-    """Vectorized even-odd ray cast: (px, py, poly_idx) → bool.
+def cover_cells(mun: DataFrame) -> DataFrame:
+    """(mun_id, cell) for every PIP_CELL_RES cell meeting a polygon's
+    bbox — :func:`cells.cover_bbox` as SQL on the vertex columns: the
+    bbox corner cells by the points' own encoder, the cells between
+    them by two explodes."""
+    xs = ", ".join(VERT_COLS[0::2])
+    ys = ", ".join(VERT_COLS[1::2])
 
-    ``polys``: (n_poly, n_verts, 2) closure array.  One Arrow crossing;
-    n_verts-step XOR accumulation over whole columns.
-    """
-    vx = polys[:, :, 0]
-    vy = polys[:, :, 1]
-    nv = polys.shape[1]
+    def corner(fi: str, la: str) -> str:
+        return cells.encode_sql(f"{fi}({ys})", f"{la}({xs})", PIP_CELL_RES)
 
-    @pandas_udf("boolean")
-    def _udf(px: pd.Series, py: pd.Series, idx: pd.Series) -> pd.Series:
-        x = px.to_numpy(np.float64, copy=False)
-        y = py.to_numpy(np.float64, copy=False)
-        k = idx.to_numpy(np.int64, copy=False)
-        gx = vx[k]  # (n, nv)
-        gy = vy[k]
-        inside = np.zeros(len(x), dtype=bool)
-        for v in range(nv):
-            w = (v + 1) % nv
-            yi, yj = gy[:, v], gy[:, w]
-            xi, xj = gx[:, v], gx[:, w]
-            crosses = (yi > y) != (yj > y)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                xint = (xj - xi) * (y - yi) / (yj - yi) + xi
-            inside ^= crosses & (x < xint)
-        return pd.Series(inside)
+    lo = corner("least", "least")
+    return (mun.selectExpr(
+        "mun_id", f"{lo} AS lo", f"{corner('greatest', 'least')} - {lo} AS ny",
+        f"explode(sequence(0L, {corner('least', 'greatest')} - {lo}, "
+        f"{1 << cells.IX_SHIFT}L)) AS dx")
+        .selectExpr("mun_id", "explode(sequence(lo + dx, lo + dx + ny)) AS cell"))
 
-    return _udf
+
+def ray_cast_sql(px: str, py: str, vx: list[str], vy: list[str]) -> str:
+    """Even-odd ray cast as one SQL predicate over the polygon (vx, vy).
+    Per edge the crossing is the NumPy form
+    ``crosses & (x < (xj - xi) * (y - yi) / (yj - yi) + xi)`` in the
+    same operation order; the outer CASE evaluates the division only
+    where the edge crosses the ray, so a horizontal edge never divides
+    by zero (an error under ANSI mode).  NULL or NaN coordinates cross
+    nothing."""
+    n = len(vx)
+    hits = []
+    for v in range(n):
+        w = (v + 1) % n
+        xint = f"({vx[w]} - {vx[v]}) * ({py} - {vy[v]}) / ({vy[w]} - {vy[v]}) + {vx[v]}"
+        hits.append(f"CASE WHEN ({vy[v]} > {py}) <> ({vy[w]} > {py}) "
+                    f"THEN CASE WHEN {px} < {xint} THEN 1 ELSE 0 END ELSE 0 END")
+    return f"(({' + '.join(hits)}) % 2 = 1)"
 
 
 def pip_join(points: DataFrame, spark: SparkSession,
@@ -146,22 +148,18 @@ def pip_join(points: DataFrame, spark: SparkSession,
              n_mun: int = 20) -> DataFrame:
     """points (big) ⋈ municipalities (tiny broadcast) → rows + mun_id.
 
-    Plan shape: codegen cell encode → BroadcastHashJoin on cover cell →
-    ArrowEvalPython refine → filter.  The point side is never shuffled.
+    Plan shape, one whole-stage codegen pipeline: cell encode →
+    BroadcastHashJoin on cover cell → BroadcastHashJoin on mun_id
+    (vertex columns) → ray-cast filter.  The point side is never
+    shuffled.  The expressions are SQL text: one parse per expression
+    instead of hundreds of Py4J calls per plan.
     """
-    polys = municipality_polygons(n_mun)
     mun = municipalities_df(spark, n_mun)
-    cover = mun.select("mun_id", F.explode("h3_cover").alias("cell"))
+    fi, la = f"`{fi_col}`", f"`{la_col}`"
     pts = points.withColumn(
-        "cell", _cell(F.col(fi_col), F.col(la_col)))
-    cand = pts.join(F.broadcast(cover), "cell", "inner")
-    refine = point_in_polygon_udf(polys)
-    return (cand
-            .withColumn("inside", refine(F.col(la_col), F.col(fi_col), F.col("mun_id")))
-            .filter(F.col("inside"))
-            .drop("inside", "cell"))
-
-
-def _cell(fi: Column, la: Column) -> Column:
-    from ..kernels import cell_col
-    return cell_col(fi, la, PIP_CELL_RES)
+        "cell", F.expr(cells.encode_sql(fi, la, PIP_CELL_RES)))
+    cand = (pts.join(F.broadcast(cover_cells(mun)), "cell", "inner")
+            .join(F.broadcast(mun.withColumnRenamed("mun_id", "v_mun")),
+                  F.col("mun_id") == F.col("v_mun")))
+    inside = ray_cast_sql(la, fi, VERT_COLS[0::2], VERT_COLS[1::2])
+    return cand.filter(inside).drop("cell", "v_mun", *VERT_COLS)

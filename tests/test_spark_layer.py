@@ -3,6 +3,8 @@ plan-shape audits, and rerun determinism (SURVEY.md §6.2 items 3/5)."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -56,55 +58,119 @@ def test_no_row_python_in_plan(spark, pts_df):
 
 def test_pip_plan_is_broadcast(spark, pts_df):
     """PIP prefilter must be a broadcast hash join — no shuffle of the
-    point side, no BroadcastNestedLoopJoin (SURVEY.md §5.2 item 3)."""
+    point side, no BroadcastNestedLoopJoin (SURVEY.md §5.2 item 3) —
+    and the ray-cast refine stays in Catalyst: over a Python-free input
+    the plan has no Python node, and the refine sits inside whole-stage
+    codegen."""
     out = pip_op.pip_join(pts_df, spark)
+    out.collect()  # the final adaptive plan carries the codegen ids
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert re.search(r"(?<!Broadcast)Exchange ", plan) is None
+    final = plan.split("== Initial Plan ==")[0]
+    refine = [ln for ln in final.splitlines() if "CASE WHEN" in ln]
+    assert refine and all(re.search(r"\*\(\d+\) ", ln) for ln in refine)
 
 
-def test_pip_vs_numpy_oracle(spark, pts_df):
-    """Engine two-phase PIP ≡ brute-force NumPy even-odd over all
-    polygons (FIXTURES.md §4 oracle)."""
-    got = (pip_op.pip_join(pts_df, spark).select("k", "mun_id").toPandas())
-    got_set = set(map(tuple, got.to_numpy()))
-    polys = pip_op.municipality_polygons(20)
+def _numpy_pip(x, y, polys) -> set:
+    """Brute-force NumPy even-odd ray cast of every point against every
+    polygon → {(row index, polygon index)}."""
     exp = set()
-    for m in range(20):
+    for m in range(len(polys)):
         vx, vy = polys[m, :, 0], polys[m, :, 1]
-        inside = np.zeros(N, dtype=bool)
+        inside = np.zeros(len(x), dtype=bool)
         nv = len(vx)
         for v in range(nv):
             w = (v + 1) % nv
-            crosses = (vy[v] > FI) != (vy[w] > FI)
+            crosses = (vy[v] > y) != (vy[w] > y)
             with np.errstate(divide="ignore", invalid="ignore"):
-                xint = (vx[w] - vx[v]) * (FI - vy[v]) / (vy[w] - vy[v]) + vx[v]
-            inside ^= crosses & (LA < xint)
-        for k in np.where(inside)[0]:
-            exp.add((k, m))
+                xint = (vx[w] - vx[v]) * (y - vy[v]) / (vy[w] - vy[v]) + vx[v]
+            inside ^= crosses & (x < xint)
+        exp.update((k, m) for k in np.where(inside)[0])
+    return exp
+
+
+def test_pip_vs_numpy_oracle(spark):
+    """Engine two-phase PIP ≡ brute-force NumPy even-odd over all
+    polygons (FIXTURES.md §4 oracle): the same (k, mun_id) set, on the
+    fixture points plus points on a vertex, on edges, on a cell
+    boundary, with NULL / NaN coordinates and outside the bbox (clamped
+    into edge cells)."""
+    polys = pip_op.municipality_polygons(20)
+    n = cells.n_cells(pip_op.PIP_CELL_RES)
+    v0x, v0y = polys[0, 0]
+    cx, cy = polys[0, :, 0].mean(), polys[0, :, 1].mean()
+    ix = np.floor((cx - cells.BBOX_LA_MIN) / cells.LA_SPAN * n)
+    x_edge = cells.BBOX_LA_MIN + cells.LA_SPAN * ix / n  # on a cell edge
+    nan = float("nan")
+    extra = [(v0y, v0x), (cy, x_edge), (cy, np.nextafter(x_edge, 0)),
+             (cy, cx), (nan, cx), (cy, nan), (nan, nan),
+             (None, cx), (cy, None), (None, None),
+             (44.0, cx), (48.0, cx), (cy, 12.0), (cy, 18.0),
+             (44.0, 12.0), (-90.0, 190.0)]
+    # points exactly on polygon 0's edges (x in the NumPy op order), at
+    # the y where the slope-first order (xj-xi)/(yj-yi)*(y-yi) rounds x
+    # differently: an engine in that order moves them across the edge
+    vx, vy = polys[0, :, 0], polys[0, :, 1]
+    for v in range(pip_op.N_VERTS):
+        w = (v + 1) % pip_op.N_VERTS
+        y = np.random.default_rng(v).uniform(*sorted((vy[v], vy[w])), 20000)
+        x = (vx[w] - vx[v]) * (y - vy[v]) / (vy[w] - vy[v]) + vx[v]
+        moved = x != (vx[w] - vx[v]) / (vy[w] - vy[v]) * (y - vy[v]) + vx[v]
+        extra += list(zip(y[moved], x[moved]))
+    rows = [(k, float(a), float(b)) for k, (a, b) in enumerate(zip(FI, LA))]
+    rows += [(N + i, *(None if c is None else float(c) for c in e))
+             for i, e in enumerate(extra)]
+    fi = np.array([r[1] for r in rows], dtype=float)  # NULL → NaN
+    la = np.array([r[2] for r in rows], dtype=float)
+    df = spark.createDataFrame(rows, "k long, fi double, la double")
+    got = pip_op.pip_join(df, spark).select("k", "mun_id").toPandas()
+    got_set = set(map(tuple, got.to_numpy()))
+    exp = _numpy_pip(la, fi, polys)
     assert got_set == exp
+    assert {(N + 1, 0), (N + 2, 0), (N + 3, 0)} <= exp  # cell edge, centre
 
 
 def test_raycast_concave_polygon(spark):
-    """The PRODUCT refine kernel (pip.point_in_polygon_udf) is a
-    general even-odd ray cast: verify it on a concave (arrow-head)
-    polygon where half-plane / convex-only tests would fail.  (The
-    r4 review caught the earlier version of this test asserting on a
-    private re-implementation instead of the kernel — the fixture
-    municipalities are all convex, so the kernel's concave behavior
-    was otherwise untested.)"""
+    """The PRODUCT refine (pip.ray_cast_sql) is a general even-odd ray
+    cast: verify it on a concave (arrow-head) polygon where half-plane /
+    convex-only tests would fail, against the NumPy cast.  The polygon
+    has horizontal and zero-length edges, so every point also exercises
+    the guard that keeps ANSI division by zero from firing; the vertex
+    columns come from data, as after pip_join's vertex join."""
     poly = np.array([[[0.0, 0.0], [4.0, 0.0], [4.0, 4.0], [2.0, 1.5],
                       [0.0, 4.0], [0.0, 0.0], [0.0, 0.0], [0.0, 0.0]]])
     # degenerate repeated vertices are fine for even-odd
-    px = [2.0, 2.0, 0.5, 2.5]
-    py = [0.5, 3.0, 0.5, 2.5]   # (2,3) and (2.5,2.5) in the notch → outside
+    px = [2.0, 2.0, 0.5, 2.5, 2.0, 4.0, 2.0, 0.0, float("nan"), 1.0]
+    py = [0.5, 3.0, 0.5, 2.5, 0.0, 4.0, 1.5, 2.0, 1.0, float("nan")]
+    # (2,3) and (2.5,2.5) in the notch → outside; then a point on the
+    # horizontal edge y=0, two vertices, the left edge, NaN x, NaN y
+    verts = [float(c) for c in poly[0].ravel()]
+    vcols = ", ".join(f"{c} double" for c in pip_op.VERT_COLS)
     df = spark.createDataFrame(
-        [(x, y, 0) for x, y in zip(px, py)], "px double, py double, i int")
-    udf = pip_op.point_in_polygon_udf(poly)
-    got = [r.inside for r in
-           df.select(udf(F.col("px"), F.col("py"), F.col("i"))
-                     .alias("inside")).collect()]
-    assert got == [True, False, True, False]
+        [(x, y, *verts) for x, y in zip(px, py)],
+        f"px double, py double, {vcols}")
+    inside = pip_op.ray_cast_sql("px", "py", pip_op.VERT_COLS[0::2],
+                                 pip_op.VERT_COLS[1::2])
+    got = [r.inside for r in df.select(F.expr(inside).alias("inside")).collect()]
+    exp = _numpy_pip(np.array(px), np.array(py), poly)
+    assert got == [(k, 0) in exp for k in range(len(px))]
+    assert got[:4] == [True, False, True, False]
+
+
+def test_pip_cover_cells_equal_cover_bbox(spark):
+    """The Catalyst cover (pip.cover_cells) is exactly the NumPy
+    cells.cover_bbox set of every polygon, at bench scale (212)."""
+    polys = pip_op.municipality_polygons(212)
+    got = pip_op.cover_cells(pip_op.municipalities_df(spark, 212)).toPandas()
+    exp = {(m, int(c)) for m, p in enumerate(polys)
+           for c in cells.cover_bbox(p[:, 0].min(), p[:, 1].min(),
+                                     p[:, 0].max(), p[:, 1].max(),
+                                     pip_op.PIP_CELL_RES)}
+    assert len(got) == len(exp)
+    assert set(map(tuple, got.to_numpy())) == exp
 
 
 def _duck_pts(extra_rows: str = ""):
@@ -284,5 +350,5 @@ def test_bbox_join_cover_equals_bruteforce(spark):
              .filter((F.col("ox") > 0) & (F.col("oy") > 0))
              .select("k", "mun_id", "ox", "oy").toPandas()
              .sort_values(["k", "mun_id"]).reset_index(drop=True))
-    pd.testing.assert_frame_equal(got, brute)  # exact, incl. extents
+    pd.testing.assert_frame_equal(got, brute, check_exact=True)  # incl. extents
     assert len(brute) > 5                      # non-trivial fixture
