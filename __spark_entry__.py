@@ -27,7 +27,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from geocoordinateconverter_spark import kernels
+from geocoordinateconverter_spark import api, kernels
 from geocoordinateconverter_spark.functions import sqlgen as sg
 from geocoordinateconverter_spark.operators import knn as knn_op
 from geocoordinateconverter_spark.operators import multimodal as mm
@@ -357,20 +357,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # out_round: decimals per output col; None = pass-through value
         # that is bit-identical to the oracle's (rounding would only
         # introduce decimal-midpoint HALF_UP-vs-float divergence).
+        # height_mode="ht" on every chain: the oracle's chain SQL carries
+        # the transformed height (t=1/2 default to hg).
         def run(spark, sf_dir):
             _register(spark, sf_dir)
             src = spark.sql(f"SELECT * FROM {src_sql} WHERE {sample}")
-            udf = kernels.transform_udf(t)
-            cols = ["fi", "la", "h"] if t in (1, 3, 7) else ["x", "y", "h"]
-            in_cols = [F.col(c) for c in (("x", "y", "h")
-                                          if t in (1, 3, 5, 6, 7, 9, 10)
-                                          else ("fi", "la", "h"))]
-            df = src.withColumn("out", udf(*in_cols))
-            sel = [F.col("k")] + [
-                (F.col(f"out.{c}") if nd is None
-                 else F.round(F.col(f"out.{c}"), nd)).alias(f"{c}_out")
-                for c, nd in zip(cols, out_round)]
-            return df.select(*sel)
+            out = api.convert(src, t, height_mode="ht")
+            cols = (("fi", "la", "h") if t in kernels.GEOGRAPHIC_OUT
+                    else ("x", "y", "h"))
+            return out.select("k", *[
+                (F.col(f"{c}_out") if nd is None
+                 else F.round(f"{c}_out", nd)).alias(f"{c}_out")
+                for c, nd in zip(cols, out_round)])
         return run
 
     q["t3_gk_to_wgs84"] = _chain_query(3, SRC_GK_LINEITEM, "k % 37 = 0", (8, 8, 2))
@@ -600,15 +598,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["t8_wgs84_to_gk_aft"] = _chain_query(8, SRC_WGS_ORDERS, "k % 19 = 0",
                                            (2, 2, None))
 
-    def q_t10(spark, sf_dir):
-        _register(spark, sf_dir)
-        src = spark.sql(f"SELECT * FROM {SRC_TM_LINEITEM} WHERE k % 61 = 0")
-        udf = kernels.transform_udf(10)
-        df = src.withColumn("out", udf(F.col("x"), F.col("y"), F.col("h")))
-        return df.select("k", F.col("out.x").alias("x_out"),
-                         F.col("out.y").alias("y_out"),
-                         F.col("out.h").alias("h_out"))
-    q["t10_tm_to_gk_aft"] = q_t10
+    q["t10_tm_to_gk_aft"] = _chain_query(10, SRC_TM_LINEITEM, "k % 61 = 0",
+                                         (None, None, None))
 
     # ---- height modes (A6): physical H = h − N (hg) ----------------------
     def q_height_hg(spark, sf_dir):
@@ -625,22 +616,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q_height_override(spark, sf_dir):
         _register(spark, sf_dir)
         src = spark.sql(f"SELECT * FROM {SRC_GK_LINEITEM} WHERE k % 23 = 0")
-        udf = kernels.transform_with_height_udf(3, height_mode="hg")
-        df = src.withColumn("o", udf(F.col("x"), F.col("y"), F.col("h")))
-        return df.select("k", F.round("o.fi", 8).alias("fi_out"),
-                         F.round("o.la", 8).alias("la_out"),
-                         F.round("o.h", 2).alias("h_out"))
+        out = api.convert(src, t=3, height_mode="hg")
+        return out.select("k", F.round("fi_out", 8).alias("fi_out"),
+                          F.round("la_out", 8).alias("la_out"),
+                          F.round("h_out", 2).alias("h_out"))
     q["height_mode_override_t3_hg"] = q_height_override
 
     # ---- gk-slo CLI parity surface (api.py): -x self-test + -r path ------
     def q_selftest(spark, sf_dir):
-        from geocoordinateconverter_spark import api
         return api.self_test(spark)
     q["selftest_golden_chains"] = q_selftest
 
     def q_cli_reverse(spark, sf_dir):
         # -r: the source arrives (la, fi)-swapped; convert() re-swaps
-        from geocoordinateconverter_spark import api
         _register(spark, sf_dir)
         src = spark.sql(
             f"SELECT k, la AS c_la, fi AS c_fi, h FROM "
@@ -1660,8 +1648,7 @@ WHERE rk <= 3
         f"FROM {_pts_orders} q1 "
         f"JOIN {sg.geoid_sql(_pts_orders, 'k', 'slo')} q2 ON q1.k = q2.k) q3")
 
-    from geocoordinateconverter_spark import api as _api
-    o["selftest_golden_chains"] = _api.self_test_oracle_sql()
+    o["selftest_golden_chains"] = api.self_test_oracle_sql()
     o["cli_reverse_t2"] = _chain_oracle(
         sg.t2_sql, SRC_WGS_ORDERS, "k % 29 = 0", ("x", "y"), (2, 2))
 

@@ -28,9 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import goldens, kernels
-
-IN_GEOGRAPHIC = {2, 4, 8}   # chains consuming (fi, la, h)
-OUT_GEOGRAPHIC = {1, 3, 7}  # chains producing (fi, la, h)
+from .kernels import GEOGRAPHIC_IN, GEOGRAPHIC_OUT
 
 
 def _dms_col(deg_col) -> F.Column:
@@ -70,16 +68,17 @@ def convert(df: DataFrame, t: int, height_mode: str | None = None,
     With default ``cols`` the same rule applies positionally: the
     first-named column holds the second coordinate's values.
     """
-    in_names = (("fi", "la", "h") if t in IN_GEOGRAPHIC else ("x", "y", "h"))
+    in_names = (("fi", "la", "h") if t in GEOGRAPHIC_IN else ("x", "y", "h"))
     c1n, c2n, c3n = cols or in_names
     c1, c2 = (F.col(c2n), F.col(c1n)) if reverse else (F.col(c1n), F.col(c2n))
-    udf = kernels.transform_with_height_udf(t, height_mode, geoid_model)
-    out_names = (("fi", "la", "h") if t in OUT_GEOGRAPHIC else ("x", "y", "h"))
+    udf = kernels.transform_udf(
+        t, height_mode or kernels.HEIGHT_MODE_DEFAULTS[t], geoid_model)
+    out_names = (("fi", "la", "h") if t in GEOGRAPHIC_OUT else ("x", "y", "h"))
     res = df.withColumn("_o", udf(c1, c2, F.col(c3n)))
     keep = [F.col(c) for c in df.columns] + [
         F.col(f"_o.{n}").alias(f"{n}_out") for n in out_names]
     res = res.select(*keep)
-    if dms_output and t in OUT_GEOGRAPHIC:
+    if dms_output and t in GEOGRAPHIC_OUT:
         res = (res.withColumn("fi_dms", _dms_col(F.col("fi_out")))
                .withColumn("la_dms", _dms_col(F.col("la_out"))))
     return res
@@ -103,8 +102,8 @@ def self_test(spark: SparkSession) -> DataFrame:
              for i, r in enumerate(inp)],
             "idx int, c1 double, c2 double, c3 double")
         udf = kernels.transform_udf(t)
-        o = ("fi", "la", "h") if t in OUT_GEOGRAPHIC else ("x", "y", "h")
-        nd = 8 if t in OUT_GEOGRAPHIC else 3
+        o = ("fi", "la", "h") if t in GEOGRAPHIC_OUT else ("x", "y", "h")
+        nd = 8 if t in GEOGRAPHIC_OUT else 3
         parts.append(
             src.withColumn("_o", udf(F.col("c1"), F.col("c2"), F.col("c3")))
             .select(F.lit(t).alias("t"), "idx",
@@ -121,7 +120,7 @@ def self_test_oracle_sql() -> str:
     from .functions.sqlgen import f as _f
     rows = []
     for t in sorted(goldens.EXPECTED):
-        nd = 8 if t in OUT_GEOGRAPHIC else 3
+        nd = 8 if t in GEOGRAPHIC_OUT else 3
         for i, r in enumerate(goldens.EXPECTED[t]):
             rows.append(f"({t}, {i}, round({_f(r[0])}, {nd}), "
                         f"round({_f(r[1])}, {nd}), round({_f(r[2])}, {nd}))")

@@ -83,8 +83,6 @@ BESSEL_1841 = Ellipsoid("bessel", a=6377397.155, f_inv=299.1528128)
 GRS80 = Ellipsoid("grs80", a=6378137.0, f_inv=298.257222101)
 WGS84 = Ellipsoid("wgs84", a=6378137.0, f_inv=298.257223563)
 
-ELLIPSOIDS = {e.name: e for e in (BESSEL_1841, GRS80, WGS84)}
-
 
 # ---------------------------------------------------------------------------
 # Projections (geo.c → projection parameter sets; SURVEY.md §2.1 item 2)

@@ -8,6 +8,13 @@ kernel → Arrow → JVM, with **one Arrow crossing per composite chain**
 (input_hint hard ban; audit with ``explain()`` — only ArrowEvalPython
 may appear, never BatchEvalPython).
 
+Each UDF factory here is a thin wrapper over exactly one NumPy kernel:
+:func:`transform_udf` over the chain table (its -ht/-hc/-hg selector
+picks the output height inside the same call), :func:`geoid_udf` over
+``geoid.geoid_height`` and :func:`aft_locate_udf` over the triangle
+table's ``locate``.  :data:`GEOGRAPHIC_IN` / :data:`GEOGRAPHIC_OUT`
+are the one record of which chains read / write (fi, la, h).
+
 Cell encoding deliberately does NOT live here: it is pure arithmetic,
 so :func:`cell_col` builds it from Catalyst built-ins and it stays
 inside whole-stage codegen (see cells.py rationale).
@@ -38,11 +45,11 @@ _CHAINS = {
     10: _aft.tm_to_gk_aft,
 }
 
-# Output column names per chain: geographic chains return (fi, la, h),
-# projected chains return (x, y, h) — mirroring GEOGRA/GEOUTM
-# (common.h struct decls, SURVEY.md §2.1).
-_GEOGRAPHIC_OUT = {1, 3, 7}
-_GEOGRAPHIC_IN = {2, 4, 8}
+# Chains ending / starting geographic: they produce / consume
+# (fi, la, h), the rest (x, y, h) — mirroring GEOGRA/GEOUTM (common.h
+# struct decls, SURVEY.md §2.1).
+GEOGRAPHIC_OUT = frozenset({1, 3, 7})
+GEOGRAPHIC_IN = frozenset({2, 4, 8})
 
 # SURVEY.md §3.4 A6: per-chain default height mode (-ht transformed /
 # -hc copied / -hg geoid-derived).  [UNVERIFIED against the README's
@@ -50,38 +57,19 @@ _GEOGRAPHIC_IN = {2, 4, 8}
 # values mirror the public usage docs and each chain's semantics:
 # same-datum projections carry the geoid-corrected height, Helmert
 # chains the transformed height, AFT chains copy.]  The table is the
-# single source of truth for transform_with_height_udf.
+# single source of truth for api.convert's defaults.
 HEIGHT_MODE_DEFAULTS = {1: "hg", 2: "hg", 3: "ht", 4: "ht", 5: "ht",
                         6: "ht", 7: "hc", 8: "hc", 9: "hc", 10: "hc"}
 
 
-def transform_udf(t: int):
-    """pandas UDF for composite chain ``t`` (1..10, SURVEY.md §3.3).
+def transform_udf(t: int, height_mode: str = "ht",
+                  geoid_model: str = "slo"):
+    """pandas UDF for composite chain ``t`` (1..10, SURVEY.md §3.3)
+    with the gk-slo -ht/-hc/-hg height selector.
 
     Signature: (c1, c2, c3) → struct<c1:double, c2:double, c3:double>
     where the c-triple is (x, y, H) or (fi, la, h) per the chain's
-    GEOUTM/GEOGRA direction.  The whole chain is one NumPy pipeline →
-    one Arrow crossing.
-    """
-    fn = _CHAINS[t]
-    names = ("fi", "la", "h") if t in _GEOGRAPHIC_OUT else ("x", "y", "h")
-    schema = ", ".join(f"{n} double" for n in names)
-
-    @pandas_udf(schema)
-    def _udf(c1: pd.Series, c2: pd.Series, c3: pd.Series) -> pd.DataFrame:
-        o1, o2, o3 = fn(c1.to_numpy(dtype="float64", copy=False),
-                        c2.to_numpy(dtype="float64", copy=False),
-                        c3.to_numpy(dtype="float64", copy=False))
-        return pd.DataFrame({names[0]: o1, names[1]: o2, names[2]: o3})
-
-    _udf.__name__ = f"t{t}_{fn.__name__}"
-    return _udf
-
-
-def transform_with_height_udf(t: int, height_mode: str | None = None,
-                              geoid_model: str = "slo"):
-    """Chain ``t`` with an explicit -ht/-hc/-hg height-mode selector
-    (gk-slo CLI options; defaults from :data:`HEIGHT_MODE_DEFAULTS`).
+    GEOUTM/GEOGRA direction.  Height modes:
 
     * ``ht`` — the chain's transformed height (Helmert path carries it
       through ECEF; projection-only chains pass it unchanged).
@@ -90,20 +78,19 @@ def transform_with_height_udf(t: int, height_mode: str | None = None,
       the output point (physical H → ellipsoidal h); chains STARTING
       geographic subtract N(φ,λ) at the input point (h → H).
       Projected↔projected chains (5/6/9/10) would need the WGS84
-      intermediate — not exposed at this wrapper; selecting hg for
-      them raises (their reference defaults are ht/hc anyway).
+      intermediate — not exposed here; selecting hg for them raises
+      (their reference defaults are ht/hc anyway).
 
-    Still ONE Arrow crossing: the geoid lookup is NumPy inside the
-    same UDF."""
-    mode = height_mode or HEIGHT_MODE_DEFAULTS[t]
-    if mode not in ("ht", "hc", "hg"):
-        raise ValueError(f"height_mode {mode!r}")
-    if mode == "hg" and t not in (_GEOGRAPHIC_OUT | _GEOGRAPHIC_IN):
+    The whole chain, geoid lookup included, is one NumPy pipeline →
+    one Arrow crossing."""
+    if height_mode not in ("ht", "hc", "hg"):
+        raise ValueError(f"height_mode {height_mode!r}")
+    if height_mode == "hg" and t not in GEOGRAPHIC_OUT | GEOGRAPHIC_IN:
         raise ValueError(
             f"height_mode='hg' needs a geographic endpoint; chain t={t} "
             f"is projected↔projected (default: {HEIGHT_MODE_DEFAULTS[t]!r})")
     fn = _CHAINS[t]
-    names = ("fi", "la", "h") if t in _GEOGRAPHIC_OUT else ("x", "y", "h")
+    names = ("fi", "la", "h") if t in GEOGRAPHIC_OUT else ("x", "y", "h")
     schema = ", ".join(f"{n} double" for n in names)
 
     @pandas_udf(schema)
@@ -112,17 +99,17 @@ def transform_with_height_udf(t: int, height_mode: str | None = None,
         a2 = c2.to_numpy(dtype="float64", copy=False)
         a3 = c3.to_numpy(dtype="float64", copy=False)
         o1, o2, o3 = fn(a1, a2, a3)
-        if mode == "hc":
+        if height_mode == "hc":
             h = a3
-        elif mode == "ht":
+        elif height_mode == "ht":
             h = o3
-        elif t in _GEOGRAPHIC_OUT:
+        elif t in GEOGRAPHIC_OUT:
             h = o3 + _geoid.geoid_height(o1, o2, geoid_model)
         else:  # geographic input
             h = o3 - _geoid.geoid_height(a1, a2, geoid_model)
         return pd.DataFrame({names[0]: o1, names[1]: o2, names[2]: h})
 
-    _udf.__name__ = f"t{t}_{fn.__name__}_{mode}"
+    _udf.__name__ = f"t{t}_{fn.__name__}_{height_mode}"
     return _udf
 
 

@@ -21,9 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..kernels import transform_udf
-
-VERTEX_RE = r"(-?[0-9]+\.?[0-9]*) (-?[0-9]+\.?[0-9]*)"
+from ..kernels import GEOGRAPHIC_OUT, transform_udf
 
 
 def wkt_vertices(df: DataFrame, geom_id: str = "geom_id",
@@ -47,8 +45,8 @@ def convert_geometry(df: DataFrame, t: int = 9, geom_id: str = "geom_id",
     udf = transform_udf(t)
     conv = verts.withColumn(
         "o", udf(F.col("vx"), F.col("vy"), F.lit(0.0)))
-    o1, o2 = ("o.fi", "o.la") if t in (1, 3, 7) else ("o.x", "o.y")
-    fmt = "%.8f %.8f" if t in (1, 3, 7) else "%.3f %.3f"
+    o1, o2 = ("o.fi", "o.la") if t in GEOGRAPHIC_OUT else ("o.x", "o.y")
+    fmt = "%.8f %.8f" if t in GEOGRAPHIC_OUT else "%.3f %.3f"
     pair = F.format_string(fmt, F.col(o1), F.col(o2))
     assembled = (conv
                  .groupBy(geom_id)

@@ -23,22 +23,18 @@ from pyspark.sql import functions as F
 
 def banded_range_join(points: DataFrame, value_col: str,
                       intervals: DataFrame, lo_col: str, hi_col: str,
-                      step: float, broadcast_intervals: bool = True,
-                      hi_inclusive: bool = False) -> DataFrame:
-    """Join each point to every interval with lo <= value < hi (or <=
-    hi when ``hi_inclusive``), via grid-cell equi-join + residual
-    filter.  Output: points columns + intervals columns."""
+                      step: float) -> DataFrame:
+    """Join each point to every interval with lo <= value < hi, via a
+    grid-cell equi-join against the broadcast exploded intervals plus a
+    residual filter.  Output: points columns + intervals columns."""
     cell_of = lambda c: F.floor(c / F.lit(float(step))).cast("bigint")  # noqa: E731
     iv = intervals.withColumn(
         "_cell", F.explode(F.sequence(cell_of(F.col(lo_col)),
                                       cell_of(F.col(hi_col)))))
-    if broadcast_intervals:
-        iv = F.broadcast(iv)
     pts = points.withColumn("_cell", cell_of(F.col(value_col)))
-    hi_pred = (F.col(value_col) <= F.col(hi_col) if hi_inclusive
-               else F.col(value_col) < F.col(hi_col))
-    return (pts.join(iv, "_cell")
-            .filter((F.col(value_col) >= F.col(lo_col)) & hi_pred)
+    return (pts.join(F.broadcast(iv), "_cell")
+            .filter((F.col(value_col) >= F.col(lo_col))
+                    & (F.col(value_col) < F.col(hi_col)))
             .drop("_cell"))
 
 

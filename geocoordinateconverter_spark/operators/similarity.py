@@ -141,9 +141,6 @@ def lsh_buckets(emb: DataFrame) -> DataFrame:
     return emb.select("vec_id", _udf(F.col("embedding")).alias("bucket"))
 
 
-LSH_BUCKETS_SQL = None  # built lazily (needs the generated projections)
-
-
 def lsh_buckets_sql() -> str:
     return (f"SELECT vec_id, {lsh_bucket_sql('embedding')} AS bucket "
             f"FROM embeddings")
@@ -257,6 +254,28 @@ def _centroid_halfnorm(c: int) -> float:
     return s / 2.0
 
 
+# centroid table and halfnorms, built once at import (1,024 closed-form
+# coefficients — not per Arrow batch)
+_IVF_C = np.array([[centroid_coef(c, d) for d in range(DIM)]
+                   for c in range(N_CLUSTERS)])
+_IVF_H = np.array([_centroid_halfnorm(c) for c in range(N_CLUSTERS)])
+
+
+def _ivf_scores_np(X: np.ndarray) -> np.ndarray:
+    """(n, N_CLUSTERS) quantizer scores x·c − ‖c‖²/2, accumulated with
+    the SAME left-fold order as :func:`ivf_score_sql` (d ascending,
+    then subtract the halfnorm), so the float64s are bit-identical to
+    the oracle's.  The one score kernel behind every IVF assignment:
+    the cluster UDF, the candidate kernel's cells and its probes."""
+    scores = np.empty((X.shape[0], N_CLUSTERS))
+    for c in range(N_CLUSTERS):
+        acc = _IVF_C[c, 0] * X[:, 0]
+        for d in range(1, DIM):  # fold order == ivf_score_sql
+            acc = acc + _IVF_C[c, d] * X[:, d]
+        scores[:, c] = acc - _IVF_H[c]
+    return scores
+
+
 def ivf_score_sql(a: str, c: int, dim: int = DIM) -> str:
     """Quantizer score x·c − ‖c‖²/2 — centroid coefficients from the
     same closed form as :func:`centroid_coef` inside the fold lambda;
@@ -275,24 +294,14 @@ def ivf_cluster_udf():
     NOT a codegen CASE: a first-max-wins CASE over 16 scores re-embeds
     the 1024-term ``greatest`` in every branch — a ~10⁵-node expression
     tree that blows past janino's compile budget (measured: 72 s at
-    sf0.1 vs <2 s here).  The kernel accumulates each score with the
-    SAME left-fold order as :func:`ivf_score_sql` (d ascending, then
-    subtract the halfnorm), so scores are bit-identical to the oracle's
-    and ``argmax`` (first max wins) picks the identical cell."""
-    C = np.array([[centroid_coef(c, d) for d in range(DIM)]
-                  for c in range(N_CLUSTERS)])
-    H = np.array([_centroid_halfnorm(c) for c in range(N_CLUSTERS)])
+    sf0.1 vs <2 s here).  Scores come from :func:`_ivf_scores_np`
+    (bit-identical to the oracle's), so ``argmax`` (first max wins)
+    picks the identical cell."""
 
     @pandas_udf("int")
     def _udf(emb: pd.Series) -> pd.Series:
         X = np.stack(emb.to_numpy()).astype(np.float64)
-        scores = np.empty((X.shape[0], N_CLUSTERS))
-        for c in range(N_CLUSTERS):
-            acc = C[c, 0] * X[:, 0]
-            for d in range(1, DIM):  # fold order == ivf_score_sql
-                acc = acc + C[c, d] * X[:, d]
-            scores[:, c] = acc - H[c]
-        return pd.Series(scores.argmax(axis=1).astype(np.int32))
+        return pd.Series(_ivf_scores_np(X).argmax(axis=1).astype(np.int32))
 
     return _udf
 
@@ -338,30 +347,6 @@ SELECT q_id, vec_id, rk, round(cos, 9) AS cos_sim FROM (
     ON c.cluster = q.q_cluster AND c.vec_id <> q.q_id) z
 WHERE rk <= {k}
 """
-
-
-def ivf_probe_udf(nprobe: int):
-    """Top-``nprobe`` quantizer cells per query vector (score DESC,
-    cell ASC on ties) — same bit-identical score fold as
-    :func:`ivf_cluster_udf`; stable argsort makes the tie rule match
-    the oracle's ``ORDER BY score DESC, cell ASC``."""
-    C = np.array([[centroid_coef(c, d) for d in range(DIM)]
-                  for c in range(N_CLUSTERS)])
-    H = np.array([_centroid_halfnorm(c) for c in range(N_CLUSTERS)])
-
-    @pandas_udf("array<int>")
-    def _udf(emb: pd.Series) -> pd.Series:
-        X = np.stack(emb.to_numpy()).astype(np.float64)
-        scores = np.empty((X.shape[0], N_CLUSTERS))
-        for c in range(N_CLUSTERS):
-            acc = C[c, 0] * X[:, 0]
-            for d in range(1, DIM):  # fold order == ivf_score_sql
-                acc = acc + C[c, d] * X[:, d]
-            scores[:, c] = acc - H[c]
-        order = np.argsort(-scores, axis=1, kind="stable")[:, :nprobe]
-        return pd.Series([r.tolist() for r in order.astype(np.int32)])
-
-    return _udf
 
 
 def ivf_nprobe_topk(emb: DataFrame, k: int = 5, nprobe: int = 3,
@@ -713,71 +698,54 @@ def _pq_halfnorm(m: int, j: int) -> float:
     return s / 2.0
 
 
-def pq_codebook() -> np.ndarray:
-    """(PQ_M, PQ_K, PQ_SUBDIM) float64 codebook."""
-    return np.array([[[pq_coef(m, j, d) for d in range(PQ_SUBDIM)]
-                      for j in range(PQ_K)] for m in range(PQ_M)])
+# (PQ_M, PQ_K, PQ_SUBDIM) codebook and its halfnorms, built once at import
+PQ_CODEBOOK = np.array([[[pq_coef(m, j, d) for d in range(PQ_SUBDIM)]
+                         for j in range(PQ_K)] for m in range(PQ_M)])
+_PQ_H = np.array([[_pq_halfnorm(m, j) for j in range(PQ_K)]
+                  for m in range(PQ_M)])
 
 
-def _pq_scores_np(X: np.ndarray, C: np.ndarray, H: np.ndarray,
-                  m: int) -> np.ndarray:
+def _pq_scores_np(X: np.ndarray, m: int) -> np.ndarray:
     """(n, PQ_K) subspace-m scores with the d-ascending fold order the
     SQL twin uses (bit-identical float64)."""
     Xm = X[:, m * PQ_SUBDIM:(m + 1) * PQ_SUBDIM]
     out = np.empty((X.shape[0], PQ_K))
     for j in range(PQ_K):
-        acc = C[m, j, 0] * Xm[:, 0]
+        acc = PQ_CODEBOOK[m, j, 0] * Xm[:, 0]
         for d in range(1, PQ_SUBDIM):   # fold order == _pq_score_sql
-            acc = acc + C[m, j, d] * Xm[:, d]
-        out[:, j] = acc - H[m, j]
+            acc = acc + PQ_CODEBOOK[m, j, d] * Xm[:, d]
+        out[:, j] = acc - _PQ_H[m, j]
     return out
 
 
-def pq_encode_udf():
-    """array<int> of PQ_M codes per vector (one Arrow crossing);
-    argmax is first-max-wins, matching the oracle's
+def _pq_codes_np(X: np.ndarray) -> np.ndarray:
+    """(n, PQ_M) codes; argmax is first-max-wins, matching the oracle's
     ``ORDER BY score DESC, j ASC``."""
-    C = pq_codebook()
-    H = np.array([[_pq_halfnorm(m, j) for j in range(PQ_K)]
-                  for m in range(PQ_M)])
+    codes = np.empty((X.shape[0], PQ_M), dtype=np.int64)
+    for m in range(PQ_M):
+        codes[:, m] = _pq_scores_np(X, m).argmax(axis=1)
+    return codes
+
+
+def _pq_lut_np(X: np.ndarray) -> np.ndarray:
+    """(n, PQ_M·PQ_K) ADC tables: entry m*PQ_K + j is the subspace-m
+    score against centroid j."""
+    lut = np.empty((X.shape[0], PQ_M * PQ_K))
+    for m in range(PQ_M):
+        lut[:, m * PQ_K:(m + 1) * PQ_K] = _pq_scores_np(X, m)
+    return lut
+
+
+def pq_encode_udf():
+    """array<int> of PQ_M codes per vector: one Arrow crossing around
+    :func:`_pq_codes_np`."""
 
     @pandas_udf("array<int>")
     def _udf(emb: pd.Series) -> pd.Series:
         X = np.stack(emb.to_numpy()).astype(np.float64)
-        codes = np.empty((X.shape[0], PQ_M), dtype=np.int32)
-        for m in range(PQ_M):
-            codes[:, m] = _pq_scores_np(X, C, H, m).argmax(axis=1)
-        return pd.Series([r.tolist() for r in codes])
+        return pd.Series([r.tolist() for r in _pq_codes_np(X)])
 
     return _udf
-
-
-def pq_lut_udf():
-    """array<double> of PQ_M*PQ_K ADC table entries per query vector
-    (entry m*PQ_K + j = subspace-m score against centroid j)."""
-    C = pq_codebook()
-    H = np.array([[_pq_halfnorm(m, j) for j in range(PQ_K)]
-                  for m in range(PQ_M)])
-
-    @pandas_udf("array<double>")
-    def _udf(emb: pd.Series) -> pd.Series:
-        X = np.stack(emb.to_numpy()).astype(np.float64)
-        lut = np.empty((X.shape[0], PQ_M * PQ_K))
-        for m in range(PQ_M):
-            lut[:, m * PQ_K:(m + 1) * PQ_K] = _pq_scores_np(X, C, H, m)
-        return pd.Series([r.tolist() for r in lut])
-
-    return _udf
-
-
-def adc_score_col(lut: str = "q_lut", codes: str = "codes") -> Column:
-    """Σ_m lut[m*PQ_K + codes[m]] as a codegen left fold in m order
-    (order-fixed so the float64 sum is bit-identical to the oracle's
-    list_reduce — a groupBy SUM would be partition-order dependent)."""
-    return F.expr(
-        f"aggregate(sequence(0, {PQ_M - 1}), cast(0.0 as double), "
-        f"(acc, m) -> acc + element_at({lut}, "
-        f"m * {PQ_K} + element_at({codes}, m + 1) + 1))")
 
 
 def _pq_coef_sql(m: str, j: str, d1: str) -> str:
@@ -1127,8 +1095,8 @@ def pq_train_replay_exact(V: np.ndarray, n_iter: int = 3):
 # 192 `element_at` casts per pair (116 s at the driver's sf1.0).  The
 # guide's §4.2 move: hand whole batches to NumPy.  The kernel below
 # computes the SAME fold (same operation order, same IEEE ops — NumPy
-# elementwise ops neither fuse nor reassociate, the precedent
-# established by ivf_cluster_udf/_pq_scores_np and pinned by pytest)
+# elementwise ops neither fuse nor reassociate — the rule the
+# quantizer kernels _ivf_scores_np/_pq_scores_np follow, pinned by pytest)
 # over (batch × query) score matrices, pre-selects per task every row
 # that can still reach the global top-k (score >= the task-local kth
 # score, so exact ties survive), and emits only those candidate rows.
@@ -1171,22 +1139,6 @@ def _fold_norm2_np(X: np.ndarray) -> np.ndarray:
     return acc
 
 
-def _ivf_scores_np(X: np.ndarray) -> np.ndarray:
-    """(n, N_CLUSTERS) quantizer scores — the exact fold of
-    :func:`ivf_cluster_udf` (shared so the kernel's cell assignment is
-    the same float64s as the UDF's and the oracle's)."""
-    C = np.array([[centroid_coef(c, d) for d in range(DIM)]
-                  for c in range(N_CLUSTERS)])
-    H = np.array([_centroid_halfnorm(c) for c in range(N_CLUSTERS)])
-    scores = np.empty((X.shape[0], N_CLUSTERS))
-    for c in range(N_CLUSTERS):
-        acc = C[c, 0] * X[:, 0]
-        for d in range(1, DIM):  # fold order == ivf_score_sql
-            acc = acc + C[c, d] * X[:, d]
-        scores[:, c] = acc - H[c]
-    return scores
-
-
 def _lsh_buckets_np(X: np.ndarray) -> np.ndarray:
     """(n,) int64 bucket ids — the exact projection fold of
     :func:`plane_proj_sql` (d-ascending; sign test unaffected by the
@@ -1200,31 +1152,9 @@ def _lsh_buckets_np(X: np.ndarray) -> np.ndarray:
     return out
 
 
-def _pq_codes_np(X: np.ndarray) -> np.ndarray:
-    """(n, PQ_M) int codes — exact twin of :func:`pq_encode_udf`."""
-    C = pq_codebook()
-    H = np.array([[_pq_halfnorm(m, j) for j in range(PQ_K)]
-                  for m in range(PQ_M)])
-    codes = np.empty((X.shape[0], PQ_M), dtype=np.int64)
-    for m in range(PQ_M):
-        codes[:, m] = _pq_scores_np(X, C, H, m).argmax(axis=1)
-    return codes
-
-
-def _pq_lut_np(X: np.ndarray) -> np.ndarray:
-    """(n, PQ_M·PQ_K) ADC tables — exact twin of :func:`pq_lut_udf`."""
-    C = pq_codebook()
-    H = np.array([[_pq_halfnorm(m, j) for j in range(PQ_K)]
-                  for m in range(PQ_M)])
-    lut = np.empty((X.shape[0], PQ_M * PQ_K))
-    for m in range(PQ_M):
-        lut[:, m * PQ_K:(m + 1) * PQ_K] = _pq_scores_np(X, C, H, m)
-    return lut
-
-
 def _adc_scores_np(codes: np.ndarray, LUT: np.ndarray) -> np.ndarray:
     """(n, q) ADC scores: m-ascending gather fold over the code table,
-    seeded 0.0 — the exact order of :func:`adc_score_col`."""
+    seeded 0.0 — the exact order of the oracle's ``ADC_FOLD_SQL``."""
     n, q = codes.shape[0], LUT.shape[0]
     S = np.zeros((n, q))
     for m in range(PQ_M):
@@ -1233,8 +1163,8 @@ def _adc_scores_np(codes: np.ndarray, LUT: np.ndarray) -> np.ndarray:
 
 
 def _probes_np(X: np.ndarray, nprobe: int) -> np.ndarray:
-    """(n, nprobe) best cells, score DESC / cell ASC — exact twin of
-    :func:`ivf_probe_udf` (stable argsort)."""
+    """(n, nprobe) best cells, score DESC / cell ASC — the stable
+    argsort reproduces the oracle's ``ORDER BY score DESC, cell ASC``."""
     return np.argsort(-_ivf_scores_np(X), axis=1, kind="stable")[:, :nprobe]
 
 

@@ -182,18 +182,6 @@ MINHASH_SIG_SQL = f"""
 """
 
 
-def minhash_bands(docs: DataFrame, sig: DataFrame | None = None) -> DataFrame:
-    """(doc_id, band, band_key): md5 over the band's ordered sigs."""
-    if sig is None:
-        sig = minhash_signatures(docs)
-    band = (F.col("perm") / ROWS_PER_BAND).cast("int")
-    return (sig.withColumn("band", band)
-            .groupBy("doc_id", "band")
-            .agg(F.md5(F.concat_ws(",", F.array_sort(
-                F.collect_list(F.format_string("%02d:%d", "perm", "sig"))
-            ))).alias("band_key")))
-
-
 MINHASH_BANDS_SQL = f"""
 (SELECT doc_id, band,
         md5(string_agg(printf('%02d:%d', perm, sig), ',' ORDER BY
@@ -212,6 +200,32 @@ MAX_BUCKET = 50  # skip degenerate buckets (bucket of m docs → m²/2
 # practice is to drop it; other bands still pair genuinely similar
 # docs.  The cap is part of the operator's semantics and the oracle
 # replicates it, so results stay exactly comparable.
+
+
+def _banded_sig_frame(docs: DataFrame,
+                      max_bucket: int = MAX_BUCKET) -> DataFrame:
+    """(doc_id, sigs, band, band_key) with degenerate buckets dropped —
+    the band table of minhash_pairs and of each incremental-dedup side.
+    band_key formatting is EXACTLY MINHASH_BANDS_SQL's ("%02d:%d" join
+    ","; perm is the static array position here), so the band tables
+    stay hash-comparable with the oracle's."""
+    sig_arr = minhash_sig_array(docs)
+    band_ix = F.explode(F.sequence(F.lit(0), F.lit(N_BANDS - 1))).alias("band")
+    band_fmt = {
+        b: F.md5(F.concat_ws(",", *[
+            F.format_string("%02d:%d", F.lit(p),
+                            F.element_at("sigs", p + 1))
+            for p in range(b * ROWS_PER_BAND, (b + 1) * ROWS_PER_BAND)]))
+        for b in range(N_BANDS)}
+    band_key = F.lit(None).cast("string")
+    for b in range(N_BANDS - 1, -1, -1):
+        band_key = F.when(F.col("band") == b, band_fmt[b]) \
+            .otherwise(band_key)
+    bands = (sig_arr.select("doc_id", "sigs", band_ix)
+             .withColumn("band_key", band_key))
+    wb = Window.partitionBy("band", "band_key")
+    return (bands.withColumn("bsize", F.count("*").over(wb))
+            .filter(F.col("bsize") <= max_bucket).drop("bsize"))
 
 
 def minhash_pairs(docs: DataFrame, max_bucket: int = MAX_BUCKET,
@@ -237,27 +251,7 @@ def minhash_pairs(docs: DataFrame, max_bucket: int = MAX_BUCKET,
     # r4: the signature table is now MAP-ONLY (minhash_sig_array) —
     # the r3 groupBy(doc_id) signature-assembly exchange is gone too;
     # the banded self-join below is the plan's ONLY shuffle.
-    sig_arr = minhash_sig_array(docs)
-    band_ix = F.explode(F.sequence(F.lit(0), F.lit(N_BANDS - 1))).alias("band")
-    # band_key formatting is EXACTLY minhash_bands' ("%02d:%d" join ","):
-    # the two code paths and the SQL oracle stay hash-comparable (perm
-    # is the static array position here)
-    band_fmt = {
-        b: F.md5(F.concat_ws(",", *[
-            F.format_string("%02d:%d", F.lit(p),
-                            F.element_at("sigs", p + 1))
-            for p in range(b * ROWS_PER_BAND, (b + 1) * ROWS_PER_BAND)]))
-        for b in range(N_BANDS)}
-    band_key = F.lit(None).cast("string")
-    for b in range(N_BANDS - 1, -1, -1):
-        band_key = F.when(F.col("band") == b, band_fmt[b]) \
-            .otherwise(band_key)
-    bands = (sig_arr.select("doc_id", "sigs", band_ix)
-             .withColumn("band_key", band_key))
-    wb = Window.partitionBy("band", "band_key")
-    bands = (bands.withColumn("bsize", F.count("*").over(wb))
-             .filter(F.col("bsize") <= max_bucket).drop("bsize")
-             .persist())
+    bands = _banded_sig_frame(docs, max_bucket).persist()
     if cache is not None:
         cache.append(bands)
     eq = F.size(F.filter(
@@ -1229,29 +1223,6 @@ GROUP BY drop_doc_id
 # the O(index²) work of a full re-dedup is never done.  Band-bucket
 # caps are per side: the index's caps are a stored property of the
 # index, the batch caps itself.
-
-def _banded_sig_frame(docs: DataFrame,
-                      max_bucket: int = MAX_BUCKET) -> DataFrame:
-    """(doc_id, sigs, band, band_key) with degenerate buckets dropped —
-    the shared band-table shape of minhash_pairs, reusable per side."""
-    sig_arr = minhash_sig_array(docs)
-    band_ix = F.explode(F.sequence(F.lit(0), F.lit(N_BANDS - 1))).alias("band")
-    band_fmt = {
-        b: F.md5(F.concat_ws(",", *[
-            F.format_string("%02d:%d", F.lit(p),
-                            F.element_at("sigs", p + 1))
-            for p in range(b * ROWS_PER_BAND, (b + 1) * ROWS_PER_BAND)]))
-        for b in range(N_BANDS)}
-    band_key = F.lit(None).cast("string")
-    for b in range(N_BANDS - 1, -1, -1):
-        band_key = F.when(F.col("band") == b, band_fmt[b]) \
-            .otherwise(band_key)
-    bands = (sig_arr.select("doc_id", "sigs", band_ix)
-             .withColumn("band_key", band_key))
-    wb = Window.partitionBy("band", "band_key")
-    return (bands.withColumn("bsize", F.count("*").over(wb))
-            .filter(F.col("bsize") <= max_bucket).drop("bsize"))
-
 
 def minhash_incremental_dedup(docs: DataFrame,
                               est_threshold: float = 0.7,

@@ -349,16 +349,27 @@ def geoparse_height_default_sql(src: str) -> str:
 def geoparse_swapped_sql(src: str) -> str:
     """Bare unlabeled pair in lon-lat order (the reference's ``-r``):
     parsed, then normalized to (fi, la) by the same magnitude bands the
-    pair classifier uses — a (λ, φ) pair is detected and swapped."""
-    c1 = (f"cast(nullif(regexp_extract(page_text, '{RE_POS_PAIR}', 1), '') "
-          f"as double)")
-    c2 = (f"cast(nullif(regexp_extract(page_text, '{RE_POS_PAIR}', 2), '') "
-          f"as double)")
-    pairs = (f"(SELECT url, {c1} AS c1, {c2} AS c2 FROM {src} "
-             f"WHERE regexp_extract(page_text, '{RE_POS_PAIR}', 1) <> '') q_p")
+    pair classifier uses — a (λ, φ) pair is detected and swapped.
+
+    The geo test runs first and names each value twice, not the
+    classifier's 16 times: a pair is 'geo' iff its smaller value lies in
+    the longitude band [12, 18] and its larger in the latitude band
+    [44, 48] (disjoint bands, latitude above); ``abs(v - mid) <= half``
+    is exact for these closed bands (Sterbenz).  Catalyst pushes this
+    filter below the page construction and inlines the extraction at
+    every mention — with ``kind = 'geo'`` that was 37 extractions and a
+    whole-stage method beyond the JVM's 64 KB limit.  ``try_cast`` maps
+    a missing match to NULL with one extraction, so no separate match
+    test is needed."""
+    c = lambda i: (f"try_cast(regexp_extract(page_text, '{RE_POS_PAIR}', "
+                   f"{i}) as double)")  # noqa: E731
+    pairs = (f"(SELECT url, c1, c2 FROM "
+             f"(SELECT url, {c(1)} AS c1, {c(2)} AS c2 FROM {src}) q_e "
+             f"WHERE abs(least(c1, c2) - 15.0e0) <= 3.0e0 "
+             f"AND abs(greatest(c1, c2) - 46.0e0) <= 2.0e0) q_p")
     return f"""
 (SELECT url, a1 AS fi, a2 AS la, kind
- FROM {classify_pair_sql(pairs, 'c1', 'c2')} q WHERE kind = 'geo')
+ FROM {classify_pair_sql(pairs, 'c1', 'c2')} q)
 """
 
 

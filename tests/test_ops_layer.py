@@ -372,3 +372,25 @@ def test_frame_sample_reference_and_edges(spark):
         assert r.n_frames == len(frames)
         assert r.n_sampled == (len(frames) + 3) // 4
         assert r.sample_md5 == exp_md5, doc_id
+
+
+def test_geoparse_swapped_compiles_without_codegen_fallback(spark):
+    """The swapped-pair geo filter is pushed below the page construction;
+    it must stay small enough for whole-stage codegen (with fallback
+    off, a method beyond 64 KB raises instead of running interpreted)
+    and still equal its DuckDB twin."""
+    import duckdb
+
+    import __spark_entry__ as em
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        got = sorted(map(tuple, em.queries()["geoparse_swapped_pair"](
+            spark, SF_SMOKE).collect()))
+    finally:
+        spark.conf.unset("spark.sql.codegen.fallback")
+    with duckdb.connect() as con:
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM "
+                    f"read_parquet('{SF_SMOKE}/documents.parquet')")
+        ref = sorted(con.execute(
+            em.oracle_sql()["geoparse_swapped_pair"]).fetchall())
+    assert got == ref and len(got) > 0

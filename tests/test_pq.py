@@ -8,8 +8,6 @@ exact-rerank consistency with the brute-force scores.
 
 from __future__ import annotations
 
-import numpy as np
-
 from geocoordinateconverter_spark.operators import similarity as sim
 
 SF = "/root/testdata/sf0.001"
@@ -31,21 +29,15 @@ def test_pq_codes_shape_range_and_determinism(spark):
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
 
-def test_pq_encode_matches_numpy_bitwise(spark):
-    got = {r.vec_id: [0] * sim.PQ_M
-           for r in sim.pq_codes_rows(_emb(spark)).collect()}
-    for r in sim.pq_codes_rows(_emb(spark)).collect():
-        got[r.vec_id][r.m] = r.code
-    raw = {r.vec_id: np.array(r.embedding, dtype=np.float64)
-           for r in _emb(spark).collect()}
-    C = sim.pq_codebook()
-    H = np.array([[sim._pq_halfnorm(m, j) for j in range(sim.PQ_K)]
-                  for m in range(sim.PQ_M)])
-    X = np.stack([raw[v] for v in sorted(raw)])
-    ref = np.stack([sim._pq_scores_np(X, C, H, m).argmax(axis=1)
-                    for m in range(sim.PQ_M)], axis=1)
-    for i, v in enumerate(sorted(raw)):
-        assert got[v] == ref[i].tolist()
+def test_pq_encode_matches_duckdb_bitwise(spark):
+    # the encode kernel against its DuckDB long-form argmax twin
+    import duckdb
+    got = sorted(map(tuple, sim.pq_codes_rows(_emb(spark)).collect()))
+    with duckdb.connect() as con:
+        con.execute(f"CREATE VIEW embeddings AS SELECT * FROM "
+                    f"read_parquet('{SF}/embeddings.parquet')")
+        ref = sorted(con.execute(sim.pq_codes_rows_sql()).fetchall())
+    assert got == ref and len(got) == sim.PQ_M * _emb(spark).count()
 
 
 def test_pq_recall_story_on_clustered_fixture(spark):

@@ -194,7 +194,7 @@ def test_pq_trained_beats_grid_adc_recall(spark):
             tot += 5
         return hit / tot
 
-    grid = sim.pq_codebook()
+    grid = sim.PQ_CODEBOOK
     _, Cq = sim.pq_train_replay_exact(V, n_iter=3)
     trained = Cq.astype(np.float64) / sim.KM_SCALE
     r_grid, r_trained = adc_recall(grid), adc_recall(trained)

@@ -7,17 +7,14 @@ Two layers of evidence:
   as a strictly sequential per-pair left fold (NumPy elementwise ops
   neither fuse nor reassociate);
 * operator-level — each rewritten top-k operator's full output equals
-  the r5 join/window formulation, rebuilt here verbatim as the
-  reference twin, on the smoke fixture.
+  the r5 join/window formulation, which lives on as the operator's
+  DuckDB twin, on the smoke fixture.
 """
 
 from __future__ import annotations
 
-import re
-
 import numpy as np
 import pytest
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from geocoordinateconverter_spark.operators import similarity as sim
@@ -48,89 +45,41 @@ def test_fold_dot_mat_bitwise():
         assert n2[i] == acc
 
 
-def _legacy_brute(emb, k=5, query_filter="vec_id % 50 = 0"):
-    emb_n = emb.withColumn("c_n2", sim.norm2_col("embedding"))
-    q = emb_n.filter(query_filter).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"),
-        F.col("c_n2").alias("q_n2"))
-    cand = (emb_n.alias("c")
-            .join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
-            .withColumn("dot", sim.dot_col("q_emb", "embedding"))
-            .withColumn("cos", F.col("dot")
-                        / F.sqrt(F.col("q_n2") * F.col("c_n2"))))
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(),
-                                           F.col("vec_id").asc())
-    return (cand.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
-            .select("q_id", "vec_id", "rk",
-                    F.round("cos", 9).alias("cos_sim")))
-
-
-def _legacy_ivfpq(emb, k=5, nprobe=3, query_filter="vec_id % 50 = 0"):
-    corpus = (emb
-              .withColumn("cluster", sim.ivf_cluster_udf()(F.col("embedding")))
-              .withColumn("codes", sim.pq_encode_udf()(F.col("embedding")))
-              .select("vec_id", "cluster", "codes"))
-    q = (emb.filter(query_filter)
-         .withColumn("probes", sim.ivf_probe_udf(nprobe)(F.col("embedding")))
-         .withColumn("q_lut", sim.pq_lut_udf()(F.col("embedding")))
-         .select(F.col("vec_id").alias("q_id"), "q_lut",
-                 F.explode("probes").alias("q_cluster")))
-    cand = (corpus.join(F.broadcast(q),
-                        (F.col("cluster") == F.col("q_cluster"))
-                        & (F.col("vec_id") != F.col("q_id")))
-            .withColumn("adc", sim.adc_score_col()))
-    w = Window.partitionBy("q_id").orderBy(F.col("adc").desc(),
-                                           F.col("vec_id").asc())
-    return (cand.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
-            .select("q_id", "vec_id", "rk",
-                    F.round("adc", 9).alias("adc_score")))
-
-
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _duck_rows(sql: str, table: str) -> list[tuple]:
+    """Rows of a DuckDB twin over the smoke parquet of ``table``."""
+    import duckdb
+    with duckdb.connect() as con:
+        con.execute(f"CREATE VIEW {table} AS SELECT * FROM "
+                    f"read_parquet('{SF_SMOKE}/{table}.parquet')")
+        return sorted(con.execute(sql).fetchall())
+
+
 @pytest.mark.parametrize("qf", ["vec_id % 50 = 0", "vec_id % 37 = 1"])
 def test_brute_force_kernel_equals_legacy(spark, qf):
+    # the legacy join/window formulation lives on as the DuckDB twin
     emb = _emb(spark)
     new = _rows(sim.brute_force_topk(emb, k=5, query_filter=qf))
-    old = _rows(_legacy_brute(emb, k=5, query_filter=qf))
+    old = _duck_rows(sim.brute_force_topk_sql(5, qf), "embeddings")
     assert new == old and len(new) > 0
 
 
 def test_ivfpq_kernel_equals_legacy(spark):
     emb = _emb(spark)
     new = _rows(sim.ivfpq_topk(emb, k=5, nprobe=3))
-    old = _rows(_legacy_ivfpq(emb, k=5, nprobe=3))
+    old = _duck_rows(sim.ivfpq_topk_sql(k=5, nprobe=3), "embeddings")
     assert new == old and len(new) > 0
 
 
-def test_cms_shortlist_arm_equals_full(spark):
-    # the corpus-scale arm (threshold filters the token stream before
-    # the exact aggregation) must emit the identical report, and its
-    # plan must place the filter below the exact count (one grouped
-    # aggregate over the shortlist, not the vocabulary)
+def test_cms_heavy_hitters_equals_duckdb_twin(spark):
     from geocoordinateconverter_spark.operators import sketch as sk
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    full = _rows(sk.cms_heavy_hitters(docs))
-    short = sk.cms_heavy_hitters(docs, shortlist_only=True)
-    assert _rows(short) == full and len(full) > 0
-    plan = short._jdf.queryExecution().optimizedPlan().toString()
-    # the tree prints parents first: the threshold test on the estimate
-    # must sit below (run before) the one exact count(1) aggregate
-    pred = re.search(rf"least\([^)]*\) >= {sk.CMS_THRESHOLD}\b", plan)
-    assert pred is not None and plan.count("count(1)") == 1, plan
-    assert pred.start() > plan.index("count(1)"), plan
-
-
-def test_pagerank_join_strategies_identical(spark):
-    from geocoordinateconverter_spark.operators import graph as gr
-    orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
-    a = _rows(gr.pagerank_hosts(orders, spark, rank_broadcast=True))
-    b = _rows(gr.pagerank_hosts(orders, spark, rank_broadcast=False))
-    assert a == b and len(a) == gr.N_HOSTS
+    got = _rows(sk.cms_heavy_hitters(docs))
+    assert got == _duck_rows(sk.cms_heavy_hitters_sql(), "documents")
+    assert len(got) > 0
 
 
 def test_token_budget_subbucket_decomposition(spark, monkeypatch):
@@ -146,18 +95,10 @@ def test_token_budget_subbucket_decomposition(spark, monkeypatch):
 
 def test_decontaminate_kernel_equals_join_form(spark):
     # the mapInArrow kernel against its DuckDB join/agg twin
-    import duckdb
-
     from geocoordinateconverter_spark.operators import curation as cu
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     a = _rows(cu.decontaminate(docs))
-    con = duckdb.connect()
-    try:
-        con.execute(f"CREATE VIEW documents AS SELECT * FROM "
-                    f"read_parquet('{SF_SMOKE}/documents.parquet')")
-        b = sorted(con.execute(cu.decontaminate_sql()).fetchall())
-    finally:
-        con.close()
+    b = _duck_rows(cu.decontaminate_sql(), "documents")
     assert a == b and len(a) > 0
 
 

@@ -261,31 +261,31 @@ def test_cli_api_parity(spark, pts_df):
 
 
 def test_height_mode_wrapper(spark, pts_df):
-    """A6 selector semantics: hc copies input h bitwise; ht equals the
-    bare chain; hg shifts by the geoid undulation; projected↔projected
-    chains reject hg (no geographic endpoint at the wrapper)."""
+    """A6 selector semantics: hc copies input h bitwise; ht is the
+    chain's own height (the NumPy chain, called directly); hg shifts it
+    by the geoid undulation; projected↔projected chains reject hg (no
+    geographic endpoint)."""
     import pytest as _pytest
 
+    from geocoordinateconverter_spark import geodesy
     from geocoordinateconverter_spark import kernels as k
     src = pts_df.limit(200)
-    bare = src.withColumn("o", k.transform_udf(2)(
-        F.col("fi"), F.col("la"), F.col("h"))).select("k", "o.*").toPandas()
-    for mode, expect in (("hc", "input"), ("ht", "chain")):
-        got = src.withColumn("o", k.transform_with_height_udf(2, mode)(
-            F.col("fi"), F.col("la"), F.col("h"))) \
-            .select("k", "o.*").toPandas()
-        ref = (src.select("k", "h").toPandas() if expect == "input"
-               else bare[["k", "h"]])
-        a = got.sort_values("k")["h"].to_numpy()
-        b = ref.sort_values("k")["h"].to_numpy()
-        np.testing.assert_array_equal(a, b)
-    hg = src.withColumn("o", k.transform_with_height_udf(2, "hg")(
-        F.col("fi"), F.col("la"), F.col("h"))).select("k", "o.*").toPandas()
-    assert not np.array_equal(hg.sort_values("k")["h"].to_numpy(),
-                              bare.sort_values("k")["h"].to_numpy())
+    inp = src.select("k", "fi", "la", "h").toPandas().sort_values("k")
+    _, _, chain_h = geodesy.wgs84_to_tm(inp["fi"].to_numpy(),
+                                        inp["la"].to_numpy(),
+                                        inp["h"].to_numpy())
+
+    def heights(mode):
+        return (src.withColumn("o", k.transform_udf(2, mode)(
+            F.col("fi"), F.col("la"), F.col("h"))).select("k", "o.h")
+            .toPandas().sort_values("k")["h"].to_numpy())
+
+    np.testing.assert_array_equal(heights("hc"), inp["h"].to_numpy())
+    np.testing.assert_array_equal(heights("ht"), chain_h)
+    assert not np.array_equal(heights("hg"), chain_h)
     assert k.HEIGHT_MODE_DEFAULTS[3] == "ht"
     with _pytest.raises(ValueError, match="geographic endpoint"):
-        k.transform_with_height_udf(5, "hg")
+        k.transform_udf(5, "hg")
 
 
 def test_knn_kernel_plan_has_no_exchange(spark, pts_df):

@@ -65,7 +65,10 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 and "/" in sys.argv[1] else "/root/testdata/sf0.01"
     only = [a for a in sys.argv[1:] if "/" not in a]
 
-    spark = build_session("local-verify", cores=8, shuffle_partitions=8)
+    # codegen fallback off: a whole-stage method beyond the JVM's 64 KB
+    # limit fails its query here instead of silently running interpreted
+    spark = build_session("local-verify", cores=8, shuffle_partitions=8,
+                          extra={"spark.sql.codegen.fallback": "false"})
 
     def fresh_con():
         # Fresh connection per query with an explicit cap: DuckDB's
