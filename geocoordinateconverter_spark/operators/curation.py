@@ -14,9 +14,8 @@ that family):
 * Map-only where semantics allow: sampling and PII redaction are pure
   per-row codegen (zero shuffle at any scale); packing shuffles ONCE
   on the shard key and then runs an embarrassingly-parallel per-shard
-  window; span detection's only shuffles are the gram frequency
-  aggregation and the dup-gram equi-join (the inherently cross-row
-  steps).
+  window; span detection's only shuffles are the per-gram window and
+  the per-document island window (the inherently cross-row steps).
 * Token semantics are the corpus-wide FILTERED adjacency: positions
   are assigned after dropping empty tokens (multi-space runs make
   neighbors), matching textdedup's kernels/oracles bit-for-bit.
@@ -235,8 +234,8 @@ FROM (
 # map-only transform(sequence(...)) as textdedup._gram_arrays (kept
 # positional and NON-distinct here — spans need every occurrence);
 # island merging is a per-document window (gaps-and-islands), which
-# partitions perfectly.  The only shuffles are the gram frequency
-# aggregation and the dup-gram equi-join.
+# partitions perfectly.  The only shuffles are the per-gram window
+# that finds duplicated grams and the per-document island window.
 
 SPAN_N = 5
 SPAN_MIN_DOCS = 2
@@ -253,40 +252,21 @@ def _pos_grams(docs: DataFrame, n: int) -> DataFrame:
 
 
 def dup_ngram_spans(docs: DataFrame, n: int = SPAN_N,
-                    min_docs: int = SPAN_MIN_DOCS,
                     cache: list | None = None) -> DataFrame:
     """(doc_id, span_start, span_end, n_hits): maximal merged token
-    spans covered by n-grams shared across >= min_docs documents.
-    span bounds are inclusive 0-based filtered-token indices; n_hits
-    counts the duplicated gram starts inside the span.
+    spans covered by n-grams shared across >= SPAN_MIN_DOCS (2)
+    documents.  span bounds are inclusive 0-based filtered-token
+    indices; n_hits counts the duplicated gram starts inside the span.
 
-    ``cache``: caller-owned persist contract (same as
-    textdedup.simhash_near_dup_pairs): the positional gram table feeds
-    BOTH the frequency aggregation and the hits join, so without a
-    persist the n-fold gram explode runs twice.  When the caller
-    supplies a list, the gram frame is persisted and appended for the
-    caller to unpersist; when None (the swept path), the plan stays
-    pure-lazy to avoid unowned storage."""
-    g = _pos_grams(docs, n)
-    if cache is not None:
-        g = g.persist()
-        cache.append(g)
-    if min_docs == 2:
-        # r6: "appears in >= 2 distinct docs" == min(doc_id) <> max
-        # (doc_id) — single-phase min/max partials replace the two-
-        # Exchange distinct-expansion of countDistinct (plan: 2
-        # Exchanges -> 1 on the gram-frequency side), same dup set
-        dup = (g.groupBy("gram")
-               .agg(F.min("doc_id").alias("d_lo"),
-                    F.max("doc_id").alias("d_hi"))
-               .filter(F.col("d_lo") != F.col("d_hi"))
-               .select("gram"))
-    else:
-        dup = (g.groupBy("gram")
-               .agg(F.countDistinct("doc_id").alias("nd"))
-               .filter(F.col("nd") >= min_docs)
-               .select("gram"))
-    hits = g.join(dup, "gram").select("doc_id", "pos")
+    A gram is duplicated when ``min(doc_id) <> max(doc_id)`` over its
+    window partition, so the positional gram table is read once and
+    nothing is persisted.  ``cache`` is accepted for old callers and
+    stays empty."""
+    wg = Window.partitionBy("gram")
+    hits = (_pos_grams(docs, n)
+            .withColumn("dup", F.min("doc_id").over(wg)
+                        != F.max("doc_id").over(wg))
+            .filter("dup").select("doc_id", "pos"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     # new island when this gram start is beyond the previous gram's
     # covered range [prev, prev + n - 1] — i.e. gap iff pos > prev + n
@@ -676,10 +656,8 @@ SELECT doc_id, score, n_tok, cum_tok FROM ranked WHERE cum_tok <= budget
 # of docs — dropped), the body chunked into 12-token lines (dropped
 # only where real cross-doc duplication exists), and a global footer
 # (shared by all — dropped).  Scale shape: per-row line split
-# (map-only), one line-hash aggregation whose map-side combine sees
-# boilerplate collapse early, a BROADCAST join of the drop set (the
-# boilerplate table is orders smaller than the corpus), and a per-doc
-# reassembly agg.
+# (map-only), one line-hash window that counts distinct docs per line,
+# and a per-doc reassembly agg.
 
 LINE_TOKS = 12
 LINE_MIN_DOCS = 4
@@ -694,28 +672,29 @@ _LINES_EXPR = (
     "array('subscribe to the newsletter today'))")
 
 
-def line_dedup(docs: DataFrame, min_docs: int = LINE_MIN_DOCS,
-               cache: list | None = None) -> DataFrame:
+def line_dedup(docs: DataFrame, min_docs: int = LINE_MIN_DOCS) -> DataFrame:
     """(doc_id, n_lines, n_kept, clean_md5, clean_len): per-doc line
     counts before/after boilerplate removal and the md5/length of the
     newline-reassembled cleaned text.
 
-    ``cache``: caller-owned persist contract (see dup_ngram_spans) —
-    the line table feeds both the frequency aggregation and the
-    reassembly; a caller that persists halves the split work."""
+    The line table is read once: one window partitioned by the line
+    hash and ordered by doc_id counts each doc where ``lag(doc_id)``
+    differs, which is the exact distinct-doc count per line.  A NULL
+    line (NULL ``source``) has a NULL hash and is never a duplicate."""
     lines = (docs.select("doc_id", "source", F.expr(TOKS_EXPR).alias("toks"))
              .select("doc_id",
-                     F.posexplode(F.expr(_LINES_EXPR)).alias("pos", "line")))
-    if cache is not None:
-        lines = lines.persist()
-        cache.append(lines)
-    dup = (lines.groupBy(F.md5("line").alias("line_md5"))
-           .agg(F.countDistinct("doc_id").alias("nd"))
-           .filter(F.col("nd") >= min_docs)
-           .select("line_md5", F.lit(1).alias("dup_flag")))
-    flagged = (lines.withColumn("line_md5", F.md5("line"))
-               .join(F.broadcast(dup), "line_md5", "left")
-               .withColumn("is_dup", F.coalesce(F.col("dup_flag"), F.lit(0))))
+                     F.posexplode(F.expr(_LINES_EXPR)).alias("pos", "line"))
+             .withColumn("line_md5", F.md5("line")))
+    wl = Window.partitionBy("line_md5")
+    new_doc = F.when(
+        F.col("doc_id").isNotNull()
+        & ~F.lag("doc_id").over(wl.orderBy("doc_id"))
+        .eqNullSafe(F.col("doc_id")), 1).otherwise(0)
+    flagged = (lines.withColumn("new_doc", new_doc)
+               .withColumn("is_dup", F.when(
+                   F.col("line_md5").isNotNull()
+                   & (F.sum("new_doc").over(wl) >= min_docs), 1)
+                   .otherwise(0)))
     agg = (flagged.groupBy("doc_id")
            .agg(F.count("*").alias("n_lines"),
                 F.sum(F.lit(1) - F.col("is_dup")).alias("n_kept"),

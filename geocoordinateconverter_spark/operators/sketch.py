@@ -50,23 +50,16 @@ def _bucket_duck(i: int, tok_expr: str) -> str:
 
 
 def cms_heavy_hitters(docs: DataFrame, d: int = CMS_D,
-                      threshold: int = CMS_THRESHOLD,
-                      cache: list | None = None) -> DataFrame:
+                      threshold: int = CMS_THRESHOLD) -> DataFrame:
     """(token, est_n, exact_n, overcount) for every token whose CMS
     estimate reaches ``threshold``; est_n = min over the d row
     counters, overcount = est_n - exact_n ≥ 0 (the CMS guarantee,
     asserted in pytest).
 
-    The tokenize pass feeds BOTH the grid build (collected eagerly)
-    and the exact-count report side.  Pass a ``cache`` list (simhash
-    contract) to persist the token stream across the two: the persist
-    is appended for the CALLER to unpersist — never leaked into a
-    long-lived session by default."""
+    The tokenize pass feeds both the grid build (collected eagerly, one
+    job) and the exact-count report side; nothing is persisted."""
     from .textdedup import tokens
     toks = tokens(docs).select("tok")
-    if cache is not None:
-        toks = toks.persist()
-        cache.append(toks)
     # sketch build: explode d seeded rows, ONE shuffle of ≤ d·w
     # partials per task (map-side combine does the compression)
     rows = F.explode(F.array(*[F.lit(i) for i in range(d)])).alias("i")
@@ -80,8 +73,7 @@ def cms_heavy_hitters(docs: DataFrame, d: int = CMS_D,
     # estimate: d broadcast lookups against the ≤ d·w-row grid.
     # The grid is COLLECTED once (≤ d·w tiny rows — the sketch state
     # itself): filtering the lazy `grid` per row i would re-execute
-    # the full token-stream lineage d times (the exact recompute
-    # class the _PAIRS_MEMO fix closed for minhash).
+    # the full token-stream lineage d times.
     spark = docs.sparkSession
     grid_rows = grid.collect()
 

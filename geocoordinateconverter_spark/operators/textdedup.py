@@ -12,7 +12,7 @@ geodesy pipeline runs.  Design rules:
   repetition signal all compute per row — codegen lambdas over the
   token array, plus one Arrow crossing for the SimHash bit fold; the
   only remaining shuffles are the joins/aggregations that are
-  inherently cross-row (band self-join, exact-dedup groupBy, pair
+  inherently cross-row (band buckets, exact-dedup groupBy, pair
   intersection).  Each operator has this one Spark form; its
   independent check is the explode-shaped DuckDB SQL twin next to it.
 * Token adjacency is FILTERED adjacency everywhere: positions are
@@ -203,9 +203,11 @@ MAX_BUCKET = 50  # skip degenerate buckets (bucket of m docs → m²/2
 
 
 def _banded_sig_frame(docs: DataFrame,
-                      max_bucket: int = MAX_BUCKET) -> DataFrame:
-    """(doc_id, sigs, band, band_key) with degenerate buckets dropped —
-    the band table of minhash_pairs and of each incremental-dedup side.
+                      max_bucket: int | None = None) -> DataFrame:
+    """(doc_id, sigs, band, band_key) — the band table of minhash_pairs
+    and of each incremental-dedup side; with ``max_bucket``, buckets of
+    more rows are dropped through a bucket-size window (only the
+    incremental dedup's broadcast leg needs the capped table itself).
     band_key formatting is EXACTLY MINHASH_BANDS_SQL's ("%02d:%d" join
     ","; perm is the static array position here), so the band tables
     stay hash-comparable with the oracle's."""
@@ -223,9 +225,44 @@ def _banded_sig_frame(docs: DataFrame,
             .otherwise(band_key)
     bands = (sig_arr.select("doc_id", "sigs", band_ix)
              .withColumn("band_key", band_key))
+    if max_bucket is None:
+        return bands
     wb = Window.partitionBy("band", "band_key")
     return (bands.withColumn("bsize", F.count("*").over(wb))
             .filter(F.col("bsize") <= max_bucket).drop("bsize"))
+
+
+def _bucket_pairs(frame: DataFrame, keys: list[str],
+                  max_bucket: int) -> DataFrame:
+    """(a, b): the member structs (doc_id first, then ``frame``'s other
+    non-key columns) of every pair sharing a bucket of ``keys`` that
+    holds 2..``max_bucket`` rows, with a.doc_id < b.doc_id, from one
+    aggregation that reads ``frame`` once.  Members are sorted by
+    doc_id and each is paired with the ones after it, so a pair sharing
+    k buckets comes out k times; repeated and NULL doc_ids never pair."""
+    payload = ["doc_id"] + [c for c in frame.columns
+                            if c not in keys and c != "doc_id"]
+    m = F.col("m")
+    pairs = F.flatten(F.transform(m, lambda x, i: F.transform(
+        F.slice(m, i + 2, F.size(m)),
+        lambda y: F.struct(x.alias("a"), y.alias("b")))))
+    return (frame.groupBy(*keys)
+            .agg(F.array_sort(F.collect_list(F.struct(*payload)))
+                 .alias("m"))
+            .filter(F.size(m).between(2, max_bucket))
+            .select(F.explode(pairs).alias("p"))
+            .select("p.a", "p.b")
+            .filter(F.col("a.doc_id") < F.col("b.doc_id")))
+
+
+def _sig_agreement(a: str, b: str) -> F.Column:
+    """Fraction of equal signature components of structs ``a``/``b``
+    (the MinHash Jaccard estimate)."""
+    eq = F.size(F.filter(
+        F.zip_with(F.col(f"{a}.sigs"), F.col(f"{b}.sigs"),
+                   lambda x, y: x == y),
+        lambda v: v))
+    return eq / F.lit(float(K_MINHASH))
 
 
 def minhash_pairs(docs: DataFrame, max_bucket: int = MAX_BUCKET,
@@ -234,38 +271,18 @@ def minhash_pairs(docs: DataFrame, max_bucket: int = MAX_BUCKET,
     bucket; score = fraction of equal signature components (MinHash
     Jaccard estimate).
 
-    FOLDED form (r2; VERDICT r1 #9): the per-doc signature vector is
-    aggregated ONCE into a perm-ordered array, band keys are derived
-    from array slices in codegen, and the Jaccard estimate is a
-    zip_with/filter/size expression over the two arrays carried by the
-    band self-join — the r1 plan re-joined the k×-inflated signature
-    table twice (one shuffle each) plus a groupBy(pair) shuffle; all
-    three are gone.  The banded self-equi-join plus the degenerate-
-    bucket cap still bound the candidate count (the LSH sub-quadratic
-    guarantee).  The capped band table is persisted because the
-    self-join reads it twice — the CALLER owns that cache: each call
-    persists a fresh copy, so long-lived sessions invoking this
-    repeatedly should pass a list as ``cache`` to receive the persisted
-    band DataFrame and ``unpersist()`` it once the returned plan has
-    been materialized (otherwise storage copies stack up)."""
-    # r4: the signature table is now MAP-ONLY (minhash_sig_array) —
-    # the r3 groupBy(doc_id) signature-assembly exchange is gone too;
-    # the banded self-join below is the plan's ONLY shuffle.
-    bands = _banded_sig_frame(docs, max_bucket).persist()
-    if cache is not None:
-        cache.append(bands)
-    eq = F.size(F.filter(
-        F.zip_with(F.col("a.sigs"), F.col("b.sigs"),
-                   lambda x, y: x == y),
-        lambda v: v))
-    return (bands.alias("a")
-            .join(bands.alias("b"),
-                  (F.col("a.band") == F.col("b.band"))
-                  & (F.col("a.band_key") == F.col("b.band_key"))
-                  & (F.col("a.doc_id") < F.col("b.doc_id")))
+    The per-doc signature array is computed map-only, band keys are
+    derived from array slices in codegen, and :func:`_bucket_pairs`
+    pairs the members of each band bucket in one aggregation; the
+    Jaccard estimate is a zip_with/filter/size expression over the two
+    arrays.  The degenerate-bucket cap bounds the candidate count (the
+    LSH sub-quadratic guarantee).  Nothing is persisted; ``cache`` is
+    accepted for old callers and stays empty."""
+    return (_bucket_pairs(_banded_sig_frame(docs), ["band", "band_key"],
+                          max_bucket)
             .select(F.col("a.doc_id").alias("doc_a"),
                     F.col("b.doc_id").alias("doc_b"),
-                    (eq / F.lit(float(K_MINHASH))).alias("est_jaccard"))
+                    _sig_agreement("a", "b").alias("est_jaccard"))
             .distinct())
 
 
@@ -297,7 +314,7 @@ MINHASH_PAIRS_SQL = f"""
 # 60 bits (= the hash60 width, fits bigint with headroom): wide enough
 # that the 4 × 15-bit LSH bands below are discriminative — a narrow
 # fingerprint (e.g. 16 bits → 4-bit bands, 16 distinct values) would
-# make the band self-join effectively all-pairs and the degenerate-
+# make the band buckets effectively all-pairs and the degenerate-
 # bucket cap would then DROP true near-dups.  r3 change; the simhash
 # query and its oracle derive from this one constant, so both engines
 # move together.
@@ -368,16 +385,16 @@ SIMHASH_BAND_BITS = SIMHASH_BITS // SIMHASH_N_BANDS
 
 def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 3,
                            max_bucket: int = MAX_BUCKET,
-                           sh: DataFrame | None = None,
-                           cache: list | None = None) -> DataFrame:
+                           sh: DataFrame | None = None) -> DataFrame:
     """SimHash Hamming-ball candidate pairs: band the fingerprint into
-    ``SIMHASH_N_BANDS`` equal bit slices and self-equi-join on
-    (band, band_val) — by pigeonhole, any pair within Hamming distance
-    ``SIMHASH_N_BANDS - 1`` (= 3 here) shares at least one untouched
-    band, so recall at the threshold is EXACT, not probabilistic.
-    Exact distance is then one codegen ``bit_count(xor)`` per candidate.
-    Same shape and degenerate-bucket cap as the MinHash banding — one
-    hash self-join, never all-pairs."""
+    ``SIMHASH_N_BANDS`` equal bit slices and pair the docs sharing a
+    (band, band_val) bucket — by pigeonhole, any pair within Hamming
+    distance ``SIMHASH_N_BANDS - 1`` (= 3 here) shares at least one
+    untouched band, so recall at the threshold is EXACT, not
+    probabilistic.  Exact distance is then one codegen
+    ``bit_count(xor)`` per candidate.  Same bucket pairing
+    (:func:`_bucket_pairs`) and degenerate-bucket cap as the MinHash
+    banding — never all-pairs, nothing persisted."""
     if sh is None:
         sh = simhash(docs)
     mask = (1 << SIMHASH_BAND_BITS) - 1
@@ -386,29 +403,14 @@ def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 3,
     b = (sh.select("doc_id", "simhash", band)
          .withColumn("band_val", F.expr(
              f"(simhash >> (band * {SIMHASH_BAND_BITS})) & {mask}")))
-    wb = Window.partitionBy("band", "band_val")
-    b = (b.withColumn("bsize", F.count("*").over(wb))
-         .filter(F.col("bsize") <= max_bucket).drop("bsize"))
-    # persist ONLY under the caller-owned cache contract (the self-join
-    # reads the banded frame twice, so callers that can unpersist —
-    # e.g. the __spark_entry__ memo — should pass a cache list); an
-    # unconditional persist leaked one storage copy per call in
-    # long-lived sweep sessions (ADVICE r4)
-    if cache is not None:
-        b = b.persist()
-        cache.append(b)
-    return (b.alias("a")
-            .join(b.alias("b"),
-                  (F.col("a.band") == F.col("b.band"))
-                  & (F.col("a.band_val") == F.col("b.band_val"))
-                  & (F.col("a.doc_id") < F.col("b.doc_id")))
+    return (_bucket_pairs(b, ["band", "band_val"], max_bucket)
             .select(F.col("a.doc_id").alias("doc_a"),
                     F.col("b.doc_id").alias("doc_b"),
                     F.bit_count(F.col("a.simhash")
                                 .bitwiseXOR(F.col("b.simhash")))
                     .cast("int").alias("hamming"))
-            .distinct()
-            .filter(F.col("hamming") <= max_hamming))
+            .filter(F.col("hamming") <= max_hamming)
+            .distinct())
 
 
 def simhash_near_dup_pairs_sql(max_hamming: int = 3,
@@ -959,20 +961,16 @@ GROUP BY doc_id
 """
 
 
-def near_dup_drop_list(docs: DataFrame, est_threshold: float = 0.7,
-                       pairs: DataFrame | None = None) -> DataFrame:
+def near_dup_drop_list(docs: DataFrame,
+                       est_threshold: float = 0.7) -> DataFrame:
     """Curation composition: from the MinHash-LSH candidate pairs above
     ``est_threshold``, mark the LOWER-QUALITY member of each pair for
     dropping (quality = token count, ties keep the lower doc_id — the
     standard 'dedup keeps the best member of each near-dup cluster'
     step).  Emits (drop_doc_id, n_better): how many better near-twins a
     doc has.  Cost on top of minhash_pairs: one broadcast-sized metrics
-    join + one hash agg.  Pass a precomputed ``pairs`` DataFrame (from
-    :func:`minhash_pairs`) to reuse an existing candidate table instead
-    of persisting a second band cache."""
-    if pairs is None:
-        pairs = minhash_pairs(docs)
-    pairs = pairs.filter(F.col("est_jaccard") >= est_threshold)
+    join + one hash agg."""
+    pairs = minhash_pairs(docs).filter(F.col("est_jaccard") >= est_threshold)
     m = docs.select(
         "doc_id",
         F.size(F.filter(F.split("text", " "), lambda t: t != ""))
@@ -1067,7 +1065,6 @@ def _cc_star(e: DataFrame, max_iter: int) -> DataFrame:
 
 
 def near_dup_components(docs: DataFrame, est_threshold: float = 0.7,
-                        pairs: DataFrame | None = None,
                         max_iter: int = 25) -> DataFrame:
     """Connected components over the MinHash-LSH near-dup graph —
     the clustering step real dedup pipelines run between candidate
@@ -1081,9 +1078,7 @@ def near_dup_components(docs: DataFrame, est_threshold: float = 0.7,
     reachability (min reachable id ≡ component min on symmetric
     edges).  Output: one row per doc that belongs to a component of
     size ≥ 2 — (doc_id, component, is_kept)."""
-    if pairs is None:
-        pairs = minhash_pairs(docs)
-    e = (pairs.filter(F.col("est_jaccard") >= est_threshold)
+    e = (minhash_pairs(docs).filter(F.col("est_jaccard") >= est_threshold)
          .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")))
     labels = _cc_star(e, max_iter)
     return labels.select(
@@ -1225,47 +1220,37 @@ GROUP BY drop_doc_id
 # index, the batch caps itself.
 
 def minhash_incremental_dedup(docs: DataFrame,
-                              est_threshold: float = 0.7,
-                              cache: list | None = None) -> DataFrame:
+                              est_threshold: float = 0.7) -> DataFrame:
     """(doc_id, n_old_dups, n_prior_new_dups, keep) for every NEW doc
     (doc_id odd): how many indexed (old/even) near-twins and how many
     earlier-arrival (smaller-id new) near-twins it has at
-    ``est_jaccard >= est_threshold``; keep = 1 iff both are zero.
-
-    ``cache``: caller-owned persist contract (see minhash_pairs) — the
-    new-batch band table feeds both candidate joins."""
-    old_b = _banded_sig_frame(docs.filter(F.col("doc_id") % 2 == 0))
-    new_b = _banded_sig_frame(docs.filter(F.col("doc_id") % 2 == 1))
-    if cache is not None:
-        new_b = new_b.persist()
-        cache.append(new_b)
-    eq = F.size(F.filter(
-        F.zip_with(F.col("a.sigs"), F.col("b.sigs"),
-                   lambda x, y: x == y),
-        lambda v: v))
-    est = (eq / F.lit(float(K_MINHASH))).alias("est")
+    ``est_jaccard >= est_threshold``; keep = 1 iff both are zero."""
+    new_docs = docs.filter(F.col("doc_id") % 2 == 1)
+    old_b = _banded_sig_frame(docs.filter(F.col("doc_id") % 2 == 0),
+                              MAX_BUCKET)
+    new_b = _banded_sig_frame(new_docs, MAX_BUCKET)
     old_pairs = (old_b.alias("b")
                  .join(F.broadcast(new_b.alias("a")),
                        (F.col("a.band") == F.col("b.band"))
                        & (F.col("a.band_key") == F.col("b.band_key")))
                  .select(F.col("a.doc_id").alias("doc_id"),
-                         F.col("b.doc_id").alias("partner"), est)
+                         F.col("b.doc_id").alias("partner"),
+                         _sig_agreement("a", "b").alias("est"))
                  .distinct()
                  .filter(F.col("est") >= est_threshold))
-    new_pairs = (new_b.alias("a")
-                 .join(new_b.alias("b"),
-                       (F.col("a.band") == F.col("b.band"))
-                       & (F.col("a.band_key") == F.col("b.band_key"))
-                       & (F.col("b.doc_id") < F.col("a.doc_id")))
-                 .select(F.col("a.doc_id").alias("doc_id"),
-                         F.col("b.doc_id").alias("partner"), est)
+    # within the batch, the later arrival (larger id) counts the earlier
+    new_pairs = (_bucket_pairs(_banded_sig_frame(new_docs),
+                               ["band", "band_key"], MAX_BUCKET)
+                 .select(F.col("b.doc_id").alias("doc_id"),
+                         F.col("a.doc_id").alias("partner"),
+                         _sig_agreement("a", "b").alias("est"))
                  .distinct()
                  .filter(F.col("est") >= est_threshold))
     o = old_pairs.groupBy("doc_id").agg(
         F.countDistinct("partner").alias("n_old_dups"))
     n = new_pairs.groupBy("doc_id").agg(
         F.countDistinct("partner").alias("n_prior_new_dups"))
-    base = docs.filter(F.col("doc_id") % 2 == 1).select("doc_id")
+    base = new_docs.select("doc_id")
     out = (base.join(o, "doc_id", "left").join(n, "doc_id", "left")
            .na.fill(0, ["n_old_dups", "n_prior_new_dups"]))
     return out.select(

@@ -185,10 +185,10 @@ SPAN_TEXTS = [
 
 
 def test_dup_ngram_spans_matches_reference(spark):
-    got = (cu.dup_ngram_spans(_docs_df(spark, SPAN_TEXTS), n=5, min_docs=2)
+    got = (cu.dup_ngram_spans(_docs_df(spark, SPAN_TEXTS), n=5)
            .toPandas())
     got_t = sorted(map(tuple, got.to_numpy().tolist()))
-    ref = _spans_reference(SPAN_TEXTS, 5, 2)
+    ref = _spans_reference(SPAN_TEXTS, 5, cu.SPAN_MIN_DOCS)
     assert got_t == ref
     assert len(ref) >= 3  # the fixture genuinely exercises merging
 
@@ -383,7 +383,7 @@ def test_line_dedup_matches_reference(spark):
 def test_dup_ngram_spans_merges_overlaps(spark):
     # doc1 repeats doc0's 8-token prefix twice, separated by filler —
     # expect TWO islands in doc1 covering [1,8]-ish and the tail
-    got = (cu.dup_ngram_spans(_docs_df(spark, SPAN_TEXTS), n=5, min_docs=2)
+    got = (cu.dup_ngram_spans(_docs_df(spark, SPAN_TEXTS), n=5)
            .toPandas())
     d1 = got[got.doc_id == 1].sort_values("span_start")
     assert len(d1) == 2
@@ -581,3 +581,65 @@ def test_cms_guarantee_and_reference(spark):
     assert "hot" in hh
     assert hh == {t for t, _ in got.items()
                   if got[t].est_n >= 100}
+
+
+# ---- one-read pair and line forms vs their DuckDB twins ------------------
+# _bucket_pairs pairs the members of each band bucket in one aggregation
+# and line_dedup counts distinct docs per line in one window; the twins
+# keep the self-join / IN-subquery forms, so they stay independent.
+
+def _duck_docs(sql: str, rows, cols=("doc_id", "text")) -> list[tuple]:
+    with duckdb.connect() as con:
+        con.register("docs_pd", pd.DataFrame(rows, columns=list(cols)))
+        con.execute("CREATE VIEW documents AS SELECT * FROM docs_pd")
+        return sorted(con.execute(sql).fetchall())
+
+
+def _pair_ops():
+    from geocoordinateconverter_spark.operators import textdedup as td
+    return [(td.minhash_pairs, td.MINHASH_PAIRS_SQL),
+            (td.simhash_near_dup_pairs, td.simhash_near_dup_pairs_sql())]
+
+
+@pytest.mark.parametrize("n_docs, n_pairs", [(50, 1225), (51, 0)])
+def test_bucket_pairs_cap_matches_twins(spark, n_docs, n_pairs):
+    """50 identical docs fill every band bucket exactly to MAX_BUCKET
+    (C(50, 2) pairs); one more drops every bucket."""
+    rows = [(i, "one shared body of eight plain words") for i in range(n_docs)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    for op, sql in _pair_ops():
+        got = sorted(tuple(r) for r in op(df).collect())
+        assert len(got) == n_pairs
+        assert got == _duck_docs(sql, rows)
+
+
+def test_bucket_pairs_empty_null_and_repeated_ids_match_twins(spark):
+    body = "alpha beta gamma delta epsilon zeta eta theta"
+    rows = [(1, body), (2, body), (2, body),          # repeated doc_id
+            (3, body + " iota"), (4, ""), (5, None),  # empty, NULL text
+            (None, body),                             # NULL doc_id
+            (6, "unrelated words only in this one document")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    for op, sql in _pair_ops():
+        got = sorted(tuple(r) for r in op(df).collect())
+        assert all(a < b for a, b, _ in got)
+        assert (1, 2) in {(a, b) for a, b, _ in got}
+        assert got == _duck_docs(sql, rows)
+
+
+def test_line_dedup_null_source_matches_twin(spark):
+    """NULL source makes the header line and its md5 NULL: DuckDB's
+    ``IN`` never flags it, so the window must not count the NULL
+    partition as a duplicated line."""
+    rep = " ".join(f"r{j}" for j in range(cu.LINE_TOKS))
+    rows = ([(i, f"body {i} words", None) for i in range(6)]
+            + [(10, "body shared text", "sA"), (11, "body shared text", "sA"),
+               (12, "", "sB"), (13, None, "sB"),
+               (14, " ".join([rep] * 5), "sC")])  # one line 5x in one doc
+    df = spark.createDataFrame(rows, "doc_id long, text string, source string")
+    got = sorted(tuple(r) for r in cu.line_dedup(df).collect())
+    assert got == _duck_docs(cu.line_dedup_sql(), rows,
+                             ("doc_id", "text", "source"))
+    n_kept = {r[0]: r[2] for r in got}
+    assert all(n_kept[i] == 2 for i in range(6))  # NULL header + body kept
+    assert n_kept[14] == 6  # a line repeated inside one doc is one doc

@@ -3,7 +3,6 @@
 * c4_quality_filter on empty/whitespace-only docs (ANSI divide-by-zero
   guard + NULL/keep=false parity with the DuckDB oracle),
 * DBF byte-width encoding (non-ASCII 'C' values, over-width 'N' raise),
-* minhash_pairs cache ownership / near_dup_drop_list pairs reuse,
 * checkpoint manifest hashes derived from committed bytes,
 * api.convert reverse=True with default cols.
 """
@@ -97,26 +96,6 @@ def test_dbf_overflow_raises(tmp_path):
         shp.write_dbf(path, [("NAME", "C", 9)], [("Šmarje pš",)])
 
 
-def test_minhash_cache_ownership_and_pairs_reuse(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    cache: list = []
-    pairs = td.minhash_pairs(docs, cache=cache)
-    n_pairs = pairs.count()
-    assert len(cache) == 1 and cache[0].is_cached
-    # near_dup_drop_list reuses the precomputed pairs (no second cache)
-    via_reuse = (td.near_dup_drop_list(docs, pairs=pairs)
-                 .orderBy("drop_doc_id").collect())
-    cache[0].unpersist()
-    assert not cache[0].is_cached
-    fresh_cache: list = []
-    fresh = (td.near_dup_drop_list(
-        docs, pairs=td.minhash_pairs(docs, cache=fresh_cache))
-        .orderBy("drop_doc_id").collect())
-    fresh_cache[0].unpersist()
-    assert via_reuse == fresh
-    assert n_pairs >= len(via_reuse)
-
-
 def test_ivf_nprobe_recall_and_numpy_oracle(spark):
     """nprobe=3 must (a) reproduce the NumPy multi-cell recomputation
     exactly and (b) never recall FEWER true neighbors than nprobe=1."""
@@ -177,13 +156,10 @@ def test_near_dup_components_matches_networkless_oracle(spark):
     """Min-label propagation must equal a driver-side union-find over
     the same thresholded pair list (component = min doc_id)."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    cache: list = []
-    pairs = td.minhash_pairs(docs, cache=cache)
     got = {r.doc_id: (r.component, r.is_kept)
-           for r in td.near_dup_components(docs, pairs=pairs).collect()}
-    edges = [(r.doc_a, r.doc_b) for r in pairs
+           for r in td.near_dup_components(docs).collect()}
+    edges = [(r.doc_a, r.doc_b) for r in td.minhash_pairs(docs)
              .filter(F.col("est_jaccard") >= 0.7).collect()]
-    cache[0].unpersist()
     parent: dict = {}
 
     def find(x):

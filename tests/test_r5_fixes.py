@@ -7,7 +7,6 @@ import pytest
 
 from geocoordinateconverter_spark.operators import knn as knn_op
 from geocoordinateconverter_spark.operators import multimodal as mm
-from geocoordinateconverter_spark.operators import textdedup as td
 from geocoordinateconverter_spark.sources import shapefile as shp
 
 
@@ -44,21 +43,34 @@ def test_null_coords_excluded_by_every_method(spark):
         assert sorted(set(r.k for r in out.collect())) == [1]
 
 
-# ---- simhash banded-frame persist contract -------------------------------
+# ---- corpus operators read each frame once and persist nothing ----------
 
-def test_simhash_pairs_no_persist_without_cache(spark, monkeypatch):
+def _persisted_frames(spark) -> set:
+    """Ids of persisted RDDs other than local checkpoints (the star
+    connected-components rounds truncate their lineage that way)."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {k for k in rdds.keySet()
+            if not rdds.get(k).rdd().isLocallyCheckpointed()}
+
+
+@pytest.mark.parametrize("op", [
+    "textdedup.minhash_pairs", "textdedup.simhash_near_dup_pairs",
+    "textdedup.minhash_rerank_exact", "textdedup.near_dup_drop_list",
+    "textdedup.near_dup_components", "curation.dup_ngram_spans",
+    "curation.line_dedup", "sketch.cms_heavy_hitters"])
+def test_corpus_operator_persists_nothing(spark, op):
+    import importlib
+    mod, fn = op.split(".")
+    f = getattr(importlib.import_module(
+        f"geocoordinateconverter_spark.operators.{mod}"), fn)
     docs = spark.createDataFrame(
-        [(i, f"some body of text number {i % 3} repeated here")
-         for i in range(20)], "doc_id bigint, text string")
-    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-    td.simhash_near_dup_pairs(docs).collect()
-    after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-    assert after <= before, "cache-less call must not leave persisted RDDs"
-    cache: list = []
-    td.simhash_near_dup_pairs(docs, cache=cache).collect()
-    assert len(cache) == 1
-    for c in cache:
-        c.unpersist()
+        [(i, f"some body of text number {i % 3} repeated here and there",
+          f"src{i % 2}") for i in range(40)],
+        "doc_id bigint, text string, source string")
+    spark.catalog.clearCache()
+    before = _persisted_frames(spark)
+    f(docs).collect()
+    assert _persisted_frames(spark) == before
 
 
 # ---- shapefile M-NODATA boundary -----------------------------------------

@@ -126,16 +126,8 @@ def main() -> int:
         else:
             print(f"pass {name}: rows={len(sdf)} [{time.time()-t0:.1f}s]")
             n_pass += 1
-        # per-query hygiene: drop explicit Spark caches (minhash band
-        # tables etc. stack per query) and large pandas frames.  BOTH
-        # band-table memos must be reset WITH the cache — otherwise
-        # the next minhash/simhash consumer reuses a memoized plan
-        # whose persist clearCache() just emptied and recomputes the
-        # band table twice, uncached (r4 review finding; r5 review:
-        # the simhash memo was missed here when it was added).
+        # per-query hygiene: drop the large pandas frames
         del sdf, odf
-        entrymod.clear_pair_memos()
-        spark.catalog.clearCache()
         gc.collect()
     print(f"\n{n_pass} passed, {n_fail} failed")
     return 1 if n_fail else 0

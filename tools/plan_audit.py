@@ -8,6 +8,8 @@ operators to PLANS.md and assert the invariants we design for:
 * the distinct count per tile shuffles on (cell, key) before cell, so a
   hot cell spreads over reducers
 * scans show pushed filters / pruned schemas where applicable
+* no registered query plans a persisted frame (InMemoryRelation) except
+  the two reports over the clustered ANN fixture
 """
 
 from __future__ import annotations
@@ -121,7 +123,11 @@ def main() -> None:
     # tile-agg/flagship shape.
     EAGER_SKIP = {"streaming_flagship_tiles", "streaming_stateful_dedup",
                   "checkpoint_resume_roundtrip"}
-    offenders = []
+    # the clustered fixture is persisted on purpose (see
+    # __spark_entry__._CLUSTERED_MEMO); every other query reads its
+    # inputs without a cache
+    PERSIST_OK = {"ann_recall_report_clustered", "ann_pq_recall_report"}
+    offenders, persisted = [], []
     for qname, fn in em.queries().items():
         if qname in EAGER_SKIP:
             continue
@@ -133,10 +139,15 @@ def main() -> None:
             continue
         if "BroadcastNestedLoopJoin" in p or "CartesianProduct" in p:
             offenders.append(qname)
+        if "InMemoryRelation" in p and qname not in PERSIST_OK:
+            persisted.append(qname)
     checks.append((f"no BNLJ/Cartesian in any of {len(em.queries())} queries "
                    f"(eager side-effect queries {sorted(EAGER_SKIP)} "
                    f"audited via their batch twins); offenders={offenders}",
                    not offenders))
+    checks.append((f"no InMemoryRelation in any query except "
+                   f"{sorted(PERSIST_OK)}; offenders={persisted}",
+                   not persisted))
 
     out = ["# PLANS — physical-plan audit (generated by tools/plan_audit.py)",
            "", "## Invariant checks", ""]
