@@ -261,7 +261,7 @@ DMS_FMT_SQL = (
 
 # ===========================================================================
 # entry — flagship pipeline (SURVEY.md §8 M2): web corpus → geoparse →
-# t=3 datum conversion (pandas UDF) → cell encode (codegen) → PIP join
+# t=3 datum conversion (Arrow UDF) → cell encode (codegen) → PIP join
 # (broadcast) → tile aggregation.
 # ===========================================================================
 
@@ -329,7 +329,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             f"FROM {SRC_GK_LINEITEM} WHERE k % 7 = 0")
     q["s3_normalize_northing"] = q_normalize
 
-    # ---- t-chain value queries (sampled; pandas-UDF kernels) -------------
+    # ---- t-chain value queries (sampled; Arrow-UDF kernels) --------------
     def _chain_query(t: int, src_sql: str, sample: str, out_round):
         # out_round: decimals per output col; None = pass-through value
         # that is bit-identical to the oracle's (rounding would only

@@ -11,7 +11,7 @@ JSON line::
 
 The flagship query IS the BASELINE.json metric pipeline: derive D48/GK
 coordinates for every lineitem row (codegen) → t=3 datum conversion
-(fused Arrow pandas UDF) → grid-cell encode (codegen) → PIP broadcast
+(fused Arrow UDF) → grid-cell encode (codegen) → PIP broadcast
 join vs municipality polygons → salted tile aggregation.  docs/sec is
 input rows / wall-clock of the full pipeline.
 

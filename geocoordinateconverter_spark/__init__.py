@@ -4,7 +4,7 @@ mrihtar/GeoCoordinateConverter (SURVEY.md; BASELINE.json north_star).
 
 Layout:
   constants / geodesy / aft / geoid / cells — pure-NumPy float64 numeric core
-  kernels      — Arrow pandas-UDF wrappers (one Arrow crossing per chain)
+  kernels      — Arrow-UDF wrappers (one Arrow crossing per chain)
   sources/     — web-page corpus synthesis + geoparsing (schema-on-read)
   operators/   — PIP join, kNN join, tile agg, dedup, similarity, text stats
   functions/   — DMS + scalar helpers

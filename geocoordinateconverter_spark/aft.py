@@ -140,13 +140,20 @@ class AftTable:
             cand[i, : len(b)] = sorted(b)  # table order → first-match determinism
         self.cand = cand
 
+    def _bucket(self, u):
+        """Bucket index of the grid coordinate ``u`` (in bucket units):
+        clipped to the grid before the int64 cast, NaN to bucket 0, so a
+        NULL/NaN point casts cleanly and still locates to −1."""
+        return np.clip(np.nan_to_num(u, nan=0.0), 0,
+                       self.nb - 1).astype(np.int64)
+
     def _bx(self, x):
-        return np.clip(((np.asarray(x) - self.x0) / (self.x1 - self.x0)
-                        * self.nb).astype(np.int64), 0, self.nb - 1)
+        return self._bucket((np.asarray(x) - self.x0) / (self.x1 - self.x0)
+                            * self.nb)
 
     def _by(self, y):
-        return np.clip(((np.asarray(y) - self.y0) / (self.y1 - self.y0)
-                        * self.nb).astype(np.int64), 0, self.nb - 1)
+        return self._bucket((np.asarray(y) - self.y0) / (self.y1 - self.y0)
+                            * self.nb)
 
     def locate(self, x: np.ndarray, y: np.ndarray) -> np.ndarray:
         """Triangle index per point (first match in table order), −1 if

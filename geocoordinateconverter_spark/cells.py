@@ -42,7 +42,7 @@ def n_cells(res: int) -> int:
 
 
 # ---------------------------------------------------------------------------
-# NumPy kernel (used inside pandas-UDF chains when fused with geodesy)
+# NumPy kernel (used inside Arrow-UDF chains when fused with geodesy)
 # ---------------------------------------------------------------------------
 
 def encode(fi: np.ndarray, la: np.ndarray, res: int = DEFAULT_RES) -> np.ndarray:

@@ -14,7 +14,7 @@ reference (``geo.c`` — SURVEY.md §3.2 P1–P6 and §3.3 chains t1–t6):
 
 Design rules (SURVEY.md §2.2): every kernel is a pure function over
 NumPy float64 arrays — whole-column, zero per-row Python — so the same
-code serves pytest oracles and Arrow pandas-UDF batches unchanged.
+code serves pytest oracles and Arrow-UDF batches unchanged.
 The ``xyz2fila`` latitude solve uses a FIXED iteration count
 (XYZ2FILA_ITERS) so results are deterministic and independent of data
 order / partitioning.  [UNVERIFIED whether the reference uses a fixed
@@ -257,7 +257,7 @@ def normalize_northing(x) -> np.ndarray:
 # t (README defaults — SURVEY.md §3.4 A6); geoid correction is layered
 # on by callers via gcs.geoid when height_mode='hg'.
 # Each chain is ONE fused NumPy pipeline → ONE Arrow crossing when
-# wrapped as a pandas UDF (SURVEY.md §4.4 design rule).
+# wrapped as an Arrow UDF (SURVEY.md §4.4 design rule).
 # ---------------------------------------------------------------------------
 
 def tm_to_wgs84(x, y, h):

@@ -86,8 +86,9 @@ def geoid_height(fi, la, model: str = "slo") -> np.ndarray:
     rf = (fi - g.lat0) / g.dlat
     cf = (la - g.lon0) / g.dlon
     inside = (rf >= 0) & (cf >= 0) & (rf <= g.nrows - 1) & (cf <= g.ncols - 1)
-    rf_c = np.clip(rf, 0.0, g.nrows - 1.0)
-    cf_c = np.clip(cf, 0.0, g.ncols - 1.0)
+    # NaN (a NULL point) → node 0 before the int64 cast; masked to 0.0
+    rf_c = np.clip(np.nan_to_num(rf, nan=0.0), 0.0, g.nrows - 1.0)
+    cf_c = np.clip(np.nan_to_num(cf, nan=0.0), 0.0, g.ncols - 1.0)
     r0 = np.minimum(np.floor(rf_c).astype(np.int64), g.nrows - 2)
     c0 = np.minimum(np.floor(cf_c).astype(np.int64), g.ncols - 2)
     tr = rf_c - r0

@@ -1,4 +1,4 @@
-"""Arrow pandas-UDF wrappers around the NumPy numeric core.
+"""Arrow-UDF wrappers around the NumPy numeric core.
 
 The reference runs one C function per input line (gk-slo.c main loop —
 SURVEY.md §4.1); the Spark rebuild runs the SAME math whole-column over
@@ -15,6 +15,16 @@ picks the output height inside the same call), :func:`geoid_udf` over
 table's ``locate``.  :data:`GEOGRAPHIC_IN` / :data:`GEOGRAPHIC_OUT`
 are the one record of which chains read / write (fi, la, h).
 
+The UDFs are ``arrow_udf``s, not pandas UDFs, so a Python worker that
+runs them never imports pandas: :func:`_f64` reads an Arrow column as a
+float64 NumPy view of its data buffer and :func:`_arrow` wraps a NumPy
+result back into an Arrow column (``Array.to_numpy``,
+``np.asarray(<Arrow array>)`` and ``pa.array`` all import pandas, so
+no worker path calls them).  Every kernel is row-wise, so
+:func:`_blocked` runs it over :data:`BLOCK_ROWS`-row slices into
+preallocated outputs: a kernel's temporaries are bounded by the block,
+not by the Arrow batch, and the result is bit-identical to one pass.
+
 Cell encoding deliberately does NOT live here: it is pure arithmetic,
 so :func:`cell_col` builds it from Catalyst built-ins and it stays
 inside whole-stage codegen (see cells.py rationale).
@@ -22,15 +32,68 @@ inside whole-stage codegen (see cells.py rationale).
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from . import aft as _aft
 from . import cells as _cells
 from . import geodesy as _g
 from . import geoid as _geoid
+
+# Rows per kernel call inside one Arrow batch: bounds each kernel's
+# temporaries (AFT's (n, max_c, 2) vertex gathers, kNN's n × n_st
+# distance matrix) independently of spark.sql.execution.arrow.
+# maxRecordsPerBatch.
+BLOCK_ROWS = 8192
+
+
+def _f64(arr: pa.Array) -> np.ndarray:
+    """float64 NumPy view of an Arrow column; NULL reads as NaN.
+
+    Non-double columns (integer x/y/h) are cast first, unchecked like
+    pandas' ``to_numpy(dtype="float64")``.  The view is read-only."""
+    if arr.type != pa.float64():
+        arr = arr.cast(pa.float64(), safe=False)
+    n = len(arr)
+    if n == 0:
+        return np.empty(0, np.float64)
+    validity, data = arr.buffers()
+    v = np.frombuffer(data, np.float64, n, arr.offset * 8)
+    if arr.null_count:
+        valid = np.unpackbits(np.frombuffer(validity, np.uint8),
+                              count=arr.offset + n, bitorder="little")
+        v = np.where(valid[arr.offset:].view(bool), v, np.nan)
+    return v
+
+
+def _arrow(v: np.ndarray, type_: pa.DataType) -> pa.Array:
+    """Arrow column over the NumPy array ``v`` (dtype matching
+    ``type_``); a float NaN becomes NULL, as pandas → Arrow did."""
+    v = np.ascontiguousarray(v)
+    validity, nulls = None, 0
+    if pa.types.is_floating(type_):
+        nan = np.isnan(v)
+        nulls = int(nan.sum())
+        if nulls:
+            validity = pa.py_buffer(np.packbits(~nan, bitorder="little"))
+    return pa.Array.from_buffers(type_, len(v), [validity, pa.py_buffer(v)],
+                                 nulls)
+
+
+def _blocked(kernel, cols, outs):
+    """Run the row-wise ``kernel`` over :data:`BLOCK_ROWS`-row slices
+    of ``cols``; its i-th result fills ``outs[i][..., rows]`` (outputs
+    are (n,) or (k, n)).  Returns ``outs``."""
+    n = len(cols[0])
+    for s in range(0, n, BLOCK_ROWS):
+        e = s + BLOCK_ROWS
+        for o, r in zip(outs, kernel(*(c[s:e] for c in cols))):
+            o[..., s:e] = r
+    return outs
+
 
 _CHAINS = {
     1: _g.tm_to_wgs84,
@@ -64,7 +127,7 @@ HEIGHT_MODE_DEFAULTS = {1: "hg", 2: "hg", 3: "ht", 4: "ht", 5: "ht",
 
 def transform_udf(t: int, height_mode: str = "ht",
                   geoid_model: str = "slo"):
-    """pandas UDF for composite chain ``t`` (1..10, SURVEY.md §3.3)
+    """Arrow UDF for composite chain ``t`` (1..10, SURVEY.md §3.3)
     with the gk-slo -ht/-hc/-hg height selector.
 
     Signature: (c1, c2, c3) → struct<c1:double, c2:double, c3:double>
@@ -93,11 +156,7 @@ def transform_udf(t: int, height_mode: str = "ht",
     names = ("fi", "la", "h") if t in GEOGRAPHIC_OUT else ("x", "y", "h")
     schema = ", ".join(f"{n} double" for n in names)
 
-    @pandas_udf(schema)
-    def _udf(c1: pd.Series, c2: pd.Series, c3: pd.Series) -> pd.DataFrame:
-        a1 = c1.to_numpy(dtype="float64", copy=False)
-        a2 = c2.to_numpy(dtype="float64", copy=False)
-        a3 = c3.to_numpy(dtype="float64", copy=False)
+    def kernel(a1, a2, a3):
         o1, o2, o3 = fn(a1, a2, a3)
         if height_mode == "hc":
             h = a3
@@ -107,7 +166,15 @@ def transform_udf(t: int, height_mode: str = "ht",
             h = o3 + _geoid.geoid_height(o1, o2, geoid_model)
         else:  # geographic input
             h = o3 - _geoid.geoid_height(a1, a2, geoid_model)
-        return pd.DataFrame({names[0]: o1, names[1]: o2, names[2]: h})
+        return o1, o2, h
+
+    @arrow_udf(schema)
+    def _udf(c1: pa.Array, c2: pa.Array, c3: pa.Array) -> pa.Array:
+        n = len(c1)
+        outs = _blocked(kernel, [_f64(c) for c in (c1, c2, c3)],
+                        [np.empty(n) for _ in names])
+        return pa.StructArray.from_arrays(
+            [_arrow(o, pa.float64()) for o in outs], names=names)
 
     _udf.__name__ = f"t{t}_{fn.__name__}_{height_mode}"
     return _udf
@@ -116,11 +183,13 @@ def transform_udf(t: int, height_mode: str = "ht",
 def geoid_udf(model: str = "slo"):
     """Bilinear geoid undulation N(φ,λ) (SURVEY.md §3.4 A4/A5)."""
 
-    @pandas_udf("double")
-    def _udf(fi: pd.Series, la: pd.Series) -> pd.Series:
-        return pd.Series(_geoid.geoid_height(
-            fi.to_numpy(dtype="float64", copy=False),
-            la.to_numpy(dtype="float64", copy=False), model))
+    def kernel(fi, la):
+        return (_geoid.geoid_height(fi, la, model),)
+
+    @arrow_udf("double")
+    def _udf(fi: pa.Array, la: pa.Array) -> pa.Array:
+        (out,) = _blocked(kernel, (_f64(fi), _f64(la)), [np.empty(len(fi))])
+        return _arrow(out, pa.float64())
 
     return _udf
 
@@ -130,11 +199,14 @@ def aft_locate_udf(direction: str = "gk_tm"):
     — the point-location half of SURVEY.md §3.4 A1/A2."""
     table = _aft.AFT_GK_TM if direction == "gk_tm" else _aft.AFT_TM_GK
 
-    @pandas_udf("long")
-    def _udf(x: pd.Series, y: pd.Series) -> pd.Series:
-        return pd.Series(table.locate(
-            x.to_numpy(dtype="float64", copy=False),
-            y.to_numpy(dtype="float64", copy=False)))
+    def kernel(x, y):
+        return (table.locate(x, y),)
+
+    @arrow_udf("long")
+    def _udf(x: pa.Array, y: pa.Array) -> pa.Array:
+        (out,) = _blocked(kernel, (_f64(x), _f64(y)),
+                          [np.empty(len(x), np.int64)])
+        return _arrow(out, pa.int64())
 
     return _udf
 

@@ -2,8 +2,8 @@
 
 Semantics: the k nearest stations per point, deterministic ties by
 ``station_id`` asc (FIXTURES.md §5).  The station table is tiny, so it
-lives in the pandas-UDF closure; the kernel computes the full
-(batch × n_st) distance matrix in NumPy, stable-argsorts, and emits the
+lives in the Arrow-UDF closure; the kernel computes the
+(block × n_st) distance matrix in NumPy, stable-argsorts, and emits the
 top-k as a flat struct which codegen explodes into rows.  The plan is
 Scan → ArrowEvalPython → Generate — no Exchange at all, a pure map at
 any point count.  Its independent check is :func:`knn_oracle_sql`, a
@@ -21,14 +21,15 @@ arithmetic (0.7 ≈ cos 46° meridian-convergence factor, adequate for a
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from .. import cells
 from ..constants import BBOX_FI_MAX, BBOX_FI_MIN, BBOX_LA_MAX, BBOX_LA_MIN
 from ..functions.sqlgen import f as _f
+from ..kernels import _arrow, _blocked, _f64, cell_col
 
 LA_FACTOR = 0.7
 KNN_CELL_RES = 3  # coarse cells for radius_join's ring pruning
@@ -49,10 +50,13 @@ def stations_values_sql(n_st: int = 25) -> str:
 
 
 def stations_df(spark: SparkSession, n_st: int = 25) -> DataFrame:
+    """(station_id int, s_fi double, s_la double).  Built from Arrow,
+    so it plans as a local scan and broadcasting it starts no Python
+    worker."""
     pos = station_positions(n_st)
-    rows = [(i, float(pos[i, 0]), float(pos[i, 1])) for i in range(n_st)]
-    return spark.createDataFrame(
-        rows, "station_id int, s_fi double, s_la double")
+    return spark.createDataFrame(pa.table({
+        "station_id": pa.array(np.arange(n_st, dtype=np.int32)),
+        "s_fi": pa.array(pos[:, 0]), "s_la": pa.array(pos[:, 1])}))
 
 
 def _station_rings(spark: SparkSession, pos: np.ndarray,
@@ -60,14 +64,15 @@ def _station_rings(spark: SparkSession, pos: np.ndarray,
     """(cell, station_id) rows registering each station in every
     KNN_CELL_RES cell any of whose points could lie within ``radius``
     (metric units of :func:`_dist2`'s sqrt) of it — Chebyshev ring
-    with one cell of slack, clipped to the bbox grid."""
+    with one cell of slack, clipped to the bbox grid.  Built from Arrow
+    like :func:`stations_df`."""
     n_st = pos.shape[0]
     n = cells.n_cells(KNN_CELL_RES)
     cell_h = (BBOX_FI_MAX - BBOX_FI_MIN) / n
     cell_w = (BBOX_LA_MAX - BBOX_LA_MIN) / n
     r_fi = int(np.ceil(radius / cell_h)) + 1
     r_la = int(np.ceil(radius / LA_FACTOR / cell_w)) + 1
-    ring_rows = []
+    ring_cells, ring_ids = [], []
     for i in range(n_st):
         c = int(cells.encode(pos[i, 0:1], pos[i, 1:2], KNN_CELL_RES)[0])
         _, ix, iy = cells.decode(np.asarray([c], np.int64))
@@ -76,10 +81,12 @@ def _station_rings(spark: SparkSession, pos: np.ndarray,
             for dy in range(-r_fi, r_fi + 1):
                 jx, jy = ix + dx, iy + dy
                 if 0 <= jx < n and 0 <= jy < n:
-                    ring_rows.append(
-                        ((KNN_CELL_RES << cells.RES_SHIFT)
-                         + (jx << cells.IX_SHIFT) + jy, i))
-    return spark.createDataFrame(ring_rows, "cell bigint, station_id int")
+                    ring_cells.append((KNN_CELL_RES << cells.RES_SHIFT)
+                                      + (jx << cells.IX_SHIFT) + jy)
+                    ring_ids.append(i)
+    return spark.createDataFrame(pa.table({
+        "cell": pa.array(ring_cells, pa.int64()),
+        "station_id": pa.array(ring_ids, pa.int32())}))
 
 
 def _dist2(fi, la):
@@ -89,31 +96,34 @@ def _dist2(fi, la):
 
 
 def knn_kernel_udf(n_st: int, k: int):
-    """Vectorized top-k kernel: stations in closure, full distance
-    matrix per Arrow batch, stable argsort (ties resolve to the lowest
-    station_id because columns are in id order).  The arithmetic is the
-    exact IEEE op sequence of :func:`_dist2` / the SQL oracle —
+    """Vectorized top-k kernel: stations in closure, distance matrix per
+    ``kernels.BLOCK_ROWS`` rows, stable argsort (ties resolve to the
+    lowest station_id because columns are in id order).  The arithmetic
+    is the exact IEEE op sequence of :func:`_dist2` / the SQL oracle —
     subtract, multiply, multiply-add in the same order — so dist2 is
     bit-identical to :func:`knn_oracle_sql`'s."""
     pos = station_positions(n_st)
     sfi = pos[:, 0].copy()
     sla = pos[:, 1].copy()
     fields = ", ".join(f"s{j}:int, d{j}:double" for j in range(k))
+    names = [f"{c}{j}" for j in range(k) for c in "sd"]
 
-    @pandas_udf(f"struct<{fields}>")
-    def _udf(fi: pd.Series, la: pd.Series) -> pd.DataFrame:
-        fv = fi.to_numpy(np.float64)[:, None]
-        lv = la.to_numpy(np.float64)[:, None]
-        dfi = fv - sfi[None, :]
-        dla = LA_FACTOR * (lv - sla[None, :])
+    def kernel(fv, lv):
+        dfi = fv[:, None] - sfi[None, :]
+        dla = LA_FACTOR * (lv[:, None] - sla[None, :])
         d2 = dfi * dfi + dla * dla
         idx = np.argsort(d2, axis=1, kind="stable")[:, :k]
-        top = np.take_along_axis(d2, idx, axis=1)
-        out = {}
+        return idx.T, np.take_along_axis(d2, idx, axis=1).T
+
+    @arrow_udf(f"struct<{fields}>")
+    def _udf(fi: pa.Array, la: pa.Array) -> pa.Array:
+        n = len(fi)
+        idx, top = _blocked(kernel, (_f64(fi), _f64(la)),
+                            (np.empty((k, n), np.int32), np.empty((k, n))))
+        cols = []
         for j in range(k):
-            out[f"s{j}"] = pd.Series(idx[:, j].astype(np.int32))
-            out[f"d{j}"] = pd.Series(top[:, j])
-        return pd.DataFrame(out)
+            cols += [_arrow(idx[j], pa.int32()), _arrow(top[j], pa.float64())]
+        return pa.StructArray.from_arrays(cols, names=names)
 
     return _udf
 
@@ -193,7 +203,6 @@ def radius_join(points: DataFrame, spark: SparkSession,
     Spark and the DuckDB oracle (:func:`radius_oracle_sql`) agree
     bit-for-bit with no tolerance.
     """
-    from ..kernels import cell_col
     points = points.filter(F.col(fi_col).isNotNull()
                            & F.col(la_col).isNotNull())
     st = stations_df(spark, n_st)

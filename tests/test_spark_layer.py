@@ -29,7 +29,7 @@ def pts_df(spark):
 
 
 def test_udf_bitwise_parity(spark, pts_df):
-    """pandas-UDF output ≡ pure-NumPy kernel output bitwise — the
+    """Arrow-UDF output ≡ pure-NumPy kernel output bitwise — the
     Arrow crossing changes nothing (SURVEY.md §6.2 item 3)."""
     t4 = kernels.transform_udf(4)
     out = (pts_df.withColumn("o", t4(F.col("fi"), F.col("la"), F.col("h")))

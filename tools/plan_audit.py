@@ -4,6 +4,8 @@ operators to PLANS.md and assert the invariants we design for:
 
 * ArrowEvalPython only — never BatchEvalPython (no per-row Python) —
   and the flagship has one: the t=3 kernel (the PIP refine is Catalyst)
+* the geo kernels (flagship t=3, kNN) are Arrow UDFs (eval type 250),
+  so their workers never import pandas
 * PIP prefilter is a BroadcastHashJoin (never BroadcastNestedLoopJoin)
 * the distinct count per tile shuffles on (cell, key) before cell, so a
   hot cell spreads over reducers
@@ -39,6 +41,14 @@ def formatted(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def arrow_eval_types(plan: str) -> list[str]:
+    """Eval type of each ArrowEvalPython node in a formatted plan: the
+    last field of its ``Arguments:`` line (250 Arrow UDF, 200 pandas
+    UDF)."""
+    return re.findall(r"^\(\d+\) ArrowEvalPython\nInput \[\d+\]: .*\n"
+                      r"Arguments: .*, (\d+)$", plan, re.M)
 
 
 def main() -> None:
@@ -77,8 +87,10 @@ def main() -> None:
 
     checks = []
     flag_plan = plans["flagship: derive → t3 → PIP → distinct tile agg"]
-    checks.append(("flagship has exactly one ArrowEvalPython (the t=3 kernel)",
-                   len(re.findall(r"^\(\d+\) ArrowEvalPython", flag_plan, re.M)) == 1))
+    checks.append(("flagship has exactly one ArrowEvalPython (the t=3 kernel), "
+                   "an Arrow UDF (eval type 250)",
+                   len(re.findall(r"^\(\d+\) ArrowEvalPython", flag_plan, re.M)) == 1
+                   and arrow_eval_types(flag_plan) == ["250"]))
     checks.append(("no BatchEvalPython anywhere",
                    all("BatchEvalPython" not in p for p in plans.values())))
     checks.append(("PIP prefilter is BroadcastHashJoin",
@@ -90,9 +102,10 @@ def main() -> None:
     checks.append(("schema pruned to read cols", "ReadSchema" in scan_plan
                    and "l_extendedprice" not in scan_plan.split("ReadSchema")[1][:400]))
     knn_plan = plans["knn_join (kernel, zero-shuffle)"]
-    checks.append(("knn kernel path has NO Exchange (pure map)",
+    checks.append(("knn kernel path has NO Exchange (pure map), and its "
+                   "kernel is an Arrow UDF (eval type 250)",
                    "Exchange" not in knn_plan
-                   and "ArrowEvalPython" in knn_plan))
+                   and arrow_eval_types(knn_plan) == ["250"]))
     shuffles = re.findall(r"(?<!Broadcast)Exchange (\w+)\(([^)]*)\)",
                           tiled._jdf.queryExecution().executedPlan().toString())
     checks.append(("tile distinct agg: 2 hash Exchanges, the lower on "
