@@ -16,14 +16,14 @@ table's ``locate``.  :data:`GEOGRAPHIC_IN` / :data:`GEOGRAPHIC_OUT`
 are the one record of which chains read / write (fi, la, h).
 
 The UDFs are ``arrow_udf``s, not pandas UDFs, so a Python worker that
-runs them never imports pandas: :func:`_f64` reads an Arrow column as a
-float64 NumPy view of its data buffer and :func:`_arrow` wraps a NumPy
-result back into an Arrow column (``Array.to_numpy``,
-``np.asarray(<Arrow array>)`` and ``pa.array`` all import pandas, so
-no worker path calls them).  Every kernel is row-wise, so
-:func:`_blocked` runs it over :data:`BLOCK_ROWS`-row slices into
-preallocated outputs: a kernel's temporaries are bounded by the block,
-not by the Arrow batch, and the result is bit-identical to one pass.
+runs them never imports pandas: they read and build their columns
+through the helpers in :mod:`.arrowbuf` (``f64`` reads an Arrow column
+as a float64 NumPy view of its data buffer, ``to_arrow`` wraps a NumPy
+result back into an Arrow column), which the corpus kernels share.
+Every kernel is row-wise, so ``arrowbuf.blocked`` runs it over
+``arrowbuf.BLOCK_ROWS``-row slices into preallocated outputs: a
+kernel's temporaries are bounded by the block, not by the Arrow batch,
+and the result is bit-identical to one pass.
 
 Cell encoding deliberately does NOT live here: it is pure arithmetic,
 so :func:`cell_col` builds it from Catalyst built-ins and it stays
@@ -42,58 +42,7 @@ from . import aft as _aft
 from . import cells as _cells
 from . import geodesy as _g
 from . import geoid as _geoid
-
-# Rows per kernel call inside one Arrow batch: bounds each kernel's
-# temporaries (AFT's (n, max_c, 2) vertex gathers, kNN's n × n_st
-# distance matrix) independently of spark.sql.execution.arrow.
-# maxRecordsPerBatch.
-BLOCK_ROWS = 8192
-
-
-def _f64(arr: pa.Array) -> np.ndarray:
-    """float64 NumPy view of an Arrow column; NULL reads as NaN.
-
-    Non-double columns (integer x/y/h) are cast first, unchecked like
-    pandas' ``to_numpy(dtype="float64")``.  The view is read-only."""
-    if arr.type != pa.float64():
-        arr = arr.cast(pa.float64(), safe=False)
-    n = len(arr)
-    if n == 0:
-        return np.empty(0, np.float64)
-    validity, data = arr.buffers()
-    v = np.frombuffer(data, np.float64, n, arr.offset * 8)
-    if arr.null_count:
-        valid = np.unpackbits(np.frombuffer(validity, np.uint8),
-                              count=arr.offset + n, bitorder="little")
-        v = np.where(valid[arr.offset:].view(bool), v, np.nan)
-    return v
-
-
-def _arrow(v: np.ndarray, type_: pa.DataType) -> pa.Array:
-    """Arrow column over the NumPy array ``v`` (dtype matching
-    ``type_``); a float NaN becomes NULL, as pandas → Arrow did."""
-    v = np.ascontiguousarray(v)
-    validity, nulls = None, 0
-    if pa.types.is_floating(type_):
-        nan = np.isnan(v)
-        nulls = int(nan.sum())
-        if nulls:
-            validity = pa.py_buffer(np.packbits(~nan, bitorder="little"))
-    return pa.Array.from_buffers(type_, len(v), [validity, pa.py_buffer(v)],
-                                 nulls)
-
-
-def _blocked(kernel, cols, outs):
-    """Run the row-wise ``kernel`` over :data:`BLOCK_ROWS`-row slices
-    of ``cols``; its i-th result fills ``outs[i][..., rows]`` (outputs
-    are (n,) or (k, n)).  Returns ``outs``."""
-    n = len(cols[0])
-    for s in range(0, n, BLOCK_ROWS):
-        e = s + BLOCK_ROWS
-        for o, r in zip(outs, kernel(*(c[s:e] for c in cols))):
-            o[..., s:e] = r
-    return outs
-
+from .arrowbuf import blocked, f64, to_arrow
 
 _CHAINS = {
     1: _g.tm_to_wgs84,
@@ -171,10 +120,10 @@ def transform_udf(t: int, height_mode: str = "ht",
     @arrow_udf(schema)
     def _udf(c1: pa.Array, c2: pa.Array, c3: pa.Array) -> pa.Array:
         n = len(c1)
-        outs = _blocked(kernel, [_f64(c) for c in (c1, c2, c3)],
-                        [np.empty(n) for _ in names])
+        outs = blocked(kernel, [f64(c) for c in (c1, c2, c3)],
+                       [np.empty(n) for _ in names])
         return pa.StructArray.from_arrays(
-            [_arrow(o, pa.float64()) for o in outs], names=names)
+            [to_arrow(o, pa.float64()) for o in outs], names=names)
 
     _udf.__name__ = f"t{t}_{fn.__name__}_{height_mode}"
     return _udf
@@ -188,8 +137,8 @@ def geoid_udf(model: str = "slo"):
 
     @arrow_udf("double")
     def _udf(fi: pa.Array, la: pa.Array) -> pa.Array:
-        (out,) = _blocked(kernel, (_f64(fi), _f64(la)), [np.empty(len(fi))])
-        return _arrow(out, pa.float64())
+        (out,) = blocked(kernel, (f64(fi), f64(la)), [np.empty(len(fi))])
+        return to_arrow(out, pa.float64())
 
     return _udf
 
@@ -204,9 +153,9 @@ def aft_locate_udf(direction: str = "gk_tm"):
 
     @arrow_udf("long")
     def _udf(x: pa.Array, y: pa.Array) -> pa.Array:
-        (out,) = _blocked(kernel, (_f64(x), _f64(y)),
-                          [np.empty(len(x), np.int64)])
-        return _arrow(out, pa.int64())
+        (out,) = blocked(kernel, (f64(x), f64(y)),
+                         [np.empty(len(x), np.int64)])
+        return to_arrow(out, pa.int64())
 
     return _udf
 

@@ -29,9 +29,12 @@ that family):
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..arrowbuf import to_arrow
 from .textdedup import TOKS_EXPR, gram_window_expr, hash60_col, hash60_sql
 
 # ---------------------------------------------------------------------------
@@ -397,7 +400,6 @@ def decontaminate(docs: DataFrame, n: int = DECON_N) -> DataFrame:
     bq = spark.sparkContext.broadcast(bm)
 
     def kern(batches):
-        import pyarrow as pa
         table = bq.value
         for b in batches:
             ids = b.column("doc_id").to_pylist()
@@ -421,9 +423,8 @@ def decontaminate(docs: DataFrame, n: int = DECON_N) -> DataFrame:
                     o_b.append(len(bids))
             if o_id:
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(o_id, pa.int64()),
-                     pa.array(o_g, pa.int64()),
-                     pa.array(o_b, pa.int64())],
+                    [to_arrow(np.array(o, np.int64), pa.int64())
+                     for o in (o_id, o_g, o_b)],
                     names=["doc_id", "n_gram_hits", "n_bench_docs"])
 
     src = docs.select("doc_id", F.expr(TOKS_EXPR).alias("toks"))

@@ -29,7 +29,8 @@ from pyspark.sql.functions import arrow_udf
 from .. import cells
 from ..constants import BBOX_FI_MAX, BBOX_FI_MIN, BBOX_LA_MAX, BBOX_LA_MIN
 from ..functions.sqlgen import f as _f
-from ..kernels import _arrow, _blocked, _f64, cell_col
+from ..arrowbuf import blocked, f64, to_arrow
+from ..kernels import cell_col
 
 LA_FACTOR = 0.7
 KNN_CELL_RES = 3  # coarse cells for radius_join's ring pruning
@@ -97,7 +98,7 @@ def _dist2(fi, la):
 
 def knn_kernel_udf(n_st: int, k: int):
     """Vectorized top-k kernel: stations in closure, distance matrix per
-    ``kernels.BLOCK_ROWS`` rows, stable argsort (ties resolve to the
+    ``arrowbuf.BLOCK_ROWS`` rows, stable argsort (ties resolve to the
     lowest station_id because columns are in id order).  The arithmetic
     is the exact IEEE op sequence of :func:`_dist2` / the SQL oracle —
     subtract, multiply, multiply-add in the same order — so dist2 is
@@ -118,11 +119,12 @@ def knn_kernel_udf(n_st: int, k: int):
     @arrow_udf(f"struct<{fields}>")
     def _udf(fi: pa.Array, la: pa.Array) -> pa.Array:
         n = len(fi)
-        idx, top = _blocked(kernel, (_f64(fi), _f64(la)),
-                            (np.empty((k, n), np.int32), np.empty((k, n))))
+        idx, top = blocked(kernel, (f64(fi), f64(la)),
+                           (np.empty((k, n), np.int32), np.empty((k, n))))
         cols = []
         for j in range(k):
-            cols += [_arrow(idx[j], pa.int32()), _arrow(top[j], pa.float64())]
+            cols += [to_arrow(idx[j], pa.int32()),
+                     to_arrow(top[j], pa.float64())]
         return pa.StructArray.from_arrays(cols, names=names)
 
     return _udf

@@ -21,11 +21,13 @@ Engine paths:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
+from .. import arrowbuf
+from ..arrowbuf import i64, list_array, list_rows, to_arrow
 from ..functions.sqlgen import f as _flit
 
 DIM = 64
@@ -93,12 +95,12 @@ def brute_force_topk(emb: DataFrame, k: int = 5,
                      query_filter: str = "vec_id % 50 = 0") -> DataFrame:
     """Exact top-k cosine neighbours for the filtered query vectors.
 
-    Plan (r6): one Arrow map pass over the corpus scores whole batches
-    against the broadcast query matrix with the exact d-ascending fold
-    (bit-identical to the r5 unrolled-expression BNLJ, which evaluated
-    192 element_at casts per pair), pre-selects per task every row that
-    can still reach the global top-k, and the window ranks the few
-    surviving candidates.  See the kernel section below.
+    Plan (r6): one Arrow map pass over the corpus scores each batch,
+    block by block, against the broadcast query matrix with the exact
+    d-ascending fold (bit-identical to the r5 unrolled-expression BNLJ,
+    which evaluated 192 element_at casts per pair), pre-selects per task
+    every row that can still reach the global top-k, and the window
+    ranks the few surviving candidates.  See the kernel section below.
     """
     return _rank_topk(_topk_candidates(emb, "brute", k, query_filter),
                       k, "cos_sim")
@@ -131,12 +133,9 @@ def lsh_buckets(emb: DataFrame) -> DataFrame:
     time in janino compilation than execution (measured 3.4 s → 0.6 s
     for 20k vectors); :func:`lsh_bucket_sql` is the oracle twin."""
 
-    @pandas_udf("bigint")
-    def _udf(e: pd.Series) -> pd.Series:
-        if len(e) == 0:
-            return pd.Series(np.empty(0, np.int64))
-        X = np.stack(e.to_numpy()).astype(np.float64)
-        return pd.Series(_lsh_buckets_np(X))
+    @arrow_udf("bigint")
+    def _udf(e: pa.Array) -> pa.Array:
+        return to_arrow(_lsh_buckets_np(list_rows(e, DIM)), pa.int64())
 
     return emb.select("vec_id", _udf(F.col("embedding")).alias("bucket"))
 
@@ -298,10 +297,10 @@ def ivf_cluster_udf():
     (bit-identical to the oracle's), so ``argmax`` (first max wins)
     picks the identical cell."""
 
-    @pandas_udf("int")
-    def _udf(emb: pd.Series) -> pd.Series:
-        X = np.stack(emb.to_numpy()).astype(np.float64)
-        return pd.Series(_ivf_scores_np(X).argmax(axis=1).astype(np.int32))
+    @arrow_udf("int")
+    def _udf(emb: pa.Array) -> pa.Array:
+        cells = _ivf_scores_np(list_rows(emb, DIM)).argmax(axis=1)
+        return to_arrow(cells.astype(np.int32), pa.int32())
 
     return _udf
 
@@ -436,11 +435,11 @@ def _assign_q_udf(Cq: np.ndarray):
     ORDER BY score DESC, cluster ASC)."""
     ss = (Cq.astype(np.int64) ** 2).sum(axis=1)
 
-    @pandas_udf("int")
-    def _udf(q: pd.Series) -> pd.Series:
-        X = np.stack(q.to_numpy()).astype(np.int64)
+    @arrow_udf("int")
+    def _udf(q: pa.Array) -> pa.Array:
+        X = list_rows(q, DIM, np.int64)
         score = 2 * (X @ Cq.T.astype(np.int64)) - ss
-        return pd.Series(score.argmax(axis=1).astype(np.int32))
+        return to_arrow(score.argmax(axis=1).astype(np.int32), pa.int32())
 
     return _udf
 
@@ -740,10 +739,10 @@ def pq_encode_udf():
     """array<int> of PQ_M codes per vector: one Arrow crossing around
     :func:`_pq_codes_np`."""
 
-    @pandas_udf("array<int>")
-    def _udf(emb: pd.Series) -> pd.Series:
-        X = np.stack(emb.to_numpy()).astype(np.float64)
-        return pd.Series([r.tolist() for r in _pq_codes_np(X)])
+    @arrow_udf("array<int>")
+    def _udf(emb: pa.Array) -> pa.Array:
+        codes = _pq_codes_np(list_rows(emb, DIM))
+        return list_array(codes.astype(np.int32), pa.int32())
 
     return _udf
 
@@ -805,9 +804,13 @@ ADC_FOLD_SQL = (
 
 
 def pq_codes_rows(emb: DataFrame) -> DataFrame:
-    """(vec_id, m, code): the encoded corpus, one row per subspace."""
+    """(vec_id, m, code): the encoded corpus, one row per subspace.
+    Every code array holds PQ_M codes, so the ``_outer`` form explodes
+    the same rows without the inferred ``size(codes) > 0`` filter that
+    would run the encoder twice."""
     return (emb.withColumn("codes", pq_encode_udf()(F.col("embedding")))
-            .select("vec_id", F.posexplode("codes").alias("m", "code")))
+            .select("vec_id",
+                    F.posexplode_outer("codes").alias("m", "code")))
 
 
 def pq_codes_rows_sql() -> str:
@@ -1000,15 +1003,15 @@ def _pq_assign_q_udf(Cq: np.ndarray):
     oracle's ORDER BY score DESC, cluster ASC)."""
     ss = np.einsum("mjd,mjd->mj", Cq, Cq)
 
-    @pandas_udf("array<int>")
-    def _udf(q: pd.Series) -> pd.Series:
-        X = np.stack(q.to_numpy()).astype(np.int64)
+    @arrow_udf("array<int>")
+    def _udf(q: pa.Array) -> pa.Array:
+        X = list_rows(q, DIM, np.int64)
         codes = np.empty((X.shape[0], PQ_M), dtype=np.int32)
         for m in range(PQ_M):
             Xm = X[:, m * PQ_SUBDIM:(m + 1) * PQ_SUBDIM]
             score = 2 * (Xm @ Cq[m].T) - ss[m]
             codes[:, m] = score.argmax(axis=1)
-        return pd.Series([r.tolist() for r in codes])
+        return list_array(codes, pa.int32())
 
     return _udf
 
@@ -1097,9 +1100,10 @@ def pq_train_replay_exact(V: np.ndarray, n_iter: int = 3):
 # computes the SAME fold (same operation order, same IEEE ops — NumPy
 # elementwise ops neither fuse nor reassociate — the rule the
 # quantizer kernels _ivf_scores_np/_pq_scores_np follow, pinned by pytest)
-# over (batch × query) score matrices, pre-selects per task every row
-# that can still reach the global top-k (score >= the task-local kth
-# score, so exact ties survive), and emits only those candidate rows.
+# over (block × query) score matrices, BLOCK_ROWS rows of a batch at a
+# time, pre-selects per task every row that can still reach the global
+# top-k (score >= the running task-local kth score, so exact ties
+# survive), and emits only those candidate rows.
 # The global row_number window then ranks a few hundred rows instead
 # of n·q pairs.  Results are bit-identical: scores are the same
 # float64s, and per-partition top-k union ⊇ global top-k is exact
@@ -1111,15 +1115,6 @@ def pq_train_replay_exact(V: np.ndarray, n_iter: int = 3):
 # scan is round-robin split to defaultParallelism first (5 MB at the
 # fixture; a real multi-split scan skips that branch).
 # ---------------------------------------------------------------------------
-
-
-def _emb_f64(col) -> np.ndarray:
-    """pyarrow list<float> column → (n, DIM) float64 (exact cast)."""
-    import pyarrow as pa
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
-    flat = col.flatten().to_numpy(zero_copy_only=False)
-    return flat.astype(np.float64).reshape(len(col), -1)
 
 
 def _fold_dot_mat(X: np.ndarray, Q: np.ndarray) -> np.ndarray:
@@ -1178,21 +1173,11 @@ def _split_scan(df: DataFrame):
     return df
 
 
-def _topk_candidates(emb: DataFrame, mode: str, k: int, query_filter: str,
-                     nprobe: int = 3) -> DataFrame:
-    """(q_id, vec_id, score) candidate rows whose union provably
-    contains every query's global top-k under (score DESC, vec_id ASC):
-    per task, every candidate scoring >= that task's kth-best score for
-    the query is emitted (exact ties included; NaN scores rank first,
-    matching Spark's NaN-greatest ordering)."""
-    spark = emb.sparkSession
-    q_pdf = (emb.filter(query_filter)
-             .select("vec_id", "embedding").toPandas())
-    schema = "q_id long, vec_id long, score double"
-    if len(q_pdf) == 0:
-        return spark.createDataFrame([], schema)
-    q_ids = q_pdf["vec_id"].to_numpy(np.int64)
-    Q = np.stack(q_pdf["embedding"].to_numpy()).astype(np.float64)
+def _topk_payload(q_ids: np.ndarray, Q: np.ndarray, mode: str,
+                  nprobe: int = 3) -> dict:
+    """The query side of a ``mode`` scan, broadcast to every task: ids,
+    and the norms / buckets / cells / probes / ADC tables that mode
+    scores with."""
     payload = {"q_ids": q_ids}
     if mode in ("brute", "lsh", "ivf", "ivf_nprobe"):
         payload["q_n2"] = _fold_norm2_np(Q)
@@ -1205,52 +1190,88 @@ def _topk_candidates(emb: DataFrame, mode: str, k: int, query_filter: str,
         payload["q_probes"] = _probes_np(Q, nprobe)
     if mode in ("ivfpq", "pq_adc"):
         payload["LUT"] = _pq_lut_np(Q)
-    bq = spark.sparkContext.broadcast(payload)
+    return payload
+
+
+def _score_block(p: dict, mode: str, ids: np.ndarray, X: np.ndarray):
+    """(score, valid) (len(ids), q) matrices of one block of corpus
+    rows against the payload's queries."""
+    valid = ids[:, None] != p["q_ids"][None, :]
+    if mode in ("brute", "lsh", "ivf", "ivf_nprobe"):
+        S = _fold_dot_mat(X, p["Q"])
+        S /= np.sqrt(np.multiply.outer(_fold_norm2_np(X), p["q_n2"]))
+    else:
+        S = _adc_scores_np(_pq_codes_np(X), p["LUT"])
+    if mode == "lsh":
+        valid &= _lsh_buckets_np(X)[:, None] == p["q_bucket"][None, :]
+    elif mode == "ivf":
+        cells = _ivf_scores_np(X).argmax(axis=1)
+        valid &= cells[:, None] == p["q_cell"][None, :]
+    elif mode in ("ivf_nprobe", "ivfpq"):
+        cells = _ivf_scores_np(X).argmax(axis=1)
+        valid &= (cells[:, None, None]
+                  == p["q_probes"][None, :, :]).any(axis=2)
+    return S, valid
+
+
+def _topk_blocks(p: dict, mode: str, k: int, vec_id: pa.Array,
+                 emb: pa.Array):
+    """Candidate (q_id, vec_id, score) record batches of one Arrow
+    batch, scored ``arrowbuf.BLOCK_ROWS`` rows at a time so the
+    (block × q) matrices are bounded by the block.
+
+    ``best`` carries the k best ranking values per query seen so far in
+    the batch, so its minimum is a running kth-best threshold; each
+    block emits every candidate scoring >= it (exact ties included;
+    NaN ranks first, as Spark orders NaN greatest).  The threshold only
+    rises, so every row scoring >= the batch's final kth-best score is
+    emitted, which covers the batch's share of the global top-k."""
+    ids_all = i64(vec_id)
+    best = np.full((k, len(p["q_ids"])), -np.inf)
+    rows_per_block = arrowbuf.BLOCK_ROWS
+    for s in range(0, len(ids_all), rows_per_block):
+        ids = ids_all[s:s + rows_per_block]
+        X = list_rows(emb.slice(s, rows_per_block), DIM)
+        S, valid = _score_block(p, mode, ids, X)
+        sel = S.copy()
+        sel[np.isnan(sel)] = np.inf
+        sel[~valid] = -np.inf
+        n = len(ids)
+        kk = min(k, n)
+        top = np.partition(sel, n - kk, axis=0)[n - kk:]
+        best = np.partition(np.concatenate([best, top]), kk, axis=0)[kk:]
+        rows, cols = np.nonzero(valid & (sel >= best.min(axis=0)))
+        if len(rows) == 0:
+            continue
+        # a NaN score stays a value (not NULL): Spark ranks it greatest
+        yield pa.RecordBatch.from_arrays(
+            [to_arrow(p["q_ids"][cols], pa.int64()),
+             to_arrow(ids[rows], pa.int64()),
+             to_arrow(S[rows, cols], pa.float64(), np.ones(len(rows), bool))],
+            names=["q_id", "vec_id", "score"])
+
+
+def _topk_candidates(emb: DataFrame, mode: str, k: int, query_filter: str,
+                     nprobe: int = 3) -> DataFrame:
+    """(q_id, vec_id, score) candidate rows whose union provably
+    contains every query's global top-k under (score DESC, vec_id ASC):
+    one ``mapInArrow`` pass of :func:`_topk_blocks` over the corpus
+    against the broadcast query payload."""
+    spark = emb.sparkSession
+    qt = emb.filter(query_filter).select("vec_id", "embedding").toArrow()
+    schema = "q_id long, vec_id long, score double"
+    if qt.num_rows == 0:
+        return spark.createDataFrame([], schema)
+    bq = spark.sparkContext.broadcast(_topk_payload(
+        i64(qt.column("vec_id").combine_chunks()),
+        list_rows(qt.column("embedding").combine_chunks(), DIM),
+        mode, nprobe))
 
     def kern(batches):
-        import pyarrow as pa
         p = bq.value
-        q_ids_l = p["q_ids"]
-        nq = len(q_ids_l)
         for batch in batches:
-            ids = batch.column("vec_id").to_numpy(
-                zero_copy_only=False).astype(np.int64)
-            X = _emb_f64(batch.column("embedding"))
-            n = len(ids)
-            if n == 0:
-                continue
-            valid = ids[:, None] != q_ids_l[None, :]
-            if mode in ("brute", "lsh", "ivf", "ivf_nprobe"):
-                c_n2 = _fold_norm2_np(X)
-                S = _fold_dot_mat(X, p["Q"])
-                S /= np.sqrt(np.multiply.outer(c_n2, p["q_n2"]))
-            else:
-                codes = _pq_codes_np(X)
-                S = _adc_scores_np(codes, p["LUT"])
-            if mode == "lsh":
-                valid &= (_lsh_buckets_np(X)[:, None]
-                          == p["q_bucket"][None, :])
-            elif mode == "ivf":
-                cells = _ivf_scores_np(X).argmax(axis=1)
-                valid &= cells[:, None] == p["q_cell"][None, :]
-            elif mode in ("ivf_nprobe", "ivfpq"):
-                cells = _ivf_scores_np(X).argmax(axis=1)
-                valid &= (cells[:, None, None]
-                          == p["q_probes"][None, :, :]).any(axis=2)
-            sel = S.copy()
-            sel[np.isnan(sel)] = np.inf  # Spark orders NaN greatest
-            sel[~valid] = -np.inf
-            kk = min(k, n)
-            top = np.argpartition(sel, n - kk, axis=0)[n - kk:]
-            thr = sel[top, np.arange(nq)[None, :]].min(axis=0)
-            emit = valid & (sel >= thr[None, :])
-            rows, cols = np.nonzero(emit)
-            if len(rows) == 0:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(q_ids_l[cols]), pa.array(ids[rows]),
-                 pa.array(S[rows, cols])],
-                names=["q_id", "vec_id", "score"])
+            yield from _topk_blocks(p, mode, k, batch.column("vec_id"),
+                                    batch.column("embedding"))
 
     src = _split_scan(emb.select("vec_id", "embedding"))
     return src.mapInArrow(kern, schema)

@@ -32,10 +32,12 @@ geodesy pipeline runs.  Design rules:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
+
+from ..arrowbuf import i64, list_array, list_offsets, to_arrow, valid_mask
 
 K_MINHASH = 16
 N_BANDS = 4
@@ -95,57 +97,78 @@ TOKENS_SQL = """
 # MinHash signatures + LSH banding
 # ---------------------------------------------------------------------------
 
-def _flatten_tok_series(toks: "pd.Series"):
-    """(flat object array, segment-start offsets) for a Series of
-    token lists — shared by the hash-memoized Arrow kernels."""
-    n = len(toks)
-    arrs = [np.asarray(x, dtype=object) for x in toks]
-    lens = np.fromiter((len(a) for a in arrs), np.int64, n)
-    flat = np.concatenate(arrs) if n else np.empty(0, dtype=object)
-    offs = np.zeros(n, np.int64)
-    np.cumsum(lens[:-1], out=offs[1:])
-    return flat, offs, lens
+def _token_segments(toks: pa.Array):
+    """Batch vocabulary of a ``list<string>`` token column and where
+    each row's tokens sit in it, read from the Arrow buffers.
+
+    Returns ``(vocab, inv, starts, lens, nonempty)``: ``vocab`` the
+    batch-distinct tokens (``dictionary_encode``), ``inv`` the
+    vocabulary index of every token of the batch in row order,
+    ``starts``/``lens`` the first token and token count of each
+    NON-EMPTY row, ``nonempty`` (n,) bool marking those rows.  An empty
+    segment would make ``ufunc.reduceat`` return its neighbour's value
+    (or raise ``IndexError`` at the end), so only non-empty rows are
+    segments; an empty row holds no token, so dropping it moves no
+    segment boundary.  A NULL token raises ``ValueError``."""
+    off = list_offsets(toks)
+    lens = np.diff(off)
+    nonempty = lens > 0
+    flat = toks.values.slice(off[0], off[-1] - off[0])
+    enc = flat.dictionary_encode()
+    if enc.indices.null_count:
+        raise ValueError("token list holds a NULL token")
+    return (enc.dictionary.to_pylist(), i64(enc.indices),
+            (off[:-1] - off[0])[nonempty], lens[nonempty], nonempty)
 
 
-def _hash60_batch(flat: np.ndarray, prefixes: list[str] | None):
-    """hash60 of every token in ``flat`` — md5 computed ONCE per
-    batch-distinct token (np.unique), then gathered back through the
-    inverse index.  Values are the exact conv(substr(md5(x),1,15),16,10)
+def _hash60_vocab(vocab: list[str], prefixes: list[str] | None):
+    """hash60 of every vocabulary entry — md5 computed ONCE per
+    batch-distinct token; callers gather it back through the inverse
+    index.  Values are the exact conv(substr(md5(x),1,15),16,10)
     integers (md5 is md5; the 60-bit carve is the same hex prefix), so
     this is bit-identical to :func:`hash60_col` while exploiting token
     redundancy: cost is md5 × batch-vocabulary instead of md5 × token
     stream (Zipf makes that a large constant even at web-corpus vocab;
     memory is bounded by the batch's distinct set — no cross-task
-    state).  Returns (T,) for ``prefixes=None`` else (T, P)."""
+    state).  Returns (V,) for ``prefixes=None`` else (P, V), one
+    contiguous row per prefix."""
     import hashlib
-    uniq, inv = np.unique(flat, return_inverse=True)
+
+    def h60(s: str) -> int:
+        return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
+
     if prefixes is None:
-        H = np.fromiter(
-            (int(hashlib.md5(t.encode("utf-8")).hexdigest()[:15], 16)
-             for t in uniq), np.int64, len(uniq))
-        return H[inv]
-    H = np.empty((len(uniq), len(prefixes)), np.int64)
-    for i, t in enumerate(uniq):
-        for p, pre in enumerate(prefixes):
-            H[i, p] = int(hashlib.md5(
-                (pre + t).encode("utf-8")).hexdigest()[:15], 16)
-    return H[inv]
+        return np.fromiter((h60(t) for t in vocab), np.int64, len(vocab))
+    H = np.empty((len(prefixes), len(vocab)), np.int64)
+    for p, pre in enumerate(prefixes):
+        H[p] = np.fromiter((h60(pre + t) for t in vocab), np.int64,
+                           len(vocab))
+    return H
+
+
+def _row_validity(toks: pa.Array, nonempty: np.ndarray) -> np.ndarray:
+    """(n,) bool: the rows that get a value — non-empty, non-NULL."""
+    valid = valid_mask(toks)
+    return nonempty if valid is None else nonempty & valid
 
 
 def _minhash_sig_kernel():
     """array<bigint>[K_MINHASH] per token list: per-batch-unique md5,
     per-doc column-wise min (min over the multiset == min over the
-    distinct set, so no array_distinct is needed)."""
+    distinct set, so no array_distinct is needed), reduced one
+    permutation at a time so no tokens × K matrix is built.  An empty
+    or NULL token list gives NULL."""
     prefixes = [f"{p}:" for p in range(K_MINHASH)]
 
-    @pandas_udf("array<bigint>")
-    def _udf(toks: pd.Series) -> pd.Series:
-        if len(toks) == 0:
-            return pd.Series(np.empty(0, dtype=object))
-        flat, offs, _ = _flatten_tok_series(toks)
-        vals = _hash60_batch(flat, prefixes)           # (T, K)
-        sigs = np.minimum.reduceat(vals, offs, axis=0)  # (n, K)
-        return pd.Series([r.tolist() for r in sigs])
+    @arrow_udf("array<bigint>")
+    def _udf(toks: pa.Array) -> pa.Array:
+        vocab, inv, starts, _, nonempty = _token_segments(toks)
+        H = _hash60_vocab(vocab, prefixes)             # (K, V)
+        sigs = np.empty((len(starts), K_MINHASH), np.int64)
+        for p in range(K_MINHASH):
+            sigs[:, p] = np.minimum.reduceat(H[p][inv], starts)
+        valid = _row_validity(toks, nonempty)
+        return list_array(sigs[valid[nonempty]], pa.int64(), valid)
 
     return _udf
 
@@ -153,7 +176,7 @@ def _minhash_sig_kernel():
 def minhash_sig_array(docs: DataFrame) -> DataFrame:
     """(doc_id, sigs array<bigint>[K_MINHASH]) — MAP-ONLY, one Arrow
     crossing; the md5 work runs once per batch-distinct token
-    (:func:`_hash60_batch`) instead of once per (token, permutation).
+    (:func:`_hash60_vocab`) instead of once per (token, permutation).
     sigs[p] is the min over the document's tokens of
     hash60(p || ':' || token), exactly :data:`MINHASH_SIG_SQL`'s value
     (min over the multiset == min over the distinct set)."""
@@ -167,9 +190,12 @@ def minhash_sig_array(docs: DataFrame) -> DataFrame:
 def minhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, perm, sig): sig = min over DISTINCT tokens of
     hash60(perm || ':' || token), derived by posexploding the map-only
-    signature array (explode at OUTPUT only, no shuffle)."""
+    signature array (explode at OUTPUT only, no shuffle).  The arrays
+    are never NULL or empty, so the ``_outer`` form explodes the same
+    rows; a plain posexplode makes Spark infer ``size(sigs) > 0`` and
+    push it below the kernel, which then runs twice."""
     return minhash_sig_array(docs).select(
-        "doc_id", F.posexplode("sigs").alias("perm", "sig"))
+        "doc_id", F.posexplode_outer("sigs").alias("perm", "sig"))
 
 
 MINHASH_SIG_SQL = f"""
@@ -323,30 +349,28 @@ SIMHASH_BITS = 60
 
 def _simhash_kernel():
     """One Arrow crossing: per doc, hash the tokens (md5 once per
-    batch-distinct token — r6, :func:`_hash60_batch`; previously the
-    codegen lambda hashed every token occurrence) and fold into the
+    batch-distinct token — :func:`_hash60_vocab`) and fold into the
     60-bit SimHash.  O(total_tokens) memory (no T×60 matrix — one
     shifted int64 scratch vector per bit, segment-summed with
     ``np.add.reduceat``); exact integer arithmetic throughout, so the
-    result is independent of token order and batch boundaries."""
+    result is independent of token order and batch boundaries.  An
+    empty or NULL token list gives NULL."""
     shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
 
-    @pandas_udf("bigint")
-    def _udf(toks: pd.Series) -> pd.Series:
-        n = len(toks)
-        if n == 0:
-            return pd.Series(np.empty(0, np.int64))
-        flat_t, offs, lens = _flatten_tok_series(toks)
-        flat = _hash60_batch(flat_t, None)
-        cnt = np.empty((n, SIMHASH_BITS), np.int64)
+    @arrow_udf("bigint")
+    def _udf(toks: pa.Array) -> pa.Array:
+        vocab, inv, starts, lens, nonempty = _token_segments(toks)
+        flat = _hash60_vocab(vocab, None)[inv]
+        cnt = np.empty((len(starts), SIMHASH_BITS), np.int64)
         tmp = np.empty_like(flat)
         for b in range(SIMHASH_BITS):
             np.right_shift(flat, b, out=tmp)
             np.bitwise_and(tmp, 1, out=tmp)
-            cnt[:, b] = np.add.reduceat(tmp, offs)
+            cnt[:, b] = np.add.reduceat(tmp, starts)
         s = 2 * cnt - lens[:, None]  # Σ±1 = 2·popcount − n_tokens
-        fp = ((s > 0).astype(np.int64) << shifts).sum(axis=1)
-        return pd.Series(fp)
+        fp = np.zeros(len(toks), np.int64)
+        fp[nonempty] = ((s > 0).astype(np.int64) << shifts).sum(axis=1)
+        return to_arrow(fp, pa.int64(), _row_validity(toks, nonempty))
 
     return _udf
 

@@ -1,14 +1,20 @@
-"""The geo Arrow UDFs against the plain NumPy kernels they wrap.
+"""The Arrow UDFs and Arrow map kernels against what they compute.
 
 ``kernels.transform_udf`` / ``geoid_udf`` / ``aft_locate_udf`` and
 ``knn.knn_kernel_udf`` read Arrow columns as NumPy buffer views, run
-the kernel over ``kernels.BLOCK_ROWS``-row blocks and wrap the result
+the kernel over ``arrowbuf.BLOCK_ROWS``-row blocks and wrap the result
 back into Arrow.  These tests pin that the wrapping changes nothing:
 the output equals a single NumPy pass bit for bit, a NaN result is
 NULL, a NULL input reads as NaN, integer columns read as float64, and
 block seams, the remainder block and an empty partition are harmless.
-The last test checks that a Python worker running the geo kernels
-never imports pandas.
+
+The corpus kernels (MinHash and SimHash signatures, the top-k
+candidate scan) are checked against their DuckDB twins on adversarial
+inputs: empty, all-space, NULL and non-ASCII text, sliced and empty
+Arrow arrays, NaN vectors and ties at the kth score.
+
+The guard tests check that a Python worker running the geo or the
+corpus kernels never imports pandas.
 """
 
 from __future__ import annotations
@@ -25,8 +31,11 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from geocoordinateconverter_spark import aft, geodesy, geoid, kernels
+from geocoordinateconverter_spark import (aft, arrowbuf, geodesy, geoid,
+                                          kernels)
 from geocoordinateconverter_spark.operators import knn
+from geocoordinateconverter_spark.operators import similarity as sim
+from geocoordinateconverter_spark.operators import textdedup as td
 
 ROOT = Path(__file__).resolve().parent.parent
 
@@ -168,7 +177,7 @@ def _inputs(n=40):
 def test_udf_funcs_blocked_in_process(spark, monkeypatch, n):
     """``.func`` on Arrow arrays with 7-row blocks: 5 full blocks and a
     5-row remainder (or no rows) equal one NumPy pass."""
-    monkeypatch.setattr(kernels, "BLOCK_ROWS", 7)
+    monkeypatch.setattr(arrowbuf, "BLOCK_ROWS", 7)
     x, y, h, fi, la = (v[:n] for v in _inputs())
     null = 3 if n else None
 
@@ -207,11 +216,174 @@ def test_udf_funcs_blocked_in_process(spark, monkeypatch, n):
     _assert_arrow_equals(pa.Table.from_struct_array(got), want)
 
 
+# --------------------------------------------------------------- corpus
+# Adversarial docs in one partition of 2·8192 + 5 rows (one Arrow
+# batch): empty, all-space, NULL, multi-space, tab and non-ASCII text
+# next to short generated docs that share many tokens.
+_ODD_TEXTS = ["", "   ", None, "Ünïcödé straße ünïcödé", "日本語 の テキスト 日本語",
+              "a  b   c", " lead and trail ", "x", "x x x x",
+              "emoji \U0001F642 \U0001F642 end", "tab\tinside word"]
+
+
+def _sql_text(t):
+    return "NULL" if t is None else "'" + t + "'"
+
+
+@pytest.fixture(scope="module")
+def odd_docs(spark):
+    cases = " ".join(f"WHEN {i} THEN {_sql_text(t)}"
+                     for i, t in enumerate(_ODD_TEXTS))
+    docs = spark.range(0, PART, 1, 1).selectExpr(
+        "id AS doc_id",
+        f"CASE id {cases} ELSE concat_ws(' ', 'w' || (id % 211), "
+        "'v' || (id % 17), 'y' || (id * 7 % 101), 'z' || (id % 5)) END AS text")
+    return docs, docs.toArrow()
+
+
+def _duck(sql: str, **tables) -> list[tuple]:
+    import duckdb
+    with duckdb.connect() as con:
+        for name, t in tables.items():
+            con.register(name, t)
+        return con.execute(sql).fetchall()
+
+
+def _sig_sql(docs: pa.Table) -> tuple[dict, dict]:
+    """{doc_id: MinHash signature list}, {doc_id: SimHash} from the
+    DuckDB twins over ``docs``."""
+    mh = _duck(f"SELECT doc_id, list(sig ORDER BY perm) FROM "
+               f"{td.MINHASH_SIG_SQL} q GROUP BY doc_id", documents=docs)
+    sh = _duck(f"SELECT doc_id, simhash FROM {td.SIMHASH_SQL} q",
+               documents=docs)
+    return dict(mh), dict(sh)
+
+
+def test_signature_udfs_equal_sql(odd_docs):
+    docs, table = odd_docs
+    mh = td.minhash_sig_array(docs).toArrow()
+    sh = td.simhash(docs).toArrow()
+    want_mh, want_sh = _sig_sql(table)
+    assert dict(zip(*mh.to_pydict().values())) == want_mh
+    assert dict(zip(*sh.to_pydict().values())) == want_sh
+    assert len(want_mh) == PART - 3 and not {0, 1, 2} & want_mh.keys()
+
+
+def test_signature_funcs_on_sliced_empty_and_null_lists(spark):
+    """``.func`` on a sliced token list column: an empty or NULL list
+    gives NULL, even a NULL whose offsets span tokens, and never a
+    neighbour's signature; 0 rows give 0 rows; a NULL token raises."""
+    toks = [["a", "b"], [], None, ["ü", "日本", "ü"], [], ["x"], ["b", "a"],
+            []]
+    arr = pa.array([["pad"]] * 3 + toks, pa.list_(pa.string())).slice(3)
+    # row 1 is NULL but spans the tokens "c", "d"
+    spanning = pa.ListArray.from_arrays(
+        pa.array([0, 2, 4, 5], pa.int32()), pa.array(list("abcde")),
+        mask=pa.array([False, True, False]))
+    cases = [(arr, toks), (spanning, [["a", "b"], None, ["e"]])]
+    for col, lists in cases:
+        want_mh, want_sh = _sig_sql(pa.table({
+            "doc_id": [i for i, t in enumerate(lists) if t],
+            "text": [" ".join(t) for t in lists if t]}))
+        want = [(want_mh.get(i), want_sh.get(i)) for i in range(len(lists))]
+        got_mh = td._minhash_sig_kernel().func(col)
+        got_sh = td._simhash_kernel().func(col)
+        assert list(zip(got_mh.to_pylist(), got_sh.to_pylist())) == want
+    for kern, type_ in ((td._minhash_sig_kernel(), pa.list_(pa.int64())),
+                        (td._simhash_kernel(), pa.int64())):
+        out = kern.func(arr.slice(0, 0))
+        assert len(out) == 0 and out.type == type_
+        with pytest.raises(ValueError, match="NULL token"):
+            kern.func(pa.array([["a", None]], pa.list_(pa.string())))
+
+
+def _nan_key(rows):
+    return sorted(tuple("nan" if isinstance(v, float) and np.isnan(v) else v
+                        for v in r) for r in rows)
+
+
+def test_brute_force_topk_equals_sql_nan_and_ties(spark):
+    """Every third vector is unique, the rest repeat 23 vectors, so
+    exact ties straddle the kth score; vectors 7 and 300 hold a NaN, so
+    7 scores NaN against every query (Spark and DuckDB rank NaN first)
+    and query 300 scores NaN against everything."""
+    elem = ("CASE WHEN id IN (7, 300) AND d = 5 THEN float('NaN') "
+            "WHEN id % 3 = 0 THEN float(((id * 2654435761 + d * 40503) "
+            "% 1000) / 1000.0 - 0.5) "
+            "ELSE float((((id % 23) * 7919 + d * 104729) % 1000) "
+            "/ 1000.0 - 0.5) END")
+    emb = spark.range(0, 2000, 1, 4).selectExpr(
+        "id AS vec_id",
+        f"transform(sequence(0, {sim.DIM - 1}), d -> {elem}) AS embedding")
+    qf = "vec_id % 100 = 0"
+    got = [tuple(r) for r in sim.brute_force_topk(emb, 5, qf).collect()]
+    want = _duck(sim.brute_force_topk_sql(5, qf), embeddings=emb.toArrow())
+    assert _nan_key(got) == _nan_key(want) and len(want) == 20 * 5
+    assert sum(r[1] == 7 for r in want) == 19  # NaN ranks first
+
+
+@pytest.mark.parametrize("mode", ["brute", "lsh", "pq_adc"])
+def test_topk_blocks_cover_topk_with_ties(monkeypatch, mode):
+    """``_topk_blocks`` in 7-row blocks over a sliced batch: every row
+    scoring at or above a query's kth-best score over the whole batch
+    (the top-k and all rows tied with the kth) is emitted with its
+    exact one-pass score, and nothing invalid is; 0 rows emit nothing."""
+    monkeypatch.setattr(arrowbuf, "BLOCK_ROWS", 7)
+    rng = np.random.default_rng(11)
+    n, k = 40, 3
+    X = rng.uniform(-0.5, 0.5, (6, sim.DIM)).astype(np.float32)[
+        rng.integers(0, 6, n)]  # ~7 copies each: ties at the kth score
+    q = [0, 9, 22, 30]
+    X[q] = rng.uniform(-0.5, 0.5, (len(q), sim.DIM))  # only self scores 1
+    X[5, 3] = X[17, 0] = X[30, 1] = np.nan  # query 30 scores NaN
+    ids = np.arange(100, 100 + n, dtype=np.int64)
+    p = sim._topk_payload(ids[q], X[q].astype(np.float64), mode)
+    vec_id = pa.array(np.r_[np.zeros(3, np.int64), ids]).slice(3)
+    emb = pa.array([[0.0] * sim.DIM] * 3 + X.tolist(),
+                   pa.list_(pa.float32())).slice(3)
+
+    S, valid = sim._score_block(p, mode, ids, X.astype(np.float64))
+    sel = np.where(np.isnan(S), np.inf, S)
+    got = {}
+    for b in sim._topk_blocks(p, mode, k, vec_id, emb):
+        for qi, vi, sc in zip(*b.to_pydict().values()):
+            got[qi, vi] = sc
+    for j, qid in enumerate(ids[q]):
+        cand = np.flatnonzero(valid[:, j])
+        if len(cand) == 0:  # no row shares the query's LSH bucket
+            continue
+        kth = np.sort(sel[cand, j])[::-1][min(k, len(cand)) - 1]
+        need = {(qid, ids[i]) for i in cand if sel[i, j] >= kth}
+        assert need <= got.keys(), (mode, qid)
+    for (qi, vi), sc in got.items():
+        i, j = vi - 100, q.index(qi - 100)
+        assert valid[i, j]
+        np.testing.assert_array_equal(sc, S[i, j])
+    assert not list(sim._topk_blocks(p, mode, k, vec_id.slice(0, 0),
+                                     emb.slice(0, 0)))
+
+
 # --------------------------------------------------------- pandas-free
-_GUARD = textwrap.dedent("""
+_PROBE = textwrap.dedent("""
     import numpy as np
     import pyarrow as pa
     from pyspark.sql.functions import arrow_udf
+
+    @arrow_udf("long")
+    def probe(v: pa.Array) -> pa.Array:
+        import sys
+        flag = (10 * ("geocoordinateconverter_spark.{module}" in sys.modules)
+                + ("pandas" in sys.modules))
+        return pa.Array.from_buffers(
+            pa.int64(), len(v), [None, pa.py_buffer(np.full(len(v), flag))])
+
+    # local[1] runs the 16 one-row tasks in turn, each on the head of
+    # the FIFO idle-worker pool, so every pooled worker answers
+    flags = spark.range(0, 16, 1, 16).select(probe("id")).collect()
+    print("PROBE", *sorted(set(r[0] for r in flags)))
+    spark.stop()
+""")
+
+_GEO_GUARD = textwrap.dedent("""
     from geocoordinateconverter_spark import kernels
     from geocoordinateconverter_spark.operators import knn
     from geocoordinateconverter_spark.plans.session import build_session
@@ -224,31 +396,65 @@ _GUARD = textwrap.dedent("""
                 df.select(kernels.transform_udf(7)("x", "y", "h")),
                 knn.knn_join(df, spark, key="id")):
         out.write.format("noop").mode("overwrite").save()
-
-    @arrow_udf("long")
-    def probe(v: pa.Array) -> pa.Array:
-        import sys
-        flag = (10 * ("geocoordinateconverter_spark.kernels" in sys.modules)
-                + ("pandas" in sys.modules))
-        return pa.Array.from_buffers(
-            pa.int64(), len(v), [None, pa.py_buffer(np.full(len(v), flag))])
-
-    print("PROBE", spark.range(1).select(probe("id")).first()[0])
-    spark.stop()
 """)
+
+_CORPUS_GUARD = textwrap.dedent("""
+    import sys
+    from geocoordinateconverter_spark.operators import (curation,
+                                                        similarity, textdedup)
+    print("IMPORT", int("pandas" in sys.modules))
+
+    from geocoordinateconverter_spark.plans.session import build_session
+
+    spark = build_session("pandas-free-guard", cores=1)
+    docs = spark.range(300).selectExpr(
+        "id AS doc_id", "concat_ws(' ', 'w' || (id % 17), 'v' || (id % 5), "
+        "'u' || (id % 3), 'the', 'end', 'of', 'it') AS text")
+    emb = spark.range(300).selectExpr(
+        "id AS vec_id", "transform(sequence(0, 63), d -> "
+        "float(((id * 31 + d * 17) % 101) / 101.0 - 0.5)) AS embedding")
+    for out in (textdedup.minhash_pairs(docs), textdedup.simhash(docs),
+                similarity.brute_force_topk(emb),
+                similarity.lsh_buckets(emb), similarity.pq_codes_rows(emb),
+                curation.decontaminate(docs)):
+        out.write.format("noop").mode("overwrite").save()
+""")
+
+
+def _run_guard(script: str, module: str) -> list[str]:
+    """stdout lines of ``script`` followed by the worker probe for
+    ``module``, run in its own interpreter (the test session's driver
+    has pandas loaded already).  The probe line lists the distinct
+    flags 10·(module loaded) + (pandas loaded) of the pooled workers."""
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g",
+               PYTHONPATH=os.pathsep.join(
+                   [str(ROOT), os.environ.get("PYTHONPATH", "")]))
+    res = subprocess.run(
+        [sys.executable, "-c", script + _PROBE.format(module=module)],
+        cwd=ROOT, env=env, capture_output=True, text=True, timeout=600)
+    lines = [ln for ln in res.stdout.splitlines()
+             if ln.startswith(("PROBE", "IMPORT"))]
+    assert res.returncode == 0 and lines, res.stderr[-3000:]
+    return lines
 
 
 def test_geo_worker_never_imports_pandas():
     """One local[1] session runs t=3, t=7 and kNN to the noop sink, then
-    a probe in the same pooled worker: the kernels module is loaded
-    there (so the probe saw the kernels' worker) and pandas is not.
-    The driver imports pandas as soon as a session starts, so only a
-    worker can tell."""
-    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g",
-               PYTHONPATH=os.pathsep.join(
-                   [str(ROOT), os.environ.get("PYTHONPATH", "")]))
-    res = subprocess.run([sys.executable, "-c", _GUARD], cwd=ROOT, env=env,
-                         capture_output=True, text=True, timeout=600)
-    lines = [ln for ln in res.stdout.splitlines() if ln.startswith("PROBE")]
-    assert res.returncode == 0 and lines, res.stderr[-3000:]
-    assert lines[-1] == "PROBE 10", "worker flag (10·kernels + pandas)"
+    probes its pooled workers: geodesy, which the t=3 kernel calls, is
+    loaded in one (so the probe saw the kernels' worker) and pandas in
+    none.  The driver imports pandas as soon as a session starts, so
+    only a worker can tell."""
+    lines = _run_guard(_GEO_GUARD, "geodesy")
+    assert lines[-1] in ("PROBE 10", "PROBE 0 10"), \
+        "worker flags (10·geodesy + pandas)"
+
+
+def test_corpus_worker_never_imports_pandas():
+    """The corpus modules import without pandas, and the pooled workers
+    of a local[1] session that ran the MinHash pairs, SimHash,
+    brute-force top-k, LSH bucket, PQ code and decontamination kernels
+    have no pandas, one of them with textdedup loaded."""
+    lines = _run_guard(_CORPUS_GUARD, "operators.textdedup")
+    assert lines[0] == "IMPORT 0", "pandas imported with the corpus modules"
+    assert lines[-1] in ("PROBE 10", "PROBE 0 10"), \
+        "worker flags (10·textdedup + pandas)"

@@ -4,8 +4,9 @@ operators to PLANS.md and assert the invariants we design for:
 
 * ArrowEvalPython only — never BatchEvalPython (no per-row Python) —
   and the flagship has one: the t=3 kernel (the PIP refine is Catalyst)
-* the geo kernels (flagship t=3, kNN) are Arrow UDFs (eval type 250),
-  so their workers never import pandas
+* the geo kernels (flagship t=3, kNN) and the MinHash / SimHash
+  signature kernels are Arrow UDFs (eval type 250), so their workers
+  never import pandas; each signature kernel runs once
 * PIP prefilter is a BroadcastHashJoin (never BroadcastNestedLoopJoin)
 * the distinct count per tile shuffles on (cell, key) before cell, so a
   hot cell spreads over reducers
@@ -84,6 +85,8 @@ def main() -> None:
         formatted(tiled)
     plans["minhash signatures (tokenize codegen → Arrow hash kernel)"] = \
         formatted(td.minhash_signatures(spark.table("documents")))
+    plans["simhash (tokenize codegen → Arrow fold kernel)"] = \
+        formatted(td.simhash(spark.table("documents")))
 
     checks = []
     flag_plan = plans["flagship: derive → t3 → PIP → distinct tile agg"]
@@ -124,6 +127,11 @@ def main() -> None:
                    "hashpartitioning" not in mh
                    and "rangepartitioning" not in mh
                    and "ArrowEvalPython" in mh))
+    sh = plans["simhash (tokenize codegen → Arrow fold kernel)"]
+    checks.append(("minhash and simhash signatures each run their kernel "
+                   "once, as an Arrow UDF (eval type 250)",
+                   arrow_eval_types(mh) == ["250"]
+                   and arrow_eval_types(sh) == ["250"]))
 
     # ---- global sweep: no BNLJ/Cartesian in ANY registered query ------
     # Building these queries EXECUTES them (streaming runs to
