@@ -26,8 +26,8 @@ import pyarrow as pa
 
 # Rows per kernel call inside one Arrow batch: bounds each kernel's
 # temporaries (AFT's (n, max_c, 2) vertex gathers, kNN's n × n_st
-# distance matrix, the top-k kernel's n × q score matrices)
-# independently of spark.sql.execution.arrow.maxRecordsPerBatch.
+# distance matrix) independently of
+# spark.sql.execution.arrow.maxRecordsPerBatch.
 BLOCK_ROWS = 8192
 
 
@@ -137,17 +137,11 @@ def to_arrow(v: np.ndarray, type_: pa.DataType,
                                  nulls)
 
 
-def list_array(rows: np.ndarray, item_type: pa.DataType,
-               valid: np.ndarray | None = None) -> pa.Array:
-    """``list<item_type>`` column of fixed-width rows: ``rows`` is
-    (m, width), one row per non-NULL slot in order; ``valid`` (n,) bool
-    marks those slots (all m by default), and a NULL slot is empty."""
-    m, width = rows.shape
-    if valid is None:
-        valid = np.ones(m, bool)
-    off = np.zeros(len(valid) + 1, np.int32)
-    np.cumsum(valid * np.int32(width), out=off[1:])
-    validity, nulls = _bitmap(valid)
+def list_array(rows: np.ndarray, item_type: pa.DataType) -> pa.Array:
+    """``list<item_type>`` column of the (n, width) fixed-width
+    ``rows``, one list per row."""
+    n, width = rows.shape
+    off = np.arange(0, (n + 1) * width, width, dtype=np.int32)
     return pa.Array.from_buffers(
-        pa.list_(item_type), len(valid), [validity, pa.py_buffer(off)],
-        nulls, children=[to_arrow(rows.reshape(-1), item_type)])
+        pa.list_(item_type), n, [None, pa.py_buffer(off)],
+        children=[to_arrow(rows.reshape(-1), item_type)])

@@ -26,7 +26,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
 
-from .. import arrowbuf
 from ..arrowbuf import i64, list_array, list_rows, to_arrow
 from ..functions.sqlgen import f as _flit
 
@@ -95,12 +94,12 @@ def brute_force_topk(emb: DataFrame, k: int = 5,
                      query_filter: str = "vec_id % 50 = 0") -> DataFrame:
     """Exact top-k cosine neighbours for the filtered query vectors.
 
-    Plan (r6): one Arrow map pass over the corpus scores each batch,
-    block by block, against the broadcast query matrix with the exact
-    d-ascending fold (bit-identical to the r5 unrolled-expression BNLJ,
-    which evaluated 192 element_at casts per pair), pre-selects per task
-    every row that can still reach the global top-k, and the window
-    ranks the few surviving candidates.  See the kernel section below.
+    Plan (r6): one Arrow map pass over the corpus scores whole batches
+    against the broadcast query matrix with the exact d-ascending fold
+    (bit-identical to the r5 unrolled-expression BNLJ, which evaluated
+    192 element_at casts per pair), pre-selects per task every row that
+    can still reach the global top-k, and the window ranks the few
+    surviving candidates.  See the kernel section below.
     """
     return _rank_topk(_topk_candidates(emb, "brute", k, query_filter),
                       k, "cos_sim")
@@ -1100,10 +1099,9 @@ def pq_train_replay_exact(V: np.ndarray, n_iter: int = 3):
 # computes the SAME fold (same operation order, same IEEE ops — NumPy
 # elementwise ops neither fuse nor reassociate — the rule the
 # quantizer kernels _ivf_scores_np/_pq_scores_np follow, pinned by pytest)
-# over (block × query) score matrices, BLOCK_ROWS rows of a batch at a
-# time, pre-selects per task every row that can still reach the global
-# top-k (score >= the running task-local kth score, so exact ties
-# survive), and emits only those candidate rows.
+# over (batch × query) score matrices, pre-selects per task every row
+# that can still reach the global top-k (score >= the task-local kth
+# score, so exact ties survive), and emits only those candidate rows.
 # The global row_number window then ranks a few hundred rows instead
 # of n·q pairs.  Results are bit-identical: scores are the same
 # float64s, and per-partition top-k union ⊇ global top-k is exact
@@ -1193,9 +1191,9 @@ def _topk_payload(q_ids: np.ndarray, Q: np.ndarray, mode: str,
     return payload
 
 
-def _score_block(p: dict, mode: str, ids: np.ndarray, X: np.ndarray):
-    """(score, valid) (len(ids), q) matrices of one block of corpus
-    rows against the payload's queries."""
+def _score_batch(p: dict, mode: str, ids: np.ndarray, X: np.ndarray):
+    """(score, valid) (len(ids), q) matrices of a batch of corpus rows
+    against the payload's queries."""
     valid = ids[:, None] != p["q_ids"][None, :]
     if mode in ("brute", "lsh", "ivf", "ivf_nprobe"):
         S = _fold_dot_mat(X, p["Q"])
@@ -1214,48 +1212,39 @@ def _score_block(p: dict, mode: str, ids: np.ndarray, X: np.ndarray):
     return S, valid
 
 
-def _topk_blocks(p: dict, mode: str, k: int, vec_id: pa.Array,
-                 emb: pa.Array):
-    """Candidate (q_id, vec_id, score) record batches of one Arrow
-    batch, scored ``arrowbuf.BLOCK_ROWS`` rows at a time so the
-    (block × q) matrices are bounded by the block.
-
-    ``best`` carries the k best ranking values per query seen so far in
-    the batch, so its minimum is a running kth-best threshold; each
-    block emits every candidate scoring >= it (exact ties included;
-    NaN ranks first, as Spark orders NaN greatest).  The threshold only
-    rises, so every row scoring >= the batch's final kth-best score is
-    emitted, which covers the batch's share of the global top-k."""
-    ids_all = i64(vec_id)
-    best = np.full((k, len(p["q_ids"])), -np.inf)
-    rows_per_block = arrowbuf.BLOCK_ROWS
-    for s in range(0, len(ids_all), rows_per_block):
-        ids = ids_all[s:s + rows_per_block]
-        X = list_rows(emb.slice(s, rows_per_block), DIM)
-        S, valid = _score_block(p, mode, ids, X)
-        sel = S.copy()
-        sel[np.isnan(sel)] = np.inf
-        sel[~valid] = -np.inf
-        n = len(ids)
-        kk = min(k, n)
-        top = np.partition(sel, n - kk, axis=0)[n - kk:]
-        best = np.partition(np.concatenate([best, top]), kk, axis=0)[kk:]
-        rows, cols = np.nonzero(valid & (sel >= best.min(axis=0)))
-        if len(rows) == 0:
-            continue
-        # a NaN score stays a value (not NULL): Spark ranks it greatest
-        yield pa.RecordBatch.from_arrays(
-            [to_arrow(p["q_ids"][cols], pa.int64()),
-             to_arrow(ids[rows], pa.int64()),
-             to_arrow(S[rows, cols], pa.float64(), np.ones(len(rows), bool))],
-            names=["q_id", "vec_id", "score"])
+def _topk_batch(p: dict, mode: str, k: int, vec_id: pa.Array,
+                emb: pa.Array) -> pa.RecordBatch | None:
+    """Candidate (q_id, vec_id, score) rows of one Arrow batch: every
+    valid row scoring >= the batch's kth-best score for the query
+    (exact ties included; NaN ranks first, as Spark orders NaN
+    greatest), which covers the batch's share of the global top-k.
+    None when nothing is emitted."""
+    ids = i64(vec_id)
+    n = len(ids)
+    if n == 0:
+        return None
+    S, valid = _score_batch(p, mode, ids, list_rows(emb, DIM))
+    sel = S.copy()
+    sel[np.isnan(sel)] = np.inf
+    sel[~valid] = -np.inf
+    kk = min(k, n)
+    thr = np.partition(sel, n - kk, axis=0)[n - kk]
+    rows, cols = np.nonzero(valid & (sel >= thr[None, :]))
+    if len(rows) == 0:
+        return None
+    # a NaN score stays a value (not NULL): Spark ranks it greatest
+    return pa.RecordBatch.from_arrays(
+        [to_arrow(p["q_ids"][cols], pa.int64()),
+         to_arrow(ids[rows], pa.int64()),
+         to_arrow(S[rows, cols], pa.float64(), np.ones(len(rows), bool))],
+        names=["q_id", "vec_id", "score"])
 
 
 def _topk_candidates(emb: DataFrame, mode: str, k: int, query_filter: str,
                      nprobe: int = 3) -> DataFrame:
     """(q_id, vec_id, score) candidate rows whose union provably
     contains every query's global top-k under (score DESC, vec_id ASC):
-    one ``mapInArrow`` pass of :func:`_topk_blocks` over the corpus
+    one ``mapInArrow`` pass of :func:`_topk_batch` over the corpus
     against the broadcast query payload."""
     spark = emb.sparkSession
     qt = emb.filter(query_filter).select("vec_id", "embedding").toArrow()
@@ -1270,8 +1259,10 @@ def _topk_candidates(emb: DataFrame, mode: str, k: int, query_filter: str,
     def kern(batches):
         p = bq.value
         for batch in batches:
-            yield from _topk_blocks(p, mode, k, batch.column("vec_id"),
-                                    batch.column("embedding"))
+            out = _topk_batch(p, mode, k, batch.column("vec_id"),
+                              batch.column("embedding"))
+            if out is not None:
+                yield out
 
     src = _split_scan(emb.select("vec_id", "embedding"))
     return src.mapInArrow(kern, schema)

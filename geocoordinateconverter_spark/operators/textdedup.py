@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
 
-from ..arrowbuf import i64, list_array, list_offsets, to_arrow, valid_mask
+from ..arrowbuf import i64, list_array, list_offsets, to_arrow
 
 K_MINHASH = 16
 N_BANDS = 4
@@ -101,24 +101,24 @@ def _token_segments(toks: pa.Array):
     """Batch vocabulary of a ``list<string>`` token column and where
     each row's tokens sit in it, read from the Arrow buffers.
 
-    Returns ``(vocab, inv, starts, lens, nonempty)``: ``vocab`` the
-    batch-distinct tokens (``dictionary_encode``), ``inv`` the
-    vocabulary index of every token of the batch in row order,
-    ``starts``/``lens`` the first token and token count of each
-    NON-EMPTY row, ``nonempty`` (n,) bool marking those rows.  An empty
-    segment would make ``ufunc.reduceat`` return its neighbour's value
-    (or raise ``IndexError`` at the end), so only non-empty rows are
-    segments; an empty row holds no token, so dropping it moves no
-    segment boundary.  A NULL token raises ``ValueError``."""
+    Returns ``(vocab, inv, starts, lens)``: ``vocab`` the batch-distinct
+    tokens (``dictionary_encode``), ``inv`` the vocabulary index of
+    every token of the batch in row order, ``starts``/``lens`` the first
+    token and token count of each row.  Every row must hold a token: an
+    empty segment would make ``ufunc.reduceat`` return its neighbour's
+    value (or raise ``IndexError`` at the end), so an empty or NULL
+    list raises ``ValueError``, as does a NULL token."""
     off = list_offsets(toks)
     lens = np.diff(off)
-    nonempty = lens > 0
+    if toks.null_count or (lens == 0).any():
+        raise ValueError("token list is empty or NULL; filter "
+                         "size(tokens) > 0 first")
     flat = toks.values.slice(off[0], off[-1] - off[0])
     enc = flat.dictionary_encode()
     if enc.indices.null_count:
         raise ValueError("token list holds a NULL token")
-    return (enc.dictionary.to_pylist(), i64(enc.indices),
-            (off[:-1] - off[0])[nonempty], lens[nonempty], nonempty)
+    return (enc.dictionary.to_pylist(), i64(enc.indices), off[:-1] - off[0],
+            lens)
 
 
 def _hash60_vocab(vocab: list[str], prefixes: list[str] | None):
@@ -146,29 +146,22 @@ def _hash60_vocab(vocab: list[str], prefixes: list[str] | None):
     return H
 
 
-def _row_validity(toks: pa.Array, nonempty: np.ndarray) -> np.ndarray:
-    """(n,) bool: the rows that get a value — non-empty, non-NULL."""
-    valid = valid_mask(toks)
-    return nonempty if valid is None else nonempty & valid
-
-
 def _minhash_sig_kernel():
     """array<bigint>[K_MINHASH] per token list: per-batch-unique md5,
     per-doc column-wise min (min over the multiset == min over the
     distinct set, so no array_distinct is needed), reduced one
-    permutation at a time so no tokens × K matrix is built.  An empty
-    or NULL token list gives NULL."""
+    permutation at a time so no tokens × K matrix is built.  Every
+    token list must be non-empty (:func:`_token_segments`)."""
     prefixes = [f"{p}:" for p in range(K_MINHASH)]
 
     @arrow_udf("array<bigint>")
     def _udf(toks: pa.Array) -> pa.Array:
-        vocab, inv, starts, _, nonempty = _token_segments(toks)
+        vocab, inv, starts, _ = _token_segments(toks)
         H = _hash60_vocab(vocab, prefixes)             # (K, V)
         sigs = np.empty((len(starts), K_MINHASH), np.int64)
         for p in range(K_MINHASH):
             sigs[:, p] = np.minimum.reduceat(H[p][inv], starts)
-        valid = _row_validity(toks, nonempty)
-        return list_array(sigs[valid[nonempty]], pa.int64(), valid)
+        return list_array(sigs, pa.int64())
 
     return _udf
 
@@ -190,10 +183,11 @@ def minhash_sig_array(docs: DataFrame) -> DataFrame:
 def minhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, perm, sig): sig = min over DISTINCT tokens of
     hash60(perm || ':' || token), derived by posexploding the map-only
-    signature array (explode at OUTPUT only, no shuffle).  The arrays
-    are never NULL or empty, so the ``_outer`` form explodes the same
-    rows; a plain posexplode makes Spark infer ``size(sigs) > 0`` and
-    push it below the kernel, which then runs twice."""
+    signature array (explode at OUTPUT only, no shuffle).  The kernel
+    never returns a NULL or empty array (it raises on an empty token
+    list), so the ``_outer`` form explodes the same rows; a plain
+    posexplode makes Spark infer ``size(sigs) > 0`` and push it below
+    the kernel, which then runs twice."""
     return minhash_sig_array(docs).select(
         "doc_id", F.posexplode_outer("sigs").alias("perm", "sig"))
 
@@ -353,13 +347,13 @@ def _simhash_kernel():
     60-bit SimHash.  O(total_tokens) memory (no T×60 matrix — one
     shifted int64 scratch vector per bit, segment-summed with
     ``np.add.reduceat``); exact integer arithmetic throughout, so the
-    result is independent of token order and batch boundaries.  An
-    empty or NULL token list gives NULL."""
+    result is independent of token order and batch boundaries.  Every
+    token list must be non-empty (:func:`_token_segments`)."""
     shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
 
     @arrow_udf("bigint")
     def _udf(toks: pa.Array) -> pa.Array:
-        vocab, inv, starts, lens, nonempty = _token_segments(toks)
+        vocab, inv, starts, lens = _token_segments(toks)
         flat = _hash60_vocab(vocab, None)[inv]
         cnt = np.empty((len(starts), SIMHASH_BITS), np.int64)
         tmp = np.empty_like(flat)
@@ -368,9 +362,8 @@ def _simhash_kernel():
             np.bitwise_and(tmp, 1, out=tmp)
             cnt[:, b] = np.add.reduceat(tmp, starts)
         s = 2 * cnt - lens[:, None]  # Σ±1 = 2·popcount − n_tokens
-        fp = np.zeros(len(toks), np.int64)
-        fp[nonempty] = ((s > 0).astype(np.int64) << shifts).sum(axis=1)
-        return to_arrow(fp, pa.int64(), _row_validity(toks, nonempty))
+        fp = ((s > 0).astype(np.int64) << shifts).sum(axis=1)
+        return to_arrow(fp, pa.int64())
 
     return _udf
 

@@ -11,7 +11,8 @@ block seams, the remainder block and an empty partition are harmless.
 The corpus kernels (MinHash and SimHash signatures, the top-k
 candidate scan) are checked against their DuckDB twins on adversarial
 inputs: empty, all-space, NULL and non-ASCII text, sliced and empty
-Arrow arrays, NaN vectors and ties at the kth score.
+Arrow arrays, empty and NULL token lists (which the signature kernels
+refuse), NaN vectors and ties at the kth score.
 
 The guard tests check that a Python worker running the geo or the
 corpus kernels never imports pandas.
@@ -269,27 +270,31 @@ def test_signature_udfs_equal_sql(odd_docs):
 
 
 def test_signature_funcs_on_sliced_empty_and_null_lists(spark):
-    """``.func`` on a sliced token list column: an empty or NULL list
-    gives NULL, even a NULL whose offsets span tokens, and never a
-    neighbour's signature; 0 rows give 0 rows; a NULL token raises."""
-    toks = [["a", "b"], [], None, ["ü", "日本", "ü"], [], ["x"], ["b", "a"],
-            []]
+    """``.func`` on a sliced token list column equals the SQL twins; an
+    empty or NULL list raises, even a NULL whose offsets span tokens,
+    and never gives a neighbour's signature or an ``IndexError``; 0 rows
+    give 0 rows; a NULL token raises."""
+    toks = [["a", "b"], ["ü", "日本", "ü"], ["x"], ["b", "a"]]
     arr = pa.array([["pad"]] * 3 + toks, pa.list_(pa.string())).slice(3)
+    want_mh, want_sh = _sig_sql(pa.table({
+        "doc_id": range(len(toks)), "text": [" ".join(t) for t in toks]}))
+    kerns = ((td._minhash_sig_kernel(), pa.list_(pa.int64()), want_mh),
+             (td._simhash_kernel(), pa.int64(), want_sh))
+    for kern, _, want in kerns:
+        assert kern.func(arr).to_pylist() == [want[i]
+                                              for i in range(len(toks))]
     # row 1 is NULL but spans the tokens "c", "d"
     spanning = pa.ListArray.from_arrays(
         pa.array([0, 2, 4, 5], pa.int32()), pa.array(list("abcde")),
         mask=pa.array([False, True, False]))
-    cases = [(arr, toks), (spanning, [["a", "b"], None, ["e"]])]
-    for col, lists in cases:
-        want_mh, want_sh = _sig_sql(pa.table({
-            "doc_id": [i for i, t in enumerate(lists) if t],
-            "text": [" ".join(t) for t in lists if t]}))
-        want = [(want_mh.get(i), want_sh.get(i)) for i in range(len(lists))]
-        got_mh = td._minhash_sig_kernel().func(col)
-        got_sh = td._simhash_kernel().func(col)
-        assert list(zip(got_mh.to_pylist(), got_sh.to_pylist())) == want
-    for kern, type_ in ((td._minhash_sig_kernel(), pa.list_(pa.int64())),
-                        (td._simhash_kernel(), pa.int64())):
+    bad = [pa.array([["a"], []], pa.list_(pa.string())),       # trailing
+           pa.array([[], ["a"]], pa.list_(pa.string())),       # leading
+           pa.array([["a"], None, ["b"]], pa.list_(pa.string())),
+           spanning]
+    for kern, type_, _ in kerns:
+        for col in bad:
+            with pytest.raises(ValueError, match="empty or NULL"):
+                kern.func(col)
         out = kern.func(arr.slice(0, 0))
         assert len(out) == 0 and out.type == type_
         with pytest.raises(ValueError, match="NULL token"):
@@ -322,12 +327,11 @@ def test_brute_force_topk_equals_sql_nan_and_ties(spark):
 
 
 @pytest.mark.parametrize("mode", ["brute", "lsh", "pq_adc"])
-def test_topk_blocks_cover_topk_with_ties(monkeypatch, mode):
-    """``_topk_blocks`` in 7-row blocks over a sliced batch: every row
-    scoring at or above a query's kth-best score over the whole batch
-    (the top-k and all rows tied with the kth) is emitted with its
-    exact one-pass score, and nothing invalid is; 0 rows emit nothing."""
-    monkeypatch.setattr(arrowbuf, "BLOCK_ROWS", 7)
+def test_topk_batch_covers_topk_with_ties(mode):
+    """``_topk_batch`` over a sliced batch: every valid row scoring at
+    or above a query's kth-best valid score (the top-k and all rows tied
+    with the kth) is emitted with its exact score, a query never
+    matches itself, and 0 rows emit nothing."""
     rng = np.random.default_rng(11)
     n, k = 40, 3
     X = rng.uniform(-0.5, 0.5, (6, sim.DIM)).astype(np.float32)[
@@ -341,12 +345,10 @@ def test_topk_blocks_cover_topk_with_ties(monkeypatch, mode):
     emb = pa.array([[0.0] * sim.DIM] * 3 + X.tolist(),
                    pa.list_(pa.float32())).slice(3)
 
-    S, valid = sim._score_block(p, mode, ids, X.astype(np.float64))
+    S, valid = sim._score_batch(p, mode, ids, X.astype(np.float64))
     sel = np.where(np.isnan(S), np.inf, S)
-    got = {}
-    for b in sim._topk_blocks(p, mode, k, vec_id, emb):
-        for qi, vi, sc in zip(*b.to_pydict().values()):
-            got[qi, vi] = sc
+    got = {(qi, vi): sc for qi, vi, sc in zip(
+        *sim._topk_batch(p, mode, k, vec_id, emb).to_pydict().values())}
     for j, qid in enumerate(ids[q]):
         cand = np.flatnonzero(valid[:, j])
         if len(cand) == 0:  # no row shares the query's LSH bucket
@@ -356,10 +358,10 @@ def test_topk_blocks_cover_topk_with_ties(monkeypatch, mode):
         assert need <= got.keys(), (mode, qid)
     for (qi, vi), sc in got.items():
         i, j = vi - 100, q.index(qi - 100)
-        assert valid[i, j]
+        assert valid[i, j] and qi != vi
         np.testing.assert_array_equal(sc, S[i, j])
-    assert not list(sim._topk_blocks(p, mode, k, vec_id.slice(0, 0),
-                                     emb.slice(0, 0)))
+    assert sim._topk_batch(p, mode, k, vec_id.slice(0, 0),
+                           emb.slice(0, 0)) is None
 
 
 # --------------------------------------------------------- pandas-free
