@@ -6,9 +6,11 @@ Slovenian datum pipeline (SURVEY.md; BASELINE.json north_star).
 
 Layout of this file:
   * ``entry``      — flagship end-to-end pipeline at sf0.001
-  * ``queries``    — one entry per implemented operator (SURVEY.md §2)
-  * ``oracle_sql`` — DuckDB twins; see functions/sqlgen.py for how the
-    numeric chains are replicated bit-for-bit in dialect-neutral SQL.
+  * the registry   — one row per query (SURVEY.md §2): its name, its
+    Spark build and its DuckDB twin side by side; see functions/sqlgen.py
+    for how the numeric chains are replicated bit-for-bit in
+    dialect-neutral SQL
+  * ``queries`` / ``oracle_sql`` — the registry's builds and twins
 
 Numeric outputs are rounded (mm-scale or finer) and, for value-listing
 queries, sampled — DuckDB and NumPy agree to ≤5e-9 m / 4e-14 deg
@@ -19,6 +21,7 @@ outputs (cells, tri ids, join partners, counts) are integer-exact.
 from __future__ import annotations
 
 import atexit
+import os
 import shutil
 import tempfile
 import weakref
@@ -27,15 +30,26 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from geocoordinateconverter_spark import api, kernels
+from geocoordinateconverter_spark import api, cells, kernels
 from geocoordinateconverter_spark.functions import sqlgen as sg
+from geocoordinateconverter_spark.operators import bboxjoin as bj
+from geocoordinateconverter_spark.operators import checkpoint as cp
+from geocoordinateconverter_spark.operators import curation as cu
+from geocoordinateconverter_spark.operators import geometry as geom
+from geocoordinateconverter_spark.operators import graph as graph_op
 from geocoordinateconverter_spark.operators import knn as knn_op
+from geocoordinateconverter_spark.operators import layout as lo
 from geocoordinateconverter_spark.operators import multimodal as mm
 from geocoordinateconverter_spark.operators import pip as pip_op
+from geocoordinateconverter_spark.operators import rangejoin as rj
 from geocoordinateconverter_spark.operators import similarity as sim
-from geocoordinateconverter_spark.operators import curation as cu
+from geocoordinateconverter_spark.operators import sketch as sk
 from geocoordinateconverter_spark.operators import textdedup as td
+from geocoordinateconverter_spark.operators import tiles as tiles_op
+from geocoordinateconverter_spark.sources import shapefile as shp
 from geocoordinateconverter_spark.sources import webpages as wp
+from geocoordinateconverter_spark.streaming import geopipeline as gp
+from geocoordinateconverter_spark.streaming import stateful
 from geocoordinateconverter_spark.streaming import windows as sw
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -116,14 +130,12 @@ SRC_TM_LINEITEM = (f"(SELECT k, {_TM['x']} AS x, {_TM['y']} AS y, "
 
 # Mixed coordinate-pair stream for the S2 classifier: kind cycles
 # through (fi,la), swapped (la,fi), (x,y), swapped (y,x) by k%4.
-_PW = sg.wgs_points_sql("k")
-_PG = sg.gk_points_sql("k")
 PAIR_SRC = (
     f"(SELECT k, "
-    f"case when k % 4 = 0 then {_PW['fi']} when k % 4 = 1 then {_PW['la']} "
-    f"when k % 4 = 2 then {_PG['x']} else {_PG['y']} end AS c1, "
-    f"case when k % 4 = 0 then {_PW['la']} when k % 4 = 1 then {_PW['fi']} "
-    f"when k % 4 = 2 then {_PG['y']} else {_PG['x']} end AS c2 "
+    f"case when k % 4 = 0 then {_WGS['fi']} when k % 4 = 1 then {_WGS['la']} "
+    f"when k % 4 = 2 then {_GK['x']} else {_GK['y']} end AS c1, "
+    f"case when k % 4 = 0 then {_WGS['la']} when k % 4 = 1 then {_WGS['fi']} "
+    f"when k % 4 = 2 then {_GK['y']} else {_GK['x']} end AS c2 "
     f"FROM (SELECT event_id AS k FROM events) q_k) q_pair")
 
 # Synthetic WKT geometry table for the gk-shp analogue: pentagon per
@@ -201,11 +213,10 @@ SHP_ZM_SRC = _shp_zm_src()
 # deterministic with one NULL per geometry (vid 5) for the NODATA
 # sentinel roundtrip.
 def _shp_mp_src() -> str:
-    from geocoordinateconverter_spark.sources import shapefile as _shp
     sels = []
-    for part, ptype, vids in ((0, _shp.MP_TRIANGLE_STRIP, (0, 1, 2, 3)),
-                              (1, _shp.MP_OUTER_RING, (4, 5, 6, 7)),
-                              (2, _shp.MP_INNER_RING, (8, 9, 10))):
+    for part, ptype, vids in ((0, shp.MP_TRIANGLE_STRIP, (0, 1, 2, 3)),
+                              (1, shp.MP_OUTER_RING, (4, 5, 6, 7)),
+                              (2, shp.MP_INNER_RING, (8, 9, 10))):
         for j in vids:
             p = sg.tm_points_sql(f"(geom_id * 32 + {j})")
             m = ("cast(NULL as double)" if j == 5 else
@@ -258,6 +269,12 @@ DMS_FMT_SQL = (
     f"cast(cast(floor(({_TOT} % 36000) / 600.0e0) as bigint) as string), 'm', "
     f"printf('%.1f', cast({_TOT} % 600 as double) / 10.0e0), 's')")
 
+# the synthesized page tables (sources/webpages.py) as FROM items; the
+# Spark builds and the DuckDB twins read them from the same text
+PAGES = f"{wp.webpages_sql('documents')} w"
+LOCALE_PAGES = f"{wp.locale_pages_sql('documents')} w"
+MULTI_PAGES = f"{wp.multi_mention_pages_sql('documents')} w"
+
 
 # ===========================================================================
 # entry — flagship pipeline (SURVEY.md §8 M2): web corpus → geoparse →
@@ -268,9 +285,7 @@ DMS_FMT_SQL = (
 def entry(spark: SparkSession) -> DataFrame:
     sf_dir = "/root/testdata/sf0.001"
     _register(spark, sf_dir)
-    pages = spark.sql(f"SELECT * FROM {wp.webpages_sql('documents')} w")
-    pages.createOrReplaceTempView("webpages")
-    gk = spark.sql(f"SELECT * FROM {wp.geoparse_gk_sql('webpages')} g")
+    gk = spark.sql(f"SELECT * FROM {wp.geoparse_gk_sql(PAGES)} g")
     t3 = kernels.transform_udf(3)
     conv = (gk.withColumn("out", t3(F.col("x"), F.col("y"), F.col("h")))
               .select("url", F.col("out.fi").alias("fi"),
@@ -283,10 +298,6 @@ def entry(spark: SparkSession) -> DataFrame:
                   F.round(F.avg("h"), 3).alias("avg_h")))
     return tiles
 
-
-# ===========================================================================
-# queries / oracle_sql
-# ===========================================================================
 
 # clustered ANN fixture (r5), one slot: ((applicationId, sf_dir),
 # persisted frame).  Persisted so CollapseProject cannot inline the
@@ -317,1156 +328,144 @@ def clear_clustered_memo() -> None:
     _CLUSTERED_MEMO.clear()
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
-    # ---- S3: northing normalizer (gk-slo.c input normalize) --------------
-    def q_normalize(spark, sf_dir):
-        _register(spark, sf_dir)
-        return spark.sql(
-            f"SELECT k, x AS x_raw, "
-            f"case when x > 1000000.0e0 then x - 5000000.0e0 else x end AS x_red, y "
-            f"FROM {SRC_GK_LINEITEM} WHERE k % 7 = 0")
-    q["s3_normalize_northing"] = q_normalize
-
-    # ---- t-chain value queries (sampled; Arrow-UDF kernels) --------------
-    def _chain_query(t: int, src_sql: str, sample: str, out_round):
-        # out_round: decimals per output col; None = pass-through value
-        # that is bit-identical to the oracle's (rounding would only
-        # introduce decimal-midpoint HALF_UP-vs-float divergence).
-        # height_mode="ht" on every chain: the oracle's chain SQL carries
-        # the transformed height (t=1/2 default to hg).
-        def run(spark, sf_dir):
-            _register(spark, sf_dir)
-            src = spark.sql(f"SELECT * FROM {src_sql} WHERE {sample}")
-            out = api.convert(src, t, height_mode="ht")
-            cols = (("fi", "la", "h") if t in kernels.GEOGRAPHIC_OUT
-                    else ("x", "y", "h"))
-            return out.select("k", *[
-                (F.col(f"{c}_out") if nd is None
-                 else F.round(f"{c}_out", nd)).alias(f"{c}_out")
-                for c, nd in zip(cols, out_round)])
-        return run
-
-    q["t3_gk_to_wgs84"] = _chain_query(3, SRC_GK_LINEITEM, "k % 37 = 0", (8, 8, 2))
-    q["t1_tm_to_wgs84"] = _chain_query(1, SRC_GK_LINEITEM, "k % 41 = 0", (8, 8, None))
-    q["t2_wgs84_to_tm"] = _chain_query(2, SRC_WGS_ORDERS, "k % 11 = 0", (2, 2, None))
-    q["t5_gk_to_tm"] = _chain_query(5, SRC_GK_LINEITEM, "k % 43 = 0", (2, 2, 2))
-
-    # ---- flagship tile aggregation (t3 → cell → groupBy) -----------------
-    def q_tile(spark, sf_dir):
-        _register(spark, sf_dir)
-        src = spark.sql(f"SELECT * FROM {SRC_GK_LINEITEM}")
-        t3 = kernels.transform_udf(3)
-        conv = src.withColumn("out", t3(F.col("x"), F.col("y"), F.col("h")))
-        return (conv
-                .withColumn("cell", kernels.cell_col(F.col("out.fi"), F.col("out.la"), 7))
-                .groupBy("cell")
-                .agg(F.count("*").alias("n_pts"),
-                     F.round(F.avg("out.h"), 3).alias("avg_h")))
-    q["tile_t3_cells"] = q_tile
-
-    # ---- raster↔vector rollup: res7 → res5 parent cells ------------------
-    def q_rollup(spark, sf_dir):
-        _register(spark, sf_dir)
-        src = spark.sql(f"SELECT * FROM {_src_wgs('o_orderkey', 'orders')}")
-        c7 = kernels.cell_col(F.col("fi"), F.col("la"), 7)
-        df = src.withColumn("cell7", c7).withColumn(
-            "cell5", kernels.parent_cell_col(F.col("cell7"), 2))
-        return df.groupBy("cell5").agg(F.count("*").alias("n_pts"))
-    q["tile_rollup_res5"] = q_rollup
-
-    # ---- geoparse (S2) + passthrough invariant ---------------------------
-    def q_pages_md5(spark, sf_dir):
-        _register(spark, sf_dir)
-        pages = spark.sql(f"SELECT * FROM {wp.webpages_sql('documents')} w")
-        return pages.select("url", F.md5(F.col("page_text")).alias("text_md5"),
-                            F.length("page_text").alias("text_len"))
-    q["webpages_text_passthrough"] = q_pages_md5
-
-    def q_hint_schema(spark, sf_dir):
-        # BASELINE.json input_hint fidelity: the synthesized corpus in
-        # exactly the hinted shape (url, warc_ts, html binary, text,
-        # lang); binary + text carried as md5 so the hash compare is
-        # byte-level (the north rule's byte-identical-text invariant)
-        _register(spark, sf_dir)
-        pages = spark.sql(f"SELECT * FROM {wp.webpages_sql('documents')} w")
-        html = F.encode(
-            F.concat(F.lit("<html><body>"), F.col("page_text"),
-                     F.lit("</body></html>")), "utf-8")
-        return pages.select(
-            "url", "warc_ts", F.md5(html).alias("html_md5"),
-            F.md5("page_text").alias("text_md5"), "lang")
-    q["webpages_hint_schema"] = q_hint_schema
-
-    def q_extract(spark, sf_dir):
-        # north-rule per-row invariant, exercised in its real shape:
-        # html arrives as a BINARY column, text is extracted from it
-        # (decode -> markup strip) and must be byte-identical per url
-        # to the source text — md5-checked, with the flag visible.
-        _register(spark, sf_dir)
-        docs = mm.html_binary(spark.table("documents"))
-        extracted = F.regexp_extract(
-            F.decode("html", "utf-8"),
-            "(?s)^<html><body>(.*)</body></html>$", 1)
-        return (docs
-                .withColumn("extracted_md5", F.md5(extracted))
-                .withColumn("text_md5", F.md5("text"))
-                .select("doc_id", "text_md5", "extracted_md5",
-                        (F.col("extracted_md5") == F.col("text_md5"))
-                        .alias("byte_identical")))
-    q["html_text_extract"] = q_extract
-
-    def q_geoparse_dd(spark, sf_dir):
-        _register(spark, sf_dir)
-        pages = spark.sql(f"SELECT * FROM {wp.webpages_sql('documents')} w")
-        pages.createOrReplaceTempView("webpages")
-        return spark.sql(
-            f"SELECT url, fi, la FROM {wp.geoparse_dd_sql('webpages')} g")
-    q["geoparse_decimal_degrees"] = q_geoparse_dd
-
-    def q_geoparse_multi(spark, sf_dir):
-        _register(spark, sf_dir)
-        spark.sql(f"SELECT * FROM {wp.multi_mention_pages_sql('documents')} w") \
-             .createOrReplaceTempView("multipages")
-        return wp.geoparse_multi_spark(spark, "multipages")
-    q["geoparse_multi_mention"] = q_geoparse_multi
-
-    def q_geoparse_dms(spark, sf_dir):
-        _register(spark, sf_dir)
-        pages = spark.sql(f"SELECT * FROM {wp.webpages_sql('documents')} w")
-        pages.createOrReplaceTempView("webpages")
-        return spark.sql(
-            f"SELECT url, round(fi, 6) AS fi, round(la, 6) AS la "
-            f"FROM {wp.geoparse_dms_sql('webpages')} g")
-    q["geoparse_dms"] = q_geoparse_dms
-
-    # ---- widened parser surface (util.c F4/F1, r2): comma decimals,
-    # symbol DMS, optional height default, -r swapped pairs ----------------
-    def _locale_pages(spark, sf_dir):
-        _register(spark, sf_dir)
-        spark.sql(f"SELECT * FROM {wp.locale_pages_sql('documents')} w") \
-             .createOrReplaceTempView("localepages")
-        return "localepages"
-
-    def q_geoparse_comma(spark, sf_dir):
-        v = _locale_pages(spark, sf_dir)
-        return spark.sql(f"SELECT url, fi, la FROM {wp.geoparse_comma_sql(v)} g")
-    q["geoparse_comma_decimal"] = q_geoparse_comma
-
-    def q_geoparse_sym(spark, sf_dir):
-        v = _locale_pages(spark, sf_dir)
-        return spark.sql(
-            f"SELECT url, round(fi, 6) AS fi, round(la, 6) AS la "
-            f"FROM {wp.geoparse_symbol_dms_sql(v)} g")
-    q["geoparse_symbol_dms"] = q_geoparse_sym
-
-    def q_geoparse_height(spark, sf_dir):
-        v = _locale_pages(spark, sf_dir)
-        return spark.sql(
-            f"SELECT url, fi, la, h, has_h "
-            f"FROM {wp.geoparse_height_default_sql(v)} g")
-    q["geoparse_height_default"] = q_geoparse_height
-
-    def q_geoparse_swapped(spark, sf_dir):
-        v = _locale_pages(spark, sf_dir)
-        return spark.sql(
-            f"SELECT url, fi, la, kind FROM {wp.geoparse_swapped_sql(v)} g")
-    q["geoparse_swapped_pair"] = q_geoparse_swapped
-
-    # ---- PIP join (broadcast cover cell + Catalyst ray-cast refine) -----
-    def q_pip(spark, sf_dir):
-        _register(spark, sf_dir)
-        pts = spark.sql(f"SELECT * FROM {_src_wgs('o_orderkey', 'orders')}")
-        return (pip_op.pip_join(pts, spark)
-                .select(F.col("k"), F.col("mun_id")))
-    q["pip_join_municipalities"] = q_pip
-
-    def q_pip_tile(spark, sf_dir):
-        _register(spark, sf_dir)
-        pts = spark.sql(f"SELECT * FROM {_src_wgs('o_orderkey', 'orders')}")
-        return (pip_op.pip_join(pts, spark)
-                .groupBy("mun_id").agg(F.count("*").alias("n_pts"),
-                                       F.min("h").alias("min_h"),
-                                       F.max("h").alias("max_h")))
-    q["pip_tile_agg"] = q_pip_tile
-
-    def q_tile_topk(spark, sf_dir):
-        _register(spark, sf_dir)
-        from geocoordinateconverter_spark.operators import tiles as tiles_op
-        pts = spark.sql(f"SELECT * FROM {_src_wgs('o_orderkey', 'orders')}")
-        return tiles_op.tile_topk_points(pts, key="k", res=5, k=3)
-    q["tile_topk_applyinpandas"] = q_tile_topk
-
-    # ---- kNN join --------------------------------------------------------
-    def q_knn(spark, sf_dir):
-        _register(spark, sf_dir)
-        pts = spark.sql(f"SELECT * FROM {_src_wgs('o_orderkey', 'orders')}")
-        return (knn_op.knn_join(pts, spark, key="k", k=3)
-                .select("k", "station_id", "dist2", "rk"))
-    q["knn_join_stations"] = q_knn
-
-    # ---- ε-radius distance join (within-R spatial join) ------------------
-    def q_radius(spark, sf_dir):
-        _register(spark, sf_dir)
-        pts = spark.sql(f"SELECT * FROM {_src_wgs('o_orderkey', 'orders')}")
-        return (knn_op.radius_join(pts, spark)
-                .select("k", "station_id", "dist2"))
-    q["radius_join_stations"] = q_radius
-
-    # ---- host-graph PageRank (iterative dataflow, int64 fixed-point) -----
-    def q_pagerank(spark, sf_dir):
-        _register(spark, sf_dir)
-        from geocoordinateconverter_spark.operators import graph as graph_op
-        return graph_op.pagerank_hosts(spark.table("orders"), spark)
-    q["pagerank_hosts"] = q_pagerank
-
-    # ---- polygon-polygon bbox-intersects join (spatial hash join) --------
-    def q_bbox_join(spark, sf_dir):
-        _register(spark, sf_dir)
-        from geocoordinateconverter_spark.operators import bboxjoin as bj
-        return bj.bbox_intersects_join(bj.parcels_df(spark), spark)
-    q["bbox_intersects_join"] = q_bbox_join
-
-    def q_kring(spark, sf_dir):
-        _register(spark, sf_dir)
-        from geocoordinateconverter_spark.operators import tiles as tiles_op
-        pts = spark.sql(f"SELECT * FROM {_src_wgs('o_orderkey', 'orders')}")
-        return tiles_op.kring_smooth(pts, res=5)
-    q["tile_kring_smooth"] = q_kring
-
-    # ---- AFT point location (A1/A2) --------------------------------------
-    def q_aft(spark, sf_dir):
-        _register(spark, sf_dir)
-        src = spark.sql(
-            f"SELECT k, case when x > 1000000.0e0 then x - 5000000.0e0 else x end AS x, y "
-            f"FROM {SRC_GK_LINEITEM}")
-        loc = kernels.aft_locate_udf("gk_tm")
-        return src.select("k", loc(F.col("x"), F.col("y")).alias("tri_id"))
-    q["aft_locate_triangle"] = q_aft
-
-    # ---- geoid sampling (A4) ---------------------------------------------
-    def q_geoid(spark, sf_dir):
-        _register(spark, sf_dir)
-        src = spark.sql(f"SELECT * FROM {_src_wgs('o_orderkey', 'orders')}")
-        g = kernels.geoid_udf("slo")
-        return src.select("k", F.round(g(F.col("fi"), F.col("la")), 6).alias("geoid_n"))
-    q["geoid_bilinear"] = q_geoid
-
-    def q_geoid_egm(spark, sf_dir):
-        _register(spark, sf_dir)
-        src = spark.sql(f"SELECT * FROM {_src_wgs('o_orderkey', 'orders')} "
-                        f"WHERE k % 3 = 0")
-        g = kernels.geoid_udf("egm")
-        return src.select("k", F.round(g(F.col("fi"), F.col("la")), 6)
-                          .alias("geoid_n"))
-    q["geoid_bilinear_egm"] = q_geoid_egm
-
-    # ---- remaining chains: t4/t6 (Helmert inverse), t7–t10 (AFT) ---------
-    q["t4_wgs84_to_gk"] = _chain_query(4, SRC_WGS_ORDERS, "k % 13 = 0", (2, 2, 2))
-    q["t6_tm_to_gk"] = _chain_query(6, SRC_GK_LINEITEM, "k % 47 = 0", (2, 2, 2))
-    # AFT chains are exact affine arithmetic on bit-identical inputs →
-    # no rounding needed for t9/t10; t7 ends in libm (inverse proj).
-    q["t9_gk_to_tm_aft"] = _chain_query(9, SRC_GK_LINEITEM, "k % 53 = 0",
-                                        (None, None, None))
-    q["t7_gk_to_wgs84_aft"] = _chain_query(7, SRC_GK_LINEITEM, "k % 59 = 0",
-                                           (8, 8, None))
-
-    q["t8_wgs84_to_gk_aft"] = _chain_query(8, SRC_WGS_ORDERS, "k % 19 = 0",
-                                           (2, 2, None))
-
-    q["t10_tm_to_gk_aft"] = _chain_query(10, SRC_TM_LINEITEM, "k % 61 = 0",
-                                         (None, None, None))
-
-    # ---- height modes (A6): physical H = h − N (hg) ----------------------
-    def q_height_hg(spark, sf_dir):
-        _register(spark, sf_dir)
-        src = spark.sql(f"SELECT * FROM {_src_wgs('o_orderkey', 'orders')}")
-        g = kernels.geoid_udf("slo")
-        return src.select(
-            "k", F.round(F.col("h") - g(F.col("fi"), F.col("la")), 6)
-            .alias("big_h"))
-    q["height_mode_hg"] = q_height_hg
-
-    # ---- A6: explicit height-mode override (-hg on the Helmert chain;
-    # default for t3 is -ht — HEIGHT_MODE_DEFAULTS is the A6 table) --------
-    def q_height_override(spark, sf_dir):
-        _register(spark, sf_dir)
-        src = spark.sql(f"SELECT * FROM {SRC_GK_LINEITEM} WHERE k % 23 = 0")
-        out = api.convert(src, t=3, height_mode="hg")
-        return out.select("k", F.round("fi_out", 8).alias("fi_out"),
-                          F.round("la_out", 8).alias("la_out"),
-                          F.round("h_out", 2).alias("h_out"))
-    q["height_mode_override_t3_hg"] = q_height_override
-
-    # ---- gk-slo CLI parity surface (api.py): -x self-test + -r path ------
-    def q_selftest(spark, sf_dir):
-        return api.self_test(spark)
-    q["selftest_golden_chains"] = q_selftest
-
-    def q_cli_reverse(spark, sf_dir):
-        # -r: the source arrives (la, fi)-swapped; convert() re-swaps
-        _register(spark, sf_dir)
-        src = spark.sql(
-            f"SELECT k, la AS c_la, fi AS c_fi, h FROM "
-            f"{_src_wgs('o_orderkey', 'orders')} WHERE k % 29 = 0")
-        out = api.convert(src, t=2, height_mode="ht", reverse=True,
-                          cols=("c_la", "c_fi", "h"))
-        return out.select("k", F.round("x_out", 2).alias("x_out"),
-                          F.round("y_out", 2).alias("y_out"))
-    q["cli_reverse_t2"] = q_cli_reverse
-
-    # ---- DMS formatting (util.c F2) — pure codegen arithmetic ------------
-    def q_dms_format(spark, sf_dir):
-        _register(spark, sf_dir)
-        return spark.sql(
-            f"SELECT k, {DMS_FMT_SQL} AS dms FROM {SRC_WGS_ORDERS} "
-            f"WHERE k % 17 = 0")
-    q["dms_format"] = q_dms_format
-
-    # ---- S2: free-format pair classification (magnitude + -r swap) -------
-    def q_classify(spark, sf_dir):
-        _register(spark, sf_dir)
-        return spark.sql(
-            f"SELECT k, kind, a1, a2 "
-            f"FROM {wp.classify_pair_sql(PAIR_SRC, 'c1', 'c2')} q")
-    q["coord_pair_classify"] = q_classify
-
-    # ---- malformed-input policy (gk-slo.c: warn + skip, SURVEY §4.1) -----
-    def q_parse_rejects(spark, sf_dir):
-        # docs whose text carries no parseable coordinate mention are
-        # counted per lang and skipped, never aborting the job — the
-        # engine analogue of the reference's per-line warning + continue
-        _register(spark, sf_dir)
-        pages = spark.sql(f"SELECT * FROM {wp.webpages_sql('documents')} w")
-        pages.createOrReplaceTempView("webpages")
-        parsed = F.regexp_extract("page_text", wp.RE_DD, 1) != ""
-        parsed = parsed | (F.regexp_extract("page_text", wp.RE_GK, 1) != "")
-        parsed = parsed | (F.regexp_extract("page_text", wp.RE_DMS, 1) != "")
-        return (spark.table("webpages")
-                .withColumn("ok", parsed)
-                .groupBy("lang")
-                .agg(F.count("*").alias("n_docs"),
-                     F.sum(F.when(F.col("ok"), 1).otherwise(0)).alias("n_parsed"),
-                     F.sum(F.when(~F.col("ok"), 1).otherwise(0)).alias("n_rejected")))
-    q["geoparse_reject_stats"] = q_parse_rejects
-
-    # ---- spatial measures: shoelace area/centroid, haversine -------------
-    def q_area(spark, sf_dir):
-        from geocoordinateconverter_spark.operators import geometry as geom
-        _register(spark, sf_dir)
-        verts = spark.sql(f"SELECT geom_id, vid, x, y FROM {SHP_VERT_SRC}")
-        return geom.polygon_area_centroid(verts, n_verts=5)
-    q["polygon_area_centroid"] = q_area
-
-    def q_haversine(spark, sf_dir):
-        _register(spark, sf_dir)
-        src = spark.sql(f"SELECT * FROM {_src_wgs('o_orderkey', 'orders')} "
-                        f"WHERE k % 5 = 0")
-        fi0, la0 = 46.0569, 14.5058  # Ljubljana reference point
-        dphi2 = (F.radians(F.col("fi")) - F.radians(F.lit(fi0))) / 2.0
-        dlam2 = (F.radians(F.col("la")) - F.radians(F.lit(la0))) / 2.0
-        h = (F.sin(dphi2) * F.sin(dphi2)
-             + F.cos(F.radians(F.lit(fi0))) * F.cos(F.radians(F.col("fi")))
-             * F.sin(dlam2) * F.sin(dlam2))
-        dist = 2.0 * 6371000.0 * F.asin(F.sqrt(h))
-        # 2 dp (cm grain on metres): Java Math vs C libm trig differ by
-        # ulps (~1e-10 abs at this magnitude), so leave ≥7 orders of
-        # margin above the noise instead of rounding at 4 dp where a
-        # boundary value could flip the last digit (ADVICE r3).
-        return src.select("k", F.round(dist, 2).alias("dist_m"))
-    q["haversine_to_ljubljana"] = q_haversine
-
-    # ---- S5/S6: gk-shp analogue — WKT vertex-array conversion ------------
-    def q_geom(spark, sf_dir):
-        _register(spark, sf_dir)
-        from geocoordinateconverter_spark.operators import geometry as geom
-        src = spark.sql(f"SELECT * FROM {GEOM_SRC} g")
-        return geom.convert_geometry(src, t=5)
-    q["geometry_wkt_convert"] = q_geom
-
-    # ---- S5/S6: REAL shapefile I/O (binary .shp/.shx/.dbf roundtrip,
-    # then per-vertex t5 conversion — the full gk-shp lifecycle) -----------
-    def q_shp_roundtrip(spark, sf_dir):
-        import tempfile
-
-        from geocoordinateconverter_spark.sources import shapefile as shp
-        _register(spark, sf_dir)
-        src = spark.sql(f"SELECT * FROM {SHP_VERT_SRC}")
-        base = _tmpdir("shp_roundtrip_") + "/geoms"
-        shp.df_to_shapefile(
-            src.select("geom_id", F.lit(0).alias("part"), "vid", "x", "y"),
-            base, shp.SHP_POLYGON)
-        verts = shp.shapefile_to_df(spark, base)  # bit-exact roundtrip
-        udf = kernels.transform_udf(5)
-        conv = verts.withColumn("o", udf(F.col("x"), F.col("y"), F.lit(0.0)))
-        return conv.select("geom_id", "vid",
-                           F.round("o.x", 2).alias("x_out"),
-                           F.round("o.y", 2).alias("y_out"))
-    q["shapefile_roundtrip_convert"] = q_shp_roundtrip
-
-    # ---- S5/S6 breadth (r3): PolyLine shapes + multi-field DBF (N+C)
-    # attribute passthrough — gk-shp copies every attribute verbatim ---
-    def q_shp_attrs(spark, sf_dir):
-        import tempfile
-
-        from geocoordinateconverter_spark.sources import shapefile as shp
-        _register(spark, sf_dir)
-        verts = (spark.sql(f"SELECT * FROM {SHP_LINE_SRC}")
-                 .select("geom_id", F.lit(0).alias("part"), "vid", "x", "y"))
-        attrs = spark.sql(f"SELECT * FROM {SHP_ATTR_SRC}")
-        base = _tmpdir("shp_attrs_") + "/lines"
-        shp.df_to_shapefile(verts, base, shp.SHP_POLYLINE, attrs=attrs)
-        back_v = shp.shapefile_to_df(spark, base)  # bit-exact vertices
-        back_a = shp.dbf_to_df(spark, base)        # DBF N+C fields
-        return (back_v.join(back_a, "geom_id")
-                .select("geom_id", "vid", "x", "y", "name", "pop"))
-    q["shapefile_attrs_passthrough"] = q_shp_attrs
-
-    # ---- S5/S6 breadth (r4): PolygonZ with hole rings — Z/M vertex
-    # values and part/ring order must survive the binary roundtrip
-    # bit-exactly, then (x, y, z) converts through the same t5 chain;
-    # the file's M-NODATA sentinel maps back to NULL on output -------
-    def q_shp_zm(spark, sf_dir):
-        import tempfile
-
-        from geocoordinateconverter_spark.sources import shapefile as shp
-        _register(spark, sf_dir)
-        verts = (spark.sql(f"SELECT * FROM {SHP_ZM_SRC}")
-                 .select("geom_id", "part", "vid", "x", "y",
-                         F.col("h").alias("z"),
-                         F.col("mz").alias("m")))
-        base = _tmpdir("shp_zm_") + "/polyz"
-        shp.df_to_shapefile(verts, base, shp.SHP_POLYGONZ)
-        back = shp.shapefile_to_df(spark, base)  # bit-exact x/y/z/m
-        udf = kernels.transform_udf(5)
-        conv = back.withColumn("o", udf(F.col("x"), F.col("y"),
-                                        F.col("z")))
-        return conv.select(
-            "geom_id", "part", "vid",
-            F.round("o.x", 2).alias("x_out"),
-            F.round("o.y", 2).alias("y_out"),
-            F.round("o.h", 2).alias("z_out"),
-            F.when(F.col("m") < -1e38,
-                   F.lit(None).cast("double"))
-             .otherwise(F.col("m")).alias("m_out"))
-    q["shapefile_zm_multipart_roundtrip"] = q_shp_zm
-
-    def q_shp_multipatch(spark, sf_dir):
-        import tempfile
-
-        from geocoordinateconverter_spark.sources import shapefile as shp
-        _register(spark, sf_dir)
-        verts = (spark.sql(f"SELECT * FROM {SHP_MP_SRC}")
-                 .select("geom_id", "part", "vid", "x", "y",
-                         F.col("h").alias("z"), F.col("mz").alias("m"),
-                         "part_type"))
-        base = _tmpdir("shp_mp_") + "/patch"
-        shp.df_to_multipatch(verts, base)
-        back = shp.multipatch_to_df(spark, base)  # bit-exact x/y/z/m+types
-        udf = kernels.transform_udf(5)
-        conv = back.withColumn("o", udf(F.col("x"), F.col("y"),
-                                        F.col("z")))
-        return conv.select(
-            "geom_id", "part", "part_type", "vid",
-            F.round("o.x", 2).alias("x_out"),
-            F.round("o.y", 2).alias("y_out"),
-            F.round("o.h", 2).alias("z_out"),
-            F.when(F.col("m") < -1e38,
-                   F.lit(None).cast("double"))
-             .otherwise(F.col("m")).alias("m_out"))
-    q["shapefile_multipatch_roundtrip"] = q_shp_multipatch
-
-    # ================= training-data pipeline operators ===================
-    def _docs(spark, sf_dir):
-        _register(spark, sf_dir)
-        return spark.table("documents")
-
-    def q_host(spark, sf_dir):
-        _register(spark, sf_dir)
-        return td.url_host_stats(spark.sql(f"SELECT * FROM {HOST_SRC}"))
-    q["url_host_stats"] = q_host
-    q["c4_quality_filter"] = lambda s, d: td.c4_quality_filter(_docs(s, d))
-    q["repetition_ratio"] = lambda s, d: td.repetition_ratio(_docs(s, d))
-
-    q["dedup_exact"] = lambda s, d: td.exact_dedup(_docs(s, d))
-
-    q["minhash_lsh_pairs"] = lambda s, d: td.minhash_pairs(_docs(s, d))
-    q["near_dup_drop_list"] = lambda s, d: td.near_dup_drop_list(_docs(s, d))
-    q["near_dup_components"] = \
-        lambda s, d: td.near_dup_components(_docs(s, d))
-
-    def q_host_cap(spark, sf_dir):
-        _register(spark, sf_dir)
-        return td.host_cap_keep_first(spark.sql(f"SELECT * FROM {HOST_SRC}"))
-    q["host_cap_keep_first"] = q_host_cap
-
-    def q_url_norm(spark, sf_dir):
-        _register(spark, sf_dir)
-        return td.url_normalize_dedup(
-            spark.sql(f"SELECT * FROM {MESSY_URL_SRC}"))
-    q["url_normalize_dedup"] = q_url_norm
-    q["minhash_signatures"] = lambda s, d: td.minhash_signatures(_docs(s, d))
-    q["simhash"] = lambda s, d: td.simhash(_docs(s, d))
-    q["simhash_near_dup_pairs"] = \
-        lambda s, d: td.simhash_near_dup_pairs(_docs(s, d))
-    q["ngram_jaccard_pairs"] = lambda s, d: td.ngram_jaccard_pairs(_docs(s, d))
-    q["text_stats"] = lambda s, d: td.text_stats(_docs(s, d))
-    q["tfidf_top_terms"] = lambda s, d: td.tfidf_top_terms(_docs(s, d))
-    from geocoordinateconverter_spark.operators import sketch as sk
-    q["cms_heavy_hitters"] = lambda s, d: sk.cms_heavy_hitters(_docs(s, d))
-    q["lang_id"] = lambda s, d: td.lang_id(_docs(s, d))
-    q["bpe_token_stats"] = lambda s, d: td.bpe_token_stats(_docs(s, d))
-    q["rolling_fingerprint"] = lambda s, d: td.rolling_fingerprint(_docs(s, d))
-    q["minhash_rerank_exact"] = lambda s, d: td.minhash_rerank_exact(_docs(s, d))
-
-    # --- corpus curation (r5 additions: operators/curation.py) -------
-    q["stratified_sample"] = lambda s, d: cu.stratified_sample(_docs(s, d))
-    q["pack_sequences"] = lambda s, d: cu.pack_sequences(_docs(s, d))
-    q["pii_redact"] = lambda s, d: cu.pii_redact(_docs(s, d))
-    q["dup_ngram_spans"] = lambda s, d: cu.dup_ngram_spans(_docs(s, d))
-    q["decontaminate_bench"] = lambda s, d: cu.decontaminate(_docs(s, d))
-    q["mixture_resample"] = lambda s, d: cu.mixture_resample(_docs(s, d))
-    q["token_budget_select"] = \
-        lambda s, d: cu.token_budget_select(_docs(s, d))
-    q["line_dedup_reassemble"] = lambda s, d: cu.line_dedup(_docs(s, d))
-    q["quality_classifier"] = \
-        lambda s, d: cu.quality_classifier(_docs(s, d))
-    q["minhash_incremental_dedup"] = \
-        lambda s, d: td.minhash_incremental_dedup(_docs(s, d))
-
-    def q_ann(spark, sf_dir):
-        _register(spark, sf_dir)
-        return sim.brute_force_topk(spark.table("embeddings"), k=5)
-    q["ann_cosine_topk"] = q_ann
-
-    def q_lsh(spark, sf_dir):
-        _register(spark, sf_dir)
-        return sim.lsh_buckets(spark.table("embeddings"))
-    q["ann_lsh_buckets"] = q_lsh
-
-    def q_lsh_topk(spark, sf_dir):
-        _register(spark, sf_dir)
-        return sim.lsh_topk(spark.table("embeddings"), k=5)
-    q["ann_lsh_topk"] = q_lsh_topk
-
-    def q_ivf_topk(spark, sf_dir):
-        _register(spark, sf_dir)
-        return sim.ivf_topk(spark.table("embeddings"), k=5)
-    q["ann_ivf_topk"] = q_ivf_topk
-
-    def q_ivf_sizes(spark, sf_dir):
-        _register(spark, sf_dir)
-        return sim.ivf_cluster_sizes(spark.table("embeddings"))
-    q["ann_ivf_cluster_sizes"] = q_ivf_sizes
-
-    def q_ivf_nprobe(spark, sf_dir):
-        _register(spark, sf_dir)
-        return sim.ivf_nprobe_topk(spark.table("embeddings"), k=5, nprobe=3)
-    q["ann_ivf_nprobe_topk"] = q_ivf_nprobe
-
-    def q_ivf_kmeans(spark, sf_dir):
-        # learned quantizer — FIXED-POINT Lloyd (r4): all sums/means
-        # exact int64 on a 2^24 grid → shuffle-order-invariant, so the
-        # 3-iteration training carries a full value-hash oracle (the
-        # float variant above it is kept as the research path with a
-        # NumPy-replay pytest).  Scalar output columns
-        # (cluster, n_vecs, d, centroid) — driver-canonicalizable.
-        _register(spark, sf_dir)
-        return sim.ivf_train_kmeans_exact(spark.table("embeddings"), n_iter=3)
-    q["ann_ivf_train_kmeans"] = q_ivf_kmeans
-
-    def q_pq_train(spark, sf_dir):
-        _register(spark, sf_dir)
-        return sim.pq_train_codebooks_exact(spark.table("embeddings"),
-                                            n_iter=3)
-    q["ann_pq_train_codebooks"] = q_pq_train
-
-    # ---- r5: product quantization (the compressed-corpus ANN path) -------
-    def q_pq_codes(spark, sf_dir):
-        _register(spark, sf_dir)
-        return sim.pq_codes_rows(spark.table("embeddings"))
-    q["ann_pq_codes"] = q_pq_codes
-
-    def q_pq_adc(spark, sf_dir):
-        # declared compressed-domain full-scan baseline (BNLJ like
-        # ann_cosine_topk — the cross product IS the semantics; PQ
-        # makes each pair an 8-term table fold over 8-byte codes)
-        _register(spark, sf_dir)
-        return sim.pq_adc_topk(spark.table("embeddings"), k=5)
-    q["ann_pq_adc_topk"] = q_pq_adc
-
-    def q_ivfpq(spark, sf_dir):
-        _register(spark, sf_dir)
-        return sim.ivfpq_topk(spark.table("embeddings"), k=5, nprobe=3)
-    q["ann_ivfpq_topk"] = q_ivfpq
-
-    def q_ivfpq_rerank(spark, sf_dir):
-        _register(spark, sf_dir)
-        return sim.ivfpq_rerank_topk(spark.table("embeddings"), k=5,
-                                     nprobe=3, shortlist=50)
-    q["ann_ivfpq_rerank_topk"] = q_ivfpq_rerank
-
-    def q_cnd(spark, sf_dir):
-        _register(spark, sf_dir)
-        return sim.cosine_near_dup(spark.table("embeddings"),
-                                   threshold=0.25, id_window=50)
-    q["embedding_near_dup"] = q_cnd
-
-    def q_mm_meta(spark, sf_dir):
-        _register(spark, sf_dir)
-        docs = mm.html_binary(spark.table("documents"))
-        feats = mm.extract_features(docs, "html", "raw")
-        return feats.select("doc_id", "n_bytes", "magic")
-    q["multimodal_meta"] = q_mm_meta
-
-    def q_mm_full(spark, sf_dir):
-        # full oracle since r2: byte_mean is an exact int-sum/count
-        # division (bit-identical across engines); entropy is rounded
-        # to 6 dp to absorb float summation-order differences.  The
-        # fixture text is pure ASCII (verified for all SFs), so the
-        # char-level DuckDB twin sees exactly the utf-8 bytes.
-        _register(spark, sf_dir)
-        docs = mm.html_binary(spark.table("documents"))
-        feats = mm.extract_features(docs, "html", "raw")
-        return feats.select("doc_id", "n_bytes", "byte_mean",
-                            F.round("byte_entropy", 6).alias("byte_entropy"),
-                            "magic")
-    q["multimodal_features"] = q_mm_full
-
-    def q_mm_frames(spark, sf_dir):
-        _register(spark, sf_dir)
-        docs = mm.html_binary(spark.table("documents"))
-        return mm.frame_sample(docs)
-    q["multimodal_frame_sample"] = q_mm_frames
-
-    # ================= relational layer (SURVEY.md §3.6 gap table) ========
-    def q_pricing(spark, sf_dir):
-        _register(spark, sf_dir)
-        li = spark.table("lineitem")
-        return (li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-                .groupBy("l_returnflag", "l_linestatus")
-                .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-                     F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-                     F.round(F.sum(F.col("l_extendedprice")
-                                   * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
-                     F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
-                     F.count("*").alias("count_order")))
-    q["tpch_q1_pricing"] = q_pricing
-
-    def q_topcust(spark, sf_dir):
-        _register(spark, sf_dir)
-        o = spark.table("orders")
-        c = spark.table("customer")
-        rev = (o.join(c, o.o_custkey == c.c_custkey)
-               .groupBy("c_custkey", "c_name")
-               .agg(F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-                    F.count("*").alias("n_orders")))
-        w = Window.orderBy(F.col("revenue").desc(), F.col("c_custkey").asc())
-        return (rev.withColumn("rk", F.row_number().over(w))
-                .filter(F.col("rk") <= 10))
-    q["join_topk_customers"] = q_topcust
-
-    def q_win(spark, sf_dir):
-        _register(spark, sf_dir)
-        e = spark.table("events")
-        w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(),
-                                                  F.col("event_id").asc())
-        return (e.withColumn("prev_type", F.lag("event_type").over(w))
-                .withColumn("seq", F.row_number().over(w))
-                .filter(F.col("seq") <= 5)
-                .select("user_id", "event_id", "seq", "prev_type"))
-    q["window_lag_rank"] = q_win
-
-    def q_sets(spark, sf_dir):
-        _register(spark, sf_dir)
-        e = spark.table("events")
-        a = e.filter(F.col("event_type") == "click").select("user_id")
-        b = e.filter(F.col("event_type") == "view").select("user_id")
-        return (a.intersect(b).withColumn("tag", F.lit("both"))
-                .unionByName(a.subtract(b)  # EXCEPT DISTINCT
-                             .withColumn("tag", F.lit("click_only"))))
-    q["set_ops_users"] = q_sets
-
-    def q_semi(spark, sf_dir):
-        _register(spark, sf_dir)
-        c = spark.table("customer")
-        o = spark.table("orders")
-        has = c.join(o, c.c_custkey == o.o_custkey, "left_semi")
-        hasnot = c.join(o, c.c_custkey == o.o_custkey, "left_anti")
-        return (has.select("c_custkey").withColumn("has_orders", F.lit(True))
-                .unionByName(hasnot.select("c_custkey")
-                             .withColumn("has_orders", F.lit(False))))
-    q["semi_anti_join"] = q_semi
-
-    def q_rollup_orders(spark, sf_dir):
-        _register(spark, sf_dir)
-        o = spark.table("orders")
-        return (o.rollup("o_orderstatus", "o_orderpriority")
-                .agg(F.count("*").alias("n"),
-                     F.round(F.sum("o_totalprice"), 2).alias("total")))
-    q["rollup_orders"] = q_rollup_orders
-
-    def q_range(spark, sf_dir):
-        # banded equi form (grid cell + residual filter) — never BNLJ,
-        # survives interval tables too big to broadcast
-        _register(spark, sf_dir)
-        from geocoordinateconverter_spark.operators import rangejoin as rj
-        e = spark.table("events")
-        bands = spark.createDataFrame(
-            [(i, 100.0 * i, 100.0 * (i + 1)) for i in range(10)],
-            "band_id int, lo double, hi double")
-        return (rj.banded_range_join(e, "value", bands, "lo", "hi", step=100.0)
-                .groupBy("band_id")
-                .agg(F.count("*").alias("n_events"),
-                     F.round(F.sum("value"), 6).alias("sum_v")))
-    q["range_join_bands"] = q_range
-
-    def q_asof(spark, sf_dir):
-        # as-of join (latest view at or before each click), in the
-        # no-join union-window form — ONE shuffle on user_id, no
-        # BNLJ/candidate blowup at any scale (operators/rangejoin.py)
-        _register(spark, sf_dir)
-        from geocoordinateconverter_spark.operators import rangejoin as rj
-        return rj.asof_clicks_views(spark.table("events"))
-    q["asof_join_clicks_views"] = q_asof
-
-    def q_sessionize(spark, sf_dir):
-        # sessionization: new session when the gap to the previous event
-        # of the same user exceeds 30 min — lag + conditional cumsum,
-        # all window functions (stateful-op analogue in batch form)
-        _register(spark, sf_dir)
-        e = spark.table("events")
-        w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(),
-                                                  F.col("event_id").asc())
-        gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-        df = (e.withColumn("new_s", F.when(gap.isNull() | (gap > 1800), 1)
-                           .otherwise(0))
-              .withColumn("session_id", F.sum("new_s").over(
-                  w.rowsBetween(Window.unboundedPreceding, 0))))
-        return (df.groupBy("user_id", "session_id")
-                .agg(F.count("*").alias("n_events"),
-                     F.min("event_id").alias("first_event"),
-                     F.round(F.sum("value"), 6).alias("sum_value")))
-    q["sessionize_events"] = q_sessionize
-
-    def q_cube_events(spark, sf_dir):
-        _register(spark, sf_dir)
-        e = spark.table("events")
-        return (e.cube("event_type", F.date_trunc("month", "ts").alias("mon"))
-                .agg(F.count("*").alias("n")))
-    q["cube_events"] = q_cube_events
-
-    def q_grouping_sets(spark, sf_dir):
-        # explicit GROUPING SETS (rollup/cube's general form): a
-        # user-chosen lattice subset — here the two 1-D marginals, the
-        # 2-D cell grid, and the grand total.  grouping_id disambiguates
-        # aggregated-away NULLs from data NULLs (bit=1 ⇔ aggregated).
-        # Catalyst expands to a single Expand + one hash agg — the
-        # 4-set lattice costs ONE shuffle, not four scans.
-        _register(spark, sf_dir)
-        e = spark.table("events")
-        return (e.select("event_type", (F.col("user_id") % 10).alias("cohort"),
-                         "value")
-                .groupingSets([["event_type", "cohort"], ["event_type"],
-                               ["cohort"], []],
-                              "event_type", "cohort")
-                .agg(F.grouping_id("event_type", "cohort").alias("gid"),
-                     F.count("*").alias("n"),
-                     F.min("value").alias("min_v"),
-                     F.max("value").alias("max_v")))
-    q["grouping_sets_events"] = q_grouping_sets
-
-    def q_unpivot(spark, sf_dir):
-        # wide→long (pivot's inverse): per-type metric columns melt to
-        # (metric, val) rows.  Catalyst Expand node — map-only after
-        # the one agg shuffle; the metric list is static (scale-safe,
-        # same rule as the explicit-value pivot).
-        _register(spark, sf_dir)
-        e = spark.table("events")
-        agg = (e.groupBy("event_type")
-               .agg(F.count("*").cast("double").alias("n"),
-                    F.min("value").alias("min_v"),
-                    F.max("value").alias("max_v")))
-        return agg.unpivot("event_type", ["n", "min_v", "max_v"],
-                           "metric", "val")
-    q["unpivot_event_metrics"] = q_unpivot
-
-    def q_percentiles(spark, sf_dir):
-        # exact interpolated percentiles (distributed sort-based); both
-        # engines implement the same (n-1)·p linear interpolation —
-        # verified bit-identical, no rounding needed
-        _register(spark, sf_dir)
-        e = spark.table("events")
-        return (e.groupBy("event_type")
-                .agg(F.expr("percentile(value, 0.25)").alias("p25"),
-                     F.expr("percentile(value, 0.5)").alias("p50"),
-                     F.expr("percentile(value, 0.9)").alias("p90"),
-                     F.count("*").alias("n")))
-    q["exact_percentiles"] = q_percentiles
-
-    def q_evwin(spark, sf_dir):
-        _register(spark, sf_dir)
-        return sw.windowed_event_agg(spark.table("events"))
-    q["events_window_agg"] = q_evwin
-
-    # ---- r3 wave 2: previously pytest-only paths under the gate ----------
-    def q_salted(spark, sf_dir):
-        # exact per-cell distinct — the Ljubljana-hot-cell treatment:
-        # Spark plans it as a shuffle on (cell, okey) then a merge on
-        # cell, so a hot cell spreads over reducers (2 Exchanges)
-        from geocoordinateconverter_spark.operators import tiles as tiles_op
-        _register(spark, sf_dir)
-        w = sg.wgs_points_sql("k")
-        pts = spark.sql(
-            f"SELECT k, cast(floor(k / 8.0e0) as bigint) AS okey, "
-            f"{w['fi']} AS fi, {w['la']} AS la "
-            f"FROM (SELECT {LKEY} AS k FROM lineitem) q_k")
-        return tiles_op.salted_tile_agg(pts, key="okey", res=7)
-    q["salted_tile_agg_exact"] = q_salted
-
-    def q_zorder(spark, sf_dir):
-        # Z-order layout assignment (the OPTIMIZE ZORDER BY primitive):
-        # Morton key + deterministic equi-depth file buckets.  The
-        # production write path (zorder_write: repartitionByRange +
-        # sortWithinPartitions) is pytest-verified via parquet footer
-        # min/max tightness; this gate entry pins the key arithmetic
-        # and bucket assignment exactly.
-        from geocoordinateconverter_spark.operators import layout as lo
-        _register(spark, sf_dir)
-        w = sg.wgs_points_sql("k")
-        pts = spark.sql(
-            f"SELECT k, {w['fi']} AS fi, {w['la']} AS la "
-            f"FROM (SELECT {LKEY} AS k FROM lineitem WHERE "
-            f"l_orderkey % 5 = 0) q_k")
-        return lo.zorder_keys(pts, key="k", n_files=8)
-    q["zorder_layout_keys"] = q_zorder
-
-    def q_ckpt_gate(spark, sf_dir):
-        # crash-injected checkpointed write + resume, then read the
-        # committed table back — the resumability invariant (recovered
-        # table ≡ source) under the DRIVER gate, not just pytest
-        import tempfile
-
-        from geocoordinateconverter_spark.operators import checkpoint as cp
-        _register(spark, sf_dir)
-        df = spark.table("documents").select("doc_id", "text")
-        out = _tmpdir("ckpt_gate_") + "/out"
-        try:
-            cp.checkpointed_write(df, out, key="doc_id", n_buckets=8,
-                                  fail_after_bucket=3)
-        except RuntimeError:
-            pass  # the injected mid-job crash
-        cp.checkpointed_write(df, out, key="doc_id", n_buckets=8)  # resume
-        back = cp.read_checkpointed(spark, out)
-        return back.select("doc_id", F.md5("text").alias("text_md5"))
-    q["checkpoint_resume_roundtrip"] = q_ckpt_gate
-
-    def q_win_analytics(spark, sf_dir):
-        _register(spark, sf_dir)
-        e = spark.table("events")
-        w = Window.partitionBy("event_type").orderBy(
-            F.col("value").asc(), F.col("event_id").asc())
-        return e.select(
-            "event_id", "event_type",
-            F.dense_rank().over(w).alias("drk"),
-            F.ntile(4).over(w).alias("quartile"),
-            F.round(F.cume_dist().over(w), 9).alias("cdist"),
-            F.round(F.percent_rank().over(w), 9).alias("prank"))
-    q["window_analytics"] = q_win_analytics
-
-    def q_tpch_q3(spark, sf_dir):
-        _register(spark, sf_dir)
-        c = spark.table("customer").filter(F.col("c_mktsegment") == "BUILDING")
-        o = spark.table("orders").filter(F.col("o_orderdate") < "1995-03-15")
-        li = spark.table("lineitem").filter(F.col("l_shipdate") > "1995-03-15")
-        rev = (c.join(o, c.c_custkey == o.o_custkey)
-               .join(li, o.o_orderkey == li.l_orderkey)
-               .groupBy("l_orderkey", "o_orderdate")
-               .agg(F.round(F.sum(F.col("l_extendedprice")
-                                  * (1 - F.col("l_discount"))), 2)
-                    .alias("revenue")))
-        w = Window.orderBy(F.col("revenue").desc(), F.col("l_orderkey").asc())
-        return (rev.withColumn("rk", F.row_number().over(w))
-                .filter(F.col("rk") <= 10)
-                .select("l_orderkey", "o_orderdate", "revenue", "rk"))
-    q["tpch_q3_shipping"] = q_tpch_q3
-
-    def q_pivot(spark, sf_dir):
-        # relational pivot: one row per user, one count column per
-        # event type (explicit value list → static schema, the scale-
-        # safe form; Spark pivots via two-phase agg, oracle via
-        # conditional aggregation)
-        _register(spark, sf_dir)
-        kinds = ["click", "error", "purchase", "signup", "view"]
-        return (spark.table("events")
-                .groupBy("user_id")
-                .pivot("event_type", kinds)
-                .count().na.fill(0, kinds)
-                .select("user_id", *[F.col(k).alias(f"n_{k}")
-                                     for k in kinds]))
-    q["pivot_events_by_type"] = q_pivot
-
-    def _recall_report(emb):
-        # recall@5 of each ANN scale path vs the exact brute-force
-        # top-5, per method — shared by the uniform- and
-        # clustered-fixture diagnostics
-        exact = sim.brute_force_topk(emb, k=5).select("q_id", "vec_id")
-        nq = exact.select("q_id").distinct().count()  # tiny scalar
-        parts = []
-        for m, df in (("lsh", sim.lsh_topk(emb, k=5)),
-                      ("ivf", sim.ivf_topk(emb, k=5)),
-                      ("ivf_nprobe", sim.ivf_nprobe_topk(emb, k=5, nprobe=3))):
-            hits = (df.select("q_id", "vec_id")
-                    .join(exact, ["q_id", "vec_id"])
-                    .agg(F.count("*").alias("n_hits"))
-                    .select(F.lit(m).alias("method"), "n_hits",
-                            F.round(F.col("n_hits")
-                                    / F.lit(float(5 * nq)), 9)
-                            .alias("recall_at_5")))
-            parts.append(hits)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def q_ann_recall(spark, sf_dir):
-        _register(spark, sf_dir)
-        return _recall_report(spark.table("embeddings"))
-    q["ann_recall_report"] = q_ann_recall
-
-    def q_ann_recall_clustered(spark, sf_dir):
-        # same diagnostic over the deterministic 16-cluster fixture —
-        # the case a working bucketed-ANN must win (pytest asserts
-        # beats-chance/beats-uniform/nprobe-monotone; the oracle
-        # asserts the exact numbers)
-        _register(spark, sf_dir)
-        return _recall_report(_clustered_embeddings(spark, sf_dir))
-    q["ann_recall_report_clustered"] = q_ann_recall_clustered
-
-    def q_pq_recall(spark, sf_dir):
-        # r5 PQ diagnostic over the clustered fixture: raw ADC recall
-        # is quantization-error-bound (untrained uniform codebooks),
-        # ivfpq adds the cell restriction, and the exact-rerank refine
-        # recovers to within 0.02 of the nprobe cell bound — the
-        # monotone story pytest asserts and the oracle pins exactly
-        _register(spark, sf_dir)
-        return sim.pq_recall_report(_clustered_embeddings(spark, sf_dir), k=5)
-    q["ann_pq_recall_report"] = q_pq_recall
-
-    def q_stream_flagship(spark, sf_dir):
-        # streaming lineage under the DRIVER gate (VERDICT r2 #6): the
-        # flagship geoparse→t3→tile pipeline runs through readStream +
-        # availableNow into a memory sink; the returned table is the
-        # streaming epoch's complete-mode result, oracled against the
-        # batch SQL twin.
-        import os
-        import shutil
-        import tempfile
-        from geocoordinateconverter_spark.streaming import geopipeline as gp
-        _register(spark, sf_dir)
-        base = _tmpdir("stream_flagship_")
-        docs_dir = os.path.join(base, "documents")
-        os.makedirs(docs_dir)
-        shutil.copy(f"{sf_dir}/documents.parquet",
-                    os.path.join(docs_dir, "part-0.parquet"))
-        sdf = gp.flagship_tiles_streaming(spark, docs_dir)
-        qh = (sdf.writeStream.format("memory")
-              .queryName("stream_flagship_tiles_mem")
-              .outputMode("complete")
-              .option("checkpointLocation", os.path.join(base, "ck"))
-              .trigger(availableNow=True).start())
-        if not qh.awaitTermination(300):
-            qh.stop()
-            raise RuntimeError(
-                "streaming flagship did not finish in 300s — refusing "
-                "to read a partial memory-sink table")
-        return spark.table("stream_flagship_tiles_mem")
-    q["streaming_flagship_tiles"] = q_stream_flagship
-
-    def q_stream_stateful(spark, sf_dir):
-        # custom stateful streaming operator under the DRIVER gate:
-        # applyInPandasWithState exact-dedup state machine, run to
-        # completion with availableNow.  The update-mode sink may carry
-        # several updates per key if the source splits into multiple
-        # microbatches; the FINAL state is recovered batch-split-
-        # independently (n_seen grows monotonically, keep_doc_id
-        # shrinks monotonically), and equals the batch groupBy —
-        # which is exactly what the SQL oracle states.
-        import os
-        import shutil
-        import tempfile
-
-        from geocoordinateconverter_spark.streaming import stateful
-        _register(spark, sf_dir)
-        base = _tmpdir("stream_stateful_")
-        docs_dir = os.path.join(base, "documents")
-        os.makedirs(docs_dir)
-        shutil.copy(f"{sf_dir}/documents.parquet",
-                    os.path.join(docs_dir, "part-0.parquet"))
-        stream = (spark.readStream
-                  .schema(spark.read.parquet(docs_dir).schema)
-                  .parquet(docs_dir))
-        out = stateful.streaming_dedup(stream)
-        qh = (out.writeStream.format("memory")
-              .queryName("stream_stateful_dedup_mem")
-              .outputMode("update")
-              .option("checkpointLocation", os.path.join(base, "ck"))
-              .trigger(availableNow=True).start())
-        if not qh.awaitTermination(300):
-            qh.stop()
-            raise RuntimeError(
-                "stateful dedup stream did not finish in 300s")
-        sink = spark.table("stream_stateful_dedup_mem")
-        return (sink.groupBy("text_md5")
-                .agg(F.min("keep_doc_id").alias("keep_doc_id"),
-                     F.max("n_seen").alias("n_seen")))
-    q["streaming_stateful_dedup"] = q_stream_stateful
-
-    return _windowed(q)
-
-
-# The driver's CORRECTNESS snapshot records the FIRST 50 registered
-# queries; r2 left the ANN/relational block past that cap with local-
-# only verification (VERDICT r2 "Next round" #2).  _WINDOW_PRIORITY
-# front-loads (a) everything uncovered in r02 and (b) queries whose
-# code changed this round, rotating out 23 entries that were driver-
-# green in BOTH r01 and r02 (they remain registered after slot 50 and
-# stay covered by tools/local_verify.py + pytest).
-_WINDOW_PRIORITY = [
-    # --- r4 rotation (VERDICT r3 #3): the 40 entries whose newest
-    # driver-green row was r01/r02, plus every query r4 added or
-    # changed, fill the 50-slot snapshot; everything displaced has an
-    # r03 green row, keeping max staleness <= 2 rounds across all 90.
-    # r4 NEW:
-    "ann_recall_report_clustered", "shapefile_zm_multipart_roundtrip",
-    # r4 CHANGED (fixed-point kmeans; star CC; map-only simhash;
-    # shared pairs cache; haversine rounding; streaming timeout guard;
-    # torn-manifest re-commit):
-    "ann_ivf_train_kmeans", "near_dup_components", "near_dup_drop_list",
-    "simhash", "simhash_near_dup_pairs", "minhash_lsh_pairs",
-    "haversine_to_ljubljana", "streaming_flagship_tiles",
-    "checkpoint_resume_roundtrip",
-    # r01-cohort rotation: chains + geoparse core + pip/knn/aft/geoid
-    "s3_normalize_northing", "t3_gk_to_wgs84", "t1_tm_to_wgs84",
-    "t2_wgs84_to_tm", "t5_gk_to_tm", "t4_wgs84_to_gk", "t6_tm_to_gk",
-    "t7_gk_to_wgs84_aft", "t8_wgs84_to_gk_aft", "t9_gk_to_tm_aft",
-    "t10_tm_to_gk_aft", "tile_t3_cells", "tile_rollup_res5",
-    "tile_topk_applyinpandas", "webpages_text_passthrough",
-    "geoparse_decimal_degrees", "geoparse_multi_mention", "geoparse_dms",
-    "geoparse_reject_stats", "pip_join_municipalities", "pip_tile_agg",
-    "knn_join_stations", "aft_locate_triangle", "geoid_bilinear",
-    "geoid_bilinear_egm", "height_mode_hg", "dms_format",
-    "coord_pair_classify", "geometry_wkt_convert",
-    # r02-cohort rotation: training-data ops whose newest row is r02
-    "url_host_stats", "dedup_exact", "minhash_signatures",
-    "ngram_jaccard_pairs", "text_stats", "lang_id", "bpe_token_stats",
-    "rolling_fingerprint",
-    # r4 NEW stateful-streaming gate entry + re-green the north-rule
-    # byte-identity row
-    "streaming_stateful_dedup", "html_text_extract",
-]
-# (every r01/r02-era entry displaced from the 50-slot window during r3
-# has TWO driver-green rows, r01 + r02, and remains covered by
-# tools/local_verify.py + pytest)
-#
-# r5 (VERDICT r4 Next #1b/#4): the window KEEPS the r4 set — the 49
-# entries burned by the oracle-pool OOM cascade plus the two r4-new
-# rows — but _windowed now orders it cheapest-oracle-first (statement
-# bytes, the driver-deterministic proxy for parse+buffer cost), so a
-# pathological statement can only ever burn trailing slots, never the
-# whole window.  With the r5 oracle shrink (max statement 31 KB, was
-# 380 KB) this is belt-and-braces.
-#
-# DELIBERATE EXCEPTION to the "front-load new queries" policy:
-# r5's 19 new non-wave-3 queries — 28 total with wave 3 (VERDICT r5
-# #9 count fix; ann_pq_train_codebooks was missing from the list
-# below) — (shapefile_multipatch_roundtrip; the curation
-# ops stratified_sample, pack_sequences, pii_redact, dup_ngram_spans,
-# decontaminate_bench, mixture_resample, token_budget_select,
-# line_dedup_reassemble, quality_classifier,
-# minhash_incremental_dedup; the PQ family ann_pq_codes,
-# ann_pq_adc_topk, ann_ivfpq_topk, ann_ivfpq_rerank_topk,
-# ann_pq_recall_report; asof_join_clicks_views; zorder_layout_keys)
-# are NOT in the window — VERDICT r4 #4 pins the r5 window to exactly
-# the burned set so all 50 re-green, and displacing any of them (the
-# alternative) would push that entry's staleness past the ≤2-round
-# rule.  All (incl. ann_pq_train_codebooks) are local_verify- and
-# pytest-covered and the FIRST candidates for a future rotation —
-# together with
-# the wave-3 additions (radius_join_stations, tfidf_top_terms,
-# pagerank_hosts, bbox_intersects_join, grouping_sets_events,
-# unpivot_event_metrics, tile_kring_smooth, multimodal_frame_sample,
-# cms_heavy_hitters; same local_verify + pytest coverage this round,
-# full-sweep receipts at sf0.01 AND sf0.1).
-
-
-_ORACLE_SIZES: dict | None = None
-
-
-def _windowed(q: dict) -> dict:
-    # statement sizes memoized: oracle_sql() builds ~400 KB of SQL text
-    # (incl. numpy table derivations) and is deterministic — rebuilding
-    # it on every queries() call just to read lengths is waste
-    # (r5 review)
-    global _ORACLE_SIZES
-    if _ORACLE_SIZES is None:
-        _ORACLE_SIZES = {k: len(v) for k, v in oracle_sql().items()}
-    sizes = _ORACLE_SIZES
-    head_names = sorted((k for k in _WINDOW_PRIORITY if k in q),
-                        key=lambda k: (sizes.get(k, 1 << 30), k))
-    head = {k: q[k] for k in head_names}
-    return head | {k: v for k, v in q.items() if k not in head}
-
-
-def oracle_sql() -> dict[str, str]:
-    o: dict[str, str] = {}
-
-    o["s3_normalize_northing"] = (
-        f"SELECT k, x AS x_raw, "
-        f"case when x > 1000000.0e0 then x - 5000000.0e0 else x end AS x_red, y "
-        f"FROM {SRC_GK_LINEITEM} WHERE k % 7 = 0")
-
-    def _chain_oracle(sql_fn, src_sql, sample, cols, rounds):
-        src = f"(SELECT * FROM {src_sql} WHERE {sample}) q_f"
-        sel = ", ".join(
-            (f"{c} AS {c}_out" if nd is None else f"round({c}, {nd}) AS {c}_out")
-            for c, nd in zip(cols, rounds))
-        return f"SELECT k, {sel} FROM ({sql_fn(src, 'k')}) q_out"
-
-    o["t3_gk_to_wgs84"] = _chain_oracle(sg.t3_sql, SRC_GK_LINEITEM, "k % 37 = 0",
-                                        ("fi", "la", "h"), (8, 8, 2))
-    o["t1_tm_to_wgs84"] = _chain_oracle(sg.t1_sql, SRC_GK_LINEITEM, "k % 41 = 0",
-                                        ("fi", "la", "h"), (8, 8, None))
-    o["t2_wgs84_to_tm"] = _chain_oracle(sg.t2_sql, SRC_WGS_ORDERS, "k % 11 = 0",
-                                        ("x", "y", "h"), (2, 2, None))
-    o["t5_gk_to_tm"] = _chain_oracle(sg.t5_sql, SRC_GK_LINEITEM, "k % 43 = 0",
-                                     ("x", "y", "h"), (2, 2, 2))
-
-    from geocoordinateconverter_spark import cells as _cells
-
-    o["tile_t3_cells"] = (
+# ===========================================================================
+# The registry: one row (name, build(spark, sf_dir), DuckDB oracle text)
+# per query, in registration order.  queries() registers the session's
+# views before every build, so a build reads the TABLES views directly.
+# ===========================================================================
+
+Build = Callable[[SparkSession, str], DataFrame]
+_ROWS: list[tuple[str, Build, str]] = []
+
+
+def _row(name: str, build: Build, oracle: str) -> None:
+    _ROWS.append((name, build, oracle))
+
+
+def _query(name: str, oracle: str) -> Callable[[Build], Build]:
+    """Decorator form of :func:`_row` for a build written as a def."""
+    def add(build: Build) -> Build:
+        _row(name, build, oracle)
+        return build
+    return add
+
+
+def _on(table: str, op: Callable[..., DataFrame], **kw) -> Build:
+    """Build that applies an operator to one registered table."""
+    return lambda spark, sf_dir: op(spark.table(table), **kw)
+
+
+def _same_sql(text: str) -> tuple[Build, str]:
+    """Build and oracle of a row whose Spark side runs its
+    dialect-neutral twin verbatim."""
+    return (lambda spark, sf_dir: spark.sql(text)), text
+
+
+def _chain_query(t: int, src_sql: str, sample: str, out_round) -> Build:
+    # out_round: decimals per output col; None = pass-through value
+    # that is bit-identical to the oracle's (rounding would only
+    # introduce decimal-midpoint HALF_UP-vs-float divergence).
+    # height_mode="ht" on every chain: the oracle's chain SQL carries
+    # the transformed height (t=1/2 default to hg).
+    def run(spark, sf_dir):
+        src = spark.sql(f"SELECT * FROM {src_sql} WHERE {sample}")
+        out = api.convert(src, t, height_mode="ht")
+        cols = (("fi", "la", "h") if t in kernels.GEOGRAPHIC_OUT
+                else ("x", "y", "h"))
+        return out.select("k", *[
+            (F.col(f"{c}_out") if nd is None
+             else F.round(f"{c}_out", nd)).alias(f"{c}_out")
+            for c, nd in zip(cols, out_round)])
+    return run
+
+
+def _chain_oracle(sql_fn, src_sql, sample, cols, rounds) -> str:
+    src = f"(SELECT * FROM {src_sql} WHERE {sample}) q_f"
+    sel = ", ".join(
+        (f"{c} AS {c}_out" if nd is None else f"round({c}, {nd}) AS {c}_out")
+        for c, nd in zip(cols, rounds))
+    return f"SELECT k, {sel} FROM ({sql_fn(src, 'k')}) q_out"
+
+
+def _chain(t: int, src_sql: str, sample: str, rounds) -> tuple[Build, str]:
+    """Build and oracle of a t=1…6 chain row: the Arrow UDF chain
+    against sqlgen's chain SQL over the same sampled source."""
+    cols = ("fi", "la", "h") if t in kernels.GEOGRAPHIC_OUT else ("x", "y", "h")
+    return (_chain_query(t, src_sql, sample, rounds),
+            _chain_oracle(getattr(sg, f"t{t}_sql"), src_sql, sample, cols,
+                          rounds))
+
+
+# ---- S3: northing normalizer (gk-slo.c input normalize) ------------------
+_row("s3_normalize_northing", *_same_sql(
+    f"SELECT k, x AS x_raw, "
+    f"case when x > 1000000.0e0 then x - 5000000.0e0 else x end AS x_red, y "
+    f"FROM {SRC_GK_LINEITEM} WHERE k % 7 = 0"))
+
+# ---- t-chain value queries (sampled; Arrow-UDF kernels) ------------------
+_row("t3_gk_to_wgs84", *_chain(3, SRC_GK_LINEITEM, "k % 37 = 0", (8, 8, 2)))
+_row("t1_tm_to_wgs84", *_chain(1, SRC_GK_LINEITEM, "k % 41 = 0", (8, 8, None)))
+_row("t2_wgs84_to_tm", *_chain(2, SRC_WGS_ORDERS, "k % 11 = 0", (2, 2, None)))
+_row("t5_gk_to_tm", *_chain(5, SRC_GK_LINEITEM, "k % 43 = 0", (2, 2, 2)))
+
+
+# ---- flagship tile aggregation (t3 → cell → groupBy) ---------------------
+@_query("tile_t3_cells",
         f"SELECT cell, count(*) AS n_pts, round(avg(h), 3) AS avg_h FROM ("
-        f"SELECT {_cells.encode_sql('fi', 'la', 7)} AS cell, h "
+        f"SELECT {cells.encode_sql('fi', 'la', 7)} AS cell, h "
         f"FROM ({sg.t3_sql(SRC_GK_LINEITEM, 'k')}) q_t3) q_c GROUP BY cell")
+def q_tile(spark, sf_dir):
+    src = spark.sql(f"SELECT * FROM {SRC_GK_LINEITEM}")
+    t3 = kernels.transform_udf(3)
+    conv = src.withColumn("out", t3(F.col("x"), F.col("y"), F.col("h")))
+    return (conv
+            .withColumn("cell", kernels.cell_col(F.col("out.fi"), F.col("out.la"), 7))
+            .groupBy("cell")
+            .agg(F.count("*").alias("n_pts"),
+                 F.round(F.avg("out.h"), 3).alias("avg_h")))
 
-    o["tile_rollup_res5"] = (
-        f"SELECT {_cells.encode_sql('fi', 'la', 5)} AS cell5, count(*) AS n_pts "
-        f"FROM {_src_wgs('o_orderkey', 'orders')} GROUP BY 1")
 
-    o["webpages_text_passthrough"] = (
+# ---- raster↔vector rollup: res7 → res5 parent cells ----------------------
+@_query("tile_rollup_res5",
+        f"SELECT {cells.encode_sql('fi', 'la', 5)} AS cell5, count(*) AS n_pts "
+        f"FROM {SRC_WGS_ORDERS} GROUP BY 1")
+def q_rollup(spark, sf_dir):
+    src = spark.sql(f"SELECT * FROM {SRC_WGS_ORDERS}")
+    c7 = kernels.cell_col(F.col("fi"), F.col("la"), 7)
+    df = src.withColumn("cell7", c7).withColumn(
+        "cell5", kernels.parent_cell_col(F.col("cell7"), 2))
+    return df.groupBy("cell5").agg(F.count("*").alias("n_pts"))
+
+
+# ---- geoparse (S2) + passthrough invariant -------------------------------
+@_query("webpages_text_passthrough",
         f"SELECT url, md5(page_text) AS text_md5, length(page_text) AS text_len "
-        f"FROM {wp.webpages_sql('documents')} w")
+        f"FROM {PAGES}")
+def q_pages_md5(spark, sf_dir):
+    pages = spark.sql(f"SELECT * FROM {PAGES}")
+    return pages.select("url", F.md5(F.col("page_text")).alias("text_md5"),
+                        F.length("page_text").alias("text_len"))
 
-    _pages = f"{wp.webpages_sql('documents')} w"
-    o["webpages_hint_schema"] = (
+
+@_query("webpages_hint_schema",
         f"SELECT url, warc_ts, "
         f"md5(concat('<html><body>', page_text, '</body></html>')) AS html_md5, "
-        f"md5(page_text) AS text_md5, lang FROM {_pages}")
-    o["geoparse_decimal_degrees"] = (
-        f"SELECT url, fi, la FROM {wp.geoparse_dd_sql(_pages)} g")
+        f"md5(page_text) AS text_md5, lang FROM {PAGES}")
+def q_hint_schema(spark, sf_dir):
+    # BASELINE.json input_hint fidelity: the synthesized corpus in
+    # exactly the hinted shape (url, warc_ts, html binary, text,
+    # lang); binary + text carried as md5 so the hash compare is
+    # byte-level (the north rule's byte-identical-text invariant)
+    pages = spark.sql(f"SELECT * FROM {PAGES}")
+    html = F.encode(
+        F.concat(F.lit("<html><body>"), F.col("page_text"),
+                 F.lit("</body></html>")), "utf-8")
+    return pages.select(
+        "url", "warc_ts", F.md5(html).alias("html_md5"),
+        F.md5("page_text").alias("text_md5"), "lang")
 
-    o["html_text_extract"] = r"""
+
+@_query("html_text_extract", r"""
 SELECT doc_id, text_md5, extracted_md5,
        extracted_md5 = text_md5 AS byte_identical
 FROM (
@@ -1476,145 +475,269 @@ FROM (
   FROM (SELECT doc_id, text,
                encode(concat('<html><body>', text, '</body></html>')) AS html
         FROM documents) q1) q2
-"""
+""")
+def q_extract(spark, sf_dir):
+    # north-rule per-row invariant, exercised in its real shape:
+    # html arrives as a BINARY column, text is extracted from it
+    # (decode -> markup strip) and must be byte-identical per url
+    # to the source text — md5-checked, with the flag visible.
+    docs = mm.html_binary(spark.table("documents"))
+    extracted = F.regexp_extract(
+        F.decode("html", "utf-8"),
+        "(?s)^<html><body>(.*)</body></html>$", 1)
+    return (docs
+            .withColumn("extracted_md5", F.md5(extracted))
+            .withColumn("text_md5", F.md5("text"))
+            .select("doc_id", "text_md5", "extracted_md5",
+                    (F.col("extracted_md5") == F.col("text_md5"))
+                    .alias("byte_identical")))
 
-    o["geoparse_multi_mention"] = (
-        f"SELECT url, mention_idx, fi, la FROM "
-        f"{wp.geoparse_multi_sql(wp.multi_mention_pages_sql('documents') + ' w')} g")
 
-    o["geoparse_dms"] = (
-        f"SELECT url, round(fi, 6) AS fi, round(la, 6) AS la "
-        f"FROM {wp.geoparse_dms_sql(_pages)} g")
+_row("geoparse_decimal_degrees", *_same_sql(
+    f"SELECT url, fi, la FROM {wp.geoparse_dd_sql(PAGES)} g"))
+_row("geoparse_multi_mention",
+     lambda spark, sf_dir: wp.geoparse_multi_spark(
+         spark.sql(f"SELECT * FROM {MULTI_PAGES}")),
+     f"SELECT url, mention_idx, fi, la FROM "
+     f"{wp.geoparse_multi_sql(MULTI_PAGES)} g")
+_row("geoparse_dms", *_same_sql(
+    f"SELECT url, round(fi, 6) AS fi, round(la, 6) AS la "
+    f"FROM {wp.geoparse_dms_sql(PAGES)} g"))
 
-    _lpages = f"{wp.locale_pages_sql('documents')} w"
-    o["geoparse_comma_decimal"] = (
-        f"SELECT url, fi, la FROM {wp.geoparse_comma_sql(_lpages)} g")
-    o["geoparse_symbol_dms"] = (
-        f"SELECT url, round(fi, 6) AS fi, round(la, 6) AS la "
-        f"FROM {wp.geoparse_symbol_dms_sql(_lpages)} g")
-    o["geoparse_height_default"] = (
-        f"SELECT url, fi, la, h, has_h "
-        f"FROM {wp.geoparse_height_default_sql(_lpages)} g")
-    o["geoparse_swapped_pair"] = (
-        f"SELECT url, fi, la, kind FROM {wp.geoparse_swapped_sql(_lpages)} g")
+# ---- widened parser surface (util.c F4/F1, r2): comma decimals,
+# symbol DMS, optional height default, -r swapped pairs --------------------
+_row("geoparse_comma_decimal", *_same_sql(
+    f"SELECT url, fi, la FROM {wp.geoparse_comma_sql(LOCALE_PAGES)} g"))
+_row("geoparse_symbol_dms", *_same_sql(
+    f"SELECT url, round(fi, 6) AS fi, round(la, 6) AS la "
+    f"FROM {wp.geoparse_symbol_dms_sql(LOCALE_PAGES)} g"))
+_row("geoparse_height_default", *_same_sql(
+    f"SELECT url, fi, la, h, has_h "
+    f"FROM {wp.geoparse_height_default_sql(LOCALE_PAGES)} g"))
+_row("geoparse_swapped_pair", *_same_sql(
+    f"SELECT url, fi, la, kind FROM {wp.geoparse_swapped_sql(LOCALE_PAGES)} g"))
 
-    _pts_orders = f"(SELECT * FROM {_src_wgs('o_orderkey', 'orders')})"
-    o["pip_join_municipalities"] = (
+# ---- PIP join (broadcast cover cell + Catalyst ray-cast refine) ----------
+_PTS_ORDERS = f"(SELECT * FROM {SRC_WGS_ORDERS})"
+
+
+@_query("pip_join_municipalities",
         f"SELECT p.k AS k, m.mun_id AS mun_id "
-        f"FROM {_pts_orders} p CROSS JOIN {pip_op.municipalities_values_sql()} m "
+        f"FROM {_PTS_ORDERS} p CROSS JOIN {pip_op.municipalities_values_sql()} m "
         f"WHERE {pip_op.pip_oracle_condition()}")
+def q_pip(spark, sf_dir):
+    pts = spark.sql(f"SELECT * FROM {SRC_WGS_ORDERS}")
+    return (pip_op.pip_join(pts, spark)
+            .select(F.col("k"), F.col("mun_id")))
 
-    o["pip_tile_agg"] = (
+
+@_query("pip_tile_agg",
         f"SELECT mun_id, count(*) AS n_pts, min(h) AS min_h, max(h) AS max_h FROM ("
         f"SELECT p.k AS k, p.h AS h, m.mun_id AS mun_id "
-        f"FROM {_pts_orders} p CROSS JOIN {pip_op.municipalities_values_sql()} m "
+        f"FROM {_PTS_ORDERS} p CROSS JOIN {pip_op.municipalities_values_sql()} m "
         f"WHERE {pip_op.pip_oracle_condition()}) q GROUP BY mun_id")
+def q_pip_tile(spark, sf_dir):
+    pts = spark.sql(f"SELECT * FROM {SRC_WGS_ORDERS}")
+    return (pip_op.pip_join(pts, spark)
+            .groupBy("mun_id").agg(F.count("*").alias("n_pts"),
+                                   F.min("h").alias("min_h"),
+                                   F.max("h").alias("max_h")))
 
-    from geocoordinateconverter_spark import cells as _c
-    o["tile_topk_applyinpandas"] = f"""
+
+@_query("tile_topk_applyinpandas", f"""
 SELECT cell, k, h, rk FROM (
-  SELECT {_c.encode_sql('fi', 'la', 5)} AS cell, k, h,
+  SELECT {cells.encode_sql('fi', 'la', 5)} AS cell, k, h,
          cast(row_number() OVER (
-             PARTITION BY {_c.encode_sql('fi', 'la', 5)}
+             PARTITION BY {cells.encode_sql('fi', 'la', 5)}
              ORDER BY h DESC, k ASC) as int) AS rk
-  FROM {_src_wgs('o_orderkey', 'orders')}) q
+  FROM {SRC_WGS_ORDERS}) q
 WHERE rk <= 3
-"""
+""")
+def q_tile_topk(spark, sf_dir):
+    pts = spark.sql(f"SELECT * FROM {SRC_WGS_ORDERS}")
+    return tiles_op.tile_topk_points(pts, key="k", res=5, k=3)
 
-    o["knn_join_stations"] = (
+
+# ---- kNN join / ε-radius distance join (within-R spatial join) -----------
+@_query("knn_join_stations",
         f"SELECT k, station_id, dist2, rk "
-        f"FROM {knn_op.knn_oracle_sql(_pts_orders, 'k', 3)} q")
+        f"FROM {knn_op.knn_oracle_sql(_PTS_ORDERS, 'k', 3)} q")
+def q_knn(spark, sf_dir):
+    pts = spark.sql(f"SELECT * FROM {SRC_WGS_ORDERS}")
+    return (knn_op.knn_join(pts, spark, key="k", k=3)
+            .select("k", "station_id", "dist2", "rk"))
 
-    o["radius_join_stations"] = (
+
+@_query("radius_join_stations",
         f"SELECT k, station_id, dist2 "
-        f"FROM {knn_op.radius_oracle_sql(_pts_orders, 'k')} q")
+        f"FROM {knn_op.radius_oracle_sql(_PTS_ORDERS, 'k')} q")
+def q_radius(spark, sf_dir):
+    pts = spark.sql(f"SELECT * FROM {SRC_WGS_ORDERS}")
+    return (knn_op.radius_join(pts, spark)
+            .select("k", "station_id", "dist2"))
 
-    from geocoordinateconverter_spark.operators import graph as graph_op
-    o["pagerank_hosts"] = graph_op.pagerank_hosts_sql()
 
-    from geocoordinateconverter_spark.operators import tiles as tiles_op
-    o["tile_kring_smooth"] = (
+# ---- host-graph PageRank (iterative dataflow, int64 fixed-point) ---------
+_row("pagerank_hosts",
+     lambda spark, sf_dir: graph_op.pagerank_hosts(spark.table("orders"), spark),
+     graph_op.pagerank_hosts_sql())
+
+# ---- polygon-polygon bbox-intersects join (spatial hash join) ------------
+_row("bbox_intersects_join",
+     lambda spark, sf_dir: bj.bbox_intersects_join(bj.parcels_df(spark), spark),
+     f"SELECT k, mun_id, ox, oy FROM "
+     f"{bj.bbox_intersects_oracle_sql(bj.parcels_sql('c_custkey', 'customer'))} q")
+
+
+@_query("tile_kring_smooth",
         "SELECT cell, cast(n_own as bigint) AS n_own, "
         "cast(n_smooth as bigint) AS n_smooth, "
         "cast(n_nbrs as bigint) AS n_nbrs FROM ("
-        + tiles_op.kring_smooth_sql(_pts_orders, res=5) + ") q")
+        + tiles_op.kring_smooth_sql(_PTS_ORDERS, res=5) + ") q")
+def q_kring(spark, sf_dir):
+    pts = spark.sql(f"SELECT * FROM {SRC_WGS_ORDERS}")
+    return tiles_op.kring_smooth(pts, res=5)
 
-    from geocoordinateconverter_spark.operators import bboxjoin as bj
-    o["bbox_intersects_join"] = (
-        f"SELECT k, mun_id, ox, oy FROM "
-        f"{bj.bbox_intersects_oracle_sql(bj.parcels_sql('c_custkey', 'customer'))} q")
 
-    _gk_norm = (f"(SELECT k, case when x > 1000000.0e0 then x - 5000000.0e0 else x end AS x, y "
-                f"FROM {SRC_GK_LINEITEM}) q_n")
-    o["aft_locate_triangle"] = (
-        f"SELECT k, tri_id FROM {sg.aft_locate_sql(_gk_norm, 'k')} q")
+# ---- AFT point location (A1/A2) ------------------------------------------
+_GK_NORM = (f"(SELECT k, case when x > 1000000.0e0 then x - 5000000.0e0 else x end AS x, y "
+            f"FROM {SRC_GK_LINEITEM}) q_n")
 
-    o["geoid_bilinear"] = (
+
+@_query("aft_locate_triangle",
+        f"SELECT k, tri_id FROM {sg.aft_locate_sql(_GK_NORM, 'k')} q")
+def q_aft(spark, sf_dir):
+    src = spark.sql(
+        f"SELECT k, case when x > 1000000.0e0 then x - 5000000.0e0 else x end AS x, y "
+        f"FROM {SRC_GK_LINEITEM}")
+    loc = kernels.aft_locate_udf("gk_tm")
+    return src.select("k", loc(F.col("x"), F.col("y")).alias("tri_id"))
+
+
+# ---- geoid sampling (A4) -------------------------------------------------
+@_query("geoid_bilinear",
         f"SELECT k, round(geoid_n, 6) AS geoid_n "
-        f"FROM {sg.geoid_sql(_pts_orders, 'k', 'slo')} q")
+        f"FROM {sg.geoid_sql(_PTS_ORDERS, 'k', 'slo')} q")
+def q_geoid(spark, sf_dir):
+    src = spark.sql(f"SELECT * FROM {SRC_WGS_ORDERS}")
+    g = kernels.geoid_udf("slo")
+    return src.select("k", F.round(g(F.col("fi"), F.col("la")), 6).alias("geoid_n"))
 
-    _pts3 = f"(SELECT * FROM {_src_wgs('o_orderkey', 'orders')} WHERE k % 3 = 0)"
-    o["geoid_bilinear_egm"] = (
+
+@_query("geoid_bilinear_egm",
         f"SELECT k, round(geoid_n, 6) AS geoid_n "
-        f"FROM {sg.geoid_sql(_pts3, 'k', 'egm')} q")
+        f"FROM {sg.geoid_sql(f'(SELECT * FROM {SRC_WGS_ORDERS} WHERE k % 3 = 0)', 'k', 'egm')} q")
+def q_geoid_egm(spark, sf_dir):
+    src = spark.sql(f"SELECT * FROM {SRC_WGS_ORDERS} "
+                    f"WHERE k % 3 = 0")
+    g = kernels.geoid_udf("egm")
+    return src.select("k", F.round(g(F.col("fi"), F.col("la")), 6)
+                      .alias("geoid_n"))
 
-    # ---- wave 2: remaining chains --------------------------------------
-    o["t4_wgs84_to_gk"] = _chain_oracle(sg.t4_sql, SRC_WGS_ORDERS, "k % 13 = 0",
-                                        ("x", "y", "h"), (2, 2, 2))
-    o["t6_tm_to_gk"] = _chain_oracle(sg.t6_sql, SRC_GK_LINEITEM, "k % 47 = 0",
-                                     ("x", "y", "h"), (2, 2, 2))
 
-    _gk53 = (f"(SELECT k, case when x > 1000000.0e0 then x - 5000000.0e0 else x end AS x, y, h "
-             f"FROM {SRC_GK_LINEITEM} WHERE k % 53 = 0)")
-    o["t9_gk_to_tm_aft"] = (
-        f"SELECT s.k AS k, s.ox AS x_out, s.oy AS y_out, p.h AS h_out "
-        f"FROM {sg.aft_scan_locate_sql(_gk53, 'k', 'gk_tm')} s "
-        f"JOIN {_gk53} p ON s.k = p.k")
+# ---- remaining chains: t4/t6 (Helmert inverse), t7–t10 (AFT) -------------
+_row("t4_wgs84_to_gk", *_chain(4, SRC_WGS_ORDERS, "k % 13 = 0", (2, 2, 2)))
+_row("t6_tm_to_gk", *_chain(6, SRC_GK_LINEITEM, "k % 47 = 0", (2, 2, 2)))
 
-    _gk59 = (f"(SELECT k, case when x > 1000000.0e0 then x - 5000000.0e0 else x end AS x, y, h "
-             f"FROM {SRC_GK_LINEITEM} WHERE k % 59 = 0)")
-    _t7_tm = (f"(SELECT s.k AS k, s.ox AS x, s.oy AS y, p.h AS h "
-              f"FROM {sg.aft_scan_locate_sql(_gk59, 'k', 'gk_tm')} s "
-              f"JOIN {_gk59} p ON s.k = p.k) q_t7in")
-    o["t7_gk_to_wgs84_aft"] = (
-        f"SELECT k, round(fi, 8) AS fi_out, round(la, 8) AS la_out, h AS h_out "
-        f"FROM {sg.xy2geo_sql(sg.D96_TM, _t7_tm, 'k', normalize=False)} q")
+# AFT chains are exact affine arithmetic on bit-identical inputs →
+# no rounding needed for t9/t10; t7 ends in libm (inverse proj).
+_GK53 = (f"(SELECT k, case when x > 1000000.0e0 then x - 5000000.0e0 else x end AS x, y, h "
+         f"FROM {SRC_GK_LINEITEM} WHERE k % 53 = 0)")
+_row("t9_gk_to_tm_aft",
+     _chain_query(9, SRC_GK_LINEITEM, "k % 53 = 0", (None, None, None)),
+     f"SELECT s.k AS k, s.ox AS x_out, s.oy AS y_out, p.h AS h_out "
+     f"FROM {sg.aft_scan_locate_sql(_GK53, 'k', 'gk_tm')} s "
+     f"JOIN {_GK53} p ON s.k = p.k")
 
-    _t8_tm = (f"(SELECT k, x, y, h FROM {sg.t2_sql(f'(SELECT * FROM {SRC_WGS_ORDERS} WHERE k % 19 = 0) q_f', 'k')} q_t2)")
-    o["t8_wgs84_to_gk_aft"] = (
-        f"SELECT s.k AS k, round(s.ox, 2) AS x_out, round(s.oy, 2) AS y_out, "
-        f"p.h AS h_out "
-        f"FROM {sg.aft_scan_locate_sql(_t8_tm, 'k', 'tm_gk')} s "
-        f"JOIN {_t8_tm} p ON s.k = p.k")
+_GK59 = (f"(SELECT k, case when x > 1000000.0e0 then x - 5000000.0e0 else x end AS x, y, h "
+         f"FROM {SRC_GK_LINEITEM} WHERE k % 59 = 0)")
+_T7_TM = (f"(SELECT s.k AS k, s.ox AS x, s.oy AS y, p.h AS h "
+          f"FROM {sg.aft_scan_locate_sql(_GK59, 'k', 'gk_tm')} s "
+          f"JOIN {_GK59} p ON s.k = p.k) q_t7in")
+_row("t7_gk_to_wgs84_aft",
+     _chain_query(7, SRC_GK_LINEITEM, "k % 59 = 0", (8, 8, None)),
+     f"SELECT k, round(fi, 8) AS fi_out, round(la, 8) AS la_out, h AS h_out "
+     f"FROM {sg.xy2geo_sql(sg.D96_TM, _T7_TM, 'k', normalize=False)} q")
 
-    _tm61 = f"(SELECT * FROM {SRC_TM_LINEITEM} WHERE k % 61 = 0)"
-    o["t10_tm_to_gk_aft"] = (
-        f"SELECT s.k AS k, s.ox AS x_out, s.oy AS y_out, p.h AS h_out "
-        f"FROM {sg.aft_scan_locate_sql(_tm61, 'k', 'tm_gk')} s "
-        f"JOIN {_tm61} p ON s.k = p.k")
+_T8_TM = (f"(SELECT k, x, y, h FROM {sg.t2_sql(f'(SELECT * FROM {SRC_WGS_ORDERS} WHERE k % 19 = 0) q_f', 'k')} q_t2)")
+_row("t8_wgs84_to_gk_aft",
+     _chain_query(8, SRC_WGS_ORDERS, "k % 19 = 0", (2, 2, None)),
+     f"SELECT s.k AS k, round(s.ox, 2) AS x_out, round(s.oy, 2) AS y_out, "
+     f"p.h AS h_out "
+     f"FROM {sg.aft_scan_locate_sql(_T8_TM, 'k', 'tm_gk')} s "
+     f"JOIN {_T8_TM} p ON s.k = p.k")
 
-    o["height_mode_hg"] = (
+_TM61 = f"(SELECT * FROM {SRC_TM_LINEITEM} WHERE k % 61 = 0)"
+_row("t10_tm_to_gk_aft",
+     _chain_query(10, SRC_TM_LINEITEM, "k % 61 = 0", (None, None, None)),
+     f"SELECT s.k AS k, s.ox AS x_out, s.oy AS y_out, p.h AS h_out "
+     f"FROM {sg.aft_scan_locate_sql(_TM61, 'k', 'tm_gk')} s "
+     f"JOIN {_TM61} p ON s.k = p.k")
+
+
+# ---- height modes (A6): physical H = h − N (hg) --------------------------
+@_query("height_mode_hg",
         f"SELECT k, round(h - geoid_n, 6) AS big_h FROM ("
         f"SELECT q1.k AS k, q1.h AS h, q2.geoid_n AS geoid_n "
-        f"FROM {_pts_orders} q1 "
-        f"JOIN {sg.geoid_sql(_pts_orders, 'k', 'slo')} q2 ON q1.k = q2.k) q3")
+        f"FROM {_PTS_ORDERS} q1 "
+        f"JOIN {sg.geoid_sql(_PTS_ORDERS, 'k', 'slo')} q2 ON q1.k = q2.k) q3")
+def q_height_hg(spark, sf_dir):
+    src = spark.sql(f"SELECT * FROM {SRC_WGS_ORDERS}")
+    g = kernels.geoid_udf("slo")
+    return src.select(
+        "k", F.round(F.col("h") - g(F.col("fi"), F.col("la")), 6)
+        .alias("big_h"))
 
-    o["selftest_golden_chains"] = api.self_test_oracle_sql()
-    o["cli_reverse_t2"] = _chain_oracle(
-        sg.t2_sql, SRC_WGS_ORDERS, "k % 29 = 0", ("x", "y"), (2, 2))
 
-    _t3o23 = (f"({sg.t3_sql(f'(SELECT * FROM {SRC_GK_LINEITEM} WHERE k % 23 = 0) q_f', 'k')})")
-    # keep-list threading (no join: k is NOT unique over lineitem
-    # samples, a join would fan out duplicate keys)
-    o["height_mode_override_t3_hg"] = (
+# ---- A6: explicit height-mode override (-hg on the Helmert chain;
+# default for t3 is -ht — HEIGHT_MODE_DEFAULTS is the A6 table).  The
+# oracle threads a keep-list (no join: k is NOT unique over lineitem
+# samples, a join would fan out duplicate keys) ----------------------------
+_T3O23 = (f"({sg.t3_sql(f'(SELECT * FROM {SRC_GK_LINEITEM} WHERE k % 23 = 0) q_f', 'k')})")
+
+
+@_query("height_mode_override_t3_hg",
         f"SELECT k, round(fi, 8) AS fi_out, round(la, 8) AS la_out, "
         f"round(h + geoid_n, 2) AS h_out "
-        f"FROM {sg.geoid_sql(_t3o23, 'k, fi, la, h', 'slo')} q")
+        f"FROM {sg.geoid_sql(_T3O23, 'k, fi, la, h', 'slo')} q")
+def q_height_override(spark, sf_dir):
+    src = spark.sql(f"SELECT * FROM {SRC_GK_LINEITEM} WHERE k % 23 = 0")
+    out = api.convert(src, t=3, height_mode="hg")
+    return out.select("k", F.round("fi_out", 8).alias("fi_out"),
+                      F.round("la_out", 8).alias("la_out"),
+                      F.round("h_out", 2).alias("h_out"))
 
-    o["dms_format"] = (
-        f"SELECT k, {DMS_FMT_SQL} AS dms FROM {SRC_WGS_ORDERS} WHERE k % 17 = 0")
 
-    o["geoparse_reject_stats"] = f"""
+# ---- gk-slo CLI parity surface (api.py): -x self-test + -r path ----------
+_row("selftest_golden_chains", lambda spark, sf_dir: api.self_test(spark),
+     api.self_test_oracle_sql())
+
+
+@_query("cli_reverse_t2", _chain_oracle(
+    sg.t2_sql, SRC_WGS_ORDERS, "k % 29 = 0", ("x", "y"), (2, 2)))
+def q_cli_reverse(spark, sf_dir):
+    # -r: the source arrives (la, fi)-swapped; convert() re-swaps
+    src = spark.sql(
+        f"SELECT k, la AS c_la, fi AS c_fi, h FROM "
+        f"{SRC_WGS_ORDERS} WHERE k % 29 = 0")
+    out = api.convert(src, t=2, height_mode="ht", reverse=True,
+                      cols=("c_la", "c_fi", "h"))
+    return out.select("k", F.round("x_out", 2).alias("x_out"),
+                      F.round("y_out", 2).alias("y_out"))
+
+
+# ---- DMS formatting (util.c F2) — pure codegen arithmetic ----------------
+_row("dms_format", *_same_sql(
+    f"SELECT k, {DMS_FMT_SQL} AS dms FROM {SRC_WGS_ORDERS} WHERE k % 17 = 0"))
+
+# ---- S2: free-format pair classification (magnitude + -r swap) -----------
+_row("coord_pair_classify", *_same_sql(
+    f"SELECT k, kind, a1, a2 "
+    f"FROM {wp.classify_pair_sql(PAIR_SRC, 'c1', 'c2')} q"))
+
+
+# ---- malformed-input policy (gk-slo.c: warn + skip, SURVEY §4.1) ---------
+@_query("geoparse_reject_stats", f"""
 SELECT lang, count(*) AS n_docs,
        cast(sum(case when ok then 1 else 0 end) as bigint) AS n_parsed,
        cast(sum(case when not ok then 1 else 0 end) as bigint) AS n_rejected
@@ -1622,101 +745,276 @@ FROM (SELECT lang,
              (regexp_extract(page_text, '{wp.RE_DD}', 1) <> ''
               or regexp_extract(page_text, '{wp.RE_GK}', 1) <> ''
               or regexp_extract(page_text, '{wp.RE_DMS}', 1) <> '') AS ok
-      FROM {wp.webpages_sql('documents')} w) q
+      FROM {PAGES}) q
 GROUP BY lang
-"""
+""")
+def q_parse_rejects(spark, sf_dir):
+    # docs whose text carries no parseable coordinate mention are
+    # counted per lang and skipped, never aborting the job — the
+    # engine analogue of the reference's per-line warning + continue
+    parsed = F.regexp_extract("page_text", wp.RE_DD, 1) != ""
+    parsed = parsed | (F.regexp_extract("page_text", wp.RE_GK, 1) != "")
+    parsed = parsed | (F.regexp_extract("page_text", wp.RE_DMS, 1) != "")
+    return (spark.sql(f"SELECT * FROM {PAGES}")
+            .withColumn("ok", parsed)
+            .groupBy("lang")
+            .agg(F.count("*").alias("n_docs"),
+                 F.sum(F.when(F.col("ok"), 1).otherwise(0)).alias("n_parsed"),
+                 F.sum(F.when(~F.col("ok"), 1).otherwise(0)).alias("n_rejected")))
 
-    from geocoordinateconverter_spark.operators import geometry as _geom
-    o["geometry_wkt_convert"] = _geom.convert_geometry_oracle_sql(
-        f"{GEOM_SRC} g", sg.t5_sql)
 
-    # bare (un-aliased) vertex subquery for the self-joining oracle
-    _vert_bare = SHP_VERT_SRC.rsplit(" q_v", 1)[0]
-    o["polygon_area_centroid"] = _geom.polygon_area_centroid_sql(
-        _vert_bare, n_verts=5)
+# ---- spatial measures: shoelace area/centroid, haversine -----------------
+_row("polygon_area_centroid",
+     lambda spark, sf_dir: geom.polygon_area_centroid(
+         spark.sql(f"SELECT geom_id, vid, x, y FROM {SHP_VERT_SRC}"), n_verts=5),
+     # bare (un-aliased) vertex subquery for the self-joining oracle
+     geom.polygon_area_centroid_sql(SHP_VERT_SRC.rsplit(" q_v", 1)[0],
+                                    n_verts=5))
 
-    _hav = (
-        "2.0e0 * 6371000.0e0 * asin(sqrt("
-        "sin((radians(fi) - radians(46.0569e0)) / 2.0e0) "
-        "* sin((radians(fi) - radians(46.0569e0)) / 2.0e0) "
-        "+ cos(radians(46.0569e0)) * cos(radians(fi)) "
-        "* sin((radians(la) - radians(14.5058e0)) / 2.0e0) "
-        "* sin((radians(la) - radians(14.5058e0)) / 2.0e0)))")
-    o["haversine_to_ljubljana"] = (
-        f"SELECT k, round({_hav}, 2) AS dist_m "
-        f"FROM {_src_wgs('o_orderkey', 'orders')} WHERE k % 5 = 0")
+_HAV = (
+    "2.0e0 * 6371000.0e0 * asin(sqrt("
+    "sin((radians(fi) - radians(46.0569e0)) / 2.0e0) "
+    "* sin((radians(fi) - radians(46.0569e0)) / 2.0e0) "
+    "+ cos(radians(46.0569e0)) * cos(radians(fi)) "
+    "* sin((radians(la) - radians(14.5058e0)) / 2.0e0) "
+    "* sin((radians(la) - radians(14.5058e0)) / 2.0e0)))")
 
-    o["coord_pair_classify"] = (
-        f"SELECT k, kind, a1, a2 "
-        f"FROM {wp.classify_pair_sql(PAIR_SRC, 'c1', 'c2')} q")
 
-    o["shapefile_roundtrip_convert"] = (
+@_query("haversine_to_ljubljana",
+        f"SELECT k, round({_HAV}, 2) AS dist_m "
+        f"FROM {SRC_WGS_ORDERS} WHERE k % 5 = 0")
+def q_haversine(spark, sf_dir):
+    src = spark.sql(f"SELECT * FROM {SRC_WGS_ORDERS} "
+                    f"WHERE k % 5 = 0")
+    fi0, la0 = 46.0569, 14.5058  # Ljubljana reference point
+    dphi2 = (F.radians(F.col("fi")) - F.radians(F.lit(fi0))) / 2.0
+    dlam2 = (F.radians(F.col("la")) - F.radians(F.lit(la0))) / 2.0
+    h = (F.sin(dphi2) * F.sin(dphi2)
+         + F.cos(F.radians(F.lit(fi0))) * F.cos(F.radians(F.col("fi")))
+         * F.sin(dlam2) * F.sin(dlam2))
+    dist = 2.0 * 6371000.0 * F.asin(F.sqrt(h))
+    # 2 dp (cm grain on metres): Java Math vs C libm trig differ by
+    # ulps (~1e-10 abs at this magnitude), so leave ≥7 orders of
+    # margin above the noise instead of rounding at 4 dp where a
+    # boundary value could flip the last digit (ADVICE r3).
+    return src.select("k", F.round(dist, 2).alias("dist_m"))
+
+
+# ---- S5/S6: gk-shp analogue — WKT vertex-array conversion ----------------
+_row("geometry_wkt_convert",
+     lambda spark, sf_dir: geom.convert_geometry(
+         spark.sql(f"SELECT * FROM {GEOM_SRC} g"), t=5),
+     geom.convert_geometry_oracle_sql(f"{GEOM_SRC} g", sg.t5_sql))
+
+
+# ---- S5/S6: REAL shapefile I/O (binary .shp/.shx/.dbf roundtrip,
+# then per-vertex t5 conversion — the full gk-shp lifecycle) ---------------
+@_query("shapefile_roundtrip_convert",
         f"SELECT geom_id, vid, round(x, 2) AS x_out, round(y, 2) AS y_out "
         f"FROM ({sg.t5_sql(SHP_VERT_SRC, 'geom_id, vid')}) q")
+def q_shp_roundtrip(spark, sf_dir):
+    src = spark.sql(f"SELECT * FROM {SHP_VERT_SRC}")
+    base = _tmpdir("shp_roundtrip_") + "/geoms"
+    shp.df_to_shapefile(
+        src.select("geom_id", F.lit(0).alias("part"), "vid", "x", "y"),
+        base, shp.SHP_POLYGON)
+    verts = shp.shapefile_to_df(spark, base)  # bit-exact roundtrip
+    udf = kernels.transform_udf(5)
+    conv = verts.withColumn("o", udf(F.col("x"), F.col("y"), F.lit(0.0)))
+    return conv.select("geom_id", "vid",
+                       F.round("o.x", 2).alias("x_out"),
+                       F.round("o.y", 2).alias("y_out"))
 
-    # ---- wave 2: training-data ops -------------------------------------
-    o["url_host_stats"] = td.url_host_stats_sql(HOST_SRC)
-    o["c4_quality_filter"] = td.c4_quality_filter_sql()
-    o["repetition_ratio"] = td.repetition_ratio_sql()
-    o["dedup_exact"] = td.EXACT_DEDUP_SQL
-    o["near_dup_drop_list"] = td.near_dup_drop_list_sql()
-    o["near_dup_components"] = td.near_dup_components_sql()
-    o["host_cap_keep_first"] = td.host_cap_keep_first_sql(HOST_SRC)
-    o["url_normalize_dedup"] = td.url_normalize_dedup_sql(MESSY_URL_SRC)
-    o["minhash_signatures"] = f"SELECT doc_id, perm, sig FROM {td.MINHASH_SIG_SQL} q"
-    o["minhash_lsh_pairs"] = (
-        f"SELECT doc_a, doc_b, est_jaccard FROM {td.MINHASH_PAIRS_SQL} q")
-    o["simhash"] = f"SELECT doc_id, simhash FROM {td.SIMHASH_SQL} q"
-    o["simhash_near_dup_pairs"] = td.simhash_near_dup_pairs_sql()
-    o["ngram_jaccard_pairs"] = td.ngram_jaccard_sql()
-    o["text_stats"] = td.text_stats_sql()
-    o["tfidf_top_terms"] = td.tfidf_top_terms_sql()
-    from geocoordinateconverter_spark.operators import sketch as sk
-    o["cms_heavy_hitters"] = sk.cms_heavy_hitters_sql()
-    o["lang_id"] = td.lang_id_sql()
-    o["bpe_token_stats"] = td.BPE_TOKEN_STATS_SQL
-    o["rolling_fingerprint"] = td.rolling_fingerprint_sql()
-    # corpus curation (r5 additions)
-    o["stratified_sample"] = cu.stratified_sample_sql()
-    o["pack_sequences"] = cu.pack_sequences_sql()
-    o["pii_redact"] = cu.pii_redact_sql()
-    o["dup_ngram_spans"] = cu.dup_ngram_spans_sql()
-    o["decontaminate_bench"] = cu.decontaminate_sql()
-    o["mixture_resample"] = cu.mixture_resample_sql()
-    o["token_budget_select"] = cu.token_budget_select_sql()
-    o["line_dedup_reassemble"] = cu.line_dedup_sql()
-    o["quality_classifier"] = cu.quality_classifier_sql()
-    o["minhash_incremental_dedup"] = td.minhash_incremental_dedup_sql()
-    from geocoordinateconverter_spark.operators import rangejoin as _rj
-    o["asof_join_clicks_views"] = _rj.asof_clicks_views_sql()
-    from geocoordinateconverter_spark.operators import layout as _lo
-    _wz = sg.wgs_points_sql("k")
-    o["zorder_layout_keys"] = _lo.zorder_keys_sql(
-        f"(SELECT k, {_wz['fi']} AS fi, {_wz['la']} AS la "
-        f"FROM (SELECT {LKEY} AS k FROM lineitem WHERE "
-        f"l_orderkey % 5 = 0) q_k)")
-    o["minhash_rerank_exact"] = td.minhash_rerank_exact_sql()
-    o["ann_cosine_topk"] = sim.brute_force_topk_sql(k=5)
-    o["ann_lsh_buckets"] = sim.lsh_buckets_sql()
-    o["ann_lsh_topk"] = sim.lsh_topk_sql(k=5)
-    o["ann_ivf_topk"] = sim.ivf_topk_sql(k=5)
-    o["ann_ivf_cluster_sizes"] = sim.ivf_cluster_sizes_sql()
-    o["embedding_near_dup"] = sim.cosine_near_dup_sql(threshold=0.25, id_window=50)
-    o["multimodal_meta"] = (
+
+# ---- S5/S6 breadth (r3): PolyLine shapes + multi-field DBF (N+C)
+# attribute passthrough — gk-shp copies every attribute verbatim -----------
+@_query("shapefile_attrs_passthrough",
+        f"SELECT q_v.geom_id AS geom_id, q_v.vid AS vid, q_v.x AS x, "
+        f"q_v.y AS y, q_a.name AS name, q_a.pop AS pop "
+        f"FROM {SHP_LINE_SRC} JOIN {SHP_ATTR_SRC} "
+        f"ON q_v.geom_id = q_a.geom_id")
+def q_shp_attrs(spark, sf_dir):
+    verts = (spark.sql(f"SELECT * FROM {SHP_LINE_SRC}")
+             .select("geom_id", F.lit(0).alias("part"), "vid", "x", "y"))
+    attrs = spark.sql(f"SELECT * FROM {SHP_ATTR_SRC}")
+    base = _tmpdir("shp_attrs_") + "/lines"
+    shp.df_to_shapefile(verts, base, shp.SHP_POLYLINE, attrs=attrs)
+    back_v = shp.shapefile_to_df(spark, base)  # bit-exact vertices
+    back_a = shp.dbf_to_df(spark, base)        # DBF N+C fields
+    return (back_v.join(back_a, "geom_id")
+            .select("geom_id", "vid", "x", "y", "name", "pop"))
+
+
+# ---- S5/S6 breadth (r4): PolygonZ with hole rings — Z/M vertex
+# values and part/ring order must survive the binary roundtrip
+# bit-exactly, then (x, y, z) converts through the same t5 chain;
+# the file's M-NODATA sentinel maps back to NULL on output -------------
+@_query("shapefile_zm_multipart_roundtrip",
+        f"SELECT geom_id, part, vid, round(x, 2) AS x_out, "
+        f"round(y, 2) AS y_out, round(h, 2) AS z_out, mz AS m_out "
+        f"FROM ({sg.t5_sql(SHP_ZM_SRC, 'geom_id, part, vid, mz')}) q")
+def q_shp_zm(spark, sf_dir):
+    verts = (spark.sql(f"SELECT * FROM {SHP_ZM_SRC}")
+             .select("geom_id", "part", "vid", "x", "y",
+                     F.col("h").alias("z"),
+                     F.col("mz").alias("m")))
+    base = _tmpdir("shp_zm_") + "/polyz"
+    shp.df_to_shapefile(verts, base, shp.SHP_POLYGONZ)
+    back = shp.shapefile_to_df(spark, base)  # bit-exact x/y/z/m
+    udf = kernels.transform_udf(5)
+    conv = back.withColumn("o", udf(F.col("x"), F.col("y"),
+                                    F.col("z")))
+    return conv.select(
+        "geom_id", "part", "vid",
+        F.round("o.x", 2).alias("x_out"),
+        F.round("o.y", 2).alias("y_out"),
+        F.round("o.h", 2).alias("z_out"),
+        F.when(F.col("m") < -1e38,
+               F.lit(None).cast("double"))
+         .otherwise(F.col("m")).alias("m_out"))
+
+
+@_query("shapefile_multipatch_roundtrip",
+        f"SELECT geom_id, part, part_type, vid, round(x, 2) AS x_out, "
+        f"round(y, 2) AS y_out, round(h, 2) AS z_out, mz AS m_out "
+        f"FROM ({sg.t5_sql(SHP_MP_SRC, 'geom_id, part, part_type, vid, mz')}) q")
+def q_shp_multipatch(spark, sf_dir):
+    verts = (spark.sql(f"SELECT * FROM {SHP_MP_SRC}")
+             .select("geom_id", "part", "vid", "x", "y",
+                     F.col("h").alias("z"), F.col("mz").alias("m"),
+                     "part_type"))
+    base = _tmpdir("shp_mp_") + "/patch"
+    shp.df_to_multipatch(verts, base)
+    back = shp.multipatch_to_df(spark, base)  # bit-exact x/y/z/m+types
+    udf = kernels.transform_udf(5)
+    conv = back.withColumn("o", udf(F.col("x"), F.col("y"),
+                                    F.col("z")))
+    return conv.select(
+        "geom_id", "part", "part_type", "vid",
+        F.round("o.x", 2).alias("x_out"),
+        F.round("o.y", 2).alias("y_out"),
+        F.round("o.h", 2).alias("z_out"),
+        F.when(F.col("m") < -1e38,
+               F.lit(None).cast("double"))
+         .otherwise(F.col("m")).alias("m_out"))
+
+
+# ================= training-data pipeline operators =======================
+_row("url_host_stats",
+     lambda spark, sf_dir: td.url_host_stats(spark.sql(f"SELECT * FROM {HOST_SRC}")),
+     td.url_host_stats_sql(HOST_SRC))
+_row("c4_quality_filter", _on("documents", td.c4_quality_filter),
+     td.c4_quality_filter_sql())
+_row("repetition_ratio", _on("documents", td.repetition_ratio),
+     td.repetition_ratio_sql())
+_row("dedup_exact", _on("documents", td.exact_dedup), td.EXACT_DEDUP_SQL)
+_row("minhash_lsh_pairs", _on("documents", td.minhash_pairs),
+     f"SELECT doc_a, doc_b, est_jaccard FROM {td.MINHASH_PAIRS_SQL} q")
+_row("near_dup_drop_list", _on("documents", td.near_dup_drop_list),
+     td.near_dup_drop_list_sql())
+_row("near_dup_components", _on("documents", td.near_dup_components),
+     td.near_dup_components_sql())
+_row("host_cap_keep_first",
+     lambda spark, sf_dir: td.host_cap_keep_first(
+         spark.sql(f"SELECT * FROM {HOST_SRC}")),
+     td.host_cap_keep_first_sql(HOST_SRC))
+_row("url_normalize_dedup",
+     lambda spark, sf_dir: td.url_normalize_dedup(
+         spark.sql(f"SELECT * FROM {MESSY_URL_SRC}")),
+     td.url_normalize_dedup_sql(MESSY_URL_SRC))
+_row("minhash_signatures", _on("documents", td.minhash_signatures),
+     f"SELECT doc_id, perm, sig FROM {td.MINHASH_SIG_SQL} q")
+_row("simhash", _on("documents", td.simhash),
+     f"SELECT doc_id, simhash FROM {td.SIMHASH_SQL} q")
+_row("simhash_near_dup_pairs", _on("documents", td.simhash_near_dup_pairs),
+     td.simhash_near_dup_pairs_sql())
+_row("ngram_jaccard_pairs", _on("documents", td.ngram_jaccard_pairs),
+     td.ngram_jaccard_sql())
+_row("text_stats", _on("documents", td.text_stats), td.text_stats_sql())
+_row("tfidf_top_terms", _on("documents", td.tfidf_top_terms),
+     td.tfidf_top_terms_sql())
+_row("cms_heavy_hitters", _on("documents", sk.cms_heavy_hitters),
+     sk.cms_heavy_hitters_sql())
+_row("lang_id", _on("documents", td.lang_id), td.lang_id_sql())
+_row("bpe_token_stats", _on("documents", td.bpe_token_stats),
+     td.BPE_TOKEN_STATS_SQL)
+_row("rolling_fingerprint", _on("documents", td.rolling_fingerprint),
+     td.rolling_fingerprint_sql())
+_row("minhash_rerank_exact", _on("documents", td.minhash_rerank_exact),
+     td.minhash_rerank_exact_sql())
+
+# --- corpus curation (r5 additions: operators/curation.py) ---------------
+_row("stratified_sample", _on("documents", cu.stratified_sample),
+     cu.stratified_sample_sql())
+_row("pack_sequences", _on("documents", cu.pack_sequences),
+     cu.pack_sequences_sql())
+_row("pii_redact", _on("documents", cu.pii_redact), cu.pii_redact_sql())
+_row("dup_ngram_spans", _on("documents", cu.dup_ngram_spans),
+     cu.dup_ngram_spans_sql())
+_row("decontaminate_bench", _on("documents", cu.decontaminate),
+     cu.decontaminate_sql())
+_row("mixture_resample", _on("documents", cu.mixture_resample),
+     cu.mixture_resample_sql())
+_row("token_budget_select", _on("documents", cu.token_budget_select),
+     cu.token_budget_select_sql())
+_row("line_dedup_reassemble", _on("documents", cu.line_dedup),
+     cu.line_dedup_sql())
+_row("quality_classifier", _on("documents", cu.quality_classifier),
+     cu.quality_classifier_sql())
+_row("minhash_incremental_dedup", _on("documents", td.minhash_incremental_dedup),
+     td.minhash_incremental_dedup_sql())
+
+# ---- embeddings: exact and bucketed top-k, learned quantizers ------------
+_row("ann_cosine_topk", _on("embeddings", sim.brute_force_topk, k=5),
+     sim.brute_force_topk_sql(k=5))
+_row("ann_lsh_buckets", _on("embeddings", sim.lsh_buckets),
+     sim.lsh_buckets_sql())
+_row("ann_lsh_topk", _on("embeddings", sim.lsh_topk, k=5),
+     sim.lsh_topk_sql(k=5))
+_row("ann_ivf_topk", _on("embeddings", sim.ivf_topk, k=5),
+     sim.ivf_topk_sql(k=5))
+_row("ann_ivf_cluster_sizes", _on("embeddings", sim.ivf_cluster_sizes),
+     sim.ivf_cluster_sizes_sql())
+_row("ann_ivf_nprobe_topk", _on("embeddings", sim.ivf_nprobe_topk, k=5, nprobe=3),
+     sim.ivf_nprobe_topk_sql(k=5, nprobe=3))
+# learned quantizer — FIXED-POINT Lloyd (r4): all sums/means exact int64
+# on a 2^24 grid → shuffle-order-invariant, so the 3-iteration training
+# carries a full value-hash oracle.  Scalar output columns (cluster,
+# n_vecs, d, centroid) — driver-canonicalizable.
+_row("ann_ivf_train_kmeans", _on("embeddings", sim.ivf_train_kmeans_exact, n_iter=3),
+     sim.ivf_train_kmeans_exact_sql(n_iter=3))
+_row("ann_pq_train_codebooks",
+     _on("embeddings", sim.pq_train_codebooks_exact, n_iter=3),
+     sim.pq_train_codebooks_exact_sql(n_iter=3))
+# ---- r5: product quantization (the compressed-corpus ANN path) -----------
+_row("ann_pq_codes", _on("embeddings", sim.pq_codes_rows),
+     sim.pq_codes_rows_sql())
+_row("ann_pq_adc_topk", _on("embeddings", sim.pq_adc_topk, k=5),
+     sim.pq_adc_topk_sql(k=5))
+_row("ann_ivfpq_topk", _on("embeddings", sim.ivfpq_topk, k=5, nprobe=3),
+     sim.ivfpq_topk_sql(k=5, nprobe=3))
+_row("ann_ivfpq_rerank_topk",
+     _on("embeddings", sim.ivfpq_rerank_topk, k=5, nprobe=3, shortlist=50),
+     sim.ivfpq_rerank_topk_sql(k=5, nprobe=3, shortlist=50))
+_row("embedding_near_dup",
+     _on("embeddings", sim.cosine_near_dup, threshold=0.25, id_window=50),
+     sim.cosine_near_dup_sql(threshold=0.25, id_window=50))
+
+
+@_query("multimodal_meta",
         "SELECT doc_id, octet_length(html) AS n_bytes, "
         "lower(substr(hex(html), 1, 8)) AS magic FROM ("
         "SELECT doc_id, encode(concat('<html><body>', text, '</body></html>')) "
         "AS html FROM documents) q")
-    o["multimodal_frame_sample"] = (
-        "SELECT doc_id, n_frames, n_sampled, sample_md5 FROM "
-        + mm.frame_sample_sql(
-            "(SELECT doc_id, "
-            "encode(concat('<html><body>', text, '</body></html>')) "
-            "AS html FROM documents)") + " q")
+def q_mm_meta(spark, sf_dir):
+    docs = mm.html_binary(spark.table("documents"))
+    feats = mm.extract_features(docs, "html", "raw")
+    return feats.select("doc_id", "n_bytes", "magic")
 
-    # multimodal_features full oracle: per-char histogram (ASCII fixture
-    # → chars ≡ bytes), Shannon entropy from counts, exact mean division
-    o["multimodal_features"] = """
+
+# multimodal_features full oracle: per-char histogram (ASCII fixture
+# → chars ≡ bytes), Shannon entropy from counts, exact mean division
+@_query("multimodal_features", """
 WITH h AS (
   SELECT doc_id, concat('<html><body>', text, '</body></html>') AS s
   FROM documents),
@@ -1736,10 +1034,32 @@ q AS (
 SELECT q.doc_id AS doc_id, q.n_bytes, q.byte_mean, q.byte_entropy,
        lower(substr(hex(encode(substr(h.s, 1, 4))), 1, 8)) AS magic
 FROM q JOIN h ON q.doc_id = h.doc_id
-"""
+""")
+def q_mm_full(spark, sf_dir):
+    # full oracle since r2: byte_mean is an exact int-sum/count
+    # division (bit-identical across engines); entropy is rounded
+    # to 6 dp to absorb float summation-order differences.  The
+    # fixture text is pure ASCII (verified for all SFs), so the
+    # char-level DuckDB twin sees exactly the utf-8 bytes.
+    docs = mm.html_binary(spark.table("documents"))
+    feats = mm.extract_features(docs, "html", "raw")
+    return feats.select("doc_id", "n_bytes", "byte_mean",
+                        F.round("byte_entropy", 6).alias("byte_entropy"),
+                        "magic")
 
-    # ---- wave 2: relational layer --------------------------------------
-    o["tpch_q1_pricing"] = """
+
+_row("multimodal_frame_sample",
+     lambda spark, sf_dir: mm.frame_sample(
+         mm.html_binary(spark.table("documents"))),
+     "SELECT doc_id, n_frames, n_sampled, sample_md5 FROM "
+     + mm.frame_sample_sql(
+         "(SELECT doc_id, "
+         "encode(concat('<html><body>', text, '</body></html>')) "
+         "AS html FROM documents)") + " q")
+
+
+# ================= relational layer (SURVEY.md §3.6 gap table) ============
+@_query("tpch_q1_pricing", """
 SELECT l_returnflag, l_linestatus,
        round(sum(l_quantity), 2) AS sum_qty,
        round(sum(l_extendedprice), 2) AS sum_base_price,
@@ -1748,8 +1068,20 @@ SELECT l_returnflag, l_linestatus,
        count(*) AS count_order
 FROM lineitem WHERE l_shipdate <= '1998-09-02'
 GROUP BY l_returnflag, l_linestatus
-"""
-    o["join_topk_customers"] = """
+""")
+def q_pricing(spark, sf_dir):
+    li = spark.table("lineitem")
+    return (li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
+            .groupBy("l_returnflag", "l_linestatus")
+            .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
+                 F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
+                 F.round(F.sum(F.col("l_extendedprice")
+                               * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
+                 F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
+                 F.count("*").alias("count_order")))
+
+
+@_query("join_topk_customers", """
 SELECT c_custkey, c_name, revenue, n_orders, rk FROM (
   SELECT c_custkey, c_name, revenue, n_orders,
          row_number() OVER (ORDER BY revenue DESC, c_custkey ASC) AS rk
@@ -1758,15 +1090,37 @@ SELECT c_custkey, c_name, revenue, n_orders, rk FROM (
         FROM orders JOIN customer ON o_custkey = c_custkey
         GROUP BY c_custkey, c_name) q1) q2
 WHERE rk <= 10
-"""
-    o["window_lag_rank"] = """
+""")
+def q_topcust(spark, sf_dir):
+    o = spark.table("orders")
+    c = spark.table("customer")
+    rev = (o.join(c, o.o_custkey == c.c_custkey)
+           .groupBy("c_custkey", "c_name")
+           .agg(F.round(F.sum("o_totalprice"), 2).alias("revenue"),
+                F.count("*").alias("n_orders")))
+    w = Window.orderBy(F.col("revenue").desc(), F.col("c_custkey").asc())
+    return (rev.withColumn("rk", F.row_number().over(w))
+            .filter(F.col("rk") <= 10))
+
+
+@_query("window_lag_rank", """
 SELECT user_id, event_id, seq, prev_type FROM (
   SELECT user_id, event_id,
          row_number() OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS seq,
          lag(event_type) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS prev_type
   FROM events) q WHERE seq <= 5
-"""
-    o["set_ops_users"] = """
+""")
+def q_win(spark, sf_dir):
+    e = spark.table("events")
+    w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(),
+                                              F.col("event_id").asc())
+    return (e.withColumn("prev_type", F.lag("event_type").over(w))
+            .withColumn("seq", F.row_number().over(w))
+            .filter(F.col("seq") <= 5)
+            .select("user_id", "event_id", "seq", "prev_type"))
+
+
+@_query("set_ops_users", """
 SELECT user_id, 'both' AS tag FROM (
   SELECT user_id FROM events WHERE event_type = 'click'
   INTERSECT
@@ -1776,29 +1130,75 @@ SELECT DISTINCT user_id, 'click_only' AS tag FROM (
   SELECT user_id FROM events WHERE event_type = 'click'
   EXCEPT
   SELECT user_id FROM events WHERE event_type = 'view') q2
-"""
-    o["semi_anti_join"] = """
+""")
+def q_sets(spark, sf_dir):
+    e = spark.table("events")
+    a = e.filter(F.col("event_type") == "click").select("user_id")
+    b = e.filter(F.col("event_type") == "view").select("user_id")
+    return (a.intersect(b).withColumn("tag", F.lit("both"))
+            .unionByName(a.subtract(b)  # EXCEPT DISTINCT
+                         .withColumn("tag", F.lit("click_only"))))
+
+
+@_query("semi_anti_join", """
 SELECT c_custkey, TRUE AS has_orders FROM customer
 WHERE c_custkey IN (SELECT o_custkey FROM orders)
 UNION ALL
 SELECT c_custkey, FALSE AS has_orders FROM customer
 WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-"""
-    o["rollup_orders"] = """
+""")
+def q_semi(spark, sf_dir):
+    c = spark.table("customer")
+    o = spark.table("orders")
+    has = c.join(o, c.c_custkey == o.o_custkey, "left_semi")
+    hasnot = c.join(o, c.c_custkey == o.o_custkey, "left_anti")
+    return (has.select("c_custkey").withColumn("has_orders", F.lit(True))
+            .unionByName(hasnot.select("c_custkey")
+                         .withColumn("has_orders", F.lit(False))))
+
+
+@_query("rollup_orders", """
 SELECT o_orderstatus, o_orderpriority, count(*) AS n,
        round(sum(o_totalprice), 2) AS total
 FROM orders
 GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-"""
-    o["range_join_bands"] = """
+""")
+def q_rollup_orders(spark, sf_dir):
+    o = spark.table("orders")
+    return (o.rollup("o_orderstatus", "o_orderpriority")
+            .agg(F.count("*").alias("n"),
+                 F.round(F.sum("o_totalprice"), 2).alias("total")))
+
+
+@_query("range_join_bands", """
 SELECT band_id, count(*) AS n_events, round(sum(value), 6) AS sum_v
 FROM events
 JOIN (SELECT i AS band_id, 100.0e0 * i AS lo, 100.0e0 * (i + 1) AS hi
       FROM (SELECT unnest(range(0, 10)) AS i) qi) b
   ON value >= lo AND value < hi
 GROUP BY band_id
-"""
-    o["sessionize_events"] = """
+""")
+def q_range(spark, sf_dir):
+    # banded equi form (grid cell + residual filter) — never BNLJ,
+    # survives interval tables too big to broadcast
+    e = spark.table("events")
+    bands = spark.createDataFrame(
+        [(i, 100.0 * i, 100.0 * (i + 1)) for i in range(10)],
+        "band_id int, lo double, hi double")
+    return (rj.banded_range_join(e, "value", bands, "lo", "hi", step=100.0)
+            .groupBy("band_id")
+            .agg(F.count("*").alias("n_events"),
+                 F.round(F.sum("value"), 6).alias("sum_v")))
+
+
+# as-of join (latest view at or before each click), in the no-join
+# union-window form — ONE shuffle on user_id, no BNLJ/candidate blowup
+# at any scale (operators/rangejoin.py)
+_row("asof_join_clicks_views", _on("events", rj.asof_clicks_views),
+     rj.asof_clicks_views_sql())
+
+
+@_query("sessionize_events", """
 SELECT user_id, session_id, count(*) AS n_events,
        min(event_id) AS first_event, round(sum(value), 6) AS sum_value
 FROM (
@@ -1813,20 +1213,62 @@ FROM (
                 then 1 else 0 end AS new_s
     FROM events) q1) q2
 GROUP BY user_id, session_id
-"""
-    o["cube_events"] = """
+""")
+def q_sessionize(spark, sf_dir):
+    # sessionization: new session when the gap to the previous event
+    # of the same user exceeds 30 min — lag + conditional cumsum,
+    # all window functions (stateful-op analogue in batch form)
+    e = spark.table("events")
+    w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(),
+                                              F.col("event_id").asc())
+    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
+    df = (e.withColumn("new_s", F.when(gap.isNull() | (gap > 1800), 1)
+                       .otherwise(0))
+          .withColumn("session_id", F.sum("new_s").over(
+              w.rowsBetween(Window.unboundedPreceding, 0))))
+    return (df.groupBy("user_id", "session_id")
+            .agg(F.count("*").alias("n_events"),
+                 F.min("event_id").alias("first_event"),
+                 F.round(F.sum("value"), 6).alias("sum_value")))
+
+
+@_query("cube_events", """
 SELECT event_type, date_trunc('month', ts) AS mon, count(*) AS n
 FROM events GROUP BY CUBE (event_type, date_trunc('month', ts))
-"""
-    o["grouping_sets_events"] = """
+""")
+def q_cube_events(spark, sf_dir):
+    e = spark.table("events")
+    return (e.cube("event_type", F.date_trunc("month", "ts").alias("mon"))
+            .agg(F.count("*").alias("n")))
+
+
+@_query("grouping_sets_events", """
 SELECT cast(grouping_id(event_type, cohort) as bigint) AS gid,
        event_type, cohort, count(*) AS n,
        min(value) AS min_v, max(value) AS max_v
 FROM (SELECT event_type, user_id % 10 AS cohort, value FROM events) e
 GROUP BY GROUPING SETS ((event_type, cohort), (event_type), (cohort), ())
-"""
+""")
+def q_grouping_sets(spark, sf_dir):
+    # explicit GROUPING SETS (rollup/cube's general form): a
+    # user-chosen lattice subset — here the two 1-D marginals, the
+    # 2-D cell grid, and the grand total.  grouping_id disambiguates
+    # aggregated-away NULLs from data NULLs (bit=1 ⇔ aggregated).
+    # Catalyst expands to a single Expand + one hash agg — the
+    # 4-set lattice costs ONE shuffle, not four scans.
+    e = spark.table("events")
+    return (e.select("event_type", (F.col("user_id") % 10).alias("cohort"),
+                     "value")
+            .groupingSets([["event_type", "cohort"], ["event_type"],
+                           ["cohort"], []],
+                          "event_type", "cohort")
+            .agg(F.grouping_id("event_type", "cohort").alias("gid"),
+                 F.count("*").alias("n"),
+                 F.min("value").alias("min_v"),
+                 F.max("value").alias("max_v")))
 
-    o["unpivot_event_metrics"] = """
+
+@_query("unpivot_event_metrics", """
 WITH a AS (
   SELECT event_type, cast(count(*) as double) AS n,
          min(value) AS min_v, max(value) AS max_v
@@ -1834,32 +1276,95 @@ WITH a AS (
 SELECT event_type, 'n' AS metric, n AS val FROM a
 UNION ALL SELECT event_type, 'min_v', min_v FROM a
 UNION ALL SELECT event_type, 'max_v', max_v FROM a
-"""
+""")
+def q_unpivot(spark, sf_dir):
+    # wide→long (pivot's inverse): per-type metric columns melt to
+    # (metric, val) rows.  Catalyst Expand node — map-only after
+    # the one agg shuffle; the metric list is static (scale-safe,
+    # same rule as the explicit-value pivot).
+    e = spark.table("events")
+    agg = (e.groupBy("event_type")
+           .agg(F.count("*").cast("double").alias("n"),
+                F.min("value").alias("min_v"),
+                F.max("value").alias("max_v")))
+    return agg.unpivot("event_type", ["n", "min_v", "max_v"],
+                       "metric", "val")
 
-    o["exact_percentiles"] = """
+
+@_query("exact_percentiles", """
 SELECT event_type, quantile_cont(value, 0.25) AS p25,
        quantile_cont(value, 0.5) AS p50, quantile_cont(value, 0.9) AS p90,
        count(*) AS n
 FROM events GROUP BY event_type
-"""
-    o["events_window_agg"] = sw.WINDOWED_EVENT_AGG_SQL
+""")
+def q_percentiles(spark, sf_dir):
+    # exact interpolated percentiles (distributed sort-based); both
+    # engines implement the same (n-1)·p linear interpolation —
+    # verified bit-identical, no rounding needed
+    e = spark.table("events")
+    return (e.groupBy("event_type")
+            .agg(F.expr("percentile(value, 0.25)").alias("p25"),
+                 F.expr("percentile(value, 0.5)").alias("p50"),
+                 F.expr("percentile(value, 0.9)").alias("p90"),
+                 F.count("*").alias("n")))
 
-    # ---- r3 wave 2 -----------------------------------------------------
-    from geocoordinateconverter_spark import cells as _c3
-    _w3 = sg.wgs_points_sql("k")
-    o["salted_tile_agg_exact"] = f"""
+
+_row("events_window_agg", _on("events", sw.windowed_event_agg),
+     sw.WINDOWED_EVENT_AGG_SQL)
+
+# ---- r3 wave 2: previously pytest-only paths under the gate --------------
+@_query("salted_tile_agg_exact", f"""
 SELECT cell, count(*) AS n_pts, count(DISTINCT okey) AS n_distinct FROM (
-  SELECT {_c3.encode_sql('fi', 'la', 7)} AS cell, okey FROM (
+  SELECT {cells.encode_sql('fi', 'la', 7)} AS cell, okey FROM (
     SELECT k, cast(floor(k / 8.0e0) as bigint) AS okey,
-           {_w3['fi']} AS fi, {_w3['la']} AS la
+           {_WGS['fi']} AS fi, {_WGS['la']} AS la
     FROM (SELECT {LKEY} AS k FROM lineitem) q_k) q_p) q_c
 GROUP BY cell
-"""
+""")
+def q_salted(spark, sf_dir):
+    # exact per-cell distinct — the Ljubljana-hot-cell treatment:
+    # Spark plans it as a shuffle on (cell, okey) then a merge on
+    # cell, so a hot cell spreads over reducers (2 Exchanges)
+    pts = spark.sql(
+        f"SELECT k, cast(floor(k / 8.0e0) as bigint) AS okey, "
+        f"{_WGS['fi']} AS fi, {_WGS['la']} AS la "
+        f"FROM (SELECT {LKEY} AS k FROM lineitem) q_k")
+    return tiles_op.salted_tile_agg(pts, key="okey", res=7)
 
-    o["checkpoint_resume_roundtrip"] = (
+
+# Z-order layout assignment (the OPTIMIZE ZORDER BY primitive): Morton
+# key + deterministic equi-depth file buckets.  The production write
+# path (zorder_write: repartitionByRange + sortWithinPartitions) is
+# pytest-verified via parquet footer min/max tightness; this row pins
+# the key arithmetic and bucket assignment exactly.
+_ZORDER_PTS = (f"SELECT k, {_WGS['fi']} AS fi, {_WGS['la']} AS la "
+               f"FROM (SELECT {LKEY} AS k FROM lineitem WHERE "
+               f"l_orderkey % 5 = 0) q_k")
+_row("zorder_layout_keys",
+     lambda spark, sf_dir: lo.zorder_keys(spark.sql(_ZORDER_PTS), key="k",
+                                          n_files=8),
+     lo.zorder_keys_sql(f"({_ZORDER_PTS})"))
+
+
+@_query("checkpoint_resume_roundtrip",
         "SELECT doc_id, md5(text) AS text_md5 FROM documents")
+def q_ckpt_gate(spark, sf_dir):
+    # crash-injected checkpointed write + resume, then read the
+    # committed table back — the resumability invariant (recovered
+    # table ≡ source) under the DRIVER gate, not just pytest
+    df = spark.table("documents").select("doc_id", "text")
+    out = _tmpdir("ckpt_gate_") + "/out"
+    try:
+        cp.checkpointed_write(df, out, key="doc_id", n_buckets=8,
+                              fail_after_bucket=3)
+    except RuntimeError:
+        pass  # the injected mid-job crash
+    cp.checkpointed_write(df, out, key="doc_id", n_buckets=8)  # resume
+    back = cp.read_checkpointed(spark, out)
+    return back.select("doc_id", F.md5("text").alias("text_md5"))
 
-    o["window_analytics"] = """
+
+@_query("window_analytics", """
 SELECT event_id, event_type,
        cast(dense_rank() OVER w as int) AS drk,
        cast(ntile(4) OVER w as int) AS quartile,
@@ -1867,9 +1372,20 @@ SELECT event_id, event_type,
        round(percent_rank() OVER w, 9) AS prank
 FROM events
 WINDOW w AS (PARTITION BY event_type ORDER BY value ASC, event_id ASC)
-"""
+""")
+def q_win_analytics(spark, sf_dir):
+    e = spark.table("events")
+    w = Window.partitionBy("event_type").orderBy(
+        F.col("value").asc(), F.col("event_id").asc())
+    return e.select(
+        "event_id", "event_type",
+        F.dense_rank().over(w).alias("drk"),
+        F.ntile(4).over(w).alias("quartile"),
+        F.round(F.cume_dist().over(w), 9).alias("cdist"),
+        F.round(F.percent_rank().over(w), 9).alias("prank"))
 
-    o["tpch_q3_shipping"] = """
+
+@_query("tpch_q3_shipping", """
 SELECT l_orderkey, o_orderdate, revenue, cast(rk as int) AS rk FROM (
   SELECT l_orderkey, o_orderdate, revenue,
          row_number() OVER (ORDER BY revenue DESC, l_orderkey ASC) AS rk
@@ -1881,87 +1397,222 @@ SELECT l_orderkey, o_orderdate, revenue, cast(rk as int) AS rk FROM (
           AND o_orderdate < '1995-03-15' AND l_shipdate > '1995-03-15'
         GROUP BY l_orderkey, o_orderdate) q1) q2
 WHERE rk <= 10
-"""
+""")
+def q_tpch_q3(spark, sf_dir):
+    c = spark.table("customer").filter(F.col("c_mktsegment") == "BUILDING")
+    o = spark.table("orders").filter(F.col("o_orderdate") < "1995-03-15")
+    li = spark.table("lineitem").filter(F.col("l_shipdate") > "1995-03-15")
+    rev = (c.join(o, c.c_custkey == o.o_custkey)
+           .join(li, o.o_orderkey == li.l_orderkey)
+           .groupBy("l_orderkey", "o_orderdate")
+           .agg(F.round(F.sum(F.col("l_extendedprice")
+                              * (1 - F.col("l_discount"))), 2)
+                .alias("revenue")))
+    w = Window.orderBy(F.col("revenue").desc(), F.col("l_orderkey").asc())
+    return (rev.withColumn("rk", F.row_number().over(w))
+            .filter(F.col("rk") <= 10)
+            .select("l_orderkey", "o_orderdate", "revenue", "rk"))
 
-    _kinds = ["click", "error", "purchase", "signup", "view"]
-    _piv_cols = ", ".join(
-        f"cast(sum(case when event_type = '{k}' then 1 else 0 end) "
-        f"as bigint) AS n_{k}" for k in _kinds)
-    o["pivot_events_by_type"] = (
-        f"SELECT user_id, {_piv_cols} FROM events GROUP BY user_id")
 
-    _bf5 = sim.brute_force_topk_sql(k=5)
-    _recall_arms = " UNION ALL ".join(
-        f"SELECT '{m}' AS method, count(*) AS n_hits "
-        f"FROM ({s}) a JOIN bf ON a.q_id = bf.q_id AND a.vec_id = bf.vec_id"
-        for m, s in (("lsh", sim.lsh_topk_sql(k=5)),
-                     ("ivf", sim.ivf_topk_sql(k=5)),
-                     ("ivf_nprobe", sim.ivf_nprobe_topk_sql(k=5, nprobe=3))))
-    o["ann_recall_report"] = f"""
-WITH bf AS (SELECT q_id, vec_id FROM ({_bf5}) qb),
+_KINDS = ["click", "error", "purchase", "signup", "view"]
+
+
+@_query("pivot_events_by_type",
+        "SELECT user_id, " + ", ".join(
+            f"cast(sum(case when event_type = '{k}' then 1 else 0 end) "
+            f"as bigint) AS n_{k}" for k in _KINDS)
+        + " FROM events GROUP BY user_id")
+def q_pivot(spark, sf_dir):
+    # relational pivot: one row per user, one count column per
+    # event type (explicit value list → static schema, the scale-
+    # safe form; Spark pivots via two-phase agg, oracle via
+    # conditional aggregation)
+    return (spark.table("events")
+            .groupBy("user_id")
+            .pivot("event_type", _KINDS)
+            .count().na.fill(0, _KINDS)
+            .select("user_id", *[F.col(k).alias(f"n_{k}")
+                                 for k in _KINDS]))
+
+
+def _recall_report(emb):
+    # recall@5 of each ANN scale path vs the exact brute-force
+    # top-5, per method — shared by the uniform- and
+    # clustered-fixture diagnostics
+    exact = sim.brute_force_topk(emb, k=5).select("q_id", "vec_id")
+    nq = exact.select("q_id").distinct().count()  # tiny scalar
+    parts = []
+    for m, df in (("lsh", sim.lsh_topk(emb, k=5)),
+                  ("ivf", sim.ivf_topk(emb, k=5)),
+                  ("ivf_nprobe", sim.ivf_nprobe_topk(emb, k=5, nprobe=3))):
+        hits = (df.select("q_id", "vec_id")
+                .join(exact, ["q_id", "vec_id"])
+                .agg(F.count("*").alias("n_hits"))
+                .select(F.lit(m).alias("method"), "n_hits",
+                        F.round(F.col("n_hits")
+                                / F.lit(float(5 * nq)), 9)
+                        .alias("recall_at_5")))
+        parts.append(hits)
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
+_BF5 = sim.brute_force_topk_sql(k=5)
+_RECALL_ARMS = " UNION ALL ".join(
+    f"SELECT '{m}' AS method, count(*) AS n_hits "
+    f"FROM ({s}) a JOIN bf ON a.q_id = bf.q_id AND a.vec_id = bf.vec_id"
+    for m, s in (("lsh", sim.lsh_topk_sql(k=5)),
+                 ("ivf", sim.ivf_topk_sql(k=5)),
+                 ("ivf_nprobe", sim.ivf_nprobe_topk_sql(k=5, nprobe=3))))
+_row("ann_recall_report", _on("embeddings", _recall_report), f"""
+WITH bf AS (SELECT q_id, vec_id FROM ({_BF5}) qb),
 nq AS (SELECT count(DISTINCT q_id) AS n FROM bf)
 SELECT method, n_hits,
        round(n_hits / (5.0e0 * n), 9) AS recall_at_5
-FROM ({_recall_arms}) q CROSS JOIN nq
-"""
-
-    o["ann_recall_report_clustered"] = f"""
+FROM ({_RECALL_ARMS}) q CROSS JOIN nq
+""")
+# the same diagnostic over the deterministic 16-cluster fixture — the
+# case a working bucketed-ANN must win (pytest asserts beats-chance /
+# beats-uniform / nprobe-monotone; the oracle asserts the exact numbers)
+_row("ann_recall_report_clustered",
+     lambda spark, sf_dir: _recall_report(
+         _clustered_embeddings(spark, sf_dir)), f"""
 WITH emb_clustered AS (SELECT * FROM {sim.clustered_embeddings_sql()} qc),
-bf AS (SELECT q_id, vec_id FROM ({sim.over_clustered_sql(_bf5)}) qb),
+bf AS (SELECT q_id, vec_id FROM ({sim.over_clustered_sql(_BF5)}) qb),
 nq AS (SELECT count(DISTINCT q_id) AS n FROM bf)
 SELECT method, n_hits,
        round(n_hits / (5.0e0 * n), 9) AS recall_at_5
-FROM ({sim.over_clustered_sql(_recall_arms)}) q CROSS JOIN nq
-"""
+FROM ({sim.over_clustered_sql(_RECALL_ARMS)}) q CROSS JOIN nq
+""")
+# r5 PQ diagnostic over the clustered fixture: raw ADC recall is
+# quantization-error-bound (untrained uniform codebooks), ivfpq adds the
+# cell restriction, and the exact-rerank refine recovers to within 0.02
+# of the nprobe cell bound — the monotone story pytest asserts and the
+# oracle pins exactly.  The fixture CTE merges into the report's own
+# WITH head (the report starts "WITH exact AS").
+_row("ann_pq_recall_report",
+     lambda spark, sf_dir: sim.pq_recall_report(
+         _clustered_embeddings(spark, sf_dir), k=5),
+     sim.over_clustered_sql(sim.pq_recall_report_sql(k=5)).replace(
+         "WITH exact AS",
+         f"WITH emb_clustered AS "
+         f"(SELECT * FROM {sim.clustered_embeddings_sql()} qc), exact AS", 1))
 
-    # ---- r3 additions ---------------------------------------------------
-    o["ann_ivf_nprobe_topk"] = sim.ivf_nprobe_topk_sql(k=5, nprobe=3)
-    o["ann_ivf_train_kmeans"] = sim.ivf_train_kmeans_exact_sql(n_iter=3)
-    o["ann_pq_train_codebooks"] = sim.pq_train_codebooks_exact_sql(n_iter=3)
 
-    # ---- r5: product quantization ----------------------------------------
-    o["ann_pq_codes"] = sim.pq_codes_rows_sql()
-    o["ann_pq_adc_topk"] = sim.pq_adc_topk_sql(k=5)
-    o["ann_ivfpq_topk"] = sim.ivfpq_topk_sql(k=5, nprobe=3)
-    o["ann_ivfpq_rerank_topk"] = sim.ivfpq_rerank_topk_sql(
-        k=5, nprobe=3, shortlist=50)
-    # clustered-fixture PQ recall: the fixture CTE merges into the
-    # report's own WITH head (the report starts "WITH exact AS")
-    o["ann_pq_recall_report"] = sim.over_clustered_sql(
-        sim.pq_recall_report_sql(k=5)).replace(
-        "WITH exact AS",
-        f"WITH emb_clustered AS "
-        f"(SELECT * FROM {sim.clustered_embeddings_sql()} qc), exact AS", 1)
+# batch SQL twin of the streaming flagship epoch (complete mode ≡ one
+# batch over the same files)
+_GKP = (f"(SELECT url, x, y, h "
+        f"FROM {wp.geoparse_gk_sql(PAGES)} g) q_gk")
 
-    o["streaming_stateful_dedup"] = (
+
+@_query("streaming_flagship_tiles",
+        f"SELECT cell, count(*) AS n_docs, round(sum(h), 3) AS sum_h FROM ("
+        f"SELECT {cells.encode_sql('fi', 'la', 7)} AS cell, h "
+        f"FROM ({sg.t3_sql(_GKP, 'url')}) q_t3) q_c GROUP BY cell")
+def q_stream_flagship(spark, sf_dir):
+    # streaming lineage under the DRIVER gate (VERDICT r2 #6): the
+    # flagship geoparse→t3→tile pipeline runs through readStream +
+    # availableNow into a memory sink; the returned table is the
+    # streaming epoch's complete-mode result, oracled against the
+    # batch SQL twin.
+    base = _tmpdir("stream_flagship_")
+    docs_dir = os.path.join(base, "documents")
+    os.makedirs(docs_dir)
+    shutil.copy(f"{sf_dir}/documents.parquet",
+                os.path.join(docs_dir, "part-0.parquet"))
+    sdf = gp.flagship_tiles_streaming(spark, docs_dir)
+    qh = (sdf.writeStream.format("memory")
+          .queryName("stream_flagship_tiles_mem")
+          .outputMode("complete")
+          .option("checkpointLocation", os.path.join(base, "ck"))
+          .trigger(availableNow=True).start())
+    if not qh.awaitTermination(300):
+        qh.stop()
+        raise RuntimeError(
+            "streaming flagship did not finish in 300s — refusing "
+            "to read a partial memory-sink table")
+    return spark.table("stream_flagship_tiles_mem")
+
+
+@_query("streaming_stateful_dedup",
         "SELECT md5(text) AS text_md5, min(doc_id) AS keep_doc_id, "
         "cast(count(*) as bigint) AS n_seen "
         "FROM documents GROUP BY md5(text)")
+def q_stream_stateful(spark, sf_dir):
+    # custom stateful streaming operator under the DRIVER gate:
+    # applyInPandasWithState exact-dedup state machine, run to
+    # completion with availableNow.  The update-mode sink may carry
+    # several updates per key if the source splits into multiple
+    # microbatches; the FINAL state is recovered batch-split-
+    # independently (n_seen grows monotonically, keep_doc_id
+    # shrinks monotonically), and equals the batch groupBy —
+    # which is exactly what the SQL oracle states.
+    base = _tmpdir("stream_stateful_")
+    docs_dir = os.path.join(base, "documents")
+    os.makedirs(docs_dir)
+    shutil.copy(f"{sf_dir}/documents.parquet",
+                os.path.join(docs_dir, "part-0.parquet"))
+    stream = (spark.readStream
+              .schema(spark.read.parquet(docs_dir).schema)
+              .parquet(docs_dir))
+    out = stateful.streaming_dedup(stream)
+    qh = (out.writeStream.format("memory")
+          .queryName("stream_stateful_dedup_mem")
+          .outputMode("update")
+          .option("checkpointLocation", os.path.join(base, "ck"))
+          .trigger(availableNow=True).start())
+    if not qh.awaitTermination(300):
+        qh.stop()
+        raise RuntimeError(
+            "stateful dedup stream did not finish in 300s")
+    sink = spark.table("stream_stateful_dedup_mem")
+    return (sink.groupBy("text_md5")
+            .agg(F.min("keep_doc_id").alias("keep_doc_id"),
+                 F.max("n_seen").alias("n_seen")))
 
-    o["shapefile_zm_multipart_roundtrip"] = (
-        f"SELECT geom_id, part, vid, round(x, 2) AS x_out, "
-        f"round(y, 2) AS y_out, round(h, 2) AS z_out, mz AS m_out "
-        f"FROM ({sg.t5_sql(SHP_ZM_SRC, 'geom_id, part, vid, mz')}) q")
 
-    o["shapefile_multipatch_roundtrip"] = (
-        f"SELECT geom_id, part, part_type, vid, round(x, 2) AS x_out, "
-        f"round(y, 2) AS y_out, round(h, 2) AS z_out, mz AS m_out "
-        f"FROM ({sg.t5_sql(SHP_MP_SRC, 'geom_id, part, part_type, vid, mz')}) q")
+# The driver's correctness snapshot records the first 50 registered
+# queries: these 50 come first, cheapest oracle statement (by length,
+# then name) first, and every other row follows in table order.
+_WINDOW_PRIORITY = [
+    "ann_recall_report_clustered", "shapefile_zm_multipart_roundtrip",
+    "ann_ivf_train_kmeans", "near_dup_components", "near_dup_drop_list",
+    "simhash", "simhash_near_dup_pairs", "minhash_lsh_pairs",
+    "haversine_to_ljubljana", "streaming_flagship_tiles",
+    "checkpoint_resume_roundtrip",
+    "s3_normalize_northing", "t3_gk_to_wgs84", "t1_tm_to_wgs84",
+    "t2_wgs84_to_tm", "t5_gk_to_tm", "t4_wgs84_to_gk", "t6_tm_to_gk",
+    "t7_gk_to_wgs84_aft", "t8_wgs84_to_gk_aft", "t9_gk_to_tm_aft",
+    "t10_tm_to_gk_aft", "tile_t3_cells", "tile_rollup_res5",
+    "tile_topk_applyinpandas", "webpages_text_passthrough",
+    "geoparse_decimal_degrees", "geoparse_multi_mention", "geoparse_dms",
+    "geoparse_reject_stats", "pip_join_municipalities", "pip_tile_agg",
+    "knn_join_stations", "aft_locate_triangle", "geoid_bilinear",
+    "geoid_bilinear_egm", "height_mode_hg", "dms_format",
+    "coord_pair_classify", "geometry_wkt_convert",
+    "url_host_stats", "dedup_exact", "minhash_signatures",
+    "ngram_jaccard_pairs", "text_stats", "lang_id", "bpe_token_stats",
+    "rolling_fingerprint",
+    "streaming_stateful_dedup", "html_text_extract",
+]
 
-    o["shapefile_attrs_passthrough"] = (
-        f"SELECT q_v.geom_id AS geom_id, q_v.vid AS vid, q_v.x AS x, "
-        f"q_v.y AS y, q_a.name AS name, q_a.pop AS pop "
-        f"FROM {SHP_LINE_SRC} JOIN {SHP_ATTR_SRC} "
-        f"ON q_v.geom_id = q_a.geom_id")
 
-    # batch SQL twin of the streaming flagship epoch (complete mode ≡
-    # one batch over the same files)
-    _gkp = (f"(SELECT url, x, y, h "
-            f"FROM {wp.geoparse_gk_sql(wp.webpages_sql('documents') + ' w')} g) q_gk")
-    from geocoordinateconverter_spark import cells as _cells2
-    o["streaming_flagship_tiles"] = (
-        f"SELECT cell, count(*) AS n_docs, round(sum(h), 3) AS sum_h FROM ("
-        f"SELECT {_cells2.encode_sql('fi', 'la', 7)} AS cell, h "
-        f"FROM ({sg.t3_sql(_gkp, 'url')}) q_t3) q_c GROUP BY cell")
+def _registered(build: Build) -> Build:
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        _register(spark, sf_dir)
+        return build(spark, sf_dir)
+    return run
 
-    return o
+
+def queries() -> dict[str, Build]:
+    size = {name: len(text) for name, _, text in _ROWS}
+    head = sorted(_WINDOW_PRIORITY, key=lambda k: (size[k], k))
+    builds = {name: build for name, build, _ in _ROWS}
+    order = head + [name for name in builds if name not in head]
+    return {name: _registered(builds[name]) for name in order}
+
+
+def oracle_sql() -> dict[str, str]:
+    return {name: text for name, _, text in _ROWS}

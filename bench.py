@@ -12,8 +12,12 @@ JSON line::
 The flagship query IS the BASELINE.json metric pipeline: derive D48/GK
 coordinates for every lineitem row (codegen) → t=3 datum conversion
 (fused Arrow UDF) → grid-cell encode (codegen) → PIP broadcast
-join vs municipality polygons → salted tile aggregation.  docs/sec is
-input rows / wall-clock of the full pipeline.
+join vs municipality polygons → tile aggregation.  docs/sec is
+input rows / wall-clock of the full pipeline.  The other 17 timed
+queries (``BENCH_QUERIES``) are 16 registered queries, looked up in
+``queries()`` once before the timed passes, plus the GK geoparse
+prefix.  Every timed job builds its plan and writes through Spark's
+``noop`` sink, so each output column is computed and nothing is kept.
 
 Scaling evidence (local[N] vs local[4N]) is produced by
 ``tools/scaling_interleaved.py``, which imports this file.
@@ -33,10 +37,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 from geocoordinateconverter_spark import kernels  # noqa: E402
-from geocoordinateconverter_spark.operators import curation as cu  # noqa: E402
 from geocoordinateconverter_spark.operators import pip as pip_op  # noqa: E402
-from geocoordinateconverter_spark.operators import similarity as sim  # noqa: E402
-from geocoordinateconverter_spark.operators import textdedup as td  # noqa: E402
 from geocoordinateconverter_spark.plans.session import build_session  # noqa: E402
 from geocoordinateconverter_spark.sources import webpages as wp  # noqa: E402
 
@@ -85,116 +86,44 @@ def flagship(spark, sf_dir, mult: int = 1):
                  F.min("h").alias("min_h"), F.max("h").alias("max_h")))
 
 
-def q_tile(spark, sf_dir):
-    # intentionally NOT entrymod's tile_t3_cells (which adds a rounded
-    # avg_h for its oracle): this count-only form has been the timed
-    # workload since round 1, and changing it would break cross-round
-    # bench comparability
-    src = spark.sql(f"SELECT * FROM {entrymod.SRC_GK_LINEITEM}")
-    t3 = kernels.transform_udf(3)
-    conv = src.withColumn("o", t3(F.col("x"), F.col("y"), F.col("h")))
-    return (conv.withColumn("cell",
-                            kernels.cell_col(F.col("o.fi"), F.col("o.la"), 7))
-            .groupBy("cell").agg(F.count("*").alias("n")))
+def geoparse_gk(spark, sf_dir):
+    # the flagship's geoparse prefix; no registered query parses GK alone
+    return spark.sql(
+        f"SELECT url, x, y, h FROM {wp.geoparse_gk_sql(entrymod.PAGES)} g")
 
 
-def q_geoparse(spark, sf_dir):
-    pages = spark.sql(f"SELECT * FROM {wp.webpages_sql('documents')} w")
-    pages.createOrReplaceTempView("webpages")
-    return spark.sql(f"SELECT url, x, y, h FROM {wp.geoparse_gk_sql('webpages')} g")
-
-
-def q_knn(spark, sf_dir):
-    from geocoordinateconverter_spark.operators import knn as knn_op
-    pts = spark.sql(f"SELECT * FROM {entrymod.SRC_WGS_ORDERS}")
-    return knn_op.knn_join(pts, spark, key="k", k=3)
-
-
-def q_radius(spark, sf_dir):
-    from geocoordinateconverter_spark.operators import knn as knn_op
-    pts = spark.sql(f"SELECT * FROM {entrymod.SRC_WGS_ORDERS}")
-    return knn_op.radius_join(pts, spark)
-
-
-def q_bbox(spark, sf_dir):
-    from geocoordinateconverter_spark.operators import bboxjoin as bj
-    return bj.bbox_intersects_join(bj.parcels_df(spark), spark)
-
-
-def q_minhash(spark, sf_dir):
-    return td.minhash_pairs(spark.table("documents"))
-
-
-def q_ann(spark, sf_dir):
-    return sim.brute_force_topk(spark.table("embeddings"), k=5)
-
-
-def q_ann_ivf(spark, sf_dir):
-    return sim.ivf_topk(spark.table("embeddings"), k=5)
-
-
-def q_ann_ivf_nprobe(spark, sf_dir):
-    return sim.ivf_nprobe_topk(spark.table("embeddings"), k=5, nprobe=3)
-
-
-def q_ann_ivfpq(spark, sf_dir):
-    return sim.ivfpq_topk(spark.table("embeddings"), k=5, nprobe=3)
-
-
-def q_simhash_pairs(spark, sf_dir):
-    return td.simhash_near_dup_pairs(spark.table("documents"))
-
-
-def q_dedup(spark, sf_dir):
-    return td.exact_dedup(spark.table("documents"))
-
-
-def q_tpch1(spark, sf_dir):
-    return entrymod.queries()["tpch_q1_pricing"](spark, sf_dir)
-
-
-def q_pack(spark, sf_dir):
-    return cu.pack_sequences(spark.table("documents"))
-
-
-def q_dup_spans(spark, sf_dir):
-    return cu.dup_ngram_spans(spark.table("documents"))
-
-
-def q_decon(spark, sf_dir):
-    return cu.decontaminate(spark.table("documents"))
-
-
-def q_line_dedup(spark, sf_dir):
-    return cu.line_dedup(spark.table("documents"))
-
-
+# JSON key → registered query name (geoparse_gk is the build above)
 BENCH_QUERIES = {
-    "tile_t3_cells": q_tile,
-    "geoparse_gk": q_geoparse,
-    "knn_join": q_knn,
+    "tile_t3_cells": "tile_t3_cells",
+    "geoparse_gk": "geoparse_gk",
+    "knn_join": "knn_join_stations",
     # r5 wave-3 spatial joins (the other two join geometries: within-R
     # and region-region; kring/tfidf/pagerank run on small post-agg or
     # dim-sized tables and aren't corpus-bound — no slots)
-    "radius_join": q_radius,
-    "bbox_join": q_bbox,
-    "minhash_lsh_pairs": q_minhash,
-    "ann_cosine_topk": q_ann,
-    "ann_ivf_topk": q_ann_ivf,
-    "ann_ivf_nprobe_topk": q_ann_ivf_nprobe,
-    "ann_ivfpq_topk": q_ann_ivfpq,
-    "simhash_near_dup_pairs": q_simhash_pairs,
-    "dedup_exact": q_dedup,
-    "tpch_q1": q_tpch1,
+    "radius_join": "radius_join_stations",
+    "bbox_join": "bbox_intersects_join",
+    "minhash_lsh_pairs": "minhash_lsh_pairs",
+    "ann_cosine_topk": "ann_cosine_topk",
+    "ann_ivf_topk": "ann_ivf_topk",
+    "ann_ivf_nprobe_topk": "ann_ivf_nprobe_topk",
+    "ann_ivfpq_topk": "ann_ivfpq_topk",
+    "simhash_near_dup_pairs": "simhash_near_dup_pairs",
+    "dedup_exact": "dedup_exact",
+    "tpch_q1": "tpch_q1_pricing",
     # r5 curation additions (the ones with nontrivial plans; sampling,
     # mixture resampling and pii_redact are zero-shuffle codegen maps,
     # not worth slots; token_budget_select is two tiny aggs + a
     # partitioned window over the same scan as pack_sequences)
-    "pack_sequences": q_pack,
-    "dup_ngram_spans": q_dup_spans,
-    "decontaminate_bench": q_decon,
-    "line_dedup_reassemble": q_line_dedup,
+    "pack_sequences": "pack_sequences",
+    "dup_ngram_spans": "dup_ngram_spans",
+    "decontaminate_bench": "decontaminate_bench",
+    "line_dedup_reassemble": "line_dedup_reassemble",
 }
+
+
+def write_noop(df) -> None:
+    """Compute every output column and row, and keep none of them."""
+    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:
@@ -229,16 +158,13 @@ def main() -> None:
     # leave the bench with no output at all.
     budget_s = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "300"))
     runs: dict[str, list[float]] = {}
-    flagship_rows = 0
-
-    def run_flagship():
-        nonlocal flagship_rows
-        flagship_rows = flagship(spark, sf_dir, mult).count()
-
-    jobs: list[tuple[str, object]] = [("flagship_t3_pip_tile", run_flagship)]
+    jobs: list[tuple[str, object]] = [
+        ("flagship_t3_pip_tile",
+         lambda: write_noop(flagship(spark, sf_dir, mult)))]
     if not flagship_only:
-        jobs += [(name, (lambda fn=fn: fn(spark, sf_dir).count()))
-                 for name, fn in BENCH_QUERIES.items()]
+        builds = entrymod.queries() | {"geoparse_gk": geoparse_gk}
+        jobs += [(key, (lambda b=builds[name]: write_noop(b(spark, sf_dir))))
+                 for key, name in BENCH_QUERIES.items()]
 
     bench_t0 = time.time()
     for rep in range(repeats):
@@ -249,6 +175,7 @@ def main() -> None:
 
     times = {name: min(r) for name, r in runs.items()}
     flagship_s = times["flagship_t3_pip_tile"]
+    flagship_rows = flagship(spark, sf_dir, mult).count()
 
     out = {
         "metric": "D48/GK→WGS84 (t=3) + PIP join + tile agg wall-clock",

@@ -1109,9 +1109,9 @@ def pq_train_replay_exact(V: np.ndarray, n_iter: int = 3):
 #
 # Scale shape: the corpus side stays a single map pass (mapInArrow),
 # queries/LUTs ride a broadcast (q ≈ n/50 · 0.5 KB), the shuffle
-# carries ≤ tasks·q·k candidate rows.  The local single-file parquet
-# scan is round-robin split to defaultParallelism first (5 MB at the
-# fixture; a real multi-split scan skips that branch).
+# carries ≤ tasks·q·k candidate rows.  The corpus is scanned as it
+# arrives (the registry's single-row-group fixture is split once, by
+# ``__spark_entry__._register``).
 # ---------------------------------------------------------------------------
 
 
@@ -1159,16 +1159,6 @@ def _probes_np(X: np.ndarray, nprobe: int) -> np.ndarray:
     """(n, nprobe) best cells, score DESC / cell ASC — the stable
     argsort reproduces the oracle's ``ORDER BY score DESC, cell ASC``."""
     return np.argsort(-_ivf_scores_np(X), axis=1, kind="stable")[:, :nprobe]
-
-
-def _split_scan(df: DataFrame):
-    """Round-robin the corpus across defaultParallelism tasks when the
-    local scan arrives in fewer splits (the sandbox single-file case);
-    a real multi-split scan passes through untouched."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        return df.repartition(par)
-    return df
 
 
 def _topk_payload(q_ids: np.ndarray, Q: np.ndarray, mode: str,
@@ -1264,8 +1254,7 @@ def _topk_candidates(emb: DataFrame, mode: str, k: int, query_filter: str,
             if out is not None:
                 yield out
 
-    src = _split_scan(emb.select("vec_id", "embedding"))
-    return src.mapInArrow(kern, schema)
+    return emb.select("vec_id", "embedding").mapInArrow(kern, schema)
 
 
 def _rank_topk(cand: DataFrame, k: int, out_name: str) -> DataFrame:

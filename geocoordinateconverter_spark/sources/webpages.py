@@ -150,12 +150,10 @@ RE_DD_ONE = r"lat ([0-9]+[.][0-9]+)N"
 RE_DD_LON = r"lon ([0-9]+[.][0-9]+)E"
 
 
-def geoparse_multi_spark(spark, pages_view: str):
+def geoparse_multi_spark(pages):
     """All decimal-degree mentions per page → one row each (url,
     mention_idx, fi, la) — regexp_extract_all → arrays_zip → posexplode,
     pure Catalyst."""
-    from pyspark.sql import functions as F
-    pages = spark.table(pages_view)
     fis = F.expr(f"regexp_extract_all(page_text, '{RE_DD_ONE}', 1)")
     las = F.expr(f"regexp_extract_all(page_text, '{RE_DD_LON}', 1)")
     return (pages

@@ -1,6 +1,7 @@
 """Physical-plan audit (the round brief's `.explain("formatted")`
-discipline): dump the executed plans of the flagship pipeline and key
-operators to PLANS.md and assert the invariants we design for:
+discipline): dump the executed plans of the flagship that bench.py
+times and of key registered queries to PLANS.md and assert the
+invariants we design for:
 
 * ArrowEvalPython only — never BatchEvalPython (no per-row Python) —
   and the flagship has one: the t=3 kernel (the PIP refine is Catalyst)
@@ -28,10 +29,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import functions as F  # noqa: E402
 
 import __spark_entry__ as em  # noqa: E402
-from geocoordinateconverter_spark import kernels  # noqa: E402
-from geocoordinateconverter_spark.operators import knn as knn_op  # noqa: E402
-from geocoordinateconverter_spark.operators import pip as pip_op  # noqa: E402
-from geocoordinateconverter_spark.operators import tiles  # noqa: E402
+import bench  # noqa: E402
 from geocoordinateconverter_spark.plans.session import build_session  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
@@ -57,39 +55,29 @@ def main() -> None:
     em._register(spark, SF)
 
     plans: dict[str, str] = {}
+    qs = em.queries()
 
-    src = spark.sql(f"SELECT * FROM {em.SRC_GK_LINEITEM}")
-    t3 = kernels.transform_udf(3)
-    conv = (src.withColumn("o", t3(F.col("x"), F.col("y"), F.col("h")))
-            .select("k", F.col("o.fi").alias("fi"), F.col("o.la").alias("la"),
-                    F.col("o.h").alias("h")))
-    flagship = tiles.salted_tile_agg(pip_op.pip_join(conv, spark), key="k")
-    plans["flagship: derive → t3 → PIP → distinct tile agg"] = formatted(flagship)
-
-    tile = (conv.withColumn("cell", kernels.cell_col(F.col("fi"), F.col("la"), 7))
-            .groupBy("cell").count())
-    plans["tile_t3_cells"] = formatted(tile)
-
-    pts = spark.sql(f"SELECT * FROM {em.SRC_WGS_ORDERS}")
-    plans["knn_join (kernel, zero-shuffle)"] = formatted(
-        knn_op.knn_join(pts, spark, key="k", k=3))
+    plans["flagship: bench.flagship (derive → t3 → PIP → tile agg)"] = \
+        formatted(bench.flagship(spark, SF))
+    plans["tile_t3_cells"] = formatted(qs["tile_t3_cells"](spark, SF))
+    plans["knn_join_stations (kernel, zero-shuffle)"] = formatted(
+        qs["knn_join_stations"](spark, SF))
 
     pruned = (spark.table("lineitem")
               .filter(F.col("l_shipdate") <= F.lit("1995-01-01"))
               .select("l_orderkey", "l_quantity"))
     plans["scan pushdown/pruning (lineitem 2-col filter)"] = formatted(pruned)
 
-    from geocoordinateconverter_spark.operators import textdedup as td
-    tiled = tiles.salted_tile_agg(pts, key="k")
-    plans["salted_tile_agg (distinct per cell, hot-cell spread)"] = \
+    tiled = qs["salted_tile_agg_exact"](spark, SF)
+    plans["salted_tile_agg_exact (distinct per cell, hot-cell spread)"] = \
         formatted(tiled)
-    plans["minhash signatures (tokenize codegen → Arrow hash kernel)"] = \
-        formatted(td.minhash_signatures(spark.table("documents")))
+    plans["minhash_signatures (tokenize codegen → Arrow hash kernel)"] = \
+        formatted(qs["minhash_signatures"](spark, SF))
     plans["simhash (tokenize codegen → Arrow fold kernel)"] = \
-        formatted(td.simhash(spark.table("documents")))
+        formatted(qs["simhash"](spark, SF))
 
     checks = []
-    flag_plan = plans["flagship: derive → t3 → PIP → distinct tile agg"]
+    flag_plan = plans["flagship: bench.flagship (derive → t3 → PIP → tile agg)"]
     checks.append(("flagship has exactly one ArrowEvalPython (the t=3 kernel), "
                    "an Arrow UDF (eval type 250)",
                    len(re.findall(r"^\(\d+\) ArrowEvalPython", flag_plan, re.M)) == 1
@@ -104,7 +92,7 @@ def main() -> None:
                    or "PushedFilters" in scan_plan))
     checks.append(("schema pruned to read cols", "ReadSchema" in scan_plan
                    and "l_extendedprice" not in scan_plan.split("ReadSchema")[1][:400]))
-    knn_plan = plans["knn_join (kernel, zero-shuffle)"]
+    knn_plan = plans["knn_join_stations (kernel, zero-shuffle)"]
     checks.append(("knn kernel path has NO Exchange (pure map), and its "
                    "kernel is an Arrow UDF (eval type 250)",
                    "Exchange" not in knn_plan
@@ -112,11 +100,11 @@ def main() -> None:
     shuffles = re.findall(r"(?<!Broadcast)Exchange (\w+)\(([^)]*)\)",
                           tiled._jdf.queryExecution().executedPlan().toString())
     checks.append(("tile distinct agg: 2 hash Exchanges, the lower on "
-                   "(cell, k)",
+                   "(cell, okey)",
                    [kind for kind, _ in shuffles] == ["hashpartitioning"] * 2
-                   and re.match(r"cell#\d+L, k#\d+L,", shuffles[-1][1])
+                   and re.match(r"cell#\d+L, okey#\d+L,", shuffles[-1][1])
                    is not None))
-    mh = plans["minhash signatures (tokenize codegen → Arrow hash kernel)"]
+    mh = plans["minhash_signatures (tokenize codegen → Arrow hash kernel)"]
     # r6: signatures hash via ONE vectorized Arrow kernel (md5 once per
     # batch-distinct token) — the assertable invariants are that the
     # crossing is Arrow (never per-row BatchEvalPython, asserted
@@ -149,7 +137,7 @@ def main() -> None:
     # inputs without a cache
     PERSIST_OK = {"ann_recall_report_clustered", "ann_pq_recall_report"}
     offenders, persisted = [], []
-    for qname, fn in em.queries().items():
+    for qname, fn in qs.items():
         if qname in EAGER_SKIP:
             continue
         try:
@@ -162,7 +150,7 @@ def main() -> None:
             offenders.append(qname)
         if "InMemoryRelation" in p and qname not in PERSIST_OK:
             persisted.append(qname)
-    checks.append((f"no BNLJ/Cartesian in any of {len(em.queries())} queries "
+    checks.append((f"no BNLJ/Cartesian in any of {len(qs)} queries "
                    f"(eager side-effect queries {sorted(EAGER_SKIP)} "
                    f"audited via their batch twins); offenders={offenders}",
                    not offenders))
